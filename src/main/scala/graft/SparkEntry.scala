@@ -9,6 +9,7 @@ import graft.functions.{hashfns, textfns}
 import graft.multimodal.Multimodal
 import graft.operators.{Bpe, Decontam, Freq, Layout, Search, Shuffle}
 import graft.similarity.Ann
+import graft.sources.Tables
 import graft.streaming.Streams
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (query keys) + §7.
@@ -27,7 +28,7 @@ import graft.streaming.Streams
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.load(s, dir, name)
 
   private def g(s: SparkSession, dir: String, name: String): GraftFrame =
     GraftFrame(t(s, dir, name))

@@ -820,10 +820,12 @@ object Kernels {
     * path of Spark's `lower()`, which the composed formulation this
     * kernel replaces (and the window-TEXT oracle replay the span
     * consumers group on) uses. Neither a bare `String.toLowerCase`
-    * (JVM default locale) nor `Locale.ROOT` matches it for every
-    * non-ASCII string (e.g. U+0130 İ expands to "i"+combining-dot
-    * under the java.lang.String 1:N mapping), and kernel-digest vs
-    * lower()-text normalizations must agree byte-for-byte — the
+    * nor `Locale.ROOT` matches it under a Turkish or Azeri JVM default
+    * locale, where `I` lowercases to dotless `ı`: `lower()` maps an
+    * all-ASCII string locale-free but a string with any non-ASCII char
+    * through the default locale, so a bare call diverges on ASCII text
+    * and `Locale.ROOT` on mixed text. Kernel-digest vs lower()-text
+    * normalizations must agree byte-for-byte — the
     * [[graft.operators.Bpe.encode]] discipline. */
   def windowDigestPairs(s: UTF8String, w: Int): ArrayData = {
     val text = s.toLowerCase.toString

@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the test corpus layout (`<sfDir>/<name>.parquet`)
   * plus generic readers. Parquet is the primary source — columnar,
@@ -13,8 +16,55 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val allTables: Seq[String] = tpchTables ++ Seq("events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Read a source table with its memoized schema ([[schemaOf]]): the
+    * scan plans without the footer-reading job that schema inference
+    * launches. The file listing still runs on every call and every
+    * call gets fresh attribute ids, so self-joins and double reads
+    * resolve exactly as with a plain `spark.read.parquet`. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private final case class Inferred(confs: Seq[(String, String)], modTime: Long,
+                                    length: Long, schema: StructType)
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  /** The session conf values parquet schema inference depends on
+    * (binaryAsString, int96AsTimestamp, nanosAsLong, mergeSchema, case
+    * sensitivity, ...); only explicitly set values are listed, so an
+    * unset key reads as its fixed default. */
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * qualified path and then reused. Each call revalidates the entry
+    * with one `getFileStatus`: a changed modification time or length,
+    * or a changed inference conf ([[inferenceConfs]]), re-infers and
+    * replaces it. A file rewritten within the same millisecond at the
+    * same length is not seen as changed — read paths rewritten that
+    * way with plain `spark.read`. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val status = fs.getFileStatus(p)
+    val confs = inferenceConfs(spark)
+    Option(inferred.get(key)) match {
+      case Some(e) if e.modTime == status.getModificationTime &&
+          e.length == status.getLen && e.confs == confs =>
+        e.schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        inferred.put(key,
+          Inferred(confs, status.getModificationTime, status.getLen, schema))
+        schema
+    }
+  }
 
   /** Register every table as a temp view for `spark.sql` use. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Event-time analytics over the `events` table, batch + streaming.
   *
@@ -149,12 +150,12 @@ object Streams {
   def sessionWindowStreamOnce(spark: SparkSession, sourcePath: String,
                               gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val src = spark.readStream.schema(schema).parquet(inputPath)
     withBackfillStatePartitions(spark) {
-      runGate(sessionWindowAgg(src, gapMinutes)
+      runGate(spark, sessionWindowAgg(src, gapMinutes)
         .writeStream.format("memory").queryName(qn)
         .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
     }
@@ -258,7 +259,7 @@ object Streams {
   def tumblingAggStreamOnce(spark: SparkSession, sourcePath: String,
                             windowLen: String = "1 hour"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     // The file streaming source monitors a DIRECTORY. Production
     // passes one; when handed a single parquet FILE (the test fixture
     // layout) wrap it in a temp dir via symlink so the source has a
@@ -267,7 +268,7 @@ object Streams {
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val src = spark.readStream.schema(schema).parquet(inputPath)
     withBackfillStatePartitions(spark) {
-      runGate(tumblingAgg(src, windowLen)
+      runGate(spark, tumblingAgg(src, windowLen)
         .writeStream.format("memory").queryName(qn)
         .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
     }
@@ -285,12 +286,12 @@ object Streams {
                            windowLen: String = "1 hour",
                            slide: String = "15 minutes"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val src = spark.readStream.schema(schema).parquet(inputPath)
     withBackfillStatePartitions(spark) {
-      runGate(hoppingAgg(src, windowLen, slide)
+      runGate(spark, hoppingAgg(src, windowLen, slide)
         .writeStream.format("memory").queryName(qn)
         .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
     }
@@ -317,7 +318,7 @@ object Streams {
                            dim: DataFrame, joinKey: String,
                            dimCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val src = spark.readStream.schema(schema).parquet(inputPath)
@@ -328,7 +329,7 @@ object Streams {
       .groupBy(col(joinKey))
       .agg(aggs.head, aggs.tail: _*)
     withBackfillStatePartitions(spark) {
-      runGate(joined.writeStream.format("memory").queryName(qn)
+      runGate(spark, joined.writeStream.format("memory").queryName(qn)
         .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
     }
     detachedTable(spark, qn)
@@ -360,7 +361,7 @@ object Streams {
                              withinMinutes: Int = 30,
                              watermark: String = "2 hours"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     def side(tp: String, p: String): DataFrame = {
       val raw = spark.readStream.schema(schema).parquet(inputPath)
@@ -386,7 +387,7 @@ object Streams {
       col("l_value").as("left_value"), col("r_value").as("right_value"))
     val qn = "graft_ssjoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withBackfillStatePartitions(spark) {
-      runGate(out.writeStream.format("memory").queryName(qn)
+      runGate(spark, out.writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
         q.awaitTermination()
         val plan = org.apache.spark.sql.graftbridge.Bridge
@@ -477,12 +478,13 @@ object Streams {
     * unbounded production forms keep the engine default / durable
     * checkpoint storage — exactly-once recovery lives there. Hosts
     * without a writable /dev/shm fall back to the engine's temp
-    * checkpoint unchanged. */
-  private def runGate[T, R](w: org.apache.spark.sql.streaming.DataStreamWriter[T])
+    * checkpoint unchanged. `spark` is the session that built `w`: its
+    * master decides whether tmpfs is sound. */
+  private def runGate[T, R](spark: SparkSession,
+                            w: org.apache.spark.sql.streaming.DataStreamWriter[T])
                            (body: org.apache.spark.sql.streaming.StreamingQuery => R): R = {
-    val master = org.apache.spark.sql.SparkSession.active
-      .sparkContext.master
-    val ckptDir = gateCheckpointDir(master, new java.io.File("/dev/shm"))
+    val ckptDir = gateCheckpointDir(spark.sparkContext.master,
+      new java.io.File("/dev/shm"))
     def rmTree(p: java.nio.file.Path): Unit = {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rm)
@@ -622,14 +624,14 @@ object Streams {
   def sessionizeStatefulOnce(spark: SparkSession, sourcePath: String,
                              gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     val raw = spark.readStream.schema(schema).parquet(inputPath)
     val ev = raw.select(col("user_id"), col("event_id"),
       eventTsMs(raw, "ts").as("ts_ms"), col("value"))
     val qn = "graft_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withBackfillStatePartitions(spark) {
-      runGate(sessionizeStatefulDs(ev, gapMinutes)
+      runGate(spark, sessionizeStatefulDs(ev, gapMinutes)
         .writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
     }
@@ -682,7 +684,7 @@ object Streams {
     import org.apache.spark.sql.streaming.Trigger
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"trendingStreamOnce: minFraction must be in (0,1], got $minFraction")
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     val qn = "graft_trending_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val raw = spark.readStream.schema(schema).parquet(inputPath)
@@ -703,7 +705,7 @@ object Streams {
       .select(col("window_start"), col("t.event_type").as("event_type"),
         col("t.n").as("n_events"), col("window_total"))
     withBackfillStatePartitions(spark) {
-      runGate(out.writeStream.format("memory").queryName(qn)
+      runGate(spark, out.writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
         q.awaitTermination()
         val plan = org.apache.spark.sql.graftbridge.Bridge
@@ -763,7 +765,7 @@ object Streams {
     val nbOther = baseCounts.map(_._2).sum - kept.map(_._2).sum
     val tb = baseCounts.map(_._2).sum
 
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val inputPath = asStreamDir(sourcePath)
     val qn = "graft_drift_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val raw = spark.readStream.schema(schema).parquet(inputPath)
@@ -814,7 +816,7 @@ object Streams {
         round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
         round(term, 6).as("jsd_term"))
     withBackfillStatePartitions(spark) {
-      runGate(out.writeStream.format("memory").queryName(qn)
+      runGate(spark, out.writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
         q.awaitTermination()
         val plan = org.apache.spark.sql.graftbridge.Bridge
@@ -858,7 +860,7 @@ object Streams {
                       watermark: String = "2 hours",
                       stateStore: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val srcFile = new java.io.File(sourcePath)
     require(srcFile.isFile, s"dedupStreamOnce expects a parquet file, got $sourcePath")
     val d = java.nio.file.Files.createTempDirectory("graft_stream_redeliver")
@@ -874,7 +876,7 @@ object Streams {
     val qn = "graft_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withSessionConf(spark, "spark.sql.streaming.stateStore.providerClass", stateStore) {
       withBackfillStatePartitions(spark) {
-        runGate(ev.writeStream.format("memory").queryName(qn)
+        runGate(spark, ev.writeStream.format("memory").queryName(qn)
           .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
           q.awaitTermination()
           // the requested provider must have actually RUN, not been
@@ -934,7 +936,7 @@ object Streams {
                           textCol: String = "text", shingleN: Int = 5,
                           watermark: String = "2 hours"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
+    val schema = Tables.schemaOf(spark, sourcePath)
     val srcFile = new java.io.File(sourcePath)
     require(srcFile.isFile, s"nearDedupStreamOnce expects a parquet file, got $sourcePath")
     val d = java.nio.file.Files.createTempDirectory("graft_stream_neardedup")
@@ -954,7 +956,7 @@ object Streams {
       .dropDuplicatesWithinWatermark("__sig")
     val qn = "graft_neardedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withBackfillStatePartitions(spark) {
-      runGate(ev.writeStream.format("memory").queryName(qn)
+      runGate(spark, ev.writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
     }
     detachedTable(spark, qn)

@@ -1,12 +1,124 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkT.spark
+
+  /** Spark jobs `f` launches on this thread. `f` runs under a job group
+    * of its own; a sentinel job in a second group, run after it, flushes
+    * the asynchronous (per-queue ordered) listener bus. */
+  private def jobsLaunchedBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft-sources-" + java.util.UUID.randomUUID()
+    val jobs = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == tag => jobs.incrementAndGet()
+          case Some(g) if g == tag + "-sentinel" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(tag + "-sentinel", "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def withConf[T](key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("Tables.load infers a source schema once: a second load launches no job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_schema_memo").toString
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(jobsLaunchedBy(Tables.load(spark, dir, "t")) >= 1,
+      "the first load must infer the schema (else the 0 below is vacuous)")
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { second = Tables.load(spark, dir, "t") } == 0)
+    // every read still gets fresh attribute ids: a self-join resolves
+    val first = Tables.load(spark, dir, "t")
+    val ids = (first.queryExecution.analyzed.output ++ second.queryExecution.analyzed.output)
+      .map(_.exprId)
+    assert(ids.distinct.size == ids.size)
+    assert(first.as("x").join(second.as("y"), col("x.k") === col("y.k")).count() == 2)
+  }
+
+  test("Tables.load sees a table rewritten at the same path with a new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_schema_rewrite").toString
+    Seq(1, 2, 3).toDF("k").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").schema.map(_.dataType) == Seq(IntegerType))
+    Seq(("x", 1L)).toDF("name", "n").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val back = Tables.load(spark, dir, "t")
+    assert(back.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(back.columns.toSeq == Seq("name", "n"))
+    assert(back.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("x", 1L)))
+  }
+
+  test("Tables.schemaOf re-infers when a parquet inference conf changes") {
+    import spark.implicits._
+    // two part files with disjoint columns: one file's schema without
+    // mergeSchema, the union with it
+    val path = Files.createTempDirectory("graft_schema_conf").toString + "/m.parquet"
+    Seq(1).toDF("a").write.parquet(path)
+    Seq(2L).toDF("b").write.mode("append").parquet(path)
+    val single = Tables.schemaOf(spark, path)
+    assert(single.size == 1 && single == spark.read.parquet(path).schema)
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      val merged = Tables.schemaOf(spark, path)
+      assert(merged.fieldNames.sorted.toSeq == Seq("a", "b"))
+      assert(merged == spark.read.parquet(path).schema)
+    }
+    assert(Tables.schemaOf(spark, path) == single)
+    // a footer with no Spark schema in it, so the binaryAsString and
+    // nanosAsLong confs decide the inferred types
+    val raw = Files.createTempDirectory("graft_schema_raw").toString + "/raw.parquet"
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required binary payload; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(raw)).withType(msg).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg).newGroup()
+      .append("payload", org.apache.parquet.io.api.Binary.fromString("hi"))
+      .append("ts", 1700000000000000000L))
+    finally w.close()
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val base = Tables.schemaOf(spark, raw)
+    assert(base.map(_.dataType) == Seq(BinaryType, LongType))
+    withConf("spark.sql.parquet.binaryAsString", "true") {
+      assert(Tables.schemaOf(spark, raw).map(_.dataType) == Seq(StringType, LongType))
+    }
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+      val fresh = scala.util.Try(spark.read.parquet(raw).schema)
+      assert(scala.util.Try(Tables.schemaOf(spark, raw)).toOption == fresh.toOption,
+        s"memo must not serve the nanosAsLong=true schema; fresh inference gave $fresh")
+    }
+    assert(Tables.schemaOf(spark, raw) == base)
+  }
+
+  test("Tables.load schemas equal spark.read.parquet's for every source table") {
+    Tables.allTables.foreach { t =>
+      val path = s"${SparkT.sfDir}/$t.parquet"
+      assert(Tables.load(spark, SparkT.sfDir, t).schema == spark.read.parquet(path).schema, t)
+    }
+  }
 
   test("csv round-trips a table with header + inferred schema") {
     val dir = Files.createTempDirectory("graft_csv").toString + "/nation"

@@ -470,4 +470,11 @@ class StreamsSpec extends AnyFunSuite {
       rm(tmp)
     }
   }
+
+  test("Bench.streamingNames is exactly the eleven streaming gates ev5-ev15") {
+    val gatePrefixes = (5 to 15).map(i => s"ev${i}_")
+    val gates = SparkEntry.queries.keySet.filter(n => gatePrefixes.exists(n.startsWith))
+    assert(gates.size == 11, gates)
+    assert(Bench.streamingNames == gates)
+  }
 }
