@@ -1,40 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.api.GraftSession
+
 object Bench {
   /** The streaming gates (ev5–ev15) each pay the streaming engine's
     * multi-second fixed backfill cost per rep — legitimate work, but
     * enough of the suite to mask batch regressions in the tracked
     * total. They are reported in the same file under their own group
     * so the BATCH total stays a clean round-over-round signal. */
-  private[graft] val streamingNames: Set[String] = Set(
-    "ev5_tumbling_stream", "ev6_sessionize_stateful", "ev7_dedup_stream",
-    "ev8_stream_static_join", "ev9_stream_stream_join", "ev10_dedup_rocksdb",
-    "ev11_neardedup_stream", "ev12_trending_stream", "ev13_drift_stream",
-    "ev14_hopping_stream", "ev15_session_window_stream")
+  private[graft] val streamingNames: Set[String] =
+    SparkEntry.declared.filter(_.streaming).map(_.name).toSet
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // FULL config parity with GraftSession.local — AQE, UTC session
-    // timezone, and the graft extensions (optimizer rule + native
-    // strategies): the benchmark must measure the engine configuration
-    // production sessions (and the correctness gate) actually run, or
-    // timestamp bucketing could group differently than the verified
-    // results and plans would be timed without the extension rules
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
+    // the session production code and Verify run: the benchmark must
+    // time the engine configuration whose results are verified
+    val spark = GraftSession.local(GraftSession.envCores)
     // JIT/codegen framework warmup so the first timed query doesn't
     // absorb session initialization cost
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).count()
@@ -69,25 +50,14 @@ object Bench {
     // and the median survives.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     // fixed alphabetical order: run-to-run and round-to-round
-    // comparability (Map iteration order reshuffles on every insert).
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts to a subset (dev loop);
-    // names are trimmed and must all exist — a typo or stray space
-    // failing silently would bench the wrong set and report it as
-    // healthy.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      // an EMPTY parse result must fail too: benching zero queries
-      // would print a healthy {"value":0,...} and exit 0 — the silent
-      // misconfiguration this guard exists to prevent
-      require(names.nonEmpty,
-        "SPARK_GRAFT_BENCH_ONLY is set but names no queries (empty/whitespace)")
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    // comparability. SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts to a subset
+    // (dev loop); names are trimmed and must all be declared — a typo,
+    // stray space or empty list failing silently would bench the wrong
+    // set and report it as healthy.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(v => SparkEntry.requireDeclared(
+      v.split(",").map(_.trim).filter(_.nonEmpty).toSeq, "SPARK_GRAFT_BENCH_ONLY").toSet)
+    val named = SparkEntry.declared.sortBy(_.name)
+      .filter(d => only.forall(_.contains(d.name)))
     // The FIRST round-robin pass is a warmup: it absorbs each query's
     // whole-stage-codegen compile + JIT cost, which otherwise lands in
     // exactly one rep per query and masquerades as host noise in the
@@ -101,11 +71,11 @@ object Bench {
     // across adjacent queries — exactly the evidence two rounds of
     // noise_indicator ≥1.0 lacked. null = that rep errored.
     val repTimes = scala.collection.mutable.Map.empty[String, Array[Option[Double]]]
-    for (rep <- 1 to reps; (name, fn) <- named) {
+    for (rep <- 1 to reps; SparkEntry.Declared(name, build, _, _) <- named) {
       val warmup = rep == 1 && reps > 1
       val t0 = System.nanoTime()
       val sample = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        build(spark, sfDir).write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
         case t: Throwable => Left(Option(t.getMessage).getOrElse(t.getClass.getName))
@@ -119,8 +89,8 @@ object Bench {
     }
     case class Stat(name: String, med: Option[Double], min: Option[Double],
                     spread: Option[Double], firstErr: Option[String])
-    val results = named.map { case (name, _) =>
-      val times = samples(name)
+    val results = named.map { d =>
+      val times = samples(d.name)
       val firstErr = times.collectFirst { case Left(e) => e }
       val ok = times.collect { case Right(v) => v }.sorted
       // median: middle element (odd n) or lower-middle (even n — the
@@ -135,7 +105,7 @@ object Bench {
       val spread =
         if (ok.size < 2) None
         else med.filter(_ > 0).map(m => (ok.last - ok.head) / m)
-      Stat(name, med, min, spread, firstErr)
+      Stat(d.name, med, min, spread, firstErr)
     }
     def r4(d: Double): String = BigDecimal(d)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
@@ -154,10 +124,10 @@ object Bench {
     // "flaky" = some rep failed but a timing exists — the two signals
     // must not contradict each other
     val failed = results.collect { case Stat(k, None, _, _, Some(e)) =>
-      s"""{"query":"$k","error":${jsonStr(e)}}"""
+      s"""{"query":"$k","error":${Verify.jsonStr(e.take(200))}}"""
     }.mkString("[", ",", "]")
     val flaky = results.collect { case Stat(k, Some(_), _, _, Some(e)) =>
-      s"""{"query":"$k","error":${jsonStr(e)}}"""
+      s"""{"query":"$k","error":${Verify.jsonStr(e.take(200))}}"""
     }.mkString("[", ",", "]")
     // headline follows the SAME coverage rule as sum_of_min and the
     // group sums: a query whose every rep failed must not silently
@@ -271,18 +241,4 @@ object Bench {
     spark.stop()
     if (results.exists(r => r.firstErr.isDefined && r.med.isEmpty)) sys.exit(1)
   }
-
-  private def jsonStr(s: String): String =
-    // non-ASCII goes out as \ u escapes so a take() that lands inside a
-    // surrogate pair still yields valid JSON (a lone escaped surrogate
-    // parses; a raw one is malformed UTF-8)
-    "\"" + s.take(200).flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

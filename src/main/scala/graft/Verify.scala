@@ -1,70 +1,56 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.api.GraftSession
 
-/** Driver-contract correctness dump: every `SparkEntry.queries` result
-  * to `outDir/<name>/` parquet plus the oracle SQL as
-  * `outDir/oracle_sql.json` (the driver replays it in DuckDB).
-  * [[graft.tools.QuickVerify]] runs the same core on a subset. */
+/** Correctness dump: each declared query's result to `outDir/<name>/`
+  * parquet plus its oracle SQL in `outDir/oracle_sql.json`, which
+  * `tools/oracle_check.py` replays in DuckDB.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...]
+  * With no query names it dumps every declared query; with names, only
+  * those (the dev loop on one operator), each timed on stdout.
+  * Then:  python3 tools/oracle_check.py <outDir> <sfDir>
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    run(sfDir, outDir, SparkEntry.queries.keySet, verbose = false)
-  }
-
-  /** The session the correctness gate runs under — shared with the
-    * subset tool so a config added here cannot silently diverge from
-    * the full run. */
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // graft extensions included: the gate verifies the same engine
-    // configuration (optimizer rule + native strategies) production
-    // sessions run
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-  }
-
-  private[graft] def run(sfDir: String, outDir: String,
-                         names: Set[String], verbose: Boolean): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val subset = args.length > 2
+    val picked = if (!subset) SparkEntry.declared else {
+      val names = SparkEntry.requireDeclared(args.drop(2).toSeq, "Verify").toSet
+      SparkEntry.declared.filter(d => names(d.name))
+    }
+    val spark = GraftSession.local(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => names.contains(q._1)).foreach { case (name, fn) =>
+    picked.foreach { d =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        if (verbose)
-          println(f"[quick-verify] $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+        d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${d.name}")
+        if (subset)
+          println(f"[verify] ${d.name}%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql.filter(o => names.contains(o._1))
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
+    val json = picked.flatMap(d => d.oracle.map(sql => s"${jsonStr(d.name)}: ${jsonStr(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 
-  /** JSON string escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in builder-authored SQL would otherwise
-    * make the driver's json.load fail and silently zero the round's
-    * correctness. */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal of `s`. Quote, backslash and every control
+    * character are escaped (a tab or CR left raw would make a strict
+    * reader reject the file), and so is every non-ASCII character, as
+    * `\uXXXX`: a string cut inside a surrogate pair stays valid JSON. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
     case '\r' => "\\r"
     case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
 }

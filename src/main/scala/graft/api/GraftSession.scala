@@ -49,6 +49,11 @@ object GraftSession {
     spark
   }
 
+  /** Core count of the command-line mains' sessions:
+    * `SPARK_GRAFT_CPUS`, else every available processor. */
+  private[graft] def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Register graft SQL functions + optimizer rules on an externally
     * built session (extensions can't be injected post-creation, but
     * `experimental.extraOptimizations` can). */

@@ -266,11 +266,10 @@ class AnnSpec extends AnyFunSuite {
     // floors pin the measured numbers against silent regression.
     val r = SparkEntry.queries("ann6_recall")(spark, SparkT.sfDir)
       .collect().map(row => row.getString(0) -> row.getDouble(2)).toMap
-    // measured at sf0.001 with the round-10 swept params
-    // (tools/ProfileAnnSweep — every tier clears the 0.5 line at both
-    // sf0.001 and sf0.01): lsh 0.615 (7-bit codes × 8 tables ×
-    // 8 probes), ivf 0.740 (nProbe=6), pq 0.870 (10·k exact rerank),
-    // ivfpq 0.725 (nProbe=6 + 10·k rerank). Deterministic seeds/data —
+    // measured at sf0.001 with the swept params (every tier clears the
+    // 0.5 line at both sf0.001 and sf0.01): lsh 0.615 (7-bit codes × 8
+    // tables × 8 probes), ivf 0.740 (nProbe=6), pq 0.870 (10·k exact
+    // rerank), ivfpq 0.725 (nProbe=6 + 10·k rerank). Deterministic seeds/data —
     // floors leave regression margin below the weaker sf0.01
     // measurements (0.600 / 0.660 / 0.870 / 0.645).
     assert(r("ann2_lsh") >= 0.50, s"lsh recall@10 = ${r("ann2_lsh")}")

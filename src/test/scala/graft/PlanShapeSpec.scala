@@ -72,6 +72,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan(q).contains("BroadcastHashJoin"))
   }
 
+  test("QueryPlan.executed returns q17_tpch_q5's final adaptive plan") {
+    // a noop save plans its own QueryExecution and leaves the frame's
+    // plan at isFinalPlan=false; the tool must show what AQE ran
+    val q = SparkEntry.queries("q17_tpch_q5")(spark, SparkT.sfDir)
+    tools.QueryPlan.executed(q) match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        assert(a.isFinalPlan, a.toString.take(1200))
+        assert(a.toString.contains("BroadcastHashJoin"), a.toString.take(1200))
+      case p => fail(s"q17_tpch_q5 did not plan adaptively:\n$p")
+    }
+  }
+
   test("aggregations are partial (map-side combine) before the shuffle") {
     val q = SparkEntry.queries("q15_tpch_q1")(spark, SparkT.sfDir)
     val p = plan(q)

@@ -149,7 +149,7 @@ class SourcesSpec extends AnyFunSuite {
   test("bucketed tables join without any exchange") {
     // a managed table's location survives the (in-memory) catalog across
     // JVMs — drop both the entry and any stale directory first
-    Seq("orders_b", "lineitem_b").foreach { t =>
+    Seq("orders_b", "lineitem_b", "orders_b4").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new java.io.File(s"spark-warehouse/$t")
       if (loc.exists()) {
@@ -177,7 +177,15 @@ class SourcesSpec extends AnyFunSuite {
       // AQE renders initial+final plans, so each side's bucketed scan
       // can appear twice — require at least both sides once
       assert("Bucketed: true".r.findAllIn(p).length >= 2, p.take(1200))
-      assert(j.count() == SparkT.table("lineitem").count())
+      val lineitemRows = SparkT.table("lineitem").count()
+      assert(j.count() == lineitemRows)
+      // rewriting an existing bucketed table succeeds, and a join of
+      // mismatched bucket counts (8 vs 4: one side must shuffle) still
+      // returns every row
+      Tables.writeBucketed(SparkT.table("orders"), "orders_b", "o_orderkey", 8)
+      Tables.writeBucketed(SparkT.table("orders"), "orders_b4", "o_orderkey", 4)
+      assert(spark.table("lineitem_b").join(spark.table("orders_b4"), "o_orderkey")
+        .count() == lineitemRows)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
