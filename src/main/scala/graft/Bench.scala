@@ -63,6 +63,9 @@ object Bench {
     // exactly one rep per query and masquerades as host noise in the
     // spread. Warmup timings are excluded from med/min/spread (errors
     // still count); with reps=N that leaves N−1 measured samples.
+    // queries_compiles checks the compile half of that claim: the
+    // classes Janino compiled during each measured rep (all of them on
+    // a local master, where executors share the driver's JVM).
     val samples = scala.collection.mutable.Map.empty[String, List[Either[String, Double]]]
     // rep-aligned raw wall times (WARMUP INCLUDED at index 0): a host
     // contention window inflates a wall-clock-contiguous stripe of
@@ -71,8 +74,11 @@ object Bench {
     // across adjacent queries — exactly the evidence two rounds of
     // noise_indicator ≥1.0 lacked. null = that rep errored.
     val repTimes = scala.collection.mutable.Map.empty[String, Array[Option[Double]]]
+    val compiles = scala.collection.mutable.Map.empty[String, List[Long]]
+    val compileCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     for (rep <- 1 to reps; SparkEntry.Declared(name, build, _, _) <- named) {
       val warmup = rep == 1 && reps > 1
+      val c0 = compileCount.getCount
       val t0 = System.nanoTime()
       val sample = try {
         build(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -80,6 +86,8 @@ object Bench {
       } catch {
         case t: Throwable => Left(Option(t.getMessage).getOrElse(t.getClass.getName))
       }
+      if (!warmup)
+        compiles(name) = compiles.getOrElse(name, Nil) :+ (compileCount.getCount - c0)
       val arr = repTimes.getOrElseUpdate(name, Array.fill[Option[Double]](reps)(None))
       sample.foreach(t => arr(rep - 1) = Some(t))
       sample match {
@@ -119,6 +127,11 @@ object Bench {
     val qsReps = results.map { s =>
       "\"" + s.name + "\":" + repTimes(s.name)
         .map(_.map(r4).getOrElse("null")).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    // classes compiled per measured rep (warmup excluded): 0 everywhere
+    // means the warmup pass really did absorb every compile
+    val qsCompiles = results.map { s =>
+      "\"" + s.name + "\":" + compiles(s.name).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // "failed" = no rep succeeded (null timing, nonzero exit);
     // "flaky" = some rep failed but a timing exists — the two signals
@@ -184,7 +197,7 @@ object Bench {
           "noise, min-of-N (sum_of_min/queries_min/batch_min/streaming_min) is the " +
           "only valid cross-round read. Per-rep times are in queries_reps — a " +
           "rep-aligned stripe of inflated cells marks the contention window."))
-    val full = s"""{"metric":"total","value":$totalJson,"unit":"sec","sum_of_min":$sumOfMinJson,"sum_of_min_n":$minCovered,"queries":$qs,"queries_min":$qsMin,"queries_spread":$qsSpread,"queries_reps":$qsReps,"groups":$groups,"noise_indicator":$noiseJson,"failed":$failed,"flaky":$flaky,"reps":$reps,"warmup_reps":${if (reps > 1) 1 else 0},"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$totalJson,"unit":"sec","sum_of_min":$sumOfMinJson,"sum_of_min_n":$minCovered,"queries":$qs,"queries_min":$qsMin,"queries_spread":$qsSpread,"queries_reps":$qsReps,"queries_compiles":$qsCompiles,"groups":$groups,"noise_indicator":$noiseJson,"failed":$failed,"flaky":$flaky,"reps":$reps,"warmup_reps":${if (reps > 1) 1 else 0},"sf":"$sfDir"}"""
     // The harness capturing this output keeps only a bounded tail; with
     // ~80 queries the one-line detail object outgrows it and the front
     // of the line (including "total") is cut, leaving nothing parseable.

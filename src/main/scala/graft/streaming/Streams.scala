@@ -151,13 +151,14 @@ object Streams {
                               gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
-    withBackfillStatePartitions(spark) {
-      runGate(spark, sessionWindowAgg(src, gapMinutes)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+    withStreamDir(sourcePath) { inputPath =>
+      val src = spark.readStream.schema(schema).parquet(inputPath)
+      withBackfillStatePartitions(spark) {
+        runGate(spark, sessionWindowAgg(src, gapMinutes)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      }
     }
     detachedTable(spark, qn)
   }
@@ -260,17 +261,14 @@ object Streams {
                             windowLen: String = "1 hour"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    // The file streaming source monitors a DIRECTORY. Production
-    // passes one; when handed a single parquet FILE (the test fixture
-    // layout) wrap it in a temp dir via symlink so the source has a
-    // valid basePath.
-    val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
-    withBackfillStatePartitions(spark) {
-      runGate(spark, tumblingAgg(src, windowLen)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+    withStreamDir(sourcePath) { inputPath =>
+      val src = spark.readStream.schema(schema).parquet(inputPath)
+      withBackfillStatePartitions(spark) {
+        runGate(spark, tumblingAgg(src, windowLen)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      }
     }
     detachedTable(spark, qn)
   }
@@ -287,13 +285,14 @@ object Streams {
                            slide: String = "15 minutes"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
-    withBackfillStatePartitions(spark) {
-      runGate(spark, hoppingAgg(src, windowLen, slide)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+    withStreamDir(sourcePath) { inputPath =>
+      val src = spark.readStream.schema(schema).parquet(inputPath)
+      withBackfillStatePartitions(spark) {
+        runGate(spark, hoppingAgg(src, windowLen, slide)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      }
     }
     detachedTable(spark, qn)
   }
@@ -319,18 +318,19 @@ object Streams {
                            dimCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
     val aggs = count(lit(1)).as("n_events") +:
       round(sum(col("value")), 4).as("sum_value") +:
       dimCols.map(c => max(col(c)).as(c))
-    val joined = src.join(broadcast(dim), Seq(joinKey))
-      .groupBy(col(joinKey))
-      .agg(aggs.head, aggs.tail: _*)
-    withBackfillStatePartitions(spark) {
-      runGate(spark, joined.writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+    withStreamDir(sourcePath) { inputPath =>
+      val joined = spark.readStream.schema(schema).parquet(inputPath)
+        .join(broadcast(dim), Seq(joinKey))
+        .groupBy(col(joinKey))
+        .agg(aggs.head, aggs.tail: _*)
+      withBackfillStatePartitions(spark) {
+        runGate(spark, joined.writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      }
     }
     detachedTable(spark, qn)
   }
@@ -362,39 +362,40 @@ object Streams {
                              watermark: String = "2 hours"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
-    def side(tp: String, p: String): DataFrame = {
-      val raw = spark.readStream.schema(schema).parquet(inputPath)
-      raw
-        // a null event time can't satisfy the range predicate (batch
-        // semantics) but would reach the watermark operator — drop it
-        // scan-side so both engines agree by construction
-        .filter(col("event_type") === tp && col("ts").isNotNull)
-        .select(col("user_id").as(s"${p}_user"),
-          col("event_id").as(s"${p}_id"),
-          eventTs(raw, "ts").as(s"${p}_ts"),
-          col("value").as(s"${p}_value"))
-        .withWatermark(s"${p}_ts", watermark)
-    }
-    val joined = side(leftType, "l").join(side(rightType, "r"),
-      col("l_user") === col("r_user") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
-    val out = joined.select(
-      col("l_user").as("user_id"),
-      col("l_id").as("left_id"), col("r_id").as("right_id"),
-      (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("delta_ms"),
-      col("l_value").as("left_value"), col("r_value").as("right_value"))
     val qn = "graft_ssjoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withBackfillStatePartitions(spark) {
-      runGate(spark, out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-        q.awaitTermination()
-        val plan = org.apache.spark.sql.graftbridge.Bridge
-          .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
-        require(plan.contains("StreamingSymmetricHashJoin"),
-          "intervalJoinStreamOnce: engine did not plan a stateful " +
-            s"stream-stream join — state bounds unverifiable:\n$plan")
+    withStreamDir(sourcePath) { inputPath =>
+      def side(tp: String, p: String): DataFrame = {
+        val raw = spark.readStream.schema(schema).parquet(inputPath)
+        raw
+          // a null event time can't satisfy the range predicate (batch
+          // semantics) but would reach the watermark operator — drop it
+          // scan-side so both engines agree by construction
+          .filter(col("event_type") === tp && col("ts").isNotNull)
+          .select(col("user_id").as(s"${p}_user"),
+            col("event_id").as(s"${p}_id"),
+            eventTs(raw, "ts").as(s"${p}_ts"),
+            col("value").as(s"${p}_value"))
+          .withWatermark(s"${p}_ts", watermark)
+      }
+      val joined = side(leftType, "l").join(side(rightType, "r"),
+        col("l_user") === col("r_user") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
+      val out = joined.select(
+        col("l_user").as("user_id"),
+        col("l_id").as("left_id"), col("r_id").as("right_id"),
+        (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("delta_ms"),
+        col("l_value").as("left_value"), col("r_value").as("right_value"))
+      withBackfillStatePartitions(spark) {
+        runGate(spark, out.writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
+          q.awaitTermination()
+          val plan = org.apache.spark.sql.graftbridge.Bridge
+            .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
+          require(plan.contains("StreamingSymmetricHashJoin"),
+            "intervalJoinStreamOnce: engine did not plan a stateful " +
+              s"stream-stream join — state bounds unverifiable:\n$plan")
+        }
       }
     }
     detachedTable(spark, qn)
@@ -485,13 +486,6 @@ object Streams {
                            (body: org.apache.spark.sql.streaming.StreamingQuery => R): R = {
     val ckptDir = gateCheckpointDir(spark.sparkContext.master,
       new java.io.File("/dev/shm"))
-    def rmTree(p: java.nio.file.Path): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }
     // start() inside the try: a start-time failure must not leak the
     // freshly created RAM-backed checkpoint dir
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
@@ -529,18 +523,36 @@ object Streams {
       Some(java.nio.file.Files.createTempDirectory(shm.toPath, "graft_ckpt_"))
     else None
 
-  /** Wrap a single parquet FILE in a temp dir (symlink) so the file
-    * streaming source — which monitors a DIRECTORY — has a valid
-    * basePath; directories pass through. */
-  private def asStreamDir(sourcePath: String): String = {
+  /** Delete a tree without following symlinks: a link is removed,
+    * never the file or directory it points at. */
+  private def rmTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, LinkOption}
+    import scala.jdk.CollectionConverters._
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
+      val children = Files.list(p)
+      try children.iterator.asScala.foreach(rmTree) finally children.close()
+    }
+    Files.deleteIfExists(p); ()
+  }
+
+  /** Run `f` on a directory the file streaming source can monitor. A
+    * directory passes through. A single parquet FILE (the test fixture
+    * layout) is linked `deliveries` times into a new temp dir, so the
+    * source has a valid basePath (two links simulate an at-least-once
+    * source that delivers every record twice); the dir is deleted when
+    * `f` returns, by which time the gate's memory sink holds its rows. */
+  private def withStreamDir[R](sourcePath: String, deliveries: Int = 1)
+                              (f: String => R): R = {
     val srcFile = new java.io.File(sourcePath)
-    if (srcFile.isFile) {
+    if (!srcFile.isFile) f(sourcePath)
+    else {
       val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
-      val link = java.nio.file.Files.createSymbolicLink(
-        d.resolve(srcFile.getName), srcFile.toPath.toAbsolutePath)
-      link.toFile.deleteOnExit(); d.toFile.deleteOnExit()
-      d.toString
-    } else sourcePath
+      try {
+        (1 to deliveries).foreach(i => java.nio.file.Files.createSymbolicLink(
+          d.resolve(s"delivery$i.parquet"), srcFile.toPath.toAbsolutePath))
+        f(d.toString)
+      } finally rmTree(d)
+    }
   }
 
   /** Detach a completed memory-sink query's result from the session
@@ -625,15 +637,16 @@ object Streams {
                              gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
-    val raw = spark.readStream.schema(schema).parquet(inputPath)
-    val ev = raw.select(col("user_id"), col("event_id"),
-      eventTsMs(raw, "ts").as("ts_ms"), col("value"))
     val qn = "graft_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withBackfillStatePartitions(spark) {
-      runGate(spark, sessionizeStatefulDs(ev, gapMinutes)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+    withStreamDir(sourcePath) { inputPath =>
+      val raw = spark.readStream.schema(schema).parquet(inputPath)
+      val ev = raw.select(col("user_id"), col("event_id"),
+        eventTsMs(raw, "ts").as("ts_ms"), col("value"))
+      withBackfillStatePartitions(spark) {
+        runGate(spark, sessionizeStatefulDs(ev, gapMinutes)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      }
     }
     detachedTable(spark, qn)
   }
@@ -685,36 +698,37 @@ object Streams {
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"trendingStreamOnce: minFraction must be in (0,1], got $minFraction")
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
     val qn = "graft_trending_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val raw = spark.readStream.schema(schema).parquet(inputPath)
-    val src = raw.withColumn("__evt", eventTs(raw, "ts"))
-      .withWatermark("__evt", watermark)
-    val counts = src
-      .groupBy(window(col("__evt"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val perWindow = counts
-      .groupBy(window(window_time(col("w")), windowLen).as("w2"))
-      .agg(sum(col("n")).as("window_total"),
-        collect_list(struct(col("event_type"), col("n"))).as("types"))
-    val out = perWindow
-      .select(unix_timestamp(col("w2.start")).as("window_start"),
-        col("window_total"), explode(col("types")).as("t"))
-      .filter(col("t.n") >=
-        ceil(col("window_total") * lit(java.math.BigDecimal.valueOf(minFraction))))
-      .select(col("window_start"), col("t.event_type").as("event_type"),
-        col("t.n").as("n_events"), col("window_total"))
-    withBackfillStatePartitions(spark) {
-      runGate(spark, out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-        q.awaitTermination()
-        val plan = org.apache.spark.sql.graftbridge.Bridge
-          .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
-        // the whole point is the chained-stateful shape — require BOTH
-        // stateful aggregates in the executed streaming plan
-        require("StateStoreSave".r.findAllIn(plan).length >= 2,
-          "trendingStreamOnce: engine did not plan two chained stateful " +
-            s"aggregates:\n${plan.take(1500)}")
+    withStreamDir(sourcePath) { inputPath =>
+      val raw = spark.readStream.schema(schema).parquet(inputPath)
+      val src = raw.withColumn("__evt", eventTs(raw, "ts"))
+        .withWatermark("__evt", watermark)
+      val counts = src
+        .groupBy(window(col("__evt"), windowLen).as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      val perWindow = counts
+        .groupBy(window(window_time(col("w")), windowLen).as("w2"))
+        .agg(sum(col("n")).as("window_total"),
+          collect_list(struct(col("event_type"), col("n"))).as("types"))
+      val out = perWindow
+        .select(unix_timestamp(col("w2.start")).as("window_start"),
+          col("window_total"), explode(col("types")).as("t"))
+        .filter(col("t.n") >=
+          ceil(col("window_total") * lit(java.math.BigDecimal.valueOf(minFraction))))
+        .select(col("window_start"), col("t.event_type").as("event_type"),
+          col("t.n").as("n_events"), col("window_total"))
+      withBackfillStatePartitions(spark) {
+        runGate(spark, out.writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
+          q.awaitTermination()
+          val plan = org.apache.spark.sql.graftbridge.Bridge
+            .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
+          // the whole point is the chained-stateful shape — require BOTH
+          // stateful aggregates in the executed streaming plan
+          require("StateStoreSave".r.findAllIn(plan).length >= 2,
+            "trendingStreamOnce: engine did not plan two chained stateful " +
+              s"aggregates:\n${plan.take(1500)}")
+        }
       }
     }
     detachedTable(spark, qn)
@@ -766,64 +780,65 @@ object Streams {
     val tb = baseCounts.map(_._2).sum
 
     val schema = Tables.schemaOf(spark, sourcePath)
-    val inputPath = asStreamDir(sourcePath)
     val qn = "graft_drift_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val raw = spark.readStream.schema(schema).parquet(inputPath)
-    val src = raw.withColumn("__evt", eventTs(raw, "ts"))
-      .withWatermark("__evt", watermark)
-      .filter(col(catCol).isNotNull)
-    val counts = src
-      .groupBy(window(col("__evt"), windowLen).as("w"),
-        col(catCol).cast("string").as("__cat"))
-      .agg(count(lit(1)).as("n"))
-    val perWindow = counts
-      .groupBy(window(window_time(col("w")), windowLen).as("w2"))
-      .agg(collect_list(struct(col("__cat"), col("n"))).as("types"))
+    withStreamDir(sourcePath) { inputPath =>
+      val raw = spark.readStream.schema(schema).parquet(inputPath)
+      val src = raw.withColumn("__evt", eventTs(raw, "ts"))
+        .withWatermark("__evt", watermark)
+        .filter(col(catCol).isNotNull)
+      val counts = src
+        .groupBy(window(col("__evt"), windowLen).as("w"),
+          col(catCol).cast("string").as("__cat"))
+        .agg(count(lit(1)).as("n"))
+      val perWindow = counts
+        .groupBy(window(window_time(col("w")), windowLen).as("w2"))
+        .agg(collect_list(struct(col("__cat"), col("n"))).as("types"))
 
-    val keptLit = array(kept.map { case (c, nb) =>
-      struct(lit(c).as("category"), lit(nb).as("n_base")) }: _*)
-    val withTerms = perWindow
-      .select(unix_timestamp(col("w2.start")).as("window_start"), col("types"))
-      .withColumn("window_total",
-        aggregate(col("types"), lit(0L), (a, t) => a + t.getField("n")))
-      .withColumn("terms", transform(keptLit, k => struct(
-        k.getField("category").as("category"),
-        k.getField("n_base").as("n_base"),
-        aggregate(filter(col("types"),
-            t => t.getField("__cat") === k.getField("category")),
-          lit(0L), (a, t) => a + t.getField("n")).as("n_cur"))))
-      .withColumn("__nck",
-        aggregate(col("terms"), lit(0L), (a, x) => a + x.getField("n_cur")))
-      .withColumn("terms",
-        when(lit(nbOther) > 0L || col("window_total") - col("__nck") > 0L,
-          concat(col("terms"), array(struct(
-            lit("__other__").as("category"), lit(nbOther).as("n_base"),
-            (col("window_total") - col("__nck")).as("n_cur")))))
-          .otherwise(col("terms")))
-    val pb = col("n_base") / lit(tb)
-    val pc = col("n_cur") / col("window_total")
-    val m = (pb + pc) / 2
-    val term = (when(col("n_base") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
-      + when(col("n_cur") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
-    val out = withTerms
-      .select(col("window_start"), col("window_total"),
-        explode(col("terms")).as("t"))
-      .select(col("window_start"), col("t.category").as("category"),
-        col("t.n_base").as("n_base"), col("t.n_cur").as("n_cur"),
-        col("window_total"))
-      .select(col("window_start"), col("category"), col("n_base"),
-        col("n_cur"), col("window_total"),
-        round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
-        round(term, 6).as("jsd_term"))
-    withBackfillStatePartitions(spark) {
-      runGate(spark, out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-        q.awaitTermination()
-        val plan = org.apache.spark.sql.graftbridge.Bridge
-          .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
-        require("StateStoreSave".r.findAllIn(plan).length >= 2,
-          "categoricalDriftStreamOnce: engine did not plan two chained " +
-            s"stateful aggregates:\n${plan.take(1500)}")
+      val keptLit = array(kept.map { case (c, nb) =>
+        struct(lit(c).as("category"), lit(nb).as("n_base")) }: _*)
+      val withTerms = perWindow
+        .select(unix_timestamp(col("w2.start")).as("window_start"), col("types"))
+        .withColumn("window_total",
+          aggregate(col("types"), lit(0L), (a, t) => a + t.getField("n")))
+        .withColumn("terms", transform(keptLit, k => struct(
+          k.getField("category").as("category"),
+          k.getField("n_base").as("n_base"),
+          aggregate(filter(col("types"),
+              t => t.getField("__cat") === k.getField("category")),
+            lit(0L), (a, t) => a + t.getField("n")).as("n_cur"))))
+        .withColumn("__nck",
+          aggregate(col("terms"), lit(0L), (a, x) => a + x.getField("n_cur")))
+        .withColumn("terms",
+          when(lit(nbOther) > 0L || col("window_total") - col("__nck") > 0L,
+            concat(col("terms"), array(struct(
+              lit("__other__").as("category"), lit(nbOther).as("n_base"),
+              (col("window_total") - col("__nck")).as("n_cur")))))
+            .otherwise(col("terms")))
+      val pb = col("n_base") / lit(tb)
+      val pc = col("n_cur") / col("window_total")
+      val m = (pb + pc) / 2
+      val term = (when(col("n_base") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
+        + when(col("n_cur") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
+      val out = withTerms
+        .select(col("window_start"), col("window_total"),
+          explode(col("terms")).as("t"))
+        .select(col("window_start"), col("t.category").as("category"),
+          col("t.n_base").as("n_base"), col("t.n_cur").as("n_cur"),
+          col("window_total"))
+        .select(col("window_start"), col("category"), col("n_base"),
+          col("n_cur"), col("window_total"),
+          round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
+          round(term, 6).as("jsd_term"))
+      withBackfillStatePartitions(spark) {
+        runGate(spark, out.writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
+          q.awaitTermination()
+          val plan = org.apache.spark.sql.graftbridge.Bridge
+            .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
+          require("StateStoreSave".r.findAllIn(plan).length >= 2,
+            "categoricalDriftStreamOnce: engine did not plan two chained " +
+              s"stateful aggregates:\n${plan.take(1500)}")
+        }
       }
     }
     detachedTable(spark, qn)
@@ -861,39 +876,36 @@ object Streams {
                       stateStore: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val srcFile = new java.io.File(sourcePath)
-    require(srcFile.isFile, s"dedupStreamOnce expects a parquet file, got $sourcePath")
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_redeliver")
-    Seq("delivery1.parquet", "delivery2.parquet").foreach { n =>
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(n), srcFile.toPath.toAbsolutePath)
-    }
-    val raw = spark.readStream.schema(schema).parquet(d.toString)
-    val ev = raw
-      .withColumn("__ts_t", eventTs(raw, "ts"))
-      .withWatermark("__ts_t", watermark)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
+    require(new java.io.File(sourcePath).isFile,
+      s"dedupStreamOnce expects a parquet file, got $sourcePath")
     val qn = "graft_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withSessionConf(spark, "spark.sql.streaming.stateStore.providerClass", stateStore) {
-      withBackfillStatePartitions(spark) {
-        runGate(spark, ev.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-          q.awaitTermination()
-          // the requested provider must have actually RUN, not been
-          // silently ignored: RocksDB surfaces its own custom state
-          // metrics in the progress events — their absence means the
-          // engine fell back to the default in-heap store and the
-          // "state bounded by disk" claim is unverified (same
-          // discipline as the StreamingSymmetricHashJoin plan assert)
-          if (stateStore.exists(_.contains("RocksDB"))) {
-            import scala.jdk.CollectionConverters._
-            val hasRocks = q.recentProgress.toSeq
-              .flatMap(_.stateOperators.toSeq)
-              .exists(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))
-            require(hasRocks,
-              "dedupStreamOnce: RocksDB state store requested but no rocksdb* " +
-                "custom metrics appeared in any progress event — the provider " +
-                "did not take effect")
+    withStreamDir(sourcePath, deliveries = 2) { inputPath =>
+      val raw = spark.readStream.schema(schema).parquet(inputPath)
+      val ev = raw
+        .withColumn("__ts_t", eventTs(raw, "ts"))
+        .withWatermark("__ts_t", watermark)
+        .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
+      withSessionConf(spark, "spark.sql.streaming.stateStore.providerClass", stateStore) {
+        withBackfillStatePartitions(spark) {
+          runGate(spark, ev.writeStream.format("memory").queryName(qn)
+            .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
+            q.awaitTermination()
+            // the requested provider must have actually RUN, not been
+            // silently ignored: RocksDB surfaces its own custom state
+            // metrics in the progress events — their absence means the
+            // engine fell back to the default in-heap store and the
+            // "state bounded by disk" claim is unverified (same
+            // discipline as the StreamingSymmetricHashJoin plan assert)
+            if (stateStore.exists(_.contains("RocksDB"))) {
+              import scala.jdk.CollectionConverters._
+              val hasRocks = q.recentProgress.toSeq
+                .flatMap(_.stateOperators.toSeq)
+                .exists(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))
+              require(hasRocks,
+                "dedupStreamOnce: RocksDB state store requested but no rocksdb* " +
+                  "custom metrics appeared in any progress event — the provider " +
+                  "did not take effect")
+            }
           }
         }
       }
@@ -937,27 +949,24 @@ object Streams {
                           watermark: String = "2 hours"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.schemaOf(spark, sourcePath)
-    val srcFile = new java.io.File(sourcePath)
-    require(srcFile.isFile, s"nearDedupStreamOnce expects a parquet file, got $sourcePath")
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_neardedup")
-    Seq("delivery1.parquet", "delivery2.parquet").foreach { n =>
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(n), srcFile.toPath.toAbsolutePath)
-    }
-    // null-text rows drop from the dedup stream rather than silently
-    // merging: their content signature is null (the exact-dedup null
-    // convention) and dropDuplicates groups nulls TOGETHER — callers
-    // route null-text rows separately
-    val ev = spark.readStream.schema(schema).parquet(d.toString)
-      .filter(col(textCol).isNotNull)
-      .withColumn("__sig", graft.dedup.Dedup.contentSignature(col(textCol), shingleN))
-      .withColumn("__ingest_ts", current_timestamp())
-      .withWatermark("__ingest_ts", watermark)
-      .dropDuplicatesWithinWatermark("__sig")
+    require(new java.io.File(sourcePath).isFile,
+      s"nearDedupStreamOnce expects a parquet file, got $sourcePath")
     val qn = "graft_neardedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withBackfillStatePartitions(spark) {
-      runGate(spark, ev.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+    withStreamDir(sourcePath, deliveries = 2) { inputPath =>
+      // null-text rows drop from the dedup stream rather than silently
+      // merging: their content signature is null (the exact-dedup null
+      // convention) and dropDuplicates groups nulls TOGETHER — callers
+      // route null-text rows separately
+      val ev = spark.readStream.schema(schema).parquet(inputPath)
+        .filter(col(textCol).isNotNull)
+        .withColumn("__sig", graft.dedup.Dedup.contentSignature(col(textCol), shingleN))
+        .withColumn("__ingest_ts", current_timestamp())
+        .withWatermark("__ingest_ts", watermark)
+        .dropDuplicatesWithinWatermark("__sig")
+      withBackfillStatePartitions(spark) {
+        runGate(spark, ev.writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      }
     }
     detachedTable(spark, qn)
   }

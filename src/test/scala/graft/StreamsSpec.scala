@@ -471,6 +471,51 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
+  private def runDeclared(name: String): Unit =
+    SparkEntry.queries(name)(spark, SparkT.sfDir)
+      .write.format("noop").mode("overwrite").save()
+
+  /** Classes Janino compiles while `f` runs (the executors of a local
+    * master share this JVM, so their compiles count too). */
+  private def compiledBy(f: => Unit): Long = {
+    val metric = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = metric.getCount
+    f
+    metric.getCount - before
+  }
+
+  test("a warm re-run of ev5_tumbling_stream compiles no class") {
+    // each gate runs in a session clone; with artifact isolation on,
+    // every clone has its own executor class loader and misses the
+    // codegen cache, so this was about 12 compiles per run
+    runDeclared("ev5_tumbling_stream")
+    assert(compiledBy(runDeclared("ev5_tumbling_stream")) == 0)
+  }
+
+  test("a third warm pass over the benchmark's pipeline queries compiles no class") {
+    import scala.jdk.CollectionConverters._
+    val workloads = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("perfbench/workloads.json"))
+    val pipeline = workloads.path("workloads").path("pipeline").path("queries")
+      .elements.asScala.map(_.asText).toSeq
+    assert(pipeline.size == 7, pipeline)
+    // their working set (about 120 classes) outgrows Spark's default
+    // 100-entry codegen cache, which evicted and recompiled every pass
+    for (_ <- 1 to 2) pipeline.foreach(runDeclared)
+    val perQuery = pipeline.map(n => n -> compiledBy(runDeclared(n)))
+    assert(perQuery.forall(_._2 == 0), perQuery)
+  }
+
+  test("a streaming gate leaves no source wrapper dir behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def wrappers(): Set[String] =
+      Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft_stream"))
+    val before = wrappers()
+    // ev5 links events.parquet once, ev7 twice (simulated redelivery)
+    Seq("ev5_tumbling_stream", "ev7_dedup_stream").foreach(runDeclared)
+    assert(wrappers() -- before == Set.empty)
+  }
+
   test("Bench.streamingNames is exactly the eleven streaming gates ev5-ev15") {
     val gatePrefixes = (5 to 15).map(i => s"ev${i}_")
     val gates = SparkEntry.queries.keySet.filter(n => gatePrefixes.exists(n.startsWith))
