@@ -55,11 +55,7 @@ object SparkEntry {
         // location — drop both the catalog entry and the stale dir
         Seq(Q45LineitemTable, Q45OrdersTable).foreach { tbl =>
           s.sql(s"DROP TABLE IF EXISTS $tbl")
-          def rm(f: java.io.File): Unit = if (f.exists()) {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(new java.io.File(
+          Streams.rmTree(java.nio.file.Paths.get(
             s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
         }
         graft.sources.Tables.writeBucketed(
@@ -73,19 +69,26 @@ object SparkEntry {
       }
     }
 
-  /** Shared memo + write-once discipline for the q46/q48/q49 setup
-    * sinks. Keyed by (prefix, sf dir) — not last-dir-wins, so a JVM
-    * alternating between sf dirs (spec suite beside a Verify run)
-    * writes each layout exactly once. The path carries the pid so two
-    * JVMs on one host (a Bench run beside a Verify run) can't race
-    * one process's overwrite against the other's read. A failed write
-    * is NOT memoised — the next call retries. */
+  /** One fixed scratch path per (JVM, `prefix`, sf dir) under
+    * java.io.tmpdir. The pid keeps two JVMs on one host (a Bench run
+    * beside a Verify run) from racing one process's overwrite against
+    * the other's read; a query whose build writes (an index it then
+    * searches) overwrites its one path instead of leaving a new temp
+    * dir behind on every build. */
+  private def scratchPath(prefix: String, dir: String): String =
+    s"${sys.props("java.io.tmpdir")}/${prefix}_" +
+      s"${ProcessHandle.current().pid()}_" +
+      dir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** Shared memo + write-once discipline for the fixture sinks (q46,
+    * q48, q49, q63, ev11) at their [[scratchPath]]. Keyed by (prefix,
+    * sf dir) — not last-dir-wins, so a JVM alternating between sf dirs
+    * (spec suite beside a Verify run) writes each layout exactly once.
+    * A failed write is NOT memoised — the next call retries. */
   private val writtenOnce = new scala.collection.mutable.HashSet[String]()
 
   private def ensureWrittenOnce(prefix: String, dir: String)(write: String => Unit): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/${prefix}_" +
-      s"${ProcessHandle.current().pid()}_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val path = scratchPath(prefix, dir)
     val key = s"$prefix|$dir"
     synchronized {
       if (!writtenOnce.contains(key)) { write(path); writtenOnce += key }
@@ -1849,9 +1852,9 @@ object SparkEntry {
     // rows-only, like every approximate tier).
     Declared("ann9_ivfpq_index", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ann9")
-      Ann.buildIvfPqIndex(emb, tmp.toString, nCells = 16, m = 8, ksub = 16)
-      Ann.ivfPqTopKIndexed(s, tmp.toString, emb.filter(col("vec_id") < 20),
+      val index = scratchPath("graft_ann9", dir)
+      Ann.buildIvfPqIndex(emb, index, nCells = 16, m = 8, ksub = 16)
+      Ann.ivfPqTopKIndexed(s, index, emb.filter(col("vec_id") < 20),
           emb, k = 10, nCells = 16, nProbe = 6, m = 8, ksub = 16, rerank = 100)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -2771,14 +2774,15 @@ object SparkEntry {
       // normalized md5 (which ARRIVAL survives is race-dependent; its
       // class fingerprint is not), so DuckDB replays the whole gate as
       // DISTINCT md5(normalized text) over the same planted union.
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val variants = base.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"),
-          concat(lit("  "), regexp_replace(col("text"), " ", "  ")).as("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ev11")
-      base.unionByName(variants).coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/corpus")
-      val part = new java.io.File(s"$tmp/corpus").listFiles()
+      val corpus = ensureWrittenOnce("graft_ev11_corpus", dir) { path =>
+        val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
+        val variants = base.filter(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 100000L).as("doc_id"),
+            concat(lit("  "), regexp_replace(col("text"), " ", "  ")).as("text"))
+        base.unionByName(variants).coalesce(1)
+          .write.mode("overwrite").parquet(path)
+      }
+      val part = new java.io.File(corpus).listFiles()
         .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
         .head.getAbsolutePath
       Streams.nearDedupStreamOnce(s, part, textCol = "text", shingleN = 5)
@@ -3316,7 +3320,7 @@ object SparkEntry {
       // persisted round trip preserves that).
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = d.filter(col("doc_id") % 10 === 0)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dd14")
+      val tmp = scratchPath("graft_dd14", dir)
       Dedup.buildSignatureIndex(ref, "doc_id", "text", shingleN = 7, k = 32)
         .write.mode("overwrite").parquet(s"$tmp/ref_index")
       val index = s.read.parquet(s"$tmp/ref_index")
@@ -4045,7 +4049,7 @@ object SparkEntry {
       // as rows, fatal as one array), term predicate pushed to the
       // index scan, then one query-sized count-distinct-terms filter.
       val d = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_txt21")
+      val tmp = scratchPath("graft_txt21", dir)
       Search.invertedIndex(d, "doc_id", "text")
         .write.mode("overwrite").parquet(s"$tmp/index")
       Search.andSearch(s.read.parquet(s"$tmp/index"),

@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.sources.Tables
+import java.nio.file.Files
 
 /** Event-time analytics over the `events` table, batch + streaming.
   *
@@ -148,20 +150,8 @@ object Streams {
     * production sinks run append + watermark, where closed sessions
     * emit exactly once and state stays bounded by open sessions. */
   def sessionWindowStreamOnce(spark: SparkSession, sourcePath: String,
-                              gapMinutes: Int = 30): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      val src = spark.readStream.schema(schema).parquet(inputPath)
-      withBackfillStatePartitions(spark) {
-        runGate(spark, sessionWindowAgg(src, gapMinutes)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
-      }
-    }
-    detachedTable(spark, qn)
-  }
+                              gapMinutes: Int = 30): DataFrame =
+    backfill(spark, sourcePath, "complete")(sessionWindowAgg(_, gapMinutes))
 
   /** Gap-based sessionization (batch form): a new session starts when a
     * user is idle longer than `gapMinutes`. One shuffle (by user), then
@@ -258,20 +248,8 @@ object Streams {
     * by the engine, unbounded runs just swap the trigger).
     */
   def tumblingAggStreamOnce(spark: SparkSession, sourcePath: String,
-                            windowLen: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      val src = spark.readStream.schema(schema).parquet(inputPath)
-      withBackfillStatePartitions(spark) {
-        runGate(spark, tumblingAgg(src, windowLen)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
-      }
-    }
-    detachedTable(spark, qn)
-  }
+                            windowLen: String = "1 hour"): DataFrame =
+    backfill(spark, sourcePath, "complete")(tumblingAgg(_, windowLen))
 
   /** [[hoppingAgg]] executed end-to-end BY the streaming engine —
     * the sliding-window sibling of [[tumblingAggStreamOnce]], same
@@ -282,20 +260,8 @@ object Streams {
     * production sinks run append + watermark like ev6/ev12. */
   def hoppingAggStreamOnce(spark: SparkSession, sourcePath: String,
                            windowLen: String = "1 hour",
-                           slide: String = "15 minutes"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      val src = spark.readStream.schema(schema).parquet(inputPath)
-      withBackfillStatePartitions(spark) {
-        runGate(spark, hoppingAgg(src, windowLen, slide)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
-      }
-    }
-    detachedTable(spark, qn)
-  }
+                           slide: String = "15 minutes"): DataFrame =
+    backfill(spark, sourcePath, "complete")(hoppingAgg(_, windowLen, slide))
 
   /** Stream–static enrichment join, executed by the streaming engine
     * end-to-end: a streaming fact source joined to a STATIC dimension
@@ -316,23 +282,13 @@ object Streams {
   def streamStaticJoinOnce(spark: SparkSession, sourcePath: String,
                            dim: DataFrame, joinKey: String,
                            dimCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val aggs = count(lit(1)).as("n_events") +:
       round(sum(col("value")), 4).as("sum_value") +:
       dimCols.map(c => max(col(c)).as(c))
-    withStreamDir(sourcePath) { inputPath =>
-      val joined = spark.readStream.schema(schema).parquet(inputPath)
-        .join(broadcast(dim), Seq(joinKey))
-        .groupBy(col(joinKey))
-        .agg(aggs.head, aggs.tail: _*)
-      withBackfillStatePartitions(spark) {
-        runGate(spark, joined.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
-      }
-    }
-    detachedTable(spark, qn)
+    backfill(spark, sourcePath, "complete")(_
+      .join(broadcast(dim), Seq(joinKey))
+      .groupBy(col(joinKey))
+      .agg(aggs.head, aggs.tail: _*))
   }
 
   /** Stream–stream windowed (interval) join, executed by the streaming
@@ -359,81 +315,28 @@ object Streams {
   def intervalJoinStreamOnce(spark: SparkSession, sourcePath: String,
                              leftType: String, rightType: String,
                              withinMinutes: Int = 30,
-                             watermark: String = "2 hours"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_ssjoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      def side(tp: String, p: String): DataFrame = {
-        val raw = spark.readStream.schema(schema).parquet(inputPath)
-        raw
-          // a null event time can't satisfy the range predicate (batch
-          // semantics) but would reach the watermark operator — drop it
-          // scan-side so both engines agree by construction
-          .filter(col("event_type") === tp && col("ts").isNotNull)
-          .select(col("user_id").as(s"${p}_user"),
-            col("event_id").as(s"${p}_id"),
-            eventTs(raw, "ts").as(s"${p}_ts"),
-            col("value").as(s"${p}_value"))
-          .withWatermark(s"${p}_ts", watermark)
-      }
-      val joined = side(leftType, "l").join(side(rightType, "r"),
-        col("l_user") === col("r_user") &&
-          col("r_ts") >= col("l_ts") &&
-          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
-      val out = joined.select(
-        col("l_user").as("user_id"),
-        col("l_id").as("left_id"), col("r_id").as("right_id"),
-        (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("delta_ms"),
-        col("l_value").as("left_value"), col("r_value").as("right_value"))
-      withBackfillStatePartitions(spark) {
-        runGate(spark, out.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-          q.awaitTermination()
-          val plan = org.apache.spark.sql.graftbridge.Bridge
-            .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
-          require(plan.contains("StreamingSymmetricHashJoin"),
-            "intervalJoinStreamOnce: engine did not plan a stateful " +
-              s"stream-stream join — state bounds unverifiable:\n$plan")
-        }
-      }
-    }
-    detachedTable(spark, qn)
-  }
-
-  /** Run `f` with `spark.sql.shuffle.partitions` clamped to
-    * min(current, `n`), restoring the previous value after.
-    *
-    * For the one-shot bounded-backfill gates ONLY: a stateful
-    * streaming query instantiates one state store per shuffle
-    * partition, and every micro-batch pays per-store setup + a delta
-    * commit to the checkpoint — with 32 partitions (64 stores for a
-    * stream-stream join) that fixed cost dwarfs the actual work on a
-    * bounded fixture. Results are partition-count-independent (same
-    * rows, fewer stores), and the state-partition count is baked into
-    * a NEW checkpoint at first start, so a fresh one-shot query can
-    * pick it freely. The unbounded production forms
-    * ([[tumblingAggStream]], [[dedupStream]], ...) are untouched —
-    * at real scale the partition count must be sized to the data,
-    * which is the session's own setting. */
-  private def withBackfillStatePartitions[T](spark: SparkSession, n: Int = 4)(f: => T): T =
-    // serialized on this object: the read/set/restore of a
-    // session-GLOBAL conf is not reentrant — two concurrent gates on a
-    // shared session could otherwise interleave as read(200) read(4)
-    // restore(200) restore(4) and leave the session clamped forever.
-    // The gates are one-shot bounded backfills; serializing them costs
-    // nothing that matters.
-    Streams.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      // a non-integer value (e.g. "auto" under a vendor fork) means we
-      // can't meaningfully clamp — run unchanged rather than throw
-      scala.util.Try(prev.toInt).toOption match {
-        case Some(p) =>
-          spark.conf.set(key, math.min(p, n).toString)
-          try f finally spark.conf.set(key, prev)
-        case None => f
-      }
+                             watermark: String = "2 hours"): DataFrame =
+    backfill(spark, sourcePath, "append", check = requirePlan(_,
+      "intervalJoinStreamOnce", "StreamingSymmetricHashJoin", 1)) { raw =>
+      def side(tp: String, p: String): DataFrame = raw
+        // a null event time can't satisfy the range predicate (batch
+        // semantics) but would reach the watermark operator — drop it
+        // scan-side so both engines agree by construction
+        .filter(col("event_type") === tp && col("ts").isNotNull)
+        .select(col("user_id").as(s"${p}_user"),
+          col("event_id").as(s"${p}_id"),
+          eventTs(raw, "ts").as(s"${p}_ts"),
+          col("value").as(s"${p}_value"))
+        .withWatermark(s"${p}_ts", watermark)
+      side(leftType, "l").join(side(rightType, "r"),
+          col("l_user") === col("r_user") &&
+            col("r_ts") >= col("l_ts") &&
+            col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
+        .select(
+          col("l_user").as("user_id"),
+          col("l_id").as("left_id"), col("r_id").as("right_id"),
+          (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("delta_ms"),
+          col("l_value").as("left_value"), col("r_value").as("right_value"))
     }
 
   /** Fully-qualified class name of Spark's RocksDB state store
@@ -450,52 +353,124 @@ object Streams {
   val RocksDbStateStore: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `f` with session conf `key` set to `value` (when provided),
-    * restoring the previous value — or unsetting — after. Serialized
-    * on this object like [[withBackfillStatePartitions]]: the
-    * read/set/restore of session-global state is not reentrant. */
-  private def withSessionConf[T](spark: SparkSession, key: String,
-                                 value: Option[String])(f: => T): T =
-    value match {
-      case None => f
-      case Some(v) => Streams.synchronized {
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, v)
-        try f finally prev match {
-          case Some(p) => spark.conf.set(key, p)
-          case None => spark.conf.unset(key)
+  /** Run `build` over `sourcePath` as a one-shot bounded backfill
+    * through the Structured Streaming engine and return the sink's rows
+    * as a batch DataFrame. Every `*StreamOnce` gate is this runner plus
+    * its transform. In order:
+    *
+    *  1. the source schema comes from [[Tables.schemaOf]]'s memo;
+    *  2. a directory source passes through. A single parquet FILE (the
+    *     test fixture layout) is linked `deliveries` times into a new
+    *     temp dir, so the file source has a valid basePath; two links
+    *     simulate an at-least-once source that delivers every record
+    *     twice, with no write job. `deliveries > 1` requires a file;
+    *  3. `build` gets `spark.readStream` over that input;
+    *  4. `spark.sql.shuffle.partitions` is clamped to min(current, 4)
+    *     and, when given, `stateStore` becomes the state-store provider;
+    *     both are restored after, or unset when they had no value. A
+    *     stateful streaming query opens one state store per shuffle
+    *     partition, and every micro-batch pays per-store setup plus a
+    *     delta commit to the checkpoint: with 32 partitions (64 stores
+    *     for a stream-stream join) that fixed cost dwarfs the work on a
+    *     bounded fixture. Results do not depend on the partition count,
+    *     and a NEW checkpoint bakes it in at first start, so a one-shot
+    *     query may pick it freely. The unbounded forms
+    *     ([[tumblingAggStream]], [[dedupStream]], ...) keep the
+    *     session's own setting, which at real scale is sized to the
+    *     data. A non-integer value (e.g. "auto" under a vendor fork)
+    *     cannot be clamped and is left alone. The read/set/restore of
+    *     session-GLOBAL conf is not reentrant, so it is serialized on
+    *     this object: two concurrent gates on one session could
+    *     otherwise interleave read(200) read(4) restore(200) restore(4)
+    *     and leave the session clamped forever;
+    *  5. the checkpoint goes on tmpfs when [[gateCheckpointDir]] finds
+    *     that sound, else to the engine's temp checkpoint. That one lands
+    *     under java.io.tmpdir on DISK, and every stateful gate pays
+    *     per-commit file I/O there (state-store delta files; RocksDB SST
+    *     and changelog uploads — measured 2.77 s → 1.97 s for the ev10
+    *     gate on /dev/shm). A bounded backfill's checkpoint has no value
+    *     past the returned rows, so deleting it is correct; the
+    *     unbounded forms keep durable checkpoint storage, where
+    *     exactly-once recovery lives;
+    *  6. the query writes to a memory sink under AvailableNow, which
+    *     processes everything in the source and stops. `start()` runs
+    *     inside the `try`, so a start-time failure cannot leak the
+    *     checkpoint. After `awaitTermination`, `check` inspects the
+    *     finished query, and a requested RocksDB provider must show its
+    *     own metrics;
+    *  7. whatever happened, the query stops, the checkpoint and wrapper
+    *     dirs are deleted (never following a symlink), the conf is
+    *     restored and the sink's temp view is dropped. The returned,
+    *     already-analyzed DataFrame holds the sink plan directly, so
+    *     repeated runs (bench reps) do not pile up registered tables
+    *     for the session's lifetime, and the rows are freed once the
+    *     caller drops the DataFrame. */
+  private[graft] def backfill(spark: SparkSession, sourcePath: String, outputMode: String,
+                              deliveries: Int = 1, stateStore: Option[String] = None,
+                              check: StreamingQuery => Unit = _ => ())
+                             (build: DataFrame => DataFrame): DataFrame = {
+    val schema = Tables.schemaOf(spark, sourcePath)
+    val file = new java.io.File(sourcePath)
+    require(deliveries == 1 || file.isFile,
+      s"a gate delivering each record $deliveries times expects a parquet file, got $sourcePath")
+    val qn = "graft_gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val wrapper = if (file.isFile) Some(Files.createTempDirectory("graft_stream_src")) else None
+    try {
+      val inputPath = wrapper.fold(sourcePath) { d =>
+        (1 to deliveries).foreach(i => Files.createSymbolicLink(
+          d.resolve(s"delivery$i.parquet"), file.toPath.toAbsolutePath))
+        d.toString
+      }
+      val out = build(spark.readStream.schema(schema).parquet(inputPath))
+      Streams.synchronized {
+        val partitions = "spark.sql.shuffle.partitions"
+        val changes = Seq(
+          scala.util.Try(spark.conf.get(partitions).toInt).toOption
+            .map(p => partitions -> math.min(p, 4).toString),
+          stateStore.map("spark.sql.streaming.stateStore.providerClass" -> _)).flatten
+        val prev = changes.map { case (k, _) => k -> spark.conf.getOption(k) }
+        val ckpt = gateCheckpointDir(spark.sparkContext.master, new java.io.File("/dev/shm"))
+        var q: StreamingQuery = null
+        try {
+          changes.foreach { case (k, v) => spark.conf.set(k, v) }
+          val w = out.writeStream.format("memory").queryName(qn)
+            .outputMode(outputMode).trigger(Trigger.AvailableNow())
+          q = ckpt.fold(w)(p => w.option("checkpointLocation", p.toString)).start()
+          q.awaitTermination()
+          check(q)
+          // the requested provider must have actually RUN, not been
+          // silently ignored: RocksDB reports its own custom state
+          // metrics in the progress events, and their absence means the
+          // engine fell back to the in-heap store
+          if (stateStore.exists(_.contains("RocksDB"))) {
+            import scala.jdk.CollectionConverters._
+            require(q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
+                .exists(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))),
+              "RocksDB state store requested but no rocksdb* custom metrics " +
+                "appeared in any progress event — the provider did not take effect")
+          }
+        } finally {
+          if (q != null && q.isActive) q.stop()
+          ckpt.foreach(rmTree)
+          prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
         }
       }
-    }
-
-  /** Start a one-shot gate query with its checkpoint on tmpfs when the
-    * host has one, run `body`, then stop the query and delete the
-    * checkpoint. The engine's temp checkpoint lands under
-    * java.io.tmpdir on DISK, and every stateful gate pays per-commit
-    * file I/O there (state-store delta files; RocksDB SST + changelog
-    * uploads — measured 2.77 s → 1.97 s for the ev10 gate on
-    * /dev/shm). These are BOUNDED backfills whose checkpoint has no
-    * value past the returned rows, so deleting it is correct; the
-    * unbounded production forms keep the engine default / durable
-    * checkpoint storage — exactly-once recovery lives there. Hosts
-    * without a writable /dev/shm fall back to the engine's temp
-    * checkpoint unchanged. `spark` is the session that built `w`: its
-    * master decides whether tmpfs is sound. */
-  private def runGate[T, R](spark: SparkSession,
-                            w: org.apache.spark.sql.streaming.DataStreamWriter[T])
-                           (body: org.apache.spark.sql.streaming.StreamingQuery => R): R = {
-    val ckptDir = gateCheckpointDir(spark.sparkContext.master,
-      new java.io.File("/dev/shm"))
-    // start() inside the try: a start-time failure must not leak the
-    // freshly created RAM-backed checkpoint dir
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = ckptDir.fold(w)(p => w.option("checkpointLocation", p.toString)).start()
-      body(q)
+      spark.table(qn) // analysis resolves and captures the sink plan
     } finally {
-      if (q != null && q.isActive) q.stop()
-      ckptDir.foreach(rmTree)
+      spark.catalog.dropTempView(qn)
+      wrapper.foreach(rmTree)
     }
+  }
+
+  /** Require at least `atLeast` `op` operators in the finished query's
+    * executed plan: a gate whose point is a plan shape (a stateful
+    * stream-stream join, chained stateful aggregates) must not pass on
+    * a silent fallback to another shape. */
+  private def requirePlan(q: StreamingQuery, caller: String, op: String, atLeast: Int): Unit = {
+    val plan = org.apache.spark.sql.graftbridge.Bridge
+      .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
+    require(op.r.findAllIn(plan).length >= atLeast,
+      s"$caller: engine planned fewer than $atLeast $op:\n${plan.take(1500)}")
   }
 
   /** Where a ONE-SHOT gate's checkpoint goes: tmpfs when that is sound,
@@ -525,7 +500,7 @@ object Streams {
 
   /** Delete a tree without following symlinks: a link is removed,
     * never the file or directory it points at. */
-  private def rmTree(p: java.nio.file.Path): Unit = {
+  private[graft] def rmTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, LinkOption}
     import scala.jdk.CollectionConverters._
     if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
@@ -533,38 +508,6 @@ object Streams {
       try children.iterator.asScala.foreach(rmTree) finally children.close()
     }
     Files.deleteIfExists(p); ()
-  }
-
-  /** Run `f` on a directory the file streaming source can monitor. A
-    * directory passes through. A single parquet FILE (the test fixture
-    * layout) is linked `deliveries` times into a new temp dir, so the
-    * source has a valid basePath (two links simulate an at-least-once
-    * source that delivers every record twice); the dir is deleted when
-    * `f` returns, by which time the gate's memory sink holds its rows. */
-  private def withStreamDir[R](sourcePath: String, deliveries: Int = 1)
-                              (f: String => R): R = {
-    val srcFile = new java.io.File(sourcePath)
-    if (!srcFile.isFile) f(sourcePath)
-    else {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
-      try {
-        (1 to deliveries).foreach(i => java.nio.file.Files.createSymbolicLink(
-          d.resolve(s"delivery$i.parquet"), srcFile.toPath.toAbsolutePath))
-        f(d.toString)
-      } finally rmTree(d)
-    }
-  }
-
-  /** Detach a completed memory-sink query's result from the session
-    * catalog: the returned (already-analyzed) DataFrame holds the sink
-    * plan directly, so dropping the temp view keeps repeated
-    * invocations (bench reps) from accumulating registered tables for
-    * the session's lifetime — the sink's rows are then freed when the
-    * caller's DataFrame becomes unreachable, not never. */
-  private def detachedTable(spark: SparkSession, qn: String): DataFrame = {
-    val df = spark.table(qn) // analysis resolves + captures the sink plan
-    spark.catalog.dropTempView(qn)
-    df
   }
 
   /** Custom streaming state: gap-based sessionization via
@@ -634,22 +577,11 @@ object Streams {
     * when the bounded input ends).
     */
   def sessionizeStatefulOnce(spark: SparkSession, sourcePath: String,
-                             gapMinutes: Int = 30): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      val raw = spark.readStream.schema(schema).parquet(inputPath)
-      val ev = raw.select(col("user_id"), col("event_id"),
-        eventTsMs(raw, "ts").as("ts_ms"), col("value"))
-      withBackfillStatePartitions(spark) {
-        runGate(spark, sessionizeStatefulDs(ev, gapMinutes)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
-      }
+                             gapMinutes: Int = 30): DataFrame =
+    backfill(spark, sourcePath, "append") { raw =>
+      sessionizeStatefulDs(raw.select(col("user_id"), col("event_id"),
+        eventTsMs(raw, "ts").as("ts_ms"), col("value")), gapMinutes).toDF()
     }
-    detachedTable(spark, qn)
-  }
 
   /** Per-window TRENDING event types (batch form): types taking at
     * least `minFraction` of their window's events — the windowed
@@ -694,13 +626,12 @@ object Streams {
                          windowLen: String = "1 hour",
                          minFraction: Double = 0.25,
                          watermark: String = "2 hours"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"trendingStreamOnce: minFraction must be in (0,1], got $minFraction")
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_trending_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      val raw = spark.readStream.schema(schema).parquet(inputPath)
+    // the whole point is the chained-stateful shape: require BOTH
+    // stateful aggregates in the executed streaming plan
+    backfill(spark, sourcePath, "append",
+        check = requirePlan(_, "trendingStreamOnce", "StateStoreSave", 2)) { raw =>
       val src = raw.withColumn("__evt", eventTs(raw, "ts"))
         .withWatermark("__evt", watermark)
       val counts = src
@@ -710,28 +641,14 @@ object Streams {
         .groupBy(window(window_time(col("w")), windowLen).as("w2"))
         .agg(sum(col("n")).as("window_total"),
           collect_list(struct(col("event_type"), col("n"))).as("types"))
-      val out = perWindow
+      perWindow
         .select(unix_timestamp(col("w2.start")).as("window_start"),
           col("window_total"), explode(col("types")).as("t"))
         .filter(col("t.n") >=
           ceil(col("window_total") * lit(java.math.BigDecimal.valueOf(minFraction))))
         .select(col("window_start"), col("t.event_type").as("event_type"),
           col("t.n").as("n_events"), col("window_total"))
-      withBackfillStatePartitions(spark) {
-        runGate(spark, out.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-          q.awaitTermination()
-          val plan = org.apache.spark.sql.graftbridge.Bridge
-            .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
-          // the whole point is the chained-stateful shape — require BOTH
-          // stateful aggregates in the executed streaming plan
-          require("StateStoreSave".r.findAllIn(plan).length >= 2,
-            "trendingStreamOnce: engine did not plan two chained stateful " +
-              s"aggregates:\n${plan.take(1500)}")
-        }
-      }
     }
-    detachedTable(spark, qn)
   }
 
   /** CONTINUOUS categorical drift: per event-time window, the
@@ -767,7 +684,6 @@ object Streams {
                                  windowLen: String = "1 hour",
                                  topK: Int = 20,
                                  watermark: String = "2 hours"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     require(topK >= 1, s"categoricalDriftStreamOnce: topK must be >= 1, got $topK")
     // baseline distribution, collected once (small-side contract)
     val baseCounts = baseline.filter(col(catCol).isNotNull)
@@ -779,10 +695,8 @@ object Streams {
     val nbOther = baseCounts.map(_._2).sum - kept.map(_._2).sum
     val tb = baseCounts.map(_._2).sum
 
-    val schema = Tables.schemaOf(spark, sourcePath)
-    val qn = "graft_drift_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath) { inputPath =>
-      val raw = spark.readStream.schema(schema).parquet(inputPath)
+    backfill(spark, sourcePath, "append", check = requirePlan(_,
+        "categoricalDriftStreamOnce", "StateStoreSave", 2)) { raw =>
       val src = raw.withColumn("__evt", eventTs(raw, "ts"))
         .withWatermark("__evt", watermark)
         .filter(col(catCol).isNotNull)
@@ -819,7 +733,7 @@ object Streams {
       val m = (pb + pc) / 2
       val term = (when(col("n_base") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
         + when(col("n_cur") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
-      val out = withTerms
+      withTerms
         .select(col("window_start"), col("window_total"),
           explode(col("terms")).as("t"))
         .select(col("window_start"), col("t.category").as("category"),
@@ -829,19 +743,7 @@ object Streams {
           col("n_cur"), col("window_total"),
           round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
           round(term, 6).as("jsd_term"))
-      withBackfillStatePartitions(spark) {
-        runGate(spark, out.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-          q.awaitTermination()
-          val plan = org.apache.spark.sql.graftbridge.Bridge
-            .lastStreamingExecutedPlan(q).map(_.toString).getOrElse("")
-          require("StateStoreSave".r.findAllIn(plan).length >= 2,
-            "categoricalDriftStreamOnce: engine did not plan two chained " +
-              s"stateful aggregates:\n${plan.take(1500)}")
-        }
-      }
     }
-    detachedTable(spark, qn)
   }
 
   /** Streaming exact dedup — the continuous form of [[graft.dedup.Dedup.exact]]
@@ -873,45 +775,13 @@ object Streams {
   def dedupStreamOnce(spark: SparkSession, sourcePath: String,
                       keyCols: Seq[String],
                       watermark: String = "2 hours",
-                      stateStore: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    require(new java.io.File(sourcePath).isFile,
-      s"dedupStreamOnce expects a parquet file, got $sourcePath")
-    val qn = "graft_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath, deliveries = 2) { inputPath =>
-      val raw = spark.readStream.schema(schema).parquet(inputPath)
-      val ev = raw
+                      stateStore: Option[String] = None): DataFrame =
+    backfill(spark, sourcePath, "append", deliveries = 2, stateStore = stateStore) { raw =>
+      raw
         .withColumn("__ts_t", eventTs(raw, "ts"))
         .withWatermark("__ts_t", watermark)
         .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-      withSessionConf(spark, "spark.sql.streaming.stateStore.providerClass", stateStore) {
-        withBackfillStatePartitions(spark) {
-          runGate(spark, ev.writeStream.format("memory").queryName(qn)
-            .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
-            q.awaitTermination()
-            // the requested provider must have actually RUN, not been
-            // silently ignored: RocksDB surfaces its own custom state
-            // metrics in the progress events — their absence means the
-            // engine fell back to the default in-heap store and the
-            // "state bounded by disk" claim is unverified (same
-            // discipline as the StreamingSymmetricHashJoin plan assert)
-            if (stateStore.exists(_.contains("RocksDB"))) {
-              import scala.jdk.CollectionConverters._
-              val hasRocks = q.recentProgress.toSeq
-                .flatMap(_.stateOperators.toSeq)
-                .exists(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))
-              require(hasRocks,
-                "dedupStreamOnce: RocksDB state store requested but no rocksdb* " +
-                  "custom metrics appeared in any progress event — the provider " +
-                  "did not take effect")
-            }
-          }
-        }
-      }
     }
-    detachedTable(spark, qn)
-  }
 
   /** Streaming NEAR-dedup — the crawl-ingestion shape: documents
     * arrive as a stream (no event-time column of their own; ingestion
@@ -946,30 +816,17 @@ object Streams {
     */
   def nearDedupStreamOnce(spark: SparkSession, sourcePath: String,
                           textCol: String = "text", shingleN: Int = 5,
-                          watermark: String = "2 hours"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = Tables.schemaOf(spark, sourcePath)
-    require(new java.io.File(sourcePath).isFile,
-      s"nearDedupStreamOnce expects a parquet file, got $sourcePath")
-    val qn = "graft_neardedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamDir(sourcePath, deliveries = 2) { inputPath =>
-      // null-text rows drop from the dedup stream rather than silently
-      // merging: their content signature is null (the exact-dedup null
-      // convention) and dropDuplicates groups nulls TOGETHER — callers
-      // route null-text rows separately
-      val ev = spark.readStream.schema(schema).parquet(inputPath)
-        .filter(col(textCol).isNotNull)
-        .withColumn("__sig", graft.dedup.Dedup.contentSignature(col(textCol), shingleN))
-        .withColumn("__ingest_ts", current_timestamp())
-        .withWatermark("__ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark("__sig")
-      withBackfillStatePartitions(spark) {
-        runGate(spark, ev.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
-      }
-    }
-    detachedTable(spark, qn)
-  }
+                          watermark: String = "2 hours"): DataFrame =
+    // null-text rows drop from the dedup stream rather than silently
+    // merging: their content signature is null (the exact-dedup null
+    // convention) and dropDuplicates groups nulls TOGETHER — callers
+    // route null-text rows separately
+    backfill(spark, sourcePath, "append", deliveries = 2)(_
+      .filter(col(textCol).isNotNull)
+      .withColumn("__sig", graft.dedup.Dedup.contentSignature(col(textCol), shingleN))
+      .withColumn("__ingest_ts", current_timestamp())
+      .withWatermark("__ingest_ts", watermark)
+      .dropDuplicatesWithinWatermark("__sig"))
 
   /** Rolling per-user running totals (batch window-function form used
     * by the q18_window oracle query). */

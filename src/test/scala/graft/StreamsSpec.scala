@@ -8,6 +8,12 @@ import graft.streaming.Streams
 class StreamsSpec extends AnyFunSuite {
   lazy val spark = SparkT.spark
 
+  /** Run `f` on a fresh temp dir, deleted afterwards. */
+  private def withTempDir[T](prefix: String)(f: String => T): T = {
+    val d = Files.createTempDirectory(prefix)
+    try f(d.toString) finally Streams.rmTree(d)
+  }
+
   test("sessionize: gap splits sessions, epochs bound them") {
     import spark.implicits._
     val base = 1700000000000L // ms
@@ -55,30 +61,31 @@ class StreamsSpec extends AnyFunSuite {
     // materialize (user_id, event_id, ts_ms, value) and replay as a stream
     val ev = graft.streaming.Streams.runningTotals(SparkT.table("events"))
       .select("user_id", "event_id", "ts_ms", "value")
-    val dir = Files.createTempDirectory("graft_sessions").toString
-    ev.write.mode("overwrite").parquet(dir)
+    withTempDir("graft_sessions") { dir =>
+      ev.write.mode("overwrite").parquet(dir)
 
-    val stream = Streams.sessionizeStateful(spark, dir,
-      spark.read.parquet(dir).schema, gapMinutes = 30)
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("graft_sessions_test").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_sessions_test")
-        .select(col("user_id"), col("session_start_ms"), col("session_end_ms"),
-          col("n_events"), round(col("sum_value"), 4).as("sum_value"))
-      // expected: batch sessions minus each user's last (still-open) one
-      val batch = Streams.sessionize(spark.read.parquet(dir)
-          .withColumn("ts", timestamp_millis(col("ts_ms"))).drop("ts_ms"), 30)
-      val wmax = Window.partitionBy("user_id")
-      val closedBatch = batch
-        .withColumn("max_seq", max(col("session_seq")).over(wmax))
-        .filter(col("session_seq") < col("max_seq"))
-        .select(col("user_id"), col("session_start_ms"), col("session_end_ms"),
-          col("n_events"), col("sum_value"))
-      assert(got.exceptAll(closedBatch).count() == 0)
-      assert(closedBatch.exceptAll(got).count() == 0)
-    } finally q.stop()
+      val stream = Streams.sessionizeStateful(spark, dir,
+        spark.read.parquet(dir).schema, gapMinutes = 30)
+      val q = stream.writeStream.outputMode("append")
+        .format("memory").queryName("graft_sessions_test").start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_sessions_test")
+          .select(col("user_id"), col("session_start_ms"), col("session_end_ms"),
+            col("n_events"), round(col("sum_value"), 4).as("sum_value"))
+        // expected: batch sessions minus each user's last (still-open) one
+        val batch = Streams.sessionize(spark.read.parquet(dir)
+            .withColumn("ts", timestamp_millis(col("ts_ms"))).drop("ts_ms"), 30)
+        val wmax = Window.partitionBy("user_id")
+        val closedBatch = batch
+          .withColumn("max_seq", max(col("session_seq")).over(wmax))
+          .filter(col("session_seq") < col("max_seq"))
+          .select(col("user_id"), col("session_start_ms"), col("session_end_ms"),
+            col("n_events"), col("sum_value"))
+        assert(got.exceptAll(closedBatch).count() == 0)
+        assert(closedBatch.exceptAll(got).count() == 0)
+      } finally q.stop()
+    }
   }
 
   test("streaming dedup drops redelivered events, keeps state within watermark") {
@@ -88,20 +95,21 @@ class StreamsSpec extends AnyFunSuite {
       .withColumn("ts", Streams.eventTs(raw, "ts"))
       .select("ts", "event_id", "event_type", "value")
     val doubled = ev.unionAll(ev)
-    val dir = Files.createTempDirectory("graft_dedup_stream").toString
-    doubled.write.mode("overwrite").parquet(dir)
+    withTempDir("graft_dedup_stream") { dir =>
+      doubled.write.mode("overwrite").parquet(dir)
 
-    val stream = Streams.dedupStream(spark, dir,
-      spark.read.parquet(dir).schema, keyCols = Seq("event_id"),
-      tsCol = "ts", watermark = "2 hours")
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("graft_dedup_stream_test").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_dedup_stream_test")
-      assert(got.count() == ev.count())
-      assert(got.select("event_id").distinct().count() == got.count())
-    } finally q.stop()
+      val stream = Streams.dedupStream(spark, dir,
+        spark.read.parquet(dir).schema, keyCols = Seq("event_id"),
+        tsCol = "ts", watermark = "2 hours")
+      val q = stream.writeStream.outputMode("append")
+        .format("memory").queryName("graft_dedup_stream_test").start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_dedup_stream_test")
+        assert(got.count() == ev.count())
+        assert(got.select("event_id").distinct().count() == got.count())
+      } finally q.stop()
+    }
   }
 
   test("streaming near-dedup collapses whitespace variants AND redeliveries") {
@@ -124,22 +132,23 @@ class StreamsSpec extends AnyFunSuite {
       (21L, "buy pills"),
       (22L, "  hi   there ")
     ).toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("graft_neardedup_stream").toString
-    docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .head.getAbsolutePath
+    withTempDir("graft_neardedup_stream") { tmp =>
+      docs.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .head.getAbsolutePath
 
-    val got = Streams.nearDedupStreamOnce(spark, part, textCol = "text",
-      shingleN = 3)
-    assert(got.count() == 5, "one survivor per content class expected")
-    // class-invariant projection: the survivor fingerprints equal the
-    // batch distinct set exactly
-    val gotFps = got.select(textfns.contentFingerprint(col("text")).as("fp"))
-      .collect().map(_.getString(0)).toSet
-    val wantFps = docs.select(textfns.contentFingerprint(col("text")).as("fp"))
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(gotFps == wantFps)
+      val got = Streams.nearDedupStreamOnce(spark, part, textCol = "text",
+        shingleN = 3)
+      assert(got.count() == 5, "one survivor per content class expected")
+      // class-invariant projection: the survivor fingerprints equal the
+      // batch distinct set exactly
+      val gotFps = got.select(textfns.contentFingerprint(col("text")).as("fp"))
+        .collect().map(_.getString(0)).toSet
+      val wantFps = docs.select(textfns.contentFingerprint(col("text")).as("fp"))
+        .distinct().collect().map(_.getString(0)).toSet
+      assert(gotFps == wantFps)
+    }
   }
 
   test("RocksDB state store: same dedup rows as the default provider") {
@@ -181,34 +190,36 @@ class StreamsSpec extends AnyFunSuite {
       .select("ts", "event_type", "value")
     val half1 = ev.filter(col("event_type") =!= lit("purchase"))
     val half2 = ev.filter(col("event_type") === lit("purchase"))
-    val srcDir = Files.createTempDirectory("graft_restart_src").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
-    half1.write.mode("append").parquet(srcDir)
+    withTempDir("graft_restart_src") { srcDir =>
+      withTempDir("graft_restart_ckpt") { ckpt =>
+        half1.write.mode("append").parquet(srcDir)
 
-    def runOnce(): Long = {
-      spark.catalog.dropTempView("graft_restart_test")
-      val src = spark.readStream
-        .schema(spark.read.parquet(srcDir).schema).parquet(srcDir)
-      val q = Streams.tumblingAgg(src, "1 hour")
-        .writeStream.format("memory").queryName("graft_restart_test")
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      try {
-        q.awaitTermination()
-        q.recentProgress.map(_.numInputRows).sum
-      } finally if (q.isActive) q.stop()
+        def runOnce(): Long = {
+          spark.catalog.dropTempView("graft_restart_test")
+          val src = spark.readStream
+            .schema(spark.read.parquet(srcDir).schema).parquet(srcDir)
+          val q = Streams.tumblingAgg(src, "1 hour")
+            .writeStream.format("memory").queryName("graft_restart_test")
+            .option("checkpointLocation", ckpt)
+            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+          try {
+            q.awaitTermination()
+            q.recentProgress.map(_.numInputRows).sum
+          } finally if (q.isActive) q.stop()
+        }
+
+        runOnce()
+        half2.write.mode("append").parquet(srcDir)
+        val restartRows = runOnce()
+        assert(restartRows == half2.count(),
+          s"restart reprocessed committed files: read $restartRows rows, " +
+            s"expected only the ${half2.count()} new ones")
+        val got = spark.table("graft_restart_test")
+        val want = Streams.tumblingAgg(ev, "1 hour")
+        assert(got.except(want).count() == 0 && want.except(got).count() == 0,
+          "restarted backfill result differs from the batch oracle")
+      }
     }
-
-    runOnce()
-    half2.write.mode("append").parquet(srcDir)
-    val restartRows = runOnce()
-    assert(restartRows == half2.count(),
-      s"restart reprocessed committed files: read $restartRows rows, " +
-        s"expected only the ${half2.count()} new ones")
-    val got = spark.table("graft_restart_test")
-    val want = Streams.tumblingAgg(ev, "1 hour")
-    assert(got.except(want).count() == 0 && want.except(got).count() == 0,
-      "restarted backfill result differs from the batch oracle")
   }
 
   test("streaming tumbling agg equals the batch form on the same data") {
@@ -219,24 +230,25 @@ class StreamsSpec extends AnyFunSuite {
     val ev = raw
       .withColumn("ts", Streams.eventTs(raw, "ts"))
       .select("ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_stream").toString
-    ev.write.mode("overwrite").parquet(dir)
+    withTempDir("graft_stream") { dir =>
+      ev.write.mode("overwrite").parquet(dir)
 
-    val batch = Streams.tumblingAgg(spark.read.parquet(dir), "1 hour")
+      val batch = Streams.tumblingAgg(spark.read.parquet(dir), "1 hour")
 
-    val stream = Streams.tumblingAggStream(spark, dir,
-      spark.read.parquet(dir).schema, "1 hour", "2 hours")
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName("graft_tumbling_test").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_tumbling_test")
-        .select(unix_timestamp(col("window.start")).as("window_start"),
-          col("event_type"), col("n_events"),
-          round(col("sum_value"), 4).as("sum_value"))
-      assert(got.exceptAll(batch).count() == 0)
-      assert(batch.exceptAll(got).count() == 0)
-    } finally q.stop()
+      val stream = Streams.tumblingAggStream(spark, dir,
+        spark.read.parquet(dir).schema, "1 hour", "2 hours")
+      val q = stream.writeStream.outputMode("complete")
+        .format("memory").queryName("graft_tumbling_test").start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_tumbling_test")
+          .select(unix_timestamp(col("window.start")).as("window_start"),
+            col("event_type"), col("n_events"),
+            round(col("sum_value"), 4).as("sum_value"))
+        assert(got.exceptAll(batch).count() == 0)
+        assert(batch.exceptAll(got).count() == 0)
+      } finally q.stop()
+    }
   }
 
   test("hopping agg: 4 overlapping windows per event; stream equals batch") {
@@ -244,19 +256,20 @@ class StreamsSpec extends AnyFunSuite {
     val ev = raw
       .withColumn("ts", Streams.eventTs(raw, "ts"))
       .select("ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_hopping").toString
-    ev.write.mode("overwrite").parquet(dir)
-    val batch = Streams.hoppingAgg(spark.read.parquet(dir),
-      "1 hour", "15 minutes")
-    // len/slide = 4: every event counts in exactly 4 windows
-    val totalCounted = batch.agg(sum(col("n_events"))).collect()(0).getLong(0)
-    assert(totalCounted == 4L * ev.count())
-    // window starts align to the slide, not the window length
-    assert(batch.filter(pmod(col("window_start"), lit(900L)) =!= 0L).count() == 0)
-    // the engine-executed form agrees row-for-row
-    val got = Streams.hoppingAggStreamOnce(spark, dir, "1 hour", "15 minutes")
-    assert(got.exceptAll(batch).count() == 0)
-    assert(batch.exceptAll(got).count() == 0)
+    withTempDir("graft_hopping") { dir =>
+      ev.write.mode("overwrite").parquet(dir)
+      val batch = Streams.hoppingAgg(spark.read.parquet(dir),
+        "1 hour", "15 minutes")
+      // len/slide = 4: every event counts in exactly 4 windows
+      val totalCounted = batch.agg(sum(col("n_events"))).collect()(0).getLong(0)
+      assert(totalCounted == 4L * ev.count())
+      // window starts align to the slide, not the window length
+      assert(batch.filter(pmod(col("window_start"), lit(900L)) =!= 0L).count() == 0)
+      // the engine-executed form agrees row-for-row
+      val got = Streams.hoppingAggStreamOnce(spark, dir, "1 hour", "15 minutes")
+      assert(got.exceptAll(batch).count() == 0)
+      assert(batch.exceptAll(got).count() == 0)
+    }
   }
 
   test("session_window agg: boundary semantics pinned vs sessionize; stream equals batch") {
@@ -291,13 +304,14 @@ class StreamsSpec extends AnyFunSuite {
     val full = raw
       .withColumn("ts", Streams.eventTs(raw, "ts"))
       .select("ts", "user_id", "event_id", "value")
-    val dir = Files.createTempDirectory("graft_sesswin").toString
-    full.write.mode("overwrite").parquet(dir)
-    val batch = Streams.sessionWindowAgg(spark.read.parquet(dir), 30)
-    val streamed = Streams.sessionWindowStreamOnce(spark, dir, 30)
-    assert(streamed.exceptAll(batch).count() == 0)
-    assert(batch.exceptAll(streamed).count() == 0)
-    assert(streamed.count() > 0)
+    withTempDir("graft_sesswin") { dir =>
+      full.write.mode("overwrite").parquet(dir)
+      val batch = Streams.sessionWindowAgg(spark.read.parquet(dir), 30)
+      val streamed = Streams.sessionWindowStreamOnce(spark, dir, 30)
+      assert(streamed.exceptAll(batch).count() == 0)
+      assert(batch.exceptAll(streamed).count() == 0)
+      assert(streamed.count() > 0)
+    }
   }
 
   test("stream-static join equals the batch join+aggregate; no state store") {
@@ -354,27 +368,28 @@ class StreamsSpec extends AnyFunSuite {
     // for streaming ingestion
     import graft.functions.textfns
     val docs = SparkT.table("documents").select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("graft_stream_docs").toString
-    docs.write.mode("overwrite").parquet(dir)
-    def curate(d: org.apache.spark.sql.DataFrame) = d
-      .withColumn("lang", textfns.langId(col("text")))
-      .withColumn("quality", textfns.qualityScore(col("text")))
-      .withColumn("repetition", textfns.repetitionRatio(col("text"), 3))
-      .filter(col("quality") >= 0.5 && col("lang") =!= "und" &&
-        col("repetition") < 0.5)
-      .select("doc_id", "lang")
-    val batch = curate(spark.read.parquet(dir))
-    val stream = curate(spark.readStream
-      .schema(spark.read.parquet(dir).schema).parquet(dir))
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_curate_test").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_stream_curate_test")
-      assert(got.count() > 0)
-      assert(got.exceptAll(batch).count() == 0)
-      assert(batch.exceptAll(got).count() == 0)
-    } finally q.stop()
+    withTempDir("graft_stream_docs") { dir =>
+      docs.write.mode("overwrite").parquet(dir)
+      def curate(d: org.apache.spark.sql.DataFrame) = d
+        .withColumn("lang", textfns.langId(col("text")))
+        .withColumn("quality", textfns.qualityScore(col("text")))
+        .withColumn("repetition", textfns.repetitionRatio(col("text"), 3))
+        .filter(col("quality") >= 0.5 && col("lang") =!= "und" &&
+          col("repetition") < 0.5)
+        .select("doc_id", "lang")
+      val batch = curate(spark.read.parquet(dir))
+      val stream = curate(spark.readStream
+        .schema(spark.read.parquet(dir).schema).parquet(dir))
+      val q = stream.writeStream.outputMode("append")
+        .format("memory").queryName("graft_stream_curate_test").start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_stream_curate_test")
+        assert(got.count() > 0)
+        assert(got.exceptAll(batch).count() == 0)
+        assert(batch.exceptAll(got).count() == 0)
+      } finally q.stop()
+    }
   }
 
   test("trending: chained stateful aggs equal batch trendingAgg on sealed windows") {
@@ -462,13 +477,7 @@ class StreamsSpec extends AnyFunSuite {
           tmp.getCanonicalPath)
         chosen.foreach(p => p.toFile.delete())
       } else assert(chosen.isEmpty)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      rm(tmp)
-    }
+    } finally Streams.rmTree(tmp.toPath)
   }
 
   private def runDeclared(name: String): Unit =
@@ -506,14 +515,49 @@ class StreamsSpec extends AnyFunSuite {
     assert(perQuery.forall(_._2 == 0), perQuery)
   }
 
+  private def tmpEntries(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
+
   test("a streaming gate leaves no source wrapper dir behind") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def wrappers(): Set[String] =
-      Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft_stream"))
+    def wrappers(): Set[String] = tmpEntries().filter(_.startsWith("graft_stream"))
     val before = wrappers()
     // ev5 links events.parquet once, ev7 twice (simulated redelivery)
     Seq("ev5_tumbling_stream", "ev7_dedup_stream").foreach(runDeclared)
     assert(wrappers() -- before == Set.empty)
+    // queries whose build writes a file (an index, ev11's corpus) reuse
+    // one path per JVM and sf dir: a second build adds no temp entry
+    val writers = Seq("ann9_ivfpq_index", "dd14_index_dedup",
+      "txt21_term_search", "ev11_neardedup_stream")
+    writers.foreach(runDeclared)
+    val warm = tmpEntries()
+    writers.foreach(runDeclared)
+    assert(tmpEntries() -- warm == Set.empty)
+  }
+
+  test("backfill: a failing check restores the conf and leaves nothing behind") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    def conf() = keys.map(k => k -> spark.conf.getOption(k))
+    val shm = new java.io.File("/dev/shm")
+    def ckpts(): Set[String] =
+      Option(shm.list()).toSet.flatten.filter(_.startsWith("graft_ckpt_"))
+    def views(): Set[String] = spark.catalog.listTables().collect().toSet
+      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
+    val (confBefore, viewsBefore) = (conf(), views())
+    val (ckptsBefore, tmpBefore) = (ckpts(), tmpEntries())
+    // two deliveries: the events file is wrapped in a temp dir of links
+    val err = intercept[IllegalStateException] {
+      Streams.backfill(spark, s"${SparkT.sfDir}/events.parquet", "complete",
+        deliveries = 2, stateStore = Some(Streams.RocksDbStateStore),
+        check = _ => throw new IllegalStateException("check failed"))(
+        Streams.tumblingAgg(_, "1 hour"))
+    }
+    assert(err.getMessage == "check failed")
+    assert(conf() == confBefore)
+    assert(spark.streams.active.isEmpty)
+    assert(views() -- viewsBefore == Set.empty)
+    assert(ckpts() -- ckptsBefore == Set.empty)
+    assert(tmpEntries() -- tmpBefore == Set.empty)
   }
 
   test("Bench.streamingNames is exactly the eleven streaming gates ev5-ev15") {
