@@ -23,7 +23,11 @@ import graft.streaming.Streams
   *    above cross-engine summation-order error (money sums → 2dp on a
   *    2dp-true-valued grid; means → 4dp; variances → 0dp);
   *  - `sum(int)` cast to BIGINT in DuckDB (it widens to HUGEINT);
-  *  - timestamps compared as epoch seconds / millis (BIGINT).
+  *  - timestamps compared as epoch seconds / millis (BIGINT);
+  *  - one definition each: a planted fixture has one SQL twin beside
+  *    its Scala builder, built from the same constants, and a stage
+  *    several oracles share is one fragment (see "oracle fragments").
+  *    Changing a fragment or a twin moves every oracle that uses it.
   */
 object SparkEntry {
 
@@ -150,10 +154,107 @@ object SparkEntry {
         .write.mode("overwrite").text(path)
     }
 
-  /** documents ∪ shifted copy — planted exact duplicates. */
-  /** The planted-copy id offset shared by every dup-fixture query AND
-    * hardcoded in their DuckDB oracles. */
+  // ---- planted fixtures ----------------------------------------------
+  //
+  // Each planted fixture is defined once: a Scala builder with its SQL
+  // twin beside it, both built from the constants below. A twin is the
+  // body of the CTE an oracle names `all_docs` (a UNION ALL over
+  // `documents`); DeclaredSpec runs each twin through Spark SQL and
+  // compares its rows with its builder's. Planted rows take ids in
+  // bands above the base doc ids, one band per planted family.
+
+  /** The id offset of planted copies (exact and padded). */
   private val DupOffset = 10000L
+  /** The id offset of the benchmark splices. */
+  private val SpliceOffset = 20000L
+  /** The third id band: a fixture's second planted family (cur24's
+    * exact copies, txt22's prepended splices, dd15's quotes) and
+    * dd10's CJK corpus. */
+  private val AltOffset = 30000L
+  /** Appended to each padded near-duplicate. */
+  private val PadTail = " graft dedup pad tail"
+  /** Every `NearDupEvery`-th doc gets a padded copy. */
+  private val NearDupEvery = 10
+  /** Every `SpliceEvery`-th doc from `SpliceEvery` on gets bench doc
+    * `SpliceBench`'s text appended; every doc at `PrependAt` modulo
+    * `SpliceEvery` gets bench doc `PrependBench`'s text prepended. */
+  private val SpliceEvery = 20
+  private val SpliceBench = 0
+  private val PrependAt = 7
+  private val PrependBench = 1
+  /** The benchmark set of the decontamination queries:
+    * `doc_id < BenchDocs`. */
+  private val BenchDocs = 5
+
+  private val DocText = Seq("doc_id", "text")
+
+  private def docs(s: SparkSession, dir: String, cols: Seq[String]): DataFrame =
+    t(s, dir, "documents").select(cols.map(col): _*)
+
+  /** SQL twin of [[docs]]. */
+  private def docsSql(cols: Seq[String]): String =
+    s"SELECT ${cols.mkString(", ")} FROM documents"
+
+  private def unionAll(branches: String*): String = branches.mkString("\nUNION ALL\n")
+
+  /** `rows` re-keyed at `doc_id + offset`, with `text` (when given) as
+    * the new text; the other columns of `cols` carried in place. */
+  private def plantAt(rows: DataFrame, cols: Seq[String], offset: Long,
+                      text: Option[Column] = None): DataFrame =
+    rows.select(cols.map {
+      case "doc_id" => (col("doc_id") + offset).as("doc_id")
+      case "text" => text.fold(col("text"))(_.as("text"))
+      case c => col(c)
+    }: _*)
+
+  /** SQL twin of [[plantAt]] over the `documents` rows `where` picks. */
+  private def plantAtSql(cols: Seq[String], offset: Long, text: String = "text",
+                         where: String = ""): String =
+    cols.map {
+      case "doc_id" => s"doc_id + $offset"
+      case "text" => text
+      case c => c
+    }.mkString("SELECT ", ", ", s" FROM documents$where")
+
+  /** Bench doc `bench`'s text spliced onto each `rows` doc of `d`
+    * (after its text, or before it when `prepend`), at `offset`. */
+  private def spliceAt(d: DataFrame, rows: Column, bench: Int, offset: Long,
+                       prepend: Boolean): DataFrame = {
+    val b = d.filter(col("doc_id") === bench).select(col("text").as("bench_text"))
+    val text =
+      if (prepend) concat(col("bench_text"), lit(" "), col("text"))
+      else concat(col("text"), lit(" "), col("bench_text"))
+    plantAt(d.filter(rows).crossJoin(broadcast(b)), d.columns.toSeq, offset, Some(text))
+  }
+
+  /** SQL twin of [[spliceAt]]; `rows` is over the alias `d`. */
+  private def spliceAtSql(cols: Seq[String], rows: String, bench: Int, offset: Long,
+                          prepend: Boolean): String =
+    cols.map {
+      case "doc_id" => s"d.doc_id + $offset"
+      case "text" => if (prepend) "b.text || ' ' || d.text" else "d.text || ' ' || b.text"
+      case c => s"d.$c"
+    }.mkString("SELECT ", ", ",
+      s" FROM documents d, (SELECT text FROM documents WHERE doc_id = $bench) b WHERE $rows")
+
+  /** Padded near-duplicates of `d`: every `NearDupEvery`-th doc with
+    * [[PadTail]] appended (high but non-1.0 shingle Jaccard). */
+  private def nearDupCopies(d: DataFrame): DataFrame =
+    plantAt(d.filter(col("doc_id") % NearDupEvery === 0), d.columns.toSeq, DupOffset,
+      Some(concat(col("text"), lit(PadTail))))
+
+  private def nearDupCopiesSql(cols: Seq[String]): String =
+    plantAtSql(cols, DupOffset, s"text || '$PadTail'", s" WHERE doc_id % $NearDupEvery = 0")
+
+  /** Benchmark splices of `d`: bench doc [[SpliceBench]]'s text appended
+    * to every [[SpliceEvery]]-th doc from [[SpliceEvery]] on. */
+  private def benchSplices(d: DataFrame): DataFrame =
+    spliceAt(d, col("doc_id") % SpliceEvery === 0 && col("doc_id") >= SpliceEvery,
+      SpliceBench, SpliceOffset, prepend = false)
+
+  private def benchSplicesSql(cols: Seq[String]): String =
+    spliceAtSql(cols, s"d.doc_id % $SpliceEvery = 0 AND d.doc_id >= $SpliceEvery",
+      SpliceBench, SpliceOffset, prepend = false)
 
   /** Scan-side guard: a base doc_id at or past [[DupOffset]] would
     * COLLIDE with a planted copy's id — two rows sharing one id value
@@ -161,28 +262,98 @@ object SparkEntry {
     * differently (cur6's pair graph would chain unrelated text
     * classes through the shared id node; per-row oracles would just
     * diverge). Fail loudly at the first offending row instead; a
-    * bigger fixture needs the offset (and every oracle's `+ 10000`)
-    * raised in one place. */
+    * bigger fixture needs the offsets above raised, and the SQL twins
+    * follow them. */
   private def guardedDupBase(d: DataFrame): DataFrame =
     d.withColumn("doc_id",
       when(col("doc_id") >= DupOffset, raise_error(concat(
         lit(s"planted-dup fixture: doc_id must be < $DupOffset (the copy offset), got "),
         col("doc_id").cast("string")))).otherwise(col("doc_id")))
 
+  /** documents ∪ a copy of every doc at [[DupOffset]] — planted exact
+    * duplicates. */
   private def docsWithExactDups(s: SparkSession, dir: String): DataFrame = {
-    val d = guardedDupBase(t(s, dir, "documents").select(col("doc_id"), col("text")))
-    d.unionByName(d.select((col("doc_id") + DupOffset).as("doc_id"), col("text")))
+    val d = guardedDupBase(docs(s, dir, DocText))
+    d.unionByName(plantAt(d, DocText, DupOffset))
   }
 
-  /** documents ∪ tail-padded copies of every 10th doc — planted
-    * near-duplicates (high but non-1.0 shingle Jaccard). */
+  private val exactDupsSql = unionAll(docsSql(DocText), plantAtSql(DocText, DupOffset))
+
+  /** documents ∪ [[nearDupCopies]] — planted near-duplicates. */
   private def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
-    val d = guardedDupBase(t(s, dir, "documents").select(col("doc_id"), col("text")))
-    val near = d.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + DupOffset).as("doc_id"),
-        concat(col("text"), lit(" graft dedup pad tail")).as("text"))
-    d.unionByName(near)
+    val d = guardedDupBase(docs(s, dir, DocText))
+    d.unionByName(nearDupCopies(d))
   }
+
+  private val nearDupsSql = unionAll(docsSql(DocText), nearDupCopiesSql(DocText))
+
+  /** documents ∪ [[benchSplices]] — planted contamination (txt10,
+    * txt15); `prepends` adds bench doc [[PrependBench]]'s text before
+    * every doc at [[PrependAt]] modulo [[SpliceEvery]], at [[AltOffset]]
+    * (txt22). */
+  private def docsWithBenchSplices(s: SparkSession, dir: String,
+                                   prepends: Boolean = false): DataFrame = {
+    val d = docs(s, dir, DocText)
+    val spliced = d.unionByName(benchSplices(d))
+    if (!prepends) spliced
+    else spliced.unionByName(spliceAt(d, col("doc_id") % SpliceEvery === PrependAt,
+      PrependBench, AltOffset, prepend = true))
+  }
+
+  private def benchSplicesDocsSql(prepends: Boolean = false): String = {
+    val spliced = unionAll(docsSql(DocText), benchSplicesSql(DocText))
+    if (!prepends) spliced
+    else unionAll(spliced, spliceAtSql(DocText, s"d.doc_id % $SpliceEvery = $PrependAt",
+      PrependBench, AltOffset, prepend = true))
+  }
+
+  /** cur24's corpus: documents with every stage's work planted — exact
+    * copies of the odd docs at [[AltOffset]], [[nearDupCopies]] and
+    * [[benchSplices]]; `source` carried. */
+  private def pipelineCorpus(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir, PipelineCols)
+    d.unionByName(plantAt(d.filter(col("doc_id") % 2 === 1), PipelineCols, AltOffset))
+      .unionByName(nearDupCopies(d))
+      .unionByName(benchSplices(d))
+  }
+
+  /** The decontamination queries' benchmark set. */
+  private def benchDocs(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir, DocText).filter(col("doc_id") < BenchDocs)
+
+  private val PipelineCols = Seq("doc_id", "source", "text")
+
+  private val pipelineCorpusSql = unionAll(docsSql(PipelineCols),
+    plantAtSql(PipelineCols, AltOffset, where = " WHERE doc_id % 2 = 1"),
+    nearDupCopiesSql(PipelineCols), benchSplicesSql(PipelineCols))
+
+  /** The fixtures whose SQL twin Spark SQL runs as written, each as
+    * (name, builder, twin) — DeclaredSpec's parity check. */
+  private[graft] val plantedTwins: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
+    ("exact dups", docsWithExactDups, exactDupsSql),
+    ("near dups", docsWithNearDups, nearDupsSql),
+    ("bench splices", docsWithBenchSplices(_, _), benchSplicesDocsSql()),
+    ("bench splices and prepends", docsWithBenchSplices(_, _, prepends = true),
+      benchSplicesDocsSql(prepends = true)),
+    ("pipeline corpus", pipelineCorpus, pipelineCorpusSql))
+
+  /** documents ∪ a head quote of every doc at 3 modulo 7 — its first
+    * 12 normalized words — at [[AltOffset]] (dd15). */
+  private def docsWithQuotes(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir, DocText)
+    val norm = split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ")
+    d.unionByName(plantAt(d.filter(col("doc_id") % 7 === 3), DocText, AltOffset,
+      Some(array_join(slice(norm, 1, 12), " "))))
+  }
+
+  /** SQL twin of [[docsWithQuotes]] (a def: [[wordArray]] is defined
+    * below). */
+  private def quotesDocsSql: String = unionAll(docsSql(DocText),
+    plantAtSql(DocText, AltOffset, s"array_to_string(($wordArray)[1:12], ' ')",
+      " WHERE doc_id % 7 = 3"))
+
+  /** The digits of the CJK corpus, 0-9. */
+  private val CjkDigits = "零一二三四五六七八九"
 
   /** Deterministic CJK corpus for the charLevel dedup gate (dd10): 40
     * duplicate classes × 10 members; members differ only in whitespace
@@ -193,16 +364,33 @@ object SparkEntry {
     * word-shingles), so the fixture must be constructed — and a
     * range-based construction replays verbatim in the DuckDB oracle. */
   private def cjkDocs(s: SparkSession): DataFrame = {
-    val cjk = "零一二三四五六七八九"
     val cls = pmod(col("id"), lit(40L))
-    val p1 = translate(lpad(cls.cast("string"), 4, "0"), "0123456789", cjk)
-    val p2 = translate(lpad((cls * 7 + 1).cast("string"), 4, "0"), "0123456789", cjk)
+    val p1 = translate(lpad(cls.cast("string"), 4, "0"), "0123456789", CjkDigits)
+    val p2 = translate(lpad((cls * 7 + 1).cast("string"), 4, "0"), "0123456789", CjkDigits)
     val variant = pmod(floor(col("id") / 40).cast("long"), lit(3L))
     val text = when(variant === 1, concat(p1, lit("  "), p2))
       .when(variant === 2, concat(lit("  "), p1, lit(" "), p2, lit(" ")))
       .otherwise(concat(p1, lit(" "), p2))
-    s.range(400).select((col("id") + 30000L).as("doc_id"), text.as("text"))
+    s.range(400).select((col("id") + AltOffset).as("doc_id"), text.as("text"))
   }
+
+  /** SQL twin of [[cjkDocs]]: CTEs `ids`, `parts` and `docs`. */
+  private val cjkDocsSql =
+    s"""ids AS (SELECT range AS i FROM range(400)),
+         parts AS (
+           SELECT i,
+             translate(lpad(CAST(i % 40 AS VARCHAR), 4, '0'),
+               '0123456789', '$CjkDigits') AS p1,
+             translate(lpad(CAST((i % 40) * 7 + 1 AS VARCHAR), 4, '0'),
+               '0123456789', '$CjkDigits') AS p2
+           FROM ids),
+         docs AS (
+           SELECT i + $AltOffset AS doc_id,
+             CASE ((i // 40) % 3)
+               WHEN 1 THEN p1 || '  ' || p2
+               WHEN 2 THEN '  ' || p1 || ' ' || p2 || ' '
+               ELSE p1 || ' ' || p2 END AS text
+           FROM parts)"""
 
   /** Flagship query on sf=0.001 (TPC-H Q1 shape); driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -231,34 +419,19 @@ object SparkEntry {
     // (cur4/cur6 constants). Each stage is individually declared
     // elsewhere; composing them catches cross-operator contract
     // drift (column carrying, null conventions, naming) that no
-    // per-operator query can. The fixture plants work for every
-    // stage: exact copies (+30000, odd ids), padded near-dups
-    // (+10000, every 10th), benchmark splices (+20000, every 20th)
-    // — the established dd/txt offsets. Scale shape: scoring is
-    // scan-side, exact dedup shuffles fingerprints, the pair graph
-    // shuffles shingle digests, decontamination probes a broadcast
-    // benchmark, mixing joins a broadcast rate table, and the split
-    // is scan-side hashing — text itself crosses an exchange only
-    // in the pair-generation stage. Post-dedup, every survivor IS
+    // per-operator query can. The fixture (pipelineCorpus) plants
+    // work for every stage: exact copies, padded near-dups and
+    // benchmark splices — the established dd/txt fixtures. Scale
+    // shape: scoring is scan-side, exact dedup shuffles fingerprints,
+    // the pair graph shuffles shingle digests, decontamination probes
+    // a broadcast benchmark, mixing joins a broadcast rate table,
+    // and the split is scan-side hashing — text itself crosses an
+    // exchange only in the pair-generation stage. Post-dedup, every survivor IS
     // its cluster's min-id representative, so the leakage-safe
     // cluster split degenerates to the per-doc hash with the cur4
     // constants — a whole duplicate class still lands in one split
     // because only its representative remains.
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), col("source"), col("text"))
-    val b0 = docs.filter(col("doc_id") === 0)
-      .select(col("text").as("bench_text"))
-    val corpus = docs
-      .unionByName(docs.filter(col("doc_id") % 2 === 1)
-        .select((col("doc_id") + 30000L).as("doc_id"), col("source"),
-          col("text")))
-      .unionByName(docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"), col("source"),
-          concat(col("text"), lit(" graft dedup pad tail")).as("text")))
-      .unionByName(docs.filter(col("doc_id") % 20 === 0 && col("doc_id") >= 20)
-        .crossJoin(broadcast(b0))
-        .select((col("doc_id") + 20000L).as("doc_id"), col("source"),
-          concat(col("text"), lit(" "), col("bench_text")).as("text")))
+    val corpus = pipelineCorpus(s, dir)
     val scored = corpus
       .withColumn("lang", textfns.langId(col("text")))
       .withColumn("quality", textfns.qualityScore(col("text")))
@@ -268,7 +441,7 @@ object SparkEntry {
     val pairs = Dedup.ngramJaccardPairs(exs, "doc_id", "text",
       shingleN = 7, threshold = 0.5)
     val nd = mat(Dedup.dedupNear(exs, "doc_id", pairs))
-    val bench = docs.filter(col("doc_id") < 5)
+    val bench = docs(s, dir, PipelineCols).filter(col("doc_id") < BenchDocs)
     val flagged = Decontam.contaminated(nd, bench, "doc_id", "text",
         threshold = 0.25, shingleN = 5)
       .select("doc_id")
@@ -308,6 +481,263 @@ object SparkEntry {
                             oracle: Option[String],
                             streaming: Boolean = false)
 
+  // ---- oracle fragments ----------------------------------------------
+  //
+  // Plain DuckDB SQL that several oracles share, written once and
+  // interpolated (the planted fixtures' SQL twins are above).
+
+  /** textfns.normalizeText in DuckDB: whitespace runs collapsed to one
+    * space, trimmed, lower-cased. */
+  private val normText = raw"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
+
+  /** The normalized text split into words. */
+  private val wordArray = s"regexp_split_to_array($normText, ' ')"
+
+  /** CTE body: `keys` and the words `w` of each row of `from`. */
+  private def wordsSql(from: String, keys: String = "doc_id,"): String =
+    s"""SELECT $keys
+             $wordArray AS w
+           FROM $from"""
+
+  /** CTE body: the `n`-word shingles `s` of each `w` row of `from`,
+    * beside `key` (a row under `n` words has none); a set per row
+    * unless `distinct = false`. */
+  private def shinglesSql(n: Int, from: String, key: String = "doc_id, ",
+                          distinct: Boolean = true, as: String = "s"): String =
+    s"""SELECT ${if (distinct) "DISTINCT " else ""}${key}array_to_string(w[i:i+${n - 1}], ' ') AS $as
+           FROM (SELECT ${key}w, unnest(range(1, len(w) - ${n - 2})) AS i
+                 FROM $from WHERE len(w) >= $n)"""
+
+  /** CTE `sizes`: the shingles per doc of the shingle CTE `sh`. */
+  private val sizesCte = "sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)"
+
+  /** CTEs `sizes` (shingles per doc) and `inter` (shingles shared by
+    * each doc pair, id_a < id_b) over the shingle CTE `sh`. */
+  private val jaccardCtes =
+    s"""$sizesCte,
+         inter AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+           GROUP BY 1, 2)"""
+
+  /** CTEs `words`, `sh` (the `n`-word shingle sets) and [[jaccardCtes]]
+    * over the docs of `from`. */
+  private def wordJaccardCtes(n: Int, from: String): String =
+    s"""words AS (
+           ${wordsSql(from)}),
+         sh AS (
+           ${shinglesSql(n, "words")}),
+         $jaccardCtes"""
+
+  /** The shingle Jaccard of an `inter` pair, its `sizes` joined as sa, sb. */
+  private val jaccard = "CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE)"
+
+  /** CTE `name`: the `inter` pairs whose [[jaccard]] is at least `threshold`. */
+  private def jaccardPairsCte(threshold: Double, name: String = "pairs"): String =
+    s"""$name AS (
+           SELECT id_a, id_b FROM inter
+           JOIN sizes sa ON sa.doc_id = id_a
+           JOIN sizes sb ON sb.doc_id = id_b
+           WHERE $jaccard >= $threshold)"""
+
+  /** The component closure of the undirected graph of `pairs` (id_a,
+    * id_b): CTEs `edges`, `reach` (id, label) and `cc(id, cluster_id)`,
+    * cluster_id the component's min id. Needs WITH RECURSIVE. */
+  private def closureCtes(pairs: String = "pairs"): String =
+    s"""edges AS (SELECT id_a AS a, id_b AS b FROM $pairs UNION SELECT id_b, id_a FROM $pairs),
+         reach(id, lbl) AS (
+           SELECT a, a FROM edges
+           UNION
+           SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id),
+         cc AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id)"""
+
+  /** dedupNear's survivors over [[closureCtes]]: a clustered doc stays
+    * only as its cluster's min id. */
+  private val survivor = "doc_id NOT IN (SELECT id FROM cc WHERE cluster_id <> id)"
+
+  /** CTEs `d` (the words of `from`) and `win`: each doc's 8-word
+    * windows `g` at word offset `s` (dd12's span windows). */
+  private def windowCtes(from: String): String =
+    s"""d AS (
+           ${wordsSql(from)}),
+         win AS (
+           SELECT doc_id, s, array_to_string(w[(s+1):(s+8)], ' ') AS g
+           FROM (SELECT doc_id, w,
+                   unnest(range(0, greatest(len(w) - 7, 0))) AS s
+                 FROM d))"""
+
+  /** CTEs `hits` (the [[windowCtes]] windows whose text is in CTE
+    * `probe`), `m` and `isl`: the hits merged per doc into islands
+    * `gid` of overlapping windows (gaps-and-islands over the running
+    * max end). */
+  private def islandCtes(probe: String): String =
+    s"""hits AS (
+           SELECT doc_id, s, s + 8 AS e FROM win JOIN $probe USING (g)),
+         m AS (
+           SELECT doc_id, s, e,
+             max(e) OVER (PARTITION BY doc_id ORDER BY s
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+           FROM hits),
+         isl AS (
+           SELECT doc_id, s, e,
+             sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+               OVER (PARTITION BY doc_id ORDER BY s
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
+           FROM m)"""
+
+  /** txt10's containment of a doc: its shingles `h.n_hits` found in
+    * the benchmark over its `t.<nSh>` shingles. */
+  private def containment(nSh: String): String =
+    s"CAST(coalesce(h.n_hits, 0) AS DOUBLE) / CAST(t.$nSh AS DOUBLE)"
+
+  /** The query vectors of the exact-search queries: `vec_id < AnnQueries`. */
+  private val AnnQueries = 20
+
+  /** An embedding quantized to a BIGINT list at 1e-3, as Ann's
+    * quantized scoring mode does. */
+  private val quantizedEmbedding =
+    "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))"
+
+  /** The quantized exact-cosine scoring: CTEs `q` (the query vectors,
+    * `qKeys` and quantized `qq`), `c` (the corpus rows `cWhere` picks,
+    * `cKeys` and quantized `qv`) and `scored` (`pairKeys` and the dot
+    * products d, na, nb of each pair `pairs` yields); [[cosineScore]]
+    * turns a `scored` row into its score. */
+  private def cosineCtes(qKeys: String, cKeys: String, pairKeys: String, pairs: String,
+                         cWhere: String = ""): String =
+    s"""q AS (
+           SELECT $qKeys
+             $quantizedEmbedding AS qq
+           FROM embeddings WHERE vec_id < $AnnQueries),
+         c AS (
+           SELECT $cKeys
+             $quantizedEmbedding AS qv
+           FROM embeddings$cWhere),
+         scored AS (
+           SELECT $pairKeys
+             CAST(list_dot_product(qv, qq) AS DOUBLE) AS d,
+             CAST(list_dot_product(qv, qv) AS DOUBLE) AS na,
+             CAST(list_dot_product(qq, qq) AS DOUBLE) AS nb
+           FROM $pairs)"""
+
+  /** The oracle of Ann's quantized exact top-k over the query and
+    * neighbor pairs of `cosine` (a [[cosineCtes]]): each query's `k`
+    * best neighbors by score, ties to the lower neighbor id. */
+  private def quantizedTopKOracle(cosine: String, k: Int): String =
+    s"""WITH $cosine,
+         ranked AS (
+           SELECT query_id, neighbor_id,
+             $cosineScore AS score
+           FROM scored),
+         top AS (
+           SELECT query_id, neighbor_id, score,
+             CAST(row_number() OVER (PARTITION BY query_id
+               ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
+           FROM ranked)
+         SELECT query_id, rank, neighbor_id, score FROM top
+         WHERE rank <= $k ORDER BY query_id, rank"""
+
+  /** Sign-preserving squared cosine of a [[cosineCtes]] `scored` row,
+    * 0 for a zero vector. */
+  private val cosineScore = """CASE WHEN na = 0 OR nb = 0 THEN 0.0
+                  ELSE sign(d) * d * d / (na * nb) END"""
+
+  /** textfns.langId's evidence: the stopword hits s_en … s_zh of
+    * each language. */
+  private val langHits =
+    raw"""len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS s_en,
+             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS s_de,
+             len(regexp_extract_all(lower(text), '\b(le|les|une|et|est)\b')) AS s_fr,
+             len(regexp_extract_all(lower(text), '\b(el|los|las|una|es)\b')) AS s_es,
+             len(regexp_extract_all(text, '的')) + len(regexp_extract_all(text, '是'))
+               + len(regexp_extract_all(text, '了')) + len(regexp_extract_all(text, '在'))
+               + len(regexp_extract_all(text, '和')) AS s_zh"""
+
+  /** textfns.langId over [[langHits]]: the language with the most hits
+    * (ties to the first), 'und' with none. */
+  private val langCase =
+    """CASE
+             WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh AND s_en > 0 THEN 'en'
+             WHEN s_de >= s_en AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh AND s_de > 0 THEN 'de'
+             WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_zh AND s_fr > 0 THEN 'fr'
+             WHEN s_es >= s_en AND s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh AND s_es > 0 THEN 'es'
+             WHEN s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_fr AND s_zh >= s_es AND s_zh > 0 THEN 'zh'
+             ELSE 'und' END"""
+
+  /** textfns.wsTokenCount: whitespace-separated tokens, 0 for a blank
+    * text. */
+  private val wsTokens =
+    raw"""CASE WHEN length(trim(text)) = 0 THEN 0
+                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END"""
+
+  /** textfns.qualityScore's per-text counts: stop_hits, punct_hits,
+    * n_chars. */
+  private val qualityHits =
+    raw"""len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS stop_hits,
+             len(regexp_extract_all(text, '[.,;:!?]')) AS punct_hits,
+             length(text) AS n_chars"""
+
+  /** textfns.qualityScore over [[qualityHits]] and the token count
+    * column `nTok`. */
+  private def qualitySql(nTok: String): String =
+    s"""least(CAST($nTok AS DOUBLE) / 100.0, 1.0) * 0.5
+               + least(CAST(stop_hits AS DOUBLE) / CAST(greatest($nTok, 1) AS DOUBLE) * 5.0, 1.0) * 0.3
+               + (1.0 - least(CAST(punct_hits AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) * 10.0, 1.0)) * 0.2"""
+
+  /** cur3's deterministic keep test for the doc `alias`, against its
+    * source's rate `r.rate`: an affine hash mod 2^31-1 below the rate's
+    * share of it. */
+  private def mixKeep(alias: String): String =
+    s"""(($alias.doc_id % 2147483647) * 1103515245 + 12345) % 2147483647
+                 < CAST(floor(r.rate * 2147483647.0) AS BIGINT)"""
+
+  /** Shuffle.decisionHash(`key`, `mult`, `add`) as CTEs ha, hb, hc and
+    * `name` over `from`, each selecting `carry`; the hash is `name`.hv.
+    * The defaults are cur4's split constants. */
+  private def decisionHashCtes(from: String, key: String, carry: String, name: String,
+                               mult: Long = 48271L, add: Long = 11213L): String =
+    s"""ha AS (SELECT $carry, xor($key, ($key >> 32) + $add) AS t0 FROM $from),
+         hb AS (SELECT $carry, ((t0 % 2147483647) * $mult + $add) % 2147483647 AS t1 FROM ha),
+         hc AS (SELECT $carry, (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1 FROM hb),
+         $name AS (SELECT $carry, (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS hv FROM hc)"""
+
+  /** cur4's 80/10/10 train/valid/test split of the hash column `h`. */
+  private def splitCase(h: String): String =
+    s"""CASE WHEN $h < 1717986917 THEN 'train'
+                WHEN $h < 1932735282 THEN 'valid'
+                ELSE 'test' END"""
+
+  /** Streams.sessionize's boundary rule: CTEs `e` (events with epoch
+    * millis `ts_ms`), `m` (each event's previous `ts_ms` per user) and
+    * `s` (`new_session` = 1 where that gap exceeds 30 minutes). */
+  private val sessionCtes =
+    """e AS (
+           SELECT user_id, event_id, value,
+             epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms FROM events),
+         m AS (
+           SELECT *, lag(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev_ms
+           FROM e),
+         s AS (
+           SELECT *, CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
+                          THEN 1 ELSE 0 END AS new_session
+           FROM m)"""
+
+  /** cur25/cur26's scale: each embedding value quantized at
+    * 1/GramScale. */
+  private val GramScale = 10000L
+
+  /** CTEs `q` (each non-null embedding floor-quantized at
+    * 1/[[GramScale]]) and `e` (one row per vector and dimension). */
+  private val gramEntriesCtes =
+    s"""q AS (
+           SELECT vec_id,
+             list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE) * ${GramScale.toDouble} + 0.5) AS BIGINT)) AS qv
+           FROM embeddings WHERE embedding IS NOT NULL),
+         e AS (
+           SELECT vec_id, ix.i AS i, qv[ix.i + 1] AS qval
+           FROM q, (SELECT unnest(range(0, 64)) AS i) ix)"""
+
   // ---- oracles two declared queries share ----------------------------
 
   /** Shared by q04_arrange and q37_arrange_bygroup. */
@@ -339,24 +769,19 @@ object SparkEntry {
 
   /** Shared by q49_text_ingest and txt1_tokens. */
   private val tokensOracle =
-    """SELECT doc_id,
+    raw"""SELECT doc_id,
            length(text) AS n_chars_utf,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_ws_tokens,
+           $wsTokens AS n_ws_tokens,
            len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS n_bpeish_tokens
          FROM documents ORDER BY doc_id"""
 
   /** Shared by dd9_cross_dedup and dd14_index_dedup. */
   private val crossDedupOracle =
-    """WITH words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
+    raw"""WITH words AS (
+           ${wordsSql("documents")}),
          sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+           ${shinglesSql(7, "words")}),
+         $sizesCte,
          ref AS (SELECT doc_id AS rid, s FROM sh WHERE doc_id % 10 = 0),
          inter AS (
            SELECT c.doc_id AS cid, r.rid, count(*) AS n_i
@@ -373,30 +798,22 @@ object SparkEntry {
 
   /** Shared by txt10_decontam and txt15_decontam_bloom. */
   private val decontamOracle =
-    """WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT d.doc_id + 20000, d.text || ' ' || b.text
-           FROM documents d, (SELECT text FROM documents WHERE doc_id = 0) b
-           WHERE d.doc_id % 20 = 0 AND d.doc_id >= 20),
+    raw"""WITH all_docs AS (
+           ${benchSplicesDocsSql()}),
          words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
+           ${wordsSql("all_docs")}),
          sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 3)) AS i
-                 FROM words WHERE len(w) >= 5)),
-         probe AS (SELECT DISTINCT s FROM sh WHERE doc_id < 5),
+           ${shinglesSql(5, "words")}),
+         probe AS (SELECT DISTINCT s FROM sh WHERE doc_id < $BenchDocs),
          tot AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
          hit AS (SELECT doc_id, count(*) AS n_hits FROM sh
                  WHERE s IN (SELECT s FROM probe) GROUP BY 1)
          SELECT t.doc_id,
            CAST(t.n_sh AS INTEGER) AS n_sh,
            CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(coalesce(h.n_hits, 0) AS DOUBLE) / CAST(t.n_sh AS DOUBLE) AS containment
+           ${containment("n_sh")} AS containment
          FROM tot t LEFT JOIN hit h USING (doc_id)
-         WHERE CAST(coalesce(h.n_hits, 0) AS DOUBLE) / CAST(t.n_sh AS DOUBLE) >= 0.25
+         WHERE ${containment("n_sh")} >= 0.25
          ORDER BY doc_id"""
 
   /** Shared by ev1_tumbling and ev5_tumbling_stream. */
@@ -417,103 +834,50 @@ object SparkEntry {
   /** Shared by cur24_pipeline and cur24b_pipeline_persisted. */
   // the COMPOSED pipeline oracle: every stage (cur1 scoring, dd1
   // exact dedup, dd7 near-dedup CC, txt10 containment, cur3 mixing,
-  // cur6's split hash chain) replayed back to back over the same
-  // planted fixture — each fragment is the per-stage oracle
-  // verbatim, so a divergence localizes to the stage whose fragment
-  // it is
+  // cur6's split hash chain) replayed back to back over cur24's
+  // planted corpus, composed from the fragments the per-stage
+  // oracles use, so a divergence localizes to the stage whose
+  // fragment it is
   private val pipelineOracle =
-    """WITH RECURSIVE all_docs AS (
-           SELECT doc_id, source, text FROM documents
-           UNION ALL
-           SELECT doc_id + 30000, source, text FROM documents WHERE doc_id % 2 = 1
-           UNION ALL
-           SELECT doc_id + 10000, source, text || ' graft dedup pad tail'
-           FROM documents WHERE doc_id % 10 = 0
-           UNION ALL
-           SELECT d.doc_id + 20000, d.source, d.text || ' ' || b.text
-           FROM documents d, (SELECT text FROM documents WHERE doc_id = 0) b
-           WHERE d.doc_id % 20 = 0 AND d.doc_id >= 20),
+    raw"""WITH RECURSIVE all_docs AS (
+           $pipelineCorpusSql),
          sc AS (
            SELECT doc_id, source, text,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|une|et|est)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|las|una|es)\b')) AS s_es,
-             len(regexp_extract_all(text, '的')) + len(regexp_extract_all(text, '是'))
-               + len(regexp_extract_all(text, '了')) + len(regexp_extract_all(text, '在'))
-               + len(regexp_extract_all(text, '和')) AS s_zh,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS stop_hits,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS punct_hits,
-             length(text) AS n_chars
+             $langHits,
+             $wsTokens AS n_tokens,
+             $qualityHits
            FROM all_docs),
          scored AS (
            SELECT doc_id, source, text, n_tokens,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_en AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_zh AND s_fr > 0 THEN 'fr'
-               WHEN s_es >= s_en AND s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh AND s_es > 0 THEN 'es'
-               WHEN s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_fr AND s_zh >= s_es AND s_zh > 0 THEN 'zh'
-               ELSE 'und' END AS lang,
-             least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.5
-               + least(CAST(stop_hits AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE) * 5.0, 1.0) * 0.3
-               + (1.0 - least(CAST(punct_hits AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) * 10.0, 1.0)) * 0.2 AS quality
+             $langCase AS lang,
+             ${qualitySql("n_tokens")} AS quality
            FROM sc),
          f AS (SELECT * FROM scored WHERE quality >= 0.5 AND lang <> 'und'),
          exs AS (
            SELECT * FROM (
              SELECT *, min(doc_id) OVER (
-               PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS keep
+               PARTITION BY $normText) AS keep
              FROM f)
            WHERE doc_id = keep),
-         words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM exs),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         prs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0.5),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs UNION SELECT id_b, id_a FROM prs),
-         reach(id, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id),
-         cc AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id),
+         ${wordJaccardCtes(7, "exs")},
+         ${jaccardPairsCte(0.5, "prs")},
+         ${closureCtes("prs")},
          nd AS (SELECT * FROM exs
-                WHERE doc_id NOT IN (SELECT id FROM cc WHERE cluster_id <> id)),
+                WHERE $survivor),
          bw AS (
-           SELECT regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents WHERE doc_id < 5),
+           ${wordsSql(s"documents WHERE doc_id < $BenchDocs", "")}),
          bsh AS (
-           SELECT DISTINCT array_to_string(w[i:i+4], ' ') AS s
-           FROM (SELECT w, unnest(range(1, len(w) - 3)) AS i FROM bw WHERE len(w) >= 5)),
+           ${shinglesSql(5, "bw", key = "")}),
          nw AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM nd),
+           ${wordsSql("nd")}),
          d5 AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 3)) AS i
-                 FROM nw WHERE len(w) >= 5)),
+           ${shinglesSql(5, "nw")}),
          tot5 AS (SELECT doc_id, count(*) AS n_sh5 FROM d5 GROUP BY 1),
          hit5 AS (SELECT doc_id, count(*) AS n_hits FROM d5
                   WHERE s IN (SELECT s FROM bsh) GROUP BY 1),
          contam AS (
            SELECT t.doc_id FROM tot5 t LEFT JOIN hit5 h USING (doc_id)
-           WHERE CAST(coalesce(h.n_hits, 0) AS DOUBLE) / CAST(t.n_sh5 AS DOUBLE) >= 0.25),
+           WHERE ${containment("n_sh5")} >= 0.25),
          clean AS (SELECT * FROM nd
                    WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
          counts AS (SELECT source, count(*) AS c FROM clean GROUP BY 1),
@@ -524,16 +888,10 @@ object SparkEntry {
          mixed AS (
            SELECT cl.doc_id, cl.source, cl.n_tokens, cl.quality
            FROM clean cl JOIN rates r USING (source)
-           WHERE ((cl.doc_id % 2147483647) * 1103515245 + 12345) % 2147483647
-                 < CAST(floor(r.rate * 2147483647.0) AS BIGINT)),
-         ha AS (SELECT *, xor(doc_id, (doc_id >> 32) + 11213) AS t0 FROM mixed),
-         hb AS (SELECT *, ((t0 % 2147483647) * 48271 + 11213) % 2147483647 AS t1 FROM ha),
-         hc AS (SELECT *, (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1 FROM hb),
-         hh AS (SELECT *, (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS hv FROM hc)
+           WHERE ${mixKeep("cl")}),
+         ${decisionHashCtes("mixed", "doc_id", "*", "hh")}
          SELECT source,
-           CASE WHEN hv < 1717986917 THEN 'train'
-                WHEN hv < 1932735282 THEN 'valid'
-                ELSE 'test' END AS split,
+           ${splitCase("hv")} AS split,
            count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
            round(avg(quality), 4) AS avg_quality
@@ -1222,21 +1580,9 @@ object SparkEntry {
           graft.operators.Shuffle.shuffleKey(col("doc_id"), 3)
             .as("shuffle_key")),
         "doc_id", 3),
-      Some("""WITH a AS (
-           SELECT doc_id,
-             xor(doc_id, (doc_id >> 32) + 344198) AS t0
-           FROM documents),
-         b AS (
-           SELECT doc_id,
-             ((t0 % 2147483647) * 69621 + 344198) % 2147483647 AS t1
-           FROM a),
-         c AS (
-           SELECT doc_id,
-             (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1
-           FROM b)
-         SELECT doc_id,
-           (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS shuffle_key
-         FROM c
+      // epoch 3's constants: Shuffle's Mult and Add + 3 · EpochStride
+      Some(s"""WITH ${decisionHashCtes("documents", "doc_id", "doc_id", "h", 69621L, 344198L)}
+         SELECT doc_id, hv AS shuffle_key FROM h
          ORDER BY shuffle_key, doc_id""")),
 
     Declared("q46_orc_roundtrip", (s, dir) => {
@@ -1544,12 +1890,10 @@ object SparkEntry {
     Declared("dd1_exact", (s, dir) =>
       Dedup.exact(docsWithExactDups(s, dir), "text", "doc_id")
         .select(col("doc_id")).orderBy(col("doc_id").asc),
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents)
+      Some(raw"""WITH all_docs AS (
+           $exactDupsSql)
          SELECT min(doc_id) AS doc_id FROM all_docs
-         GROUP BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
+         GROUP BY $normText
          ORDER BY doc_id""")),
 
     Declared("dd2_minhash_lsh", (s, dir) =>
@@ -1575,30 +1919,14 @@ object SparkEntry {
       Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text",
           shingleN = 7, threshold = 0.5)
         .orderBy(col("id_a").asc, col("id_b").asc),
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text || ' graft dedup pad tail'
-           FROM documents WHERE doc_id % 10 = 0),
-         words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-           CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) AS jaccard
+      Some(raw"""WITH all_docs AS (
+           $nearDupsSql),
+         ${wordJaccardCtes(7, "all_docs")}
+         SELECT id_a, id_b, $jaccard AS jaccard
          FROM inter
          JOIN sizes sa ON sa.doc_id = id_a
          JOIN sizes sb ON sb.doc_id = id_b
-         WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0.5
+         WHERE $jaccard >= 0.5
          ORDER BY id_a, id_b""")),
 
     Declared("dd6_components", (s, dir) =>
@@ -1606,35 +1934,12 @@ object SparkEntry {
           Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text",
             shingleN = 7, threshold = 0.5))
         .orderBy(col("id").asc),
-      Some("""WITH RECURSIVE all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text || ' graft dedup pad tail'
-           FROM documents WHERE doc_id % 10 = 0),
-         words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0.5),
-         edges AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id)
-         SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id ORDER BY id""")),
+      Some(raw"""WITH RECURSIVE all_docs AS (
+           $nearDupsSql),
+         ${wordJaccardCtes(7, "all_docs")},
+         ${jaccardPairsCte(0.5)},
+         ${closureCtes()}
+         SELECT id, cluster_id FROM cc ORDER BY id""")),
 
     Declared("dd7_dedup_near", (s, dir) => {
       // end-to-end near-dedup: survivors = min-id member per cluster +
@@ -1645,37 +1950,13 @@ object SparkEntry {
       Dedup.dedupNear(docs, "doc_id", pairs)
         .select(col("doc_id")).orderBy(col("doc_id").asc)
     },
-      Some("""WITH RECURSIVE all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text || ' graft dedup pad tail'
-           FROM documents WHERE doc_id % 10 = 0),
-         words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0.5),
-         edges AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id),
-         cc AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id)
+      Some(raw"""WITH RECURSIVE all_docs AS (
+           $nearDupsSql),
+         ${wordJaccardCtes(7, "all_docs")},
+         ${jaccardPairsCte(0.5)},
+         ${closureCtes()}
          SELECT doc_id FROM all_docs
-         WHERE doc_id NOT IN (SELECT id FROM cc WHERE cluster_id <> id)
+         WHERE $survivor
          ORDER BY doc_id""")),
 
     Declared("dd8_dedup_near_lsh", (s, dir) => {
@@ -1705,36 +1986,13 @@ object SparkEntry {
       Dedup.dedupNear(docs, "doc_id", pairs)
         .select(col("doc_id")).orderBy(col("doc_id").asc)
     },
-      Some("""WITH RECURSIVE all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents),
-         words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 1.0),
-         edges AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id),
-         cc AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id)
+      Some(raw"""WITH RECURSIVE all_docs AS (
+           $exactDupsSql),
+         ${wordJaccardCtes(7, "all_docs")},
+         ${jaccardPairsCte(1.0)},
+         ${closureCtes()}
          SELECT doc_id FROM all_docs
-         WHERE doc_id NOT IN (SELECT id FROM cc WHERE cluster_id <> id)
+         WHERE $survivor
          ORDER BY doc_id""")),
 
     Declared("dd5_embed_dup", (s, dir) => {
@@ -1743,7 +2001,7 @@ object SparkEntry {
       // the operator must recover exactly those.
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val twins = emb.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
+        .select((col("vec_id") + DupOffset).as("vec_id"), col("embedding"))
       Dedup.embeddingDupPairs(emb.unionByName(twins), "vec_id", "embedding",
           dim = 64, threshold = 0.99, nBits = 10, tables = 2)
         .orderBy(col("id_a").asc, col("id_b").asc)
@@ -1758,37 +2016,13 @@ object SparkEntry {
       // asserts heap-path == SQL-twin equality and that the plan has no
       // corpus×queries join node.
       val emb = t(s, dir, "embeddings")
-      Ann.bruteForceTopK(emb, emb.filter(col("vec_id") < 20), k = 10,
+      Ann.bruteForceTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10,
           quantized = true)
         .select("query_id", "rank", "neighbor_id", "score")
         .orderBy(col("query_id").asc, col("rank").asc)
     },
-      Some("""WITH q AS (
-           SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qq
-           FROM embeddings WHERE vec_id < 20),
-         c AS (
-           SELECT vec_id AS neighbor_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qv
-           FROM embeddings),
-         scored AS (
-           SELECT query_id, neighbor_id,
-             CAST(list_dot_product(qv, qq) AS DOUBLE) AS d,
-             CAST(list_dot_product(qv, qv) AS DOUBLE) AS na,
-             CAST(list_dot_product(qq, qq) AS DOUBLE) AS nb
-           FROM c, q WHERE neighbor_id <> query_id),
-         ranked AS (
-           SELECT query_id, neighbor_id,
-             CASE WHEN na = 0 OR nb = 0 THEN 0.0
-                  ELSE sign(d) * d * d / (na * nb) END AS score
-           FROM scored),
-         top AS (
-           SELECT query_id, neighbor_id, score,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
-           FROM ranked)
-         SELECT query_id, rank, neighbor_id, score FROM top
-         WHERE rank <= 10 ORDER BY query_id, rank""")),
+      Some(quantizedTopKOracle(cosineCtes("vec_id AS query_id,", "vec_id AS neighbor_id,",
+        "query_id, neighbor_id,", "c, q WHERE neighbor_id <> query_id"), k = 10))),
 
     // SRP-LSH with query-directed multiprobe (8 probes/table: base
     // bucket + 7 lowest-margin bit flips) — query-side only, the
@@ -1800,7 +2034,7 @@ object SparkEntry {
     // for table diversity; candidates stay bucket-bounded)
     Declared("ann2_lsh_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Ann.lshTopK(emb, emb.filter(col("vec_id") < 20), k = 10, dim = 64,
+      Ann.lshTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10, dim = 64,
           nBits = 7, tables = 8, probes = 8)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -1810,7 +2044,7 @@ object SparkEntry {
     // +50% probe volume — the documented recall/cost knob)
     Declared("ann3_ivf", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Ann.ivfTopK(emb, emb.filter(col("vec_id") < 20), k = 10,
+      Ann.ivfTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10,
           nCells = 16, nProbe = 6)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -1824,7 +2058,7 @@ object SparkEntry {
     // the shortlist costs ~nothing at any scale
     Declared("ann4_pq", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Ann.pqTopK(emb, emb.filter(col("vec_id") < 20), k = 10,
+      Ann.pqTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10,
           m = 8, ksub = 16, rerank = 100)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -1836,7 +2070,7 @@ object SparkEntry {
     // by AnnSpec)
     Declared("ann5_ivfpq", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Ann.ivfPqTopK(emb, emb.filter(col("vec_id") < 20), k = 10,
+      Ann.ivfPqTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10,
           nCells = 16, nProbe = 6, m = 8, ksub = 16, rerank = 100)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -1854,7 +2088,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val index = scratchPath("graft_ann9", dir)
       Ann.buildIvfPqIndex(emb, index, nCells = 16, m = 8, ksub = 16)
-      Ann.ivfPqTopKIndexed(s, index, emb.filter(col("vec_id") < 20),
+      Ann.ivfPqTopKIndexed(s, index, emb.filter(col("vec_id") < AnnQueries),
           emb, k = 10, nCells = 16, nProbe = 6, m = 8, ksub = 16, rerank = 100)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -1873,7 +2107,7 @@ object SparkEntry {
     // Codebook-seeded → rows-only, like every approximate tier.
     Declared("ann7_pq_hi", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Ann.pqTopK(emb, emb.filter(col("vec_id") < 20), k = 10,
+      Ann.pqTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10,
           m = 16, ksub = 16, rerank = 250)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -1888,7 +2122,7 @@ object SparkEntry {
       // ScalaTest; rows-only because the LSH/codebook seeds are
       // engine-specific (AnnSpec pins per-method floors).
       val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 20)
+      val qs = emb.filter(col("vec_id") < AnnQueries)
       val k = 10
       // the exact list is consumed by all five recall branches; left
       // LAZY deliberately — measured: an eager localCheckpoint here
@@ -1939,24 +2173,12 @@ object SparkEntry {
         col("doc_id"),
         textfns.langId(col("text")).as("lang_pred"))
         .orderBy(col("doc_id").asc),
-      Some("""WITH s AS (
+      Some(raw"""WITH s AS (
            SELECT doc_id,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|une|et|est)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|las|una|es)\b')) AS s_es,
-             len(regexp_extract_all(text, '的')) + len(regexp_extract_all(text, '是'))
-               + len(regexp_extract_all(text, '了')) + len(regexp_extract_all(text, '在'))
-               + len(regexp_extract_all(text, '和')) AS s_zh
+             $langHits
            FROM documents)
          SELECT doc_id,
-           CASE
-             WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh AND s_en > 0 THEN 'en'
-             WHEN s_de >= s_en AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh AND s_de > 0 THEN 'de'
-             WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_zh AND s_fr > 0 THEN 'fr'
-             WHEN s_es >= s_en AND s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh AND s_es > 0 THEN 'es'
-             WHEN s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_fr AND s_zh >= s_es AND s_zh > 0 THEN 'zh'
-             ELSE 'und' END AS lang_pred
+           $langCase AS lang_pred
          FROM s ORDER BY doc_id""")),
 
     Declared("txt3_quality", (s, dir) =>
@@ -1967,13 +2189,10 @@ object SparkEntry {
         textfns.punctRatio(col("text")).as("punct_ratio"),
         textfns.qualityScore(col("text")).as("quality"))
         .orderBy(col("doc_id").asc),
-      Some("""WITH base AS (
+      Some(raw"""WITH base AS (
            SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_words,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS stop_hits,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS punct_hits,
-             length(text) AS n_chars
+             $wsTokens AS n_words,
+             $qualityHits
            FROM documents),
          ratios AS (
            SELECT doc_id, n_words,
@@ -1991,8 +2210,8 @@ object SparkEntry {
         col("doc_id"),
         textfns.contentFingerprint(col("text")).as("fp_md5"))
         .orderBy(col("doc_id").asc),
-      Some("""SELECT doc_id,
-           md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp_md5
+      Some(raw"""SELECT doc_id,
+           md5($normText) AS fp_md5
          FROM documents ORDER BY doc_id""")),
 
     Declared("txt9_repetition", (s, dir) =>
@@ -2006,14 +2225,10 @@ object SparkEntry {
           size(hashfns.distinctWordShingles(col("text"), 3)).as("n_distinct"),
           textfns.repetitionRatio(col("text"), 3).as("repetition"))
         .orderBy(col("doc_id").asc),
-      Some("""WITH words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
+      Some(raw"""WITH words AS (
+           ${wordsSql("documents")}),
          sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 1)) AS i
-                 FROM words WHERE len(w) >= 3)),
+           ${shinglesSql(3, "words")}),
          dist AS (SELECT doc_id, count(*) AS n_distinct FROM sh GROUP BY 1)
          SELECT w.doc_id,
            CAST(greatest(len(w.w) - 2, 0) AS INTEGER) AS n_grams,
@@ -2031,15 +2246,8 @@ object SparkEntry {
       // benchmark doc 0's text (containment ≥ 0.33 by construction;
       // natural ceiling measured 0.125) — the flagged set is exactly
       // bench docs themselves + the planted splices.
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val bench = d.filter(col("doc_id") < 5)
-      val b0 = bench.filter(col("doc_id") === 0)
-        .select(col("text").as("bench_text"))
-      val spliced = d.filter(col("doc_id") % 20 === 0 && col("doc_id") >= 20)
-        .crossJoin(broadcast(b0))
-        .select((col("doc_id") + 20000L).as("doc_id"),
-          concat(col("text"), lit(" "), col("bench_text")).as("text"))
-      Decontam.contaminated(d.unionByName(spliced), bench, "doc_id", "text",
+      Decontam.contaminated(docsWithBenchSplices(s, dir), benchDocs(s, dir),
+          "doc_id", "text",
           threshold = 0.25, shingleN = 5)
         .orderBy(col("doc_id").asc)
     },
@@ -2070,14 +2278,10 @@ object SparkEntry {
             .as("avg_ll"))
         .orderBy(col("doc_id").asc)
     },
-      Some("""WITH words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
+      Some(raw"""WITH words AS (
+           ${wordsSql("documents")}),
          bi AS (
-           SELECT doc_id, array_to_string(w[i:i+1], ' ') AS bigram
-           FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-                 FROM words WHERE len(w) >= 2)),
+           ${shinglesSql(2, "words", distinct = false, as = "bigram")}),
          bc AS (
            SELECT bigram, count(*) AS cb,
              string_split(bigram, ' ')[1] AS w1
@@ -2109,10 +2313,8 @@ object SparkEntry {
           concat_ws(" ", col("ws")).as("chunk"))
         .orderBy(col("doc_id").asc, col("chunk_id").asc)
     },
-      Some("""WITH words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
+      Some(raw"""WITH words AS (
+           ${wordsSql("documents")}),
          c AS (
            SELECT doc_id, w,
              CASE WHEN len(w) <= 50 THEN 1
@@ -2153,10 +2355,8 @@ object SparkEntry {
         .select(col("doc_id"), col("ptext").as("text"))
         .orderBy(col("doc_id").asc)
     },
-      Some("""WITH d AS (
-           SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
+      Some(raw"""WITH d AS (
+           ${wordsSql("documents", "doc_id, source,")}),
          pd AS (
            SELECT doc_id,
              source || chr(10) || chr(10) ||
@@ -2199,9 +2399,8 @@ object SparkEntry {
             .filter(col("word") =!= ""),
           itemCol = "word", minFraction = 0.002)
         .orderBy(col("n").desc, col("word").asc),
-      Some("""WITH words AS (
-           SELECT unnest(regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS word
+      Some(raw"""WITH words AS (
+           SELECT unnest($wordArray) AS word
            FROM documents),
          w AS (SELECT word FROM words WHERE word <> ''),
          t AS (SELECT count(*) AS n_total FROM w)
@@ -2230,10 +2429,9 @@ object SparkEntry {
             .as("tfidf"))
         .orderBy(col("doc_id").asc, col("word").asc)
     },
-      Some("""WITH words AS (
+      Some(raw"""WITH words AS (
            SELECT doc_id,
-             unnest(regexp_split_to_array(
-               lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS word
+             unnest($wordArray) AS word
            FROM documents),
          tf AS (
            SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
@@ -2258,10 +2456,9 @@ object SparkEntry {
         .sliceMax(col("n"), 100, col("word"))
         .arrange(desc("n"), asc("word"))
         .df,
-      Some("""SELECT word, CAST(count(*) AS BIGINT) AS n
+      Some(raw"""SELECT word, CAST(count(*) AS BIGINT) AS n
          FROM (
-           SELECT unnest(regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS word
+           SELECT unnest($wordArray) AS word
            FROM documents)
          WHERE word <> ''
          GROUP BY word
@@ -2341,10 +2538,8 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a").asc, col("id_b").asc)
     },
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents)
+      Some(raw"""WITH all_docs AS (
+           $exactDupsSql)
          SELECT a.doc_id AS id_a, b.doc_id AS id_b
          FROM all_docs a JOIN all_docs b
            ON a.text = b.text AND a.doc_id < b.doc_id
@@ -2465,16 +2660,7 @@ object SparkEntry {
       // the gap-based replay: session_window merges overlapping-or-
       // ADJACENT windows, so its boundary rule is exactly ev2's
       // (> gap splits, = gap merges) — spec-pinned on the boundary
-      Some("""WITH e AS (
-           SELECT user_id, event_id, value,
-             epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms FROM events),
-         m AS (
-           SELECT *, lag(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev_ms
-           FROM e),
-         s AS (
-           SELECT *, CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
-                          THEN 1 ELSE 0 END AS new_session
-           FROM m),
+      Some(raw"""WITH $sessionCtes,
          x AS (
            SELECT *, sum(new_session) OVER (PARTITION BY user_id
              ORDER BY ts_ms, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
@@ -2667,16 +2853,7 @@ object SparkEntry {
     Declared("ev2_sessionize", (s, dir) =>
       Streams.sessionize(t(s, dir, "events"), gapMinutes = 30)
         .orderBy(col("user_id").asc, col("session_seq").asc),
-      Some("""WITH e AS (
-           SELECT user_id, event_id, value,
-             epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms FROM events),
-         m AS (
-           SELECT *, lag(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev_ms
-           FROM e),
-         s AS (
-           SELECT *, CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
-                          THEN 1 ELSE 0 END AS new_session
-           FROM m),
+      Some(raw"""WITH $sessionCtes,
          x AS (
            SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id
              ORDER BY ts_ms, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
@@ -2701,16 +2878,7 @@ object SparkEntry {
           col("session_start_ms"), col("session_end_ms"),
           round(col("sum_value"), 4).as("sum_value"))
         .orderBy(col("user_id").asc, col("session_seq").asc),
-      Some("""WITH e AS (
-           SELECT user_id, event_id, value,
-             epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms FROM events),
-         m AS (
-           SELECT *, lag(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev_ms
-           FROM e),
-         s AS (
-           SELECT *, CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
-                          THEN 1 ELSE 0 END AS new_session
-           FROM m),
+      Some(raw"""WITH $sessionCtes,
          x AS (
            SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id
              ORDER BY ts_ms, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
@@ -2789,12 +2957,12 @@ object SparkEntry {
         .select(textfns.contentFingerprint(col("text")).as("content_fp"))
         .orderBy(col("content_fp").asc)
     },
-      Some("""WITH all_docs AS (
+      Some(raw"""WITH all_docs AS (
            SELECT text FROM documents
            UNION ALL
            SELECT '  ' || regexp_replace(text, ' ', '  ', 'g')
            FROM documents WHERE doc_id % 5 = 0)
-         SELECT DISTINCT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
+         SELECT DISTINCT md5($normText)
            AS content_fp
          FROM all_docs ORDER BY content_fp"""), streaming = true),
 
@@ -2870,33 +3038,16 @@ object SparkEntry {
         .arrange(asc("lang"))
         .df
     },
-      Some("""WITH s AS (
+      Some(raw"""WITH s AS (
            SELECT doc_id, text,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|une|et|est)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|las|una|es)\b')) AS s_es,
-             len(regexp_extract_all(text, '的')) + len(regexp_extract_all(text, '是'))
-               + len(regexp_extract_all(text, '了')) + len(regexp_extract_all(text, '在'))
-               + len(regexp_extract_all(text, '和')) AS s_zh,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_words,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS stop_hits,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS punct_hits,
-             length(text) AS n_chars
+             $langHits,
+             $wsTokens AS n_words,
+             $qualityHits
            FROM documents),
          scored AS (
            SELECT doc_id, text, n_words,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_en AND s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_zh AND s_fr > 0 THEN 'fr'
-               WHEN s_es >= s_en AND s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh AND s_es > 0 THEN 'es'
-               WHEN s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_fr AND s_zh >= s_es AND s_zh > 0 THEN 'zh'
-               ELSE 'und' END AS lang,
-             least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.5
-               + least(CAST(stop_hits AS DOUBLE) / CAST(greatest(n_words, 1) AS DOUBLE) * 5.0, 1.0) * 0.3
-               + (1.0 - least(CAST(punct_hits AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) * 10.0, 1.0)) * 0.2 AS quality
+             $langCase AS lang,
+             ${qualitySql("n_words")} AS quality
            FROM s),
          f AS (SELECT * FROM scored WHERE quality >= 0.5 AND lang <> 'und'),
          dedup AS (
@@ -2904,7 +3055,7 @@ object SparkEntry {
              min_by(lang, doc_id) AS lang,
              min_by(n_words, doc_id) AS n_words,
              min_by(quality, doc_id) AS quality
-           FROM f GROUP BY lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
+           FROM f GROUP BY $normText)
          SELECT lang, count(*) AS n_docs,
            CAST(sum(n_words) AS BIGINT) AS sum_tokens,
            round(avg(quality), 4) AS avg_quality
@@ -2929,26 +3080,21 @@ object SparkEntry {
         .withColumn("unique_ratio",
           round(col("n_unique").cast("double") / col("n_docs").cast("double"), 4))
         .orderBy(col("source").asc),
-      Some("""WITH s AS (
+      Some(raw"""WITH s AS (
            SELECT doc_id, text, source,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_words,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS stop_hits,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS punct_hits,
-             length(text) AS n_chars
+             $wsTokens AS n_words,
+             $qualityHits
            FROM documents),
          scored AS (
            SELECT source, text,  n_words,
-             least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.5
-               + least(CAST(stop_hits AS DOUBLE) / CAST(greatest(n_words, 1) AS DOUBLE) * 5.0, 1.0) * 0.3
-               + (1.0 - least(CAST(punct_hits AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) * 10.0, 1.0)) * 0.2 AS quality
+             ${qualitySql("n_words")} AS quality
            FROM s)
          SELECT source,
            count(*) AS n_docs,
-           count(DISTINCT lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS n_unique,
+           count(DISTINCT $normText) AS n_unique,
            CAST(sum(n_words) AS BIGINT) AS sum_tokens,
            round(avg(quality), 4) AS avg_quality,
-           round(CAST(count(DISTINCT lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS DOUBLE)
+           round(CAST(count(DISTINCT $normText) AS DOUBLE)
                  / CAST(count(*) AS DOUBLE), 4) AS unique_ratio
          FROM scored GROUP BY source ORDER BY source""")),
 
@@ -2985,7 +3131,7 @@ object SparkEntry {
           round(col("rate"), 4).as("rate"))
         .orderBy(col("source").asc)
     },
-      Some("""WITH counts AS (
+      Some(raw"""WITH counts AS (
            SELECT source, count(*) AS n_before FROM documents GROUP BY 1),
          cmin AS (SELECT min(n_before) AS c_min FROM counts),
          rates AS (
@@ -2995,8 +3141,7 @@ object SparkEntry {
          kept AS (
            SELECT d.source, count(*) AS n_kept
            FROM documents d JOIN rates r USING (source)
-           WHERE ((d.doc_id % 2147483647) * 1103515245 + 12345) % 2147483647
-                 < CAST(floor(r.rate * 2147483647.0) AS BIGINT)
+           WHERE ${mixKeep("d")}
            GROUP BY 1)
          SELECT r.source, r.n_before,
            CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
@@ -3027,22 +3172,9 @@ object SparkEntry {
         .orderBy(col("source").asc, col("split").asc),
       // the avalanche chain replays q47's proven xor/shift syntax with
       // the splitter's own constants
-      Some("""WITH a AS (
-           SELECT source, xor(doc_id, (doc_id >> 32) + 11213) AS t0
-           FROM documents),
-         b AS (
-           SELECT source, ((t0 % 2147483647) * 48271 + 11213) % 2147483647 AS t1
-           FROM a),
-         c AS (
-           SELECT source, (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1
-           FROM b),
-         h AS (
-           SELECT source, (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS h
-           FROM c)
+      Some(s"""WITH ${decisionHashCtes("documents", "doc_id", "source", "h")}
          SELECT source,
-           CASE WHEN h < 1717986917 THEN 'train'
-                WHEN h < 1932735282 THEN 'valid'
-                ELSE 'test' END AS split,
+           ${splitCase("hv")} AS split,
            count(*) AS n_docs
          FROM h GROUP BY 1, 2 ORDER BY source, split""")),
 
@@ -3075,36 +3207,19 @@ object SparkEntry {
           col("avg_q_before"), col("avg_q_kept"))
         .orderBy(col("source").asc)
     },
-      Some("""WITH s AS (
+      Some(raw"""WITH s AS (
            SELECT doc_id, source,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_words,
-             len(regexp_extract_all(lower(text), '\b(the|of|and|to|in)\b')) AS stop_hits,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS punct_hits,
-             length(text) AS n_chars
+             $wsTokens AS n_words,
+             $qualityHits
            FROM documents),
          scored0 AS (
            SELECT doc_id, source,
-             least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.5
-               + least(CAST(stop_hits AS DOUBLE) / CAST(greatest(n_words, 1) AS DOUBLE) * 5.0, 1.0) * 0.3
-               + (1.0 - least(CAST(punct_hits AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) * 10.0, 1.0)) * 0.2 AS q,
-             xor(doc_id, (doc_id >> 32) + 362437) AS t0
+             ${qualitySql("n_words")} AS q
            FROM s),
-         scored1 AS (
-           SELECT doc_id, source, q,
-             ((t0 % 2147483647) * 69069 + 362437) % 2147483647 AS t1
-           FROM scored0),
-         scored2 AS (
-           SELECT doc_id, source, q,
-             (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1
-           FROM scored1),
-         scored AS (
-           SELECT doc_id, source, q,
-             (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS h
-           FROM scored2),
+         ${decisionHashCtes("scored0", "doc_id", "doc_id, source, q", "scored", 69069L, 362437L)},
          kept AS (
            SELECT source, count(*) AS n_kept, round(avg(q), 4) AS avg_q_kept
-           FROM scored WHERE h < CAST(floor(q * 2147483647.0) AS BIGINT)
+           FROM scored WHERE hv < CAST(floor(q * 2147483647.0) AS BIGINT)
            GROUP BY 1),
          base AS (
            SELECT source, count(*) AS n_before, round(avg(q), 4) AS avg_q_before
@@ -3139,10 +3254,8 @@ object SparkEntry {
       // exact-dup clusters are SQL-expressible (normalized-text groups,
       // the dd1 equivalence), so the leakage-proof split replays fully:
       // rep = min id over the text group, then cur4's affine hash on rep
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents),
+      Some(raw"""WITH all_docs AS (
+           $exactDupsSql),
          rep AS (
            -- null-text rows are each their OWN cluster (the Spark side
            -- keys them by their own id via fpOrOwnId); the 't:'/'id:'
@@ -3151,15 +3264,10 @@ object SparkEntry {
            SELECT doc_id,
              min(doc_id) OVER (
                PARTITION BY CASE WHEN text IS NULL THEN 'id:' || doc_id
-                 ELSE 't:' || lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) END) AS rep
+                 ELSE 't:' || $normText END) AS rep
            FROM all_docs),
-         ha AS (SELECT rep, xor(rep, (rep >> 32) + 11213) AS t0 FROM rep),
-         hb AS (SELECT rep, ((t0 % 2147483647) * 48271 + 11213) % 2147483647 AS t1 FROM ha),
-         hc AS (SELECT rep, (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1 FROM hb),
-         h AS (SELECT rep, (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS hv FROM hc)
-         SELECT CASE WHEN hv < 1717986917 THEN 'train'
-                     WHEN hv < 1932735282 THEN 'valid'
-                     ELSE 'test' END AS split,
+         ${decisionHashCtes("rep", "rep", "rep", "h")}
+         SELECT ${splitCase("hv")} AS split,
            count(*) AS n_docs, count(DISTINCT rep) AS n_clusters
          FROM h GROUP BY 1 ORDER BY 1""")),
 
@@ -3193,18 +3301,12 @@ object SparkEntry {
       // 7-gram set to one sorted chr(1)-joined string and groups on it;
       // short (< 7 words) and null-text docs have no key and stay
       // singletons, exactly the engine's Jaccard-0-on-empty behavior
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents),
+      Some(raw"""WITH all_docs AS (
+           $exactDupsSql),
          words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
+           ${wordsSql("all_docs")}),
          sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
+           ${shinglesSql(7, "words")}),
          keys AS (
            SELECT doc_id, string_agg(s, chr(1) ORDER BY s) AS key
            FROM sh GROUP BY doc_id),
@@ -3214,13 +3316,8 @@ object SparkEntry {
                PARTITION BY CASE WHEN k.key IS NULL THEN 'id:' || a.doc_id
                  ELSE 'k:' || k.key END) AS rep
            FROM all_docs a LEFT JOIN keys k ON a.doc_id = k.doc_id),
-         ha AS (SELECT rep, xor(rep, (rep >> 32) + 11213) AS t0 FROM rep),
-         hb AS (SELECT rep, ((t0 % 2147483647) * 48271 + 11213) % 2147483647 AS t1 FROM ha),
-         hc AS (SELECT rep, (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1 FROM hb),
-         h AS (SELECT rep, (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS hv FROM hc)
-         SELECT CASE WHEN hv < 1717986917 THEN 'train'
-                     WHEN hv < 1932735282 THEN 'valid'
-                     ELSE 'test' END AS split,
+         ${decisionHashCtes("rep", "rep", "rep", "h")}
+         SELECT ${splitCase("hv")} AS split,
            count(*) AS n_docs, count(DISTINCT rep) AS n_clusters
          FROM h GROUP BY 1 ORDER BY 1""")),
 
@@ -3248,10 +3345,9 @@ object SparkEntry {
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
         .orderBy(col("source").asc, col("seq_id").asc)
     },
-      Some("""WITH d AS (
+      Some(raw"""WITH d AS (
            SELECT doc_id, source,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok
+             $wsTokens AS n_tok
            FROM documents),
          c AS (
            SELECT doc_id, source, n_tok,
@@ -3271,15 +3367,8 @@ object SparkEntry {
       // survivors are exact-verified — so the output (and the oracle)
       // is row-identical to txt10 while the shuffle carries only the
       // bloom-surviving (id, shingle) pairs. Same planted fixture.
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val bench = d.filter(col("doc_id") < 5)
-      val b0 = bench.filter(col("doc_id") === 0)
-        .select(col("text").as("bench_text"))
-      val spliced = d.filter(col("doc_id") % 20 === 0 && col("doc_id") >= 20)
-        .crossJoin(broadcast(b0))
-        .select((col("doc_id") + 20000L).as("doc_id"),
-          concat(col("text"), lit(" "), col("bench_text")).as("text"))
-      Decontam.contaminatedBloom(d.unionByName(spliced), bench, "doc_id", "text",
+      Decontam.contaminatedBloom(docsWithBenchSplices(s, dir), benchDocs(s, dir),
+          "doc_id", "text",
           threshold = 0.25, shingleN = 5, expectedItems = 1L << 20)
         .orderBy(col("doc_id").asc)
     },
@@ -3335,7 +3424,7 @@ object SparkEntry {
 
     Declared("dd15_containment", (s, dir) => {
       // asymmetric containment (quote/excerpt detection): every
-      // doc_id%7==3 doc contributes a 12-word head QUOTE (+30000
+      // doc_id%7==3 doc contributes a 12-word head QUOTE (AltOffset
       // ids) whose shingle set is a strict subset of its source —
       // containment 1.0 where Jaccard reads ~6/(n+6) and every
       // symmetric gate is blind by design (Broder's
@@ -3344,38 +3433,15 @@ object SparkEntry {
       // verbatim); the maxShingleDf cap is the 100 TB knob
       // (boilerplate shingles leave the index, containment becomes
       // a documented lower bound — spec-pinned, off here).
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val norm = split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ")
-      val quotes = d.filter(col("doc_id") % 7 === 3)
-        .select((col("doc_id") + 30000L).as("doc_id"),
-          array_join(slice(norm, 1, 12), " ").as("text"))
-      Dedup.containmentPairs(d.unionByName(quotes), "doc_id", "text",
+      Dedup.containmentPairs(docsWithQuotes(s, dir), "doc_id", "text",
           shingleN = 7, threshold = 0.9)
         .orderBy(col("id_sub").asc, col("id_sup").asc)
     },
       // the dd4 shingle machinery with the containment formula and the
       // min-set orientation; quotes are the head-12-word slices
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 30000, array_to_string(
-             (regexp_split_to_array(
-               lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))[1:12],
-             ' ')
-           FROM documents WHERE doc_id % 7 = 3),
-         words AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+6], ' ') AS s
-           FROM (SELECT doc_id, w, unnest(range(1, len(w) - 5)) AS i
-                 FROM words WHERE len(w) >= 7)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+      Some(raw"""WITH all_docs AS (
+           $quotesDocsSql),
+         ${wordJaccardCtes(7, "all_docs")},
          j AS (
            SELECT id_a, id_b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b
            FROM inter
@@ -3390,7 +3456,7 @@ object SparkEntry {
          WHERE CAST(n_inter AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE) >= 0.9
          ORDER BY id_sub, id_sup""")),
 
-    Declared("dd10_char_dedup", (s, dir) => {
+    Declared("dd10_char_dedup", (s, _) => {
       // charLevel (CJK) dedup gate: whitespace shingling sees a CJK
       // doc as ONE word (zero shingles, recall silently zero) —
       // charLevel=true switches the whole pipeline to code-point
@@ -3412,47 +3478,20 @@ object SparkEntry {
       // char-shingle-set equality as distinct-substring sets over the
       // same lower/trim/collapse-whitespace normalization, then the same
       // recursive-CC + min-id-survivor replay as dd8.
-      Some("""WITH RECURSIVE ids AS (SELECT range AS i FROM range(400)),
-         parts AS (
-           SELECT i,
-             translate(lpad(CAST(i % 40 AS VARCHAR), 4, '0'),
-               '0123456789', '零一二三四五六七八九') AS p1,
-             translate(lpad(CAST((i % 40) * 7 + 1 AS VARCHAR), 4, '0'),
-               '0123456789', '零一二三四五六七八九') AS p2
-           FROM ids),
-         docs AS (
-           SELECT i + 30000 AS doc_id,
-             CASE ((i // 40) % 3)
-               WHEN 1 THEN p1 || '  ' || p2
-               WHEN 2 THEN '  ' || p1 || ' ' || p2 || ' '
-               ELSE p1 || ' ' || p2 END AS text
-           FROM parts),
+      Some(raw"""WITH RECURSIVE $cjkDocsSql,
          norm AS (
            SELECT doc_id,
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS t
+             $normText AS t
            FROM docs),
          sh AS (
            SELECT DISTINCT doc_id, substr(t, CAST(i AS INTEGER), 3) AS s
            FROM (SELECT doc_id, t, unnest(range(1, length(t) - 1)) AS i
                  FROM norm WHERE length(t) >= 3)),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 1.0),
-         edges AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id),
-         cc AS (SELECT id, min(lbl) AS cluster_id FROM reach GROUP BY id)
+         $jaccardCtes,
+         ${jaccardPairsCte(1.0)},
+         ${closureCtes()}
          SELECT doc_id FROM docs
-         WHERE doc_id NOT IN (SELECT id FROM cc WHERE cluster_id <> id)
+         WHERE $survivor
          ORDER BY doc_id""")),
 
     Declared("dd11_lsh_recall", (s, dir) => {
@@ -3503,29 +3542,9 @@ object SparkEntry {
       // groups on the raw window TEXT where graft groups on a 128-bit
       // digest pair — agreement IS the collision-freedom claim. Interval
       // merge = textbook gaps-and-islands over running max end.
-      Some("""WITH d AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
-         win AS (
-           SELECT doc_id, s, array_to_string(w[(s+1):(s+8)], ' ') AS g
-           FROM (SELECT doc_id, w,
-                   unnest(range(0, greatest(len(w) - 7, 0))) AS s
-                 FROM d)),
+      Some(raw"""WITH ${windowCtes("documents")},
          dup AS (SELECT g FROM win GROUP BY g HAVING count(*) >= 2),
-         hits AS (
-           SELECT doc_id, s, s + 8 AS e FROM win JOIN dup USING (g)),
-         m AS (
-           SELECT doc_id, s, e,
-             max(e) OVER (PARTITION BY doc_id ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-           FROM hits),
-         isl AS (
-           SELECT doc_id, s, e,
-             sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-           FROM m)
+         ${islandCtes("dup")}
          SELECT doc_id, min(s) AS span_start, max(e) AS span_end,
            max(e) - min(s) AS span_words
          FROM isl GROUP BY doc_id, gid
@@ -3552,29 +3571,9 @@ object SparkEntry {
             col("n_words"), 4).as("dup_ratio"))
         .orderBy(col("doc_id").asc)
     },
-      Some("""WITH d AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
-         win AS (
-           SELECT doc_id, s, array_to_string(w[(s+1):(s+8)], ' ') AS g
-           FROM (SELECT doc_id, w,
-                   unnest(range(0, greatest(len(w) - 7, 0))) AS s
-                 FROM d)),
+      Some(raw"""WITH ${windowCtes("documents")},
          dup AS (SELECT g FROM win GROUP BY g HAVING count(*) >= 2),
-         hits AS (
-           SELECT doc_id, s, s + 8 AS e FROM win JOIN dup USING (g)),
-         m AS (
-           SELECT doc_id, s, e,
-             max(e) OVER (PARTITION BY doc_id ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-           FROM hits),
-         isl AS (
-           SELECT doc_id, s, e,
-             sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-           FROM m),
+         ${islandCtes("dup")},
          spans AS (
            SELECT doc_id, min(s) AS s0, max(e) AS e0
            FROM isl GROUP BY doc_id, gid),
@@ -3598,38 +3597,14 @@ object SparkEntry {
       // scoring ⇒ bit-identical to the SQL twin, so the oracle is
       // ann1's replay with the label join predicate added.
       val emb = t(s, dir, "embeddings")
-      Ann.filteredTopK(emb, emb.filter(col("vec_id") < 20), k = 5,
+      Ann.filteredTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 5,
           matchCols = Seq("label"), quantized = true)
         .select("query_id", "rank", "neighbor_id", "score")
         .orderBy(col("query_id").asc, col("rank").asc)
     },
-      Some("""WITH q AS (
-           SELECT vec_id AS query_id, label,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qq
-           FROM embeddings WHERE vec_id < 20),
-         c AS (
-           SELECT vec_id AS neighbor_id, label,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qv
-           FROM embeddings),
-         scored AS (
-           SELECT query_id, neighbor_id,
-             CAST(list_dot_product(qv, qq) AS DOUBLE) AS d,
-             CAST(list_dot_product(qv, qv) AS DOUBLE) AS na,
-             CAST(list_dot_product(qq, qq) AS DOUBLE) AS nb
-           FROM c JOIN q ON c.label = q.label
-           WHERE neighbor_id <> query_id),
-         ranked AS (
-           SELECT query_id, neighbor_id,
-             CASE WHEN na = 0 OR nb = 0 THEN 0.0
-                  ELSE sign(d) * d * d / (na * nb) END AS score
-           FROM scored),
-         top AS (
-           SELECT query_id, neighbor_id, score,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
-           FROM ranked)
-         SELECT query_id, rank, neighbor_id, score FROM top
-         WHERE rank <= 5 ORDER BY query_id, rank""")),
+      Some(quantizedTopKOracle(cosineCtes("vec_id AS query_id, label,",
+        "vec_id AS neighbor_id, label,", "query_id, neighbor_id,",
+        "c JOIN q ON c.label = q.label WHERE neighbor_id <> query_id"), k = 5))),
 
     Declared("txt17_bpe", (s, dir) => {
       // real subword tokenization: train 20 BPE merges on the corpus
@@ -3683,7 +3658,7 @@ object SparkEntry {
       // pinned in DedupSpec.
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val twins = emb.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
+        .select((col("vec_id") + DupOffset).as("vec_id"), col("embedding"))
       Dedup.semanticDupPairs(emb.unionByName(twins), "vec_id", "embedding",
           nCells = 16, threshold = 0.99, windowSize = 6)
         .orderBy(col("id_a").asc, col("id_b").asc)
@@ -3761,25 +3736,11 @@ object SparkEntry {
           Seq("source"), "doc_id", n = 5)
         .select("source", "doc_id", "lang")
         .orderBy(col("source").asc, col("doc_id").asc),
-      Some("""WITH a AS (
-           SELECT doc_id, source, lang,
-             xor(doc_id, (doc_id >> 32) + 49297) AS t0
-           FROM documents),
-         b AS (
-           SELECT doc_id, source, lang,
-             ((t0 % 2147483647) * 16807 + 49297) % 2147483647 AS t1
-           FROM a),
-         c AS (
-           SELECT doc_id, source, lang,
-             (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS h1
-           FROM b),
-         h AS (
-           SELECT doc_id, source, lang,
-             (xor(h1, h1 >> 13) * 22695477 + 77557187) % 2147483647 AS hh
-           FROM c),
+      Some(s"""WITH ${decisionHashCtes("documents", "doc_id", "doc_id, source, lang", "h",
+             16807L, 49297L)},
          r AS (
            SELECT doc_id, source, lang,
-             row_number() OVER (PARTITION BY source ORDER BY hh, doc_id) AS rk
+             row_number() OVER (PARTITION BY source ORDER BY hv, doc_id) AS rk
            FROM h)
          SELECT source, doc_id, lang FROM r WHERE rk <= 5
          ORDER BY source, doc_id""")),
@@ -4018,9 +3979,8 @@ object SparkEntry {
       Search.bm25TopDocs(t(s, dir, "documents"), "doc_id", "text",
           Seq("dup", "spark", "window"), topN = 20)
         .orderBy(col("score").desc, col("doc_id").asc),
-      Some("""WITH d AS (
-           SELECT doc_id, list_filter(regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '),
+      Some(raw"""WITH d AS (
+           SELECT doc_id, list_filter($wordArray,
              x -> x <> '') AS w
            FROM documents),
          dl AS (SELECT doc_id, len(w) AS len FROM d WHERE len(w) > 0),
@@ -4056,9 +4016,8 @@ object SparkEntry {
           Seq("dup", "spark", "window"))
         .orderBy(col("doc_id").asc)
     },
-      Some("""WITH w AS (
-           SELECT doc_id, unnest(regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
+      Some(raw"""WITH w AS (
+           SELECT doc_id, unnest($wordArray) AS term
            FROM documents),
          w2 AS (SELECT DISTINCT doc_id, term FROM w WHERE term <> '')
          SELECT doc_id FROM w2
@@ -4085,9 +4044,8 @@ object SparkEntry {
           groupCols = Seq("source"), itemCol = "word",
           minFraction = 0.005, estimatedGroups = 64)
         .orderBy(col("source").asc, col("n").desc, col("word").asc),
-      Some("""WITH words AS (
-           SELECT source, unnest(regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS word
+      Some(raw"""WITH words AS (
+           SELECT source, unnest($wordArray) AS word
            FROM documents),
          w AS (SELECT source, word FROM words WHERE word <> ''),
          t AS (SELECT source, count(*) AS n_grp FROM w GROUP BY source)
@@ -4113,10 +4071,8 @@ object SparkEntry {
       // exact integer lift: DuckDB's sums are HUGEINT (the engine's are
       // decimal(38,0)); one double division closes it — marginals from
       // the UNFILTERED bigram table, cast to BIGINT for schema parity
-      Some("""WITH w AS (
-           SELECT regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM documents),
+      Some(raw"""WITH w AS (
+           ${wordsSql("documents", "")}),
          b0 AS (
            SELECT w[i] AS w1, w[i + 1] AS w2
            FROM (SELECT w, unnest(range(1, len(w))) AS i
@@ -4145,9 +4101,8 @@ object SparkEntry {
         .orderBy(col("doc_id").asc, col("kw_rank").asc),
       // txt8's scoring replayed per doc, ranked on the ROUNDED score
       // (identical 4dp grids on both engines) with the term tie-break
-      Some("""WITH words AS (
-           SELECT doc_id, unnest(regexp_split_to_array(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
+      Some(raw"""WITH words AS (
+           SELECT doc_id, unnest($wordArray) AS term
            FROM documents),
          tf AS (SELECT doc_id, term, count(*) AS tf FROM words
                 WHERE term <> '' GROUP BY 1, 2),
@@ -4170,8 +4125,9 @@ object SparkEntry {
       // the production remedy cuts the quoted window, not the whole
       // doc (txt10's doc-level ratio can neither keep the clean 95%
       // of a long doc nor find the leak to cut). Planted leaks: bench
-      // doc 0's text APPENDED to every 20th doc (+20000 ids) and
-      // bench doc 1's PREPENDED to every doc_id%20==7 (+30000 ids) —
+      // doc 0's text APPENDED to every 20th doc (SpliceOffset ids)
+      // and bench doc 1's PREPENDED to every doc_id%20==7 (AltOffset
+      // ids) —
       // spans must land at the tail resp. head word offsets; bench
       // docs themselves (they are corpus members) must come back as
       // one full-coverage span. Text never shuffles: bench window
@@ -4179,22 +4135,8 @@ object SparkEntry {
       // pair, the interval merge is a per-doc window. The oracle
       // groups on raw window TEXT — digest-vs-text agreement is the
       // 128-bit collision-freedom claim, as in dd12.
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val bench = d.filter(col("doc_id") < 5)
-      val b0 = bench.filter(col("doc_id") === 0)
-        .select(col("text").as("bench_text"))
-      val b1 = bench.filter(col("doc_id") === 1)
-        .select(col("text").as("bench_text"))
-      val appended = d.filter(col("doc_id") % 20 === 0 && col("doc_id") >= 20)
-        .crossJoin(broadcast(b0))
-        .select((col("doc_id") + 20000L).as("doc_id"),
-          concat(col("text"), lit(" "), col("bench_text")).as("text"))
-      val prepended = d.filter(col("doc_id") % 20 === 7)
-        .crossJoin(broadcast(b1))
-        .select((col("doc_id") + 30000L).as("doc_id"),
-          concat(col("bench_text"), lit(" "), col("text")).as("text"))
       Decontam.contaminatedSpans(
-          d.unionByName(appended).unionByName(prepended), bench,
+          docsWithBenchSplices(s, dir, prepends = true), benchDocs(s, dir),
           "doc_id", "text", windowWords = 8)
         .orderBy(col("doc_id").asc, col("span_start").asc)
     },
@@ -4203,39 +4145,11 @@ object SparkEntry {
       // corpus-wide" to "occurs in the benchmark docs" — grouping on
       // raw window text vs the engine's digest pair is the same
       // collision-freedom claim dd12 makes
-      Some("""WITH all_docs AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT d.doc_id + 20000, d.text || ' ' || b.text
-           FROM documents d, (SELECT text FROM documents WHERE doc_id = 0) b
-           WHERE d.doc_id % 20 = 0 AND d.doc_id >= 20
-           UNION ALL
-           SELECT d.doc_id + 30000, b.text || ' ' || d.text
-           FROM documents d, (SELECT text FROM documents WHERE doc_id = 1) b
-           WHERE d.doc_id % 20 = 7),
-         d AS (
-           SELECT doc_id,
-             regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-           FROM all_docs),
-         win AS (
-           SELECT doc_id, s, array_to_string(w[(s+1):(s+8)], ' ') AS g
-           FROM (SELECT doc_id, w,
-                   unnest(range(0, greatest(len(w) - 7, 0))) AS s
-                 FROM d)),
-         bw AS (SELECT DISTINCT g FROM win WHERE doc_id < 5),
-         hits AS (
-           SELECT doc_id, s, s + 8 AS e FROM win JOIN bw USING (g)),
-         m AS (
-           SELECT doc_id, s, e,
-             max(e) OVER (PARTITION BY doc_id ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-           FROM hits),
-         isl AS (
-           SELECT doc_id, s, e,
-             sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-           FROM m)
+      Some(raw"""WITH all_docs AS (
+           ${benchSplicesDocsSql(prepends = true)}),
+         ${windowCtes("all_docs")},
+         bw AS (SELECT DISTINCT g FROM win WHERE doc_id < $BenchDocs),
+         ${islandCtes("bw")}
          SELECT doc_id, min(s) AS span_start, max(e) AS span_end,
            max(e) - min(s) AS span_words
          FROM isl GROUP BY doc_id, gid
@@ -4251,30 +4165,17 @@ object SparkEntry {
       // so the oracle replays membership AND the vote.
       val emb = t(s, dir, "embeddings")
       graft.similarity.Ann.knnClassify(emb,
-          emb.filter(col("vec_id") < 20).select("vec_id", "embedding"),
+          emb.filter(col("vec_id") < AnnQueries).select("vec_id", "embedding"),
           k = 10)
         .orderBy(col("query_id").asc)
     },
       // the ann1 quantized-scoring replay + labeled vote: membership,
       // votes, best rank and the three-key tie-break are all exact
-      Some("""WITH q AS (
-           SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qq
-           FROM embeddings WHERE vec_id < 20),
-         c AS (
-           SELECT vec_id AS neighbor_id, label,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qv
-           FROM embeddings),
-         scored AS (
-           SELECT query_id, neighbor_id, label,
-             CAST(list_dot_product(qv, qq) AS DOUBLE) AS d,
-             CAST(list_dot_product(qv, qv) AS DOUBLE) AS na,
-             CAST(list_dot_product(qq, qq) AS DOUBLE) AS nb
-           FROM c, q WHERE neighbor_id <> query_id),
+      Some(raw"""WITH ${cosineCtes("vec_id AS query_id,", "vec_id AS neighbor_id, label,",
+             "query_id, neighbor_id, label,", "c, q WHERE neighbor_id <> query_id")},
          ranked AS (
            SELECT query_id, neighbor_id, label,
-             CASE WHEN na = 0 OR nb = 0 THEN 0.0
-                  ELSE sign(d) * d * d / (na * nb) END AS score
+             $cosineScore AS score
            FROM scored),
          top AS (
            SELECT query_id, neighbor_id, label,
@@ -4340,8 +4241,8 @@ object SparkEntry {
       // shuffle-free scan, output is flagged-only; the ann1 quantized
       // arithmetic makes every (id, best bench, score) row replay.
       val emb = t(s, dir, "embeddings")
-      Decontam.semantic(emb.filter(col("vec_id") >= 20),
-          emb.filter(col("vec_id") < 20), threshold = 0.1)
+      Decontam.semantic(emb.filter(col("vec_id") >= AnnQueries),
+          emb.filter(col("vec_id") < AnnQueries), threshold = 0.1)
         .orderBy(col("vec_id").asc)
     },
       // margin mining: the full cosq matrix is quadratic HERE (the
@@ -4351,27 +4252,13 @@ object SparkEntry {
       // margin is one double division of exact BIGINTs, so value AND
       // best-benchmark-match per corpus vector (score DESC, bench ASC
       // row_number), threshold filter — the ann1 quantized arithmetic
-      Some("""WITH q AS (
-           SELECT vec_id AS bench_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qq
-           FROM embeddings WHERE vec_id < 20),
-         c AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qv
-           FROM embeddings WHERE vec_id >= 20),
-         scored AS (
-           SELECT c.vec_id, q.bench_id,
-             CAST(list_dot_product(qv, qq) AS DOUBLE) AS d,
-             CAST(list_dot_product(qv, qv) AS DOUBLE) AS na,
-             CAST(list_dot_product(qq, qq) AS DOUBLE) AS nb
-           FROM c, q),
+      Some(raw"""WITH ${cosineCtes("vec_id AS bench_id,", "vec_id,", "c.vec_id, q.bench_id,", "c, q",
+             cWhere = s" WHERE vec_id >= $AnnQueries")},
          ranked AS (
            SELECT vec_id, bench_id,
-             CASE WHEN na = 0 OR nb = 0 THEN 0.0
-                  ELSE sign(d) * d * d / (na * nb) END AS score,
+             $cosineScore AS score,
              row_number() OVER (PARTITION BY vec_id
-               ORDER BY CASE WHEN na = 0 OR nb = 0 THEN 0.0
-                 ELSE sign(d) * d * d / (na * nb) END DESC,
+               ORDER BY $cosineScore DESC,
                  bench_id ASC) AS rn
            FROM scored)
          SELECT vec_id, bench_id, score FROM ranked
@@ -4388,18 +4275,18 @@ object SparkEntry {
       // double division of exact integers, so DuckDB replays value
       // and rank order bit-for-bit.
       val emb = t(s, dir, "embeddings")
-      Ann.marginMine(emb, emb.filter(col("vec_id") < 20), k = 4,
+      Ann.marginMine(emb, emb.filter(col("vec_id") < AnnQueries), k = 4,
           minMargin = 1.0)
         .orderBy(col("query_id").asc)
     },
       // rank order replay bit-for-bit
-      Some("""WITH q AS (
+      Some(raw"""WITH q AS (
            SELECT vec_id AS qid,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qv
-           FROM embeddings WHERE vec_id < 20),
+             $quantizedEmbedding AS qv
+           FROM embeddings WHERE vec_id < $AnnQueries),
          c AS (
            SELECT vec_id AS cid,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS cv
+             $quantizedEmbedding AS cv
            FROM embeddings),
          cosq AS (
            SELECT qid, cid,
@@ -4657,7 +4544,7 @@ object SparkEntry {
       // every ratio is an exact division of integer-derived counts, so
       // the threshold comparisons in `keep` replay bit-for-bit; planted
       // docs are rebuilt verbatim with repeat()/chr(10)
-      Some("""WITH all_docs AS (
+      Some(raw"""WITH all_docs AS (
            SELECT doc_id, text FROM documents
            UNION ALL SELECT 40000,
              repeat('• the point of and with list' || chr(10), 10) || 'end'
@@ -4674,8 +4561,7 @@ object SparkEntry {
          nn AS (SELECT doc_id, coalesce(text, '') AS text FROM all_docs),
          sc AS (
            SELECT doc_id, text,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_words,
+             $wsTokens AS n_words,
              length(regexp_replace(text, '\s+', '', 'g')) AS n_wchars,
              len(regexp_extract_all(text, '#|\.\.\.|…')) AS n_sym,
              CASE WHEN length(trim(text)) = 0 THEN 0
@@ -4691,7 +4577,7 @@ object SparkEntry {
                   ELSE CAST(n_sym AS DOUBLE) / CAST(n_words AS DOUBLE) END AS symr,
              CAST(len(list_filter(ls, x -> regexp_matches(trim(x), '^[-*•‣▪]'))) AS DOUBLE)
                / CAST(greatest(len(ls), 1) AS DOUBLE) AS bulr,
-             CAST(len(list_filter(ls, x -> regexp_matches(trim(x), '(\.\.\.|…)$'))) AS DOUBLE)
+             CAST(len(list_filter(ls, x -> regexp_matches(trim(x), '(\.\.\.|…)$$'))) AS DOUBLE)
                / CAST(greatest(len(ls), 1) AS DOUBLE) AS ellr,
              CASE WHEN n_words <= 0 THEN 0.0
                   ELSE CAST(n_alpha AS DOUBLE) / CAST(n_words AS DOUBLE) END AS alpr,
@@ -4723,7 +4609,7 @@ object SparkEntry {
       // index explode + self-join — the quadratic definition is the
       // ORACLE's job, the engine never runs it).
       graft.similarity.Pca.gram(t(s, dir, "embeddings"), "embedding",
-          d = 64, scale = 10000L)
+          d = 64, scale = GramScale)
         .orderBy(col("i").asc, col("j").asc)
     },
       // the oracle rebuilds the exact integer Gram sums by the
@@ -4731,14 +4617,7 @@ object SparkEntry {
       // the formulation the engine's fixed-buffer aggregate exists to
       // avoid at scale, which is exactly what makes it an independent
       // check
-      Some("""WITH q AS (
-           SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)) AS qv
-           FROM embeddings WHERE embedding IS NOT NULL),
-         e AS (
-           SELECT vec_id, ix.i AS i, qv[ix.i + 1] AS qval
-           FROM q, (SELECT unnest(range(0, 64)) AS i) ix),
+      Some(raw"""WITH $gramEntriesCtes,
          m AS (SELECT i, sum(qval) AS mi FROM e GROUP BY 1),
          p AS (
            SELECT a.i AS i, b.i AS j, sum(a.qval * b.qval) AS s
@@ -4786,7 +4665,7 @@ object SparkEntry {
     },
       // the oracle performs the SAME rewrite and digests its own output
       // — the transform is verified byte-exactly via the fingerprint
-      Some("""WITH all_docs AS (
+      Some(raw"""WITH all_docs AS (
            SELECT doc_id, text FROM documents
            UNION ALL SELECT 50000,
              'This is a good first sentence with many words.' || chr(10)
@@ -4808,7 +4687,7 @@ object SparkEntry {
            FROM all_docs),
          m AS (
            SELECT doc_id, len(ls) AS n_lines,
-             list_filter(ls, x -> regexp_matches(trim(x), '[.!?]$')
+             list_filter(ls, x -> regexp_matches(trim(x), '[.!?]$$')
                AND len(regexp_split_to_array(trim(x), '\s+')) >= 5
                AND length(trim(x)) > 0) AS kept,
              len(regexp_extract_all(t, '[.!?]+')) AS n_sentences,
@@ -4829,20 +4708,13 @@ object SparkEntry {
       // operation order over BIGINT-exact sums, so DuckDB replays
       // bit-for-bit pre-rounding; 6dp on both sides per §4.
       graft.similarity.Pca.correlation(t(s, dir, "embeddings"),
-          "embedding", d = 64, scale = 10000L)
+          "embedding", d = 64, scale = GramScale)
         .select(col("i"), col("j"), round(col("corr"), 6).as("corr"))
         .orderBy(col("i").asc, col("j").asc)
     },
       // same statistics as cur25, pushed through the fixed-order
       // Pearson formula in DOUBLE — bit-identical pre-rounding
-      Some("""WITH q AS (
-           SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)) AS qv
-           FROM embeddings WHERE embedding IS NOT NULL),
-         e AS (
-           SELECT vec_id, ix.i AS i, qv[ix.i + 1] AS qval
-           FROM q, (SELECT unnest(range(0, 64)) AS i) ix),
+      Some(raw"""WITH $gramEntriesCtes,
          m AS (SELECT i, CAST(sum(qval) AS BIGINT) AS mi FROM e GROUP BY 1),
          p AS (
            SELECT a.i AS i, b.i AS j, CAST(sum(a.qval * b.qval) AS BIGINT) AS s
@@ -4969,13 +4841,13 @@ object SparkEntry {
       val proj = graft.similarity.Pca.project(emb, "embedding", model, "pca")
         .select(col("vec_id"), col("pca").cast("array<float>").as("embedding"))
       val k = 10
-      val exact = Ann.bruteForceTopK(emb, emb.filter(col("vec_id") < 20),
+      val exact = Ann.bruteForceTopK(emb, emb.filter(col("vec_id") < AnnQueries),
           k = k, quantized = true)
         .select(col("query_id"), col("neighbor_id"))
-      val short = Ann.bruteForceTopK(proj, proj.filter(col("vec_id") < 20),
+      val short = Ann.bruteForceTopK(proj, proj.filter(col("vec_id") < AnnQueries),
           k = 100)
         .select(col("query_id"), col("neighbor_id"))
-      val qv = emb.filter(col("vec_id") < 20)
+      val qv = emb.filter(col("vec_id") < AnnQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
       val reranked = emb
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("__nv"))
@@ -5370,21 +5242,13 @@ object SparkEntry {
       // the full decisionHash replay (the cur4 discipline, own
       // constants 40692/52361), then exact BIGINT priorities — rank,
       // membership and the 41st-priority threshold all integer
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
            SELECT doc_id, source, CAST(n_chars + 1 AS DOUBLE) AS w,
              CAST(floor(CAST(n_chars + 1 AS DOUBLE) * 1.0 + 0.5) AS BIGINT) AS wq
            FROM documents),
-         h0 AS (SELECT *, xor(doc_id, (doc_id >> 32) + 52361) AS t0 FROM d),
-         h1 AS (SELECT *,
-             ((t0 % 2147483647) * 40692 + 52361) % 2147483647 AS t1 FROM h0),
-         h2 AS (SELECT *,
-             (xor(t1, t1 >> 15) * 1664525 + 1013904223) % 2147483647 AS hh1
-           FROM h1),
-         h3 AS (SELECT *,
-             (xor(hh1, hh1 >> 13) * 22695477 + 77557187) % 2147483647 + 1 AS h
-           FROM h2),
+         ${decisionHashCtes("d", "doc_id", "*", "h", 40692L, 52361L)},
          p AS (SELECT doc_id, source, w, wq,
-             (wq * 2147483648) // h AS pri FROM h3),
+             (wq * 2147483648) // (hv + 1) AS pri FROM h),
          r AS (SELECT *, row_number() OVER (
              PARTITION BY source ORDER BY pri DESC, doc_id) AS rk FROM p),
          tau AS (SELECT source, max(CASE WHEN rk = 41 THEN pri END) AS tau

@@ -46,7 +46,7 @@ final case class GraftFrame(df: DataFrame, groupCols: Seq[String] = Nil) {
     * the frame's available columns — with the original exception as the
     * cause (classic Spark analyzes each transformation eagerly, so the
     * catch fires at verb-call time, not at the distant action). */
-  private def wrapVerb[A](verb: String, referenced: => Seq[String] = Nil)(body: => A): A =
+  private def wrapVerb[A](verb: String, referenced: => Seq[String])(body: => A): A =
     try body catch {
       case e: org.apache.spark.sql.AnalysisException =>
         throw GraftVerbError(verb, referenced, df.columns.toSeq, e)

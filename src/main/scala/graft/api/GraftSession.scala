@@ -55,7 +55,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
     // getOrCreate may have returned a PRE-EXISTING session built
     // without graft's extensions — withExtensions only applies at
     // creation time, so the native strategies (as-of join) and the

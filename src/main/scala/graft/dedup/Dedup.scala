@@ -1077,7 +1077,7 @@ object Dedup {
       // set — zero recomputation, no cache left behind
       val sorted = banned.collect().map(_.getString(0)).sortWith(_ < _)
       banned.unpersist(blocking = false)
-      broadcastRouteFrom(docs, idCol, textCol, sep,
+      broadcastRouteFrom(docs, textCol, sep,
         docs.sparkSession.createDataFrame(
           java.util.List.of(Row(sorted.toSeq)),
           StructType(Seq(StructField("__banned",
@@ -1123,7 +1123,7 @@ object Dedup {
   def paragraphDedupBroadcast(docs: DataFrame, idCol: String, textCol: String,
                               sep: String = "\n\n",
                               maxOccurrences: Long = 1): DataFrame =
-    broadcastRouteFrom(docs, idCol, textCol, sep,
+    broadcastRouteFrom(docs, textCol, sep,
       bannedFingerprints(docs, textCol, sep, maxOccurrences)
         // one row, even when empty; sorted ASC for the binary-search probe
         .agg(sort_array(collect_list(col("__fp"))).as("__banned")))
@@ -1135,7 +1135,7 @@ object Dedup {
     * which already paid the fingerprint job for its size pre-flight).
     * Identical plan shape either way: corpus ⨯ broadcast(1 row),
     * scan-side binary-search probe. */
-  private def broadcastRouteFrom(docs: DataFrame, idCol: String,
+  private def broadcastRouteFrom(docs: DataFrame,
                                  textCol: String, sep: String,
                                  bannedList: DataFrame): DataFrame = {
     val sepRe = java.util.regex.Pattern.quote(sep)

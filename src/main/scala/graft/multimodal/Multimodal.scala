@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column plumbing.
@@ -312,19 +312,18 @@ object Multimodal {
     * so the exchange is ~16 bytes/row regardless of media size —
     * the 100 TB shape.
     *
-    * `materializeSigs` (default on, the [[graft.dedup.Dedup.minHashLshPairs]]
+    * The signatures are materialized (the
+    * [[graft.dedup.Dedup.minHashLshPairs]] `materializeSigs`
     * discipline): the pair generator references the signature table
     * four times (bucket self-join sides + both verify joins), and
     * without materialization each reference re-decodes every payload —
     * the one expensive step. A localCheckpoint of the ~16-byte rows
-    * decodes once; keep it off only for tiny ad-hoc inputs. */
+    * decodes once. The audio and video tiers do the same. */
   def perceptualDupPairs(media: DataFrame, maxHamming: Int = 8,
-                         bucketCap: Int = 1000,
-                         materializeSigs: Boolean = true): DataFrame = {
-    val feats = perceptualFeatures(media).select("id", "sig")
-    val sigs = if (materializeSigs) feats.localCheckpoint() else feats
-    graft.dedup.Dedup.hamming64Pairs(sigs, maxHamming, bucketCap)
-  }
+                         bucketCap: Int = 1000): DataFrame =
+    graft.dedup.Dedup.hamming64Pairs(
+      perceptualFeatures(media).select("id", "sig").localCheckpoint(),
+      maxHamming, bucketCap)
 
   /** Deterministic synthetic image corpus for exercising the REAL
     * decode path at query time (the parquet fixtures carry text, not
@@ -412,7 +411,7 @@ object Multimodal {
   /** Deterministic frame sampling plan for video-like payloads: every
     * `stride`-th frame index up to `maxFrames` — pure metadata,
     * expressible without decoding. */
-  def frameSamplePlan(media: DataFrame, fps: Int = 30, stride: Int = 10,
+  def frameSamplePlan(media: DataFrame, stride: Int = 10,
                       maxFrames: Int = 8): DataFrame =
     media.withColumn("n_frames_est",
         greatest(lit(1), (col("n_bytes") / 1024).cast("int")))
@@ -557,12 +556,10 @@ object Multimodal {
     * signature → pigeonhole Hamming buckets → popcount verify. Only
     * (id, sig) shuffles; payloads stay in the scan stage. */
   def audioDupPairs(media: DataFrame, maxHamming: Int = 4,
-                    bucketCap: Int = 1000,
-                    materializeSigs: Boolean = true): DataFrame = {
-    val feats = audioPerceptualFeatures(media).select("id", "sig")
-    val sigs = if (materializeSigs) feats.localCheckpoint() else feats
-    graft.dedup.Dedup.hamming64Pairs(sigs, maxHamming, bucketCap)
-  }
+                    bucketCap: Int = 1000): DataFrame =
+    graft.dedup.Dedup.hamming64Pairs(
+      audioPerceptualFeatures(media).select("id", "sig").localCheckpoint(),
+      maxHamming, bucketCap)
 
   /** Deterministic synthetic WAV corpus (the audio
     * [[syntheticImageTable]]): per doc_id, one second of a seeded
@@ -794,12 +791,10 @@ object Multimodal {
     * changes and brightness shifts by design (distance 0), codec
     * noise within `maxHamming`. */
   def videoDupPairs(media: DataFrame, maxHamming: Int = 4,
-                    bucketCap: Int = 1000,
-                    materializeSigs: Boolean = true): DataFrame = {
-    val feats = videoSignatures(media).select("id", "sig")
-    val sigs = if (materializeSigs) feats.localCheckpoint() else feats
-    graft.dedup.Dedup.hamming64Pairs(sigs, maxHamming, bucketCap)
-  }
+                    bucketCap: Int = 1000): DataFrame =
+    graft.dedup.Dedup.hamming64Pairs(
+      videoSignatures(media).select("id", "sig").localCheckpoint(),
+      maxHamming, bucketCap)
 
   /** Deterministic synthetic GVID corpus: `framesPerScene` identical
     * frames per scene × 8 scenes; each scene is a seeded bilinear

@@ -550,7 +550,6 @@ object Profiler {
     val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"madOutliers: input is missing column(s): ${missing.mkString(", ")}")
-    val gs = groupCols.map(col)
     val vq = floor(col(valueCol).cast("double") * lit(scale.toDouble) + lit(0.5))
       .cast("long").cast("double")
     val in = df.filter(col(valueCol).isNotNull).withColumn("__vq", vq)

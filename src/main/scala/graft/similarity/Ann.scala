@@ -168,18 +168,18 @@ object Ann {
     // NUL separator (escaped, not a raw byte): a space would make
     // ("a b", "c") and ("a", "b c") collide into one match class for
     // multi-column keys
-    def mkey(df: DataFrame) =
+    val mkey =
       concat_ws("\u0000", matchCols.map(c => col(c).cast("string")): _*)
     val qRows: Array[(Long, Array[Float], String)] = nonNullKeys(queries)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        mkey(queries))
+        mkey)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getString(2)))
     val bc = spark.sparkContext.broadcast(qRows)
 
     val candidates = nonNullKeys(corpus)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        mkey(corpus)).rdd
+        mkey).rdd
       .mapPartitions { it =>
         val qs = bc.value
         val byKey: Map[String, Array[Int]] =

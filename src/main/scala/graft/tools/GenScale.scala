@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.GraftSession
 
@@ -42,8 +42,7 @@ object GenScale {
     require(args.length >= 2, "usage: GenScale <srcDir> <destDir> [copies]")
     val src = args(0); val dest = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-genscale")
+    val spark = GraftSession.local(GraftSession.envCores, "graft-genscale")
     import spark.implicits._
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -37,4 +37,22 @@ class DeclaredSpec extends AnyFunSuite {
       assert(oracleSql(a) == oracleSql(b), s"$a and $b must share one oracle")
     }
   }
+
+  test("each planted fixture's SQL twin returns its Scala builder's rows") {
+    // the twins read `documents` by name, as the DuckDB oracles do; run
+    // them over a view of their own so no other suite's view is touched
+    val spark = SparkT.spark
+    val view = "declared_spec_documents"
+    SparkT.table("documents").createOrReplaceTempView(view)
+    try {
+      assert(SparkEntry.plantedTwins.size == 5)
+      SparkEntry.plantedTwins.foreach { case (name, build, sql) =>
+        val built = build(spark, SparkT.sfDir)
+        val twin = spark.sql(sql.replaceAll("\\bdocuments\\b", view))
+        assert(twin.count() == built.count(), name)
+        assert(twin.exceptAll(built).isEmpty, s"$name: twin rows its builder lacks")
+        assert(built.exceptAll(twin).isEmpty, s"$name: builder rows its twin lacks")
+      }
+    } finally spark.catalog.dropTempView(view)
+  }
 }
