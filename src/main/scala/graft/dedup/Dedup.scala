@@ -18,12 +18,6 @@ import graft.functions.{hashfns, textfns, vecfns}
   */
 object Dedup {
 
-  /** Exact dedup: keep the lowest-id row per normalized-text group.
-    *
-    * Groups on the 16-byte md5 fingerprint, not the text itself, so the
-    * single shuffle carries ids + fingerprints only. One window over
-    * the fingerprint (vs groupBy + self-join: two shuffles).
-    */
   /** Null-text rows get a per-row group key: SQL semantics say
     * null != null, so two null-text documents are NOT duplicates of
     * each other (Window.partitionBy would group all null fingerprints
@@ -32,6 +26,12 @@ object Dedup {
   private def fpOrOwnId(fp: Column, id: Column): Column =
     struct(fp.isNull.as("n"), coalesce(fp.cast("string"), id.cast("string")).as("k"))
 
+  /** Exact dedup: keep the lowest-id row per normalized-text group.
+    *
+    * Groups on the 16-byte md5 fingerprint, not the text itself, so the
+    * single shuffle carries ids + fingerprints only. One window over
+    * the fingerprint (vs groupBy + self-join: two shuffles).
+    */
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val fp = fpOrOwnId(textfns.contentFingerprint(col(textCol)), col(idCol))
     val w = Window.partitionBy("__graft_fp").orderBy(col(idCol).asc)
@@ -185,6 +185,19 @@ object Dedup {
     when(text.isNotNull, struct(fp1.as("fp1"), fp2.as("fp2")))
   }
 
+  /** A text column's shingles, as (the hashes a MinHash signature and
+    * the set fingerprints read, the set the exact Jaccard verification
+    * compares): word `shingleN`-grams, or code-point n-grams under
+    * `charLevel`, whose hash set serves as both. */
+  private def shinglesOf(text: Column, shingleN: Int,
+                         charLevel: Boolean): (Column, Column) =
+    if (charLevel) {
+      val h = hashfns.charShingleHashes(text, shingleN)
+      (h, h)
+    } else
+      (hashfns.shingleHashes(text, shingleN),
+        hashfns.distinctWordShingles(text, shingleN))
+
   /** MinHash + LSH near-duplicate pairs.
     *
     * shingle → k-minhash signature → `bands` band keys → bucket
@@ -232,12 +245,7 @@ object Dedup {
     // (whitespace shingling sees CJK text as ONE word → zero shingles);
     // verification then compares hash SETS instead of string sets —
     // 64-bit collisions are negligible against a >= threshold test.
-    def shingleHashesOf(c: Column) =
-      if (charLevel) hashfns.charShingleHashes(c, shingleN)
-      else hashfns.shingleHashes(c, shingleN)
-    def shingleSetOf(c: Column): Column =
-      if (charLevel) hashfns.charShingleHashes(c, shingleN)
-      else hashfns.distinctWordShingles(c, shingleN)
+    val (shingleHashes, shingleSet) = shinglesOf(col(textCol), shingleN, charLevel)
     // signatures feed band keys AND both sides of the estimate
     // prefilter. Checkpoint blocks (unlike persist) are released by
     // the ContextCleaner once the returned plan is GC'd — no
@@ -250,8 +258,8 @@ object Dedup {
     // pass), 16 bytes/doc of extra shuffle.
     val sigCols = col(idCol).as("id") +:
       graft.expressions.GraftFunctions
-        .graft_minhash(shingleHashesOf(col(textCol)), k, seed).as("sig") +:
-      (if (spanning) setFingerprints(shingleHashesOf(col(textCol))) else Nil)
+        .graft_minhash(shingleHashes, k, seed).as("sig") +:
+      (if (spanning) setFingerprints(shingleHashes) else Nil)
     val sigPlan = df.select(sigCols: _*)
     val docs = if (materializeSigs) sigPlan.localCheckpoint(true) else sigPlan
     val explodedCols = (col("id") +:
@@ -275,7 +283,7 @@ object Dedup {
       .select("id_a", "id_b")
 
     val shingled = df.select(col(idCol).as("id"),
-      shingleSetOf(col(textCol)).as("sh"))
+      shingleSet.as("sh"))
     estimated
       .join(shingled.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(shingled.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -652,18 +660,13 @@ object Dedup {
   def buildSignatureIndex(reference: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 3, k: Int = 128, seed: Long = 42L,
                           charLevel: Boolean = false): DataFrame = {
-    def shingleHashesOf(c: Column) =
-      if (charLevel) hashfns.charShingleHashes(c, shingleN)
-      else hashfns.shingleHashes(c, shingleN)
-    def shingleSetOf(c: Column): Column =
-      if (charLevel) hashfns.charShingleHashes(c, shingleN)
-      else hashfns.distinctWordShingles(c, shingleN)
+    val (shingleHashes, shingleSet) = shinglesOf(col(textCol), shingleN, charLevel)
     val cols = Seq(
       col(idCol).as("ref_id"),
       graft.expressions.GraftFunctions.graft_minhash(
-        shingleHashesOf(col(textCol)), k, seed).as("sig")) ++
-      setFingerprints(shingleHashesOf(col(textCol))) ++
-      Seq(shingleSetOf(col(textCol)).as("sh"),
+        shingleHashes, k, seed).as("sig")) ++
+      setFingerprints(shingleHashes) ++
+      Seq(shingleSet.as("sh"),
         lit(s"$shingleN/$k/$seed/$charLevel").as("params"))
     reference.select(cols: _*)
   }
@@ -693,12 +696,7 @@ object Dedup {
         "with Dedup.buildSignatureIndex")
     val want = s"$shingleN/$k/$seed/$charLevel"
     val rowsPerBand = k / bands
-    def shingleHashesOf(c: Column) =
-      if (charLevel) hashfns.charShingleHashes(c, shingleN)
-      else hashfns.shingleHashes(c, shingleN)
-    def shingleSetOf(c: Column): Column =
-      if (charLevel) hashfns.charShingleHashes(c, shingleN)
-      else hashfns.distinctWordShingles(c, shingleN)
+    val (shingleHashes, shingleSet) = shinglesOf(col(textCol), shingleN, charLevel)
     // the guard must ride a column every downstream path CONSUMES:
     // a raise_error left on `params` itself gets column-pruned away
     // (no consumer ⇒ never evaluated ⇒ silent zero recall after all)
@@ -711,8 +709,8 @@ object Dedup {
     val sigC = {
       val cols = col(idCol).as("corpus_id") +:
         graft.expressions.GraftFunctions.graft_minhash(
-          shingleHashesOf(col(textCol)), k, seed).as("sig_corpus_id") +:
-        (if (spanning) setFingerprints(shingleHashesOf(col(textCol))) else Nil)
+          shingleHashes, k, seed).as("sig_corpus_id") +:
+        (if (spanning) setFingerprints(shingleHashes) else Nil)
       val plan = corpus.select(cols: _*)
       if (materializeSigs) plan.localCheckpoint(true) else plan
     }
@@ -759,7 +757,7 @@ object Dedup {
       .filter(col("est") >= math.max(0.0, threshold - 0.15))
       .select("corpus_id", "ref_id")
     val shC = corpus.select(col(idCol).as("corpus_id"),
-      shingleSetOf(col(textCol)).as("sh_corpus_id"))
+      shingleSet.as("sh_corpus_id"))
     val shR = checkedIndex.select(col("ref_id"), col("sh").as("sh_ref_id"))
     estimated
       .join(shC, "corpus_id")
@@ -833,6 +831,20 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
 
+  /** Per vector: its nearest centroid of `centers` and the squared
+    * distance to it — the k-means cell assignment of
+    * [[semanticDupPairs]] and [[embeddingOutliers]], through Ann's one
+    * nearest-centroid kernel. */
+  private def nearestCellOf(spark: org.apache.spark.sql.SparkSession,
+                            centers: Array[Array[Float]]) = {
+    val bc = spark.sparkContext.broadcast(centers)
+    udf { (v: Seq[Float]) =>
+      val a = v.toArray
+      val c = graft.similarity.Ann.nearestCell(a, 0, bc.value)
+      (c, graft.similarity.Ann.d2(a, 0, bc.value(c)))
+    }
+  }
+
   /** SemDeDup-style cluster-scoped semantic near-duplicate pairs:
     * k-means centroids (driver-side Lloyd's over a bounded uniform
     * sample — the Ann coarse-quantizer discipline) partition the
@@ -872,22 +884,8 @@ object Dedup {
       "id_a" -> df.schema(idCol).dataType,
       "id_b" -> df.schema(idCol).dataType,
       "cosine" -> DoubleType)
-    val centers = graft.similarity.Ann.lloydKMeans(train, nCells, iters = 15, seed)
-    val bc = spark.sparkContext.broadcast(centers)
-    val cellDist = udf { (v: Seq[Float]) =>
-      val cs = bc.value
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cs.length) {
-        var d = 0.0; var i = 0
-        val cv = cs(c)
-        // early exit: the winner's sum always completes, so (best, bestD)
-        // are bit-identical (the lloydKMeans d2 discipline)
-        while (i < v.length && d < bestD) { val t = v(i) - cv(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      (best, bestD)
-    }
+    val cellDist = nearestCellOf(spark,
+      graft.similarity.Ann.lloydKMeans(train, nCells, iters = 15, seed))
     val assigned = df
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).cast("array<float>").as("v"))
@@ -973,27 +971,13 @@ object Dedup {
         "cell" -> IntegerType, "dist" -> DoubleType,
         "z" -> DoubleType, "is_outlier" -> BooleanType)
     }
-    val centers = graft.similarity.Ann.lloydKMeans(train, nCells, iters = 15, seed)
-    val bc = spark.sparkContext.broadcast(centers)
-    val cellDist = udf { (v: Seq[Float]) =>
-      val cs = bc.value
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cs.length) {
-        var d = 0.0; var i = 0
-        val cv = cs(c)
-        // early exit: the winner's sum always completes, so (best, bestD)
-        // are bit-identical (the lloydKMeans d2 discipline)
-        while (i < v.length && d < bestD) { val t = v(i) - cv(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      (best, math.sqrt(bestD))
-    }
+    val cellDist = nearestCellOf(spark,
+      graft.similarity.Ann.lloydKMeans(train, nCells, iters = 15, seed))
     def assign(d: DataFrame) = d
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).cast("array<float>").as("v"))
       .withColumn("__cd", cellDist(col("v")))
-      .select(col("id"), col("__cd._1").as("cell"), col("__cd._2").as("dist"))
+      .select(col("id"), col("__cd._1").as("cell"), sqrt(col("__cd._2")).as("dist"))
     val assigned = assign(df)
     // moments from the TRAIN distribution too: corrupt rows in the
     // scored frame would otherwise inflate their cell's spread and
@@ -1109,8 +1093,9 @@ object Dedup {
       .select("__fp")
   }
 
-  /** Broadcast route (public so the verification gates can pin route
-    * equality — use [[paragraphDedup]] for the guarded entry point):
+  /** Broadcast route (visible to the specs and the stress gate, which
+    * pin route equality — use [[paragraphDedup]] for the guarded entry
+    * point):
     * the banned fingerprints fold into ONE broadcast row sorted
     * ascending, and each document is rewritten scan-side by a
     * higher-order filter probing that set with a binary search
@@ -1120,9 +1105,9 @@ object Dedup {
     * No join touches the corpus, no driver collect: the whole operator
     * is one lazy Catalyst plan. Caller owns the banned-set size
     * contract; the guarded entry point measures it. */
-  def paragraphDedupBroadcast(docs: DataFrame, idCol: String, textCol: String,
-                              sep: String = "\n\n",
-                              maxOccurrences: Long = 1): DataFrame =
+  private[graft] def paragraphDedupBroadcast(docs: DataFrame, textCol: String,
+                                             sep: String = "\n\n",
+                                             maxOccurrences: Long = 1): DataFrame =
     broadcastRouteFrom(docs, textCol, sep,
       bannedFingerprints(docs, textCol, sep, maxOccurrences)
         // one row, even when empty; sorted ASC for the binary-search probe
@@ -1130,7 +1115,7 @@ object Dedup {
 
   /** Shared rewrite of the broadcast route: `bannedList` is ONE row
     * holding the ascending-sorted banned digests as `__banned` —
-    * either the lazy distributed agg (public route, recomputes) or a
+    * either the lazy distributed agg (unguarded route, recomputes) or a
     * driver-materialized local relation (the guarded entry point,
     * which already paid the fingerprint job for its size pre-flight).
     * Identical plan shape either way: corpus ⨯ broadcast(1 row),
@@ -1153,7 +1138,7 @@ object Dedup {
   }
 
   /** Shuffle-join route, row-identical to [[paragraphDedupBroadcast]]
-    * (public for the same route-equality gates): when the banned set is
+    * (visible to the same route-equality gates): when the banned set is
     * too large to broadcast, each document's BANNED PARAGRAPH POSITIONS
     * are computed by a digest-only shuffle join — (id, position,
     * 16-byte md5) triples against the banned digests, never text —
@@ -1163,14 +1148,15 @@ object Dedup {
     * filter, probing positions instead of fingerprints. Per-document
     * arrays are bounded by the document's own paragraph count, so no
     * single row can outgrow a task. */
-  def paragraphDedupJoin(docs: DataFrame, idCol: String, textCol: String,
-                         sep: String = "\n\n",
-                         maxOccurrences: Long = 1): DataFrame =
+  private[graft] def paragraphDedupJoin(docs: DataFrame, idCol: String,
+                                        textCol: String,
+                                        sep: String = "\n\n",
+                                        maxOccurrences: Long = 1): DataFrame =
     joinRouteFrom(docs, idCol, textCol, sep,
       bannedFingerprints(docs, textCol, sep, maxOccurrences))
 
   /** Shared rewrite of the shuffle-join route; `banned` is the digest
-    * DataFrame (`__fp`), lazy (public route) or persisted (guarded
+    * DataFrame (`__fp`), lazy (unguarded route) or persisted (guarded
     * entry point — its pre-flight count already materialized it). */
   private def joinRouteFrom(docs: DataFrame, idCol: String,
                             textCol: String, sep: String,

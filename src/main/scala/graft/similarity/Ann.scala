@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,21 +9,41 @@ import graft.functions.vecfns
 
 /** Approximate-nearest-neighbor search over embedding columns.
   *
-  * Three tiers:
-  *   1. [[bruteForceTopK]] — exact, scalable: queries broadcast to every
-  *      partition, per-partition bounded heaps, then a final top-k over
-  *      parts × Q × k candidate rows. Never materializes or sorts the
-  *      N×Q score matrix.
-  *   2. [[bruteForceTopKSql]] — exact, declarative (window rank). Used
-  *      as the oracle-matched baseline; the full score set shuffles, so
-  *      it is the sf-small correctness twin of (1), not the scale path.
-  *   3. [[lshTopK]] — approximate: SRP-LSH buckets restrict candidates
-  *      before exact scoring (the 100 TB path when Q is large too).
+  * Tiers, exact to approximate:
+  *   - [[bruteForceTopK]] — exact cosine top-k, the scale path: queries
+  *     broadcast to every partition, per-partition bounded heaps, then a
+  *     final top-k over parts × Q × k candidate rows. Never materializes
+  *     or sorts the N×Q score matrix. [[filteredTopK]] is the same scan
+  *     restricted to corpus rows sharing the query's match key.
+  *   - [[bruteForceTopKSql]] — exact, declarative (window rank): the
+  *     oracle-matched twin of the quantized heap path; the full score
+  *     set shuffles, so it is the sf-small correctness twin, not the
+  *     scale path.
+  *   - [[lshTopK]] — SRP-LSH buckets restrict candidates before exact
+  *     scoring.
+  *   - [[ivfTopK]] — a k-means coarse quantizer restricts each query to
+  *     its `nProbe` nearest cells.
+  *   - [[pqTopK]] — product-quantized codes scored by asymmetric
+  *     distance (ADC), optionally exact-reranked.
+  *   - [[ivfPqTopK]] / [[ivfPqTopKIndexed]] — IVF cells plus residual PQ
+  *     codes, inline or from a persisted [[buildIvfPqIndex]].
+  *
+  * The exact, filtered, PQ and IVF-PQ tiers share ONE top-k scan
+  * ([[topKScan]]) and differ only in the per-row score they hand it;
+  * every nearest-centroid decision (IVF cells, probe lists, k-means,
+  * PQ sub-codes, the Dedup cells) goes through ONE kernel, [[d2]] via
+  * [[nearestCell]] / [[probeCells]], so a vector's cell is the same at
+  * encode time and at probe time. [[knnClassify]] and [[marginMine]]
+  * build on the exact path.
+  *
+  * Null vectors drop on both sides in the exact, filtered, IVF, PQ and
+  * IVF-PQ tiers and in [[marginMine]]: a null embedding neither scores
+  * nor is scored, and the other rows' results do not change.
   */
 object Ann {
 
-  /** One candidate's score — THE shared kernel of every exact heap
-    * path (bruteForceTopK + filteredTopK): the bit-identical-to-SQL
+  /** One candidate's score — THE shared kernel of the exact heap
+    * tiers (bruteForceTopK + filteredTopK): the bit-identical-to-SQL
     * quantized arithmetic and the float cosine live in exactly one
     * place, so the exact twins cannot drift apart. */
   private def scorePair(caller: String, vec: Array[Float], qv: Array[Long],
@@ -53,54 +73,63 @@ object Ann {
       else dot / (math.sqrt(sna) * math.sqrt(snb))
     }
 
-  /** Exact top-k neighbors per query by cosine.
+  /** A broadcast query of [[topKScan]]: id, vector, and match key
+    * (null for an unfiltered scan). */
+  private final case class Query(id: Long, vec: Array[Float], key: String)
+
+  /** One tier's scoring inside [[topKScan]], built once per partition
+    * from the broadcast queries. `load` reads one corpus row (its id in
+    * column 0, then the tier's own columns) and returns the indices of
+    * the queries that may see it, or null when none do; `score(qi)` is
+    * the loaded row's score against query `qi`, higher is nearer. */
+  private abstract class RowScorer {
+    def load(r: Row): Array[Int]
+    def score(qi: Int): Double
+  }
+
+  /** THE top-k scan of the exact, filtered, PQ and IVF-PQ tiers.
     *
-    * `queries` is collected to the driver (it must be the small side —
-    * the same contract as a broadcast join) and shipped once per
-    * executor via a broadcast variable; the corpus is streamed
-    * partition-by-partition through per-query bounded heaps. Output:
-    * (query_id, neighbor_id, score, rank).
-    */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     quantized: Boolean = false): DataFrame = {
-    val spark = corpus.sparkSession
-    // cast to array<float> like every other tier (pq/ivf/Column paths):
-    // an uncast array<double> input would ClassCastException per row in
-    // getSeq[Float] below
-    val qRows: Array[(Long, Array[Float])] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+    * The non-null query vectors (with `queryKey`) are collected to the
+    * driver — `queries` must be the small side, the same contract as a
+    * broadcast join — and shipped once per executor via a broadcast
+    * variable. `rows` streams partition-by-partition through per-query
+    * bounded heaps that keep the top `k` by (score desc, id asc); a row
+    * never scores against a query with its own id (every tier's
+    * self-exclusion rule). The final rank sorts ONLY the parts × Q × k
+    * surviving candidates, never the N×Q score matrix.
+    *
+    * Output: (query_id, neighbor_id, score, rank), rank ≤ k. */
+  private def topKScan(rows: DataFrame, queries: DataFrame, k: Int,
+      idCol: String, vecCol: String,
+      queryKey: Column = lit(null).cast("string"))(
+      scorerFor: Array[Query] => RowScorer): DataFrame = {
+    val spark = rows.sparkSession
+    // cast to array<float> like every tier's corpus side: an uncast
+    // array<double> input would ClassCastException in getSeq[Float]
+    val qRows: Array[Query] = queries
+      .filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
+        queryKey)
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .map(r => Query(r.getLong(0), r.getSeq[Float](1).toArray, r.getString(2)))
     val bc = spark.sparkContext.broadcast(qRows)
 
-    val candidates = corpus
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>")).rdd
-      .mapPartitions { it =>
-        val qs = bc.value
-        // quantized mode pre-derives each query's integer vector and
-        // self-dot once per partition
-        val qQuant: Array[Array[Long]] =
-          if (quantized) qs.map(q => quantize1000(q._2)) else null
-        val qNb: Array[Double] =
-          if (quantized) qQuant.map(q => longDot(q, q).toDouble) else null
-        // per-query bounded worst-first ordering: (score asc, id desc)
-        // so the head is the entry to evict
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
-        it.foreach { r =>
+    val candidates = rows.rdd.mapPartitions { it =>
+      val qs = bc.value
+      val scorer = scorerFor(qs)
+      // per-query bounded worst-first ordering: (score asc, id desc)
+      // so the head is the entry to evict
+      val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+        Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
+      it.foreach { r =>
+        val qIdx = scorer.load(r)
+        if (qIdx != null) {
           val id = r.getLong(0)
-          val vec = r.getSeq[Float](1).toArray
-          val qv: Array[Long] = if (quantized) quantize1000(vec) else null
-          val na: Double = if (quantized) longDot(qv, qv).toDouble else 0.0
-          var qi = 0
-          while (qi < qs.length) {
-            // exclude self-matches — every other tier (SQL/LSH/IVF) does,
-            // and the exact twins must return identical neighbor sets
-            if (qs(qi)._1 != id) {
-              val s = scorePair("bruteForceTopK", vec, qv, na, qs(qi)._2,
-                if (quantized) qQuant(qi) else null,
-                if (quantized) qNb(qi) else 0.0, quantized)
+          var j = 0
+          while (j < qIdx.length) {
+            val qi = qIdx(j)
+            if (qs(qi).id != id) {
+              val s = scorer.score(qi)
               val h = heaps(qi)
               if (h.size < k) h.enqueue((s, id))
               else {
@@ -108,25 +137,38 @@ object Ann {
                 if (s > ws || (s == ws && id < wid)) { h.dequeue(); h.enqueue((s, id)) }
               }
             }
-            qi += 1
+            j += 1
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (s, id) => Row(qs(qi)._1, id, s) }
-        }
       }
+      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+        h.iterator.map { case (s, id) => Row(qs(qi).id, id, s) }
+      }
+    }
     val schema = StructType(Seq(
       StructField("query_id", LongType, nullable = false),
       StructField("neighbor_id", LongType, nullable = false),
       StructField("score", DoubleType, nullable = false)))
-    val candDf = spark.createDataFrame(candidates, schema)
-    // the final rank sorts ONLY the parts × Q × k surviving candidates
-    // — never the N×Q score matrix
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("neighbor_id").asc)
-    candDf.withColumn("rank", row_number().over(w))
+    spark.createDataFrame(candidates, schema)
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
+
+  /** Exact top-k neighbors per query by cosine.
+    *
+    * `queries` is collected to the driver (it must be the small side —
+    * the same contract as a broadcast join) and shipped once per
+    * executor via a broadcast variable; the corpus is streamed
+    * partition-by-partition through per-query bounded heaps
+    * ([[topKScan]]). Output: (query_id, neighbor_id, score, rank).
+    */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+                     idCol: String = "vec_id", vecCol: String = "embedding",
+                     quantized: Boolean = false): DataFrame =
+    exactTopK("bruteForceTopK", corpus, queries, k, Nil, idCol, vecCol,
+      quantized)
 
   /** FILTERED exact top-k: each query searches only corpus rows whose
     * `matchCols` values equal its own — the metadata-constrained
@@ -151,82 +193,64 @@ object Ann {
                    quantized: Boolean = false): DataFrame = {
     require(matchCols.nonEmpty,
       "filteredTopK: matchCols must be non-empty (use bruteForceTopK for unfiltered)")
-    val spark = corpus.sparkSession
+    exactTopK("filteredTopK", corpus, queries, k, matchCols, idCol, vecCol,
+      quantized)
+  }
+
+  /** The exact tiers over [[topKScan]]: [[bruteForceTopK]] is the
+    * unfiltered case (no `matchCols`, every query sees every row, no
+    * per-row key hashing) of [[filteredTopK]]'s match-key grouping. */
+  private def exactTopK(caller: String, corpus: DataFrame,
+      queries: DataFrame, k: Int, matchCols: Seq[String],
+      idCol: String, vecCol: String, quantized: Boolean): DataFrame = {
+    val keyed = matchCols.nonEmpty
     // SQL equality semantics: a NULL match value matches NOTHING (the
     // oracle's join predicate never matches NULL) — and concat_ws
     // SKIPS null arguments, so without this filter (NULL,'mit') and
     // ('mit',NULL) would collide into one key despite the separator.
-    // Null-keyed rows drop on both sides.
-    // null EMBEDDINGS drop too (matching trainSample's guard): a null
-    // vector can't score, and letting one through would NPE deep in
-    // getSeq(...).toArray instead of behaving like the oracle's join
-    // (which never matches a NULL vector row either way — cosine of
-    // NULL is NULL and survives no rank filter)
-    def nonNullKeys(df: DataFrame) =
-      df.filter(matchCols.map(col(_).isNotNull).reduce(_ && _) &&
-        col(vecCol).isNotNull)
+    // Null-keyed rows drop on both sides, and so do null vectors.
+    def nonNull(df: DataFrame) =
+      df.filter(matchCols.map(col(_).isNotNull).foldLeft(col(vecCol).isNotNull)(_ && _))
     // NUL separator (escaped, not a raw byte): a space would make
     // ("a b", "c") and ("a", "b c") collide into one match class for
     // multi-column keys
     val mkey =
       concat_ws("\u0000", matchCols.map(c => col(c).cast("string")): _*)
-    val qRows: Array[(Long, Array[Float], String)] = nonNullKeys(queries)
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        mkey)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getString(2)))
-    val bc = spark.sparkContext.broadcast(qRows)
-
-    val candidates = nonNullKeys(corpus)
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        mkey).rdd
-      .mapPartitions { it =>
-        val qs = bc.value
-        val byKey: Map[String, Array[Int]] =
-          qs.indices.toArray.groupBy(i => qs(i)._3)
-        val qQuant: Array[Array[Long]] =
-          if (quantized) qs.map(q => quantize1000(q._2)) else null
-        val qNb: Array[Double] =
-          if (quantized) qQuant.map(q => longDot(q, q).toDouble) else null
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
-        it.foreach { r =>
-          byKey.get(r.getString(2)).foreach { qIdx =>
-            val id = r.getLong(0)
-            val vec = r.getSeq[Float](1).toArray
-            val qv: Array[Long] = if (quantized) quantize1000(vec) else null
-            val na: Double = if (quantized) longDot(qv, qv).toDouble else 0.0
-            var j = 0
-            while (j < qIdx.length) {
-              val qi = qIdx(j)
-              if (qs(qi)._1 != id) {
-                val s = scorePair("filteredTopK", vec, qv, na, qs(qi)._2,
-                  if (quantized) qQuant(qi) else null,
-                  if (quantized) qNb(qi) else 0.0, quantized)
-                val h = heaps(qi)
-                if (h.size < k) h.enqueue((s, id))
-                else {
-                  val (ws, wid) = h.head
-                  if (s > ws || (s == ws && id < wid)) { h.dequeue(); h.enqueue((s, id)) }
-                }
-              }
-              j += 1
+    val rows = nonNull(corpus).select(
+      Seq(col(idCol).cast("long"), col(vecCol).cast("array<float>")) ++
+        (if (keyed) Seq(mkey) else Nil): _*)
+    topKScan(rows, nonNull(queries), k, idCol, vecCol,
+      if (keyed) mkey else lit(null).cast("string")) { qs =>
+      val all = qs.indices.toArray
+      val byKey: Map[String, Array[Int]] =
+        if (keyed) all.groupBy(qs(_).key) else Map.empty
+      // quantized mode pre-derives each query's integer vector and
+      // self-dot once per partition
+      val qQuant: Array[Array[Long]] =
+        if (quantized) qs.map(q => quantize1000(q.vec)) else null
+      val qNb: Array[Double] =
+        if (quantized) qQuant.map(q => longDot(q, q).toDouble) else null
+      new RowScorer {
+        private var vec: Array[Float] = _
+        private var qv: Array[Long] = _
+        private var na = 0.0
+        def load(r: Row): Array[Int] = {
+          val qIdx = if (keyed) byKey.getOrElse(r.getString(2), null) else all
+          if (qIdx != null) {
+            vec = r.getSeq[Float](1).toArray
+            if (quantized) {
+              qv = quantize1000(vec)
+              na = longDot(qv, qv).toDouble
             }
           }
+          qIdx
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (s, id) => Row(qs(qi)._1, id, s) }
-        }
+        def score(qi: Int): Double =
+          scorePair(caller, vec, qv, na, qs(qi).vec,
+            if (quantized) qQuant(qi) else null,
+            if (quantized) qNb(qi) else 0.0, quantized)
       }
-    val schema = StructType(Seq(
-      StructField("query_id", LongType, nullable = false),
-      StructField("neighbor_id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false)))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    spark.createDataFrame(candidates, schema)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    }
   }
 
   /** k-NN LABEL PROPAGATION: predict a label for every query vector
@@ -424,18 +448,20 @@ object Ann {
     val candDf = spark.createDataFrame(candidates, schema)
 
     // global forward top-k (merges the per-partition heaps), then the
-    // forward sums — everything below operates on ≤ parts·Q·k rows
-    val wFwd = Window.partitionBy("query_id")
-      .orderBy(col("cosq").desc, col("match_id").asc)
-    val topk = candDf.withColumn("__r", row_number().over(wFwd))
+    // forward sums as a window over the same query_id partition — no
+    // join, so no build side for AQE to pick; everything below operates
+    // on ≤ parts·Q·k rows
+    val byQuery = Window.partitionBy("query_id")
+    val topk = candDf
+      .withColumn("__r", row_number().over(
+        byQuery.orderBy(col("cosq").desc, col("match_id").asc)))
       .filter(col("__r") <= k)
-    val fwd = topk.groupBy("query_id")
-      .agg(sum(col("cosq")).as("fwd_sum"), count(lit(1)).as("fwd_cnt"))
+      .withColumn("fwd_sum", sum(col("cosq")).over(byQuery))
+      .withColumn("fwd_cnt", count(lit(1)).over(byQuery))
     val num = lit(2L) * col("fwd_cnt") * col("bwd_cnt") * col("cosq")
     val den = col("bwd_cnt") * col("fwd_sum") + col("fwd_cnt") * col("bwd_sum")
-    val wBest = Window.partitionBy("query_id")
-      .orderBy(col("margin").desc, col("match_id").asc)
-    topk.join(fwd, Seq("query_id"))
+    val wBest = byQuery.orderBy(col("margin").desc, col("match_id").asc)
+    topk
       .filter(den > 0L)
       .withColumn("margin", num.cast("double") / den.cast("double"))
       .withColumn("__b", row_number().over(wBest))
@@ -502,34 +528,14 @@ object Ann {
     val centers = lloydKMeans(train, nCells, iters = 15, seed)
     val bc = spark.sparkContext.broadcast(centers)
 
-    val cellOf = udf { (v: Seq[Float]) =>
-      val cs = bc.value
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cs.length) {
-        var d = 0.0; var i = 0
-        val cv = cs(c)
-        // early exit: non-negative terms, so a partial sum at bestD can
-        // never win — the winner's sum always runs to completion, so the
-        // chosen cell is bit-identical (the lloydKMeans d2 discipline)
-        while (i < v.length && d < bestD) { val t = v(i) - cv(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
-    val probesOf = udf { (v: Seq[Float]) =>
-      val cs = bc.value
-      cs.indices.map { c =>
-        var d = 0.0; var i = 0
-        val cv = cs(c)
-        while (i < v.length) { val t = v(i) - cv(i); d += t * t; i += 1 }
-        (d, c)
-      }.sortBy(_._1).take(nProbe).map(_._2)
-    }
+    val cellOf = udf((v: Seq[Float]) => nearestCell(v.toArray, 0, bc.value))
+    val probesOf = udf((v: Seq[Float]) => probeCells(v.toArray, bc.value, nProbe))
 
-    val cells = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    val cells = corpus.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("cell", cellOf(col("cv")))
-    val probed = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val probed = queries.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("cell", explode(probesOf(col("qv"))))
     val cand = cells.join(broadcast(probed), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
@@ -580,6 +586,45 @@ object Ann {
       .collect().map(_.getSeq[Float](0).toArray)
   }
 
+  /** Squared L2 distance between `a(off until off + b.length)` and `b`,
+    * in double arithmetic — THE distance of every nearest-centroid
+    * decision (k-means, IVF cells and probes, PQ sub-codes, the Dedup
+    * cells). Bounded: it stops accumulating once the partial sum
+    * reaches `bound`. EXACT for argmin/under-bound tests — terms are
+    * non-negative, so a partial ≥ bound implies the total is too, and
+    * a completed sum is the full IEEE-identical value. Halves the
+    * assignment work at k=16 without moving a single centroid bit. */
+  private[graft] def d2(a: Array[Float], off: Int, b: Array[Float],
+                        bound: Double = Double.MaxValue): Double = {
+    var s = 0.0; var i = 0
+    while (i < b.length && s < bound) {
+      val t = a(off + i).toDouble - b(i); s += t * t; i += 1
+    }
+    s
+  }
+
+  /** Index of the centroid of `cs` nearest to `v(off until off + dim)`
+    * by [[d2]], ties to the lowest index. The winner's sum always runs
+    * to completion, so the choice is the same as with unbounded sums. */
+  private[graft] def nearestCell(v: Array[Float], off: Int,
+                                 cs: Array[Array[Float]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cs.length) {
+      val d = d2(v, off, cs(c), bestD)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The `n` centroids of `cs` nearest to `v` by [[d2]], nearest first,
+    * ties to the lower index — an IVF query's probe list. */
+  private def probeCells(v: Array[Float], cs: Array[Array[Float]],
+                         n: Int): Array[Int] = {
+    val ds = cs.map(d2(v, 0, _))
+    cs.indices.sortBy(ds(_)).take(n).toArray
+  }
+
   /** Deterministic k-means++ seeding + Lloyd's iterations, local.
     * Empty clusters keep their previous center. Double accumulation,
     * float centroids (matching the stored embedding precision). */
@@ -588,25 +633,12 @@ object Ann {
     require(points.nonEmpty, "ivf: empty training sample")
     val dim = points(0).length
     val rnd = new java.util.Random(seed)
-    // bounded distance: stops accumulating once the partial sum
-    // reaches `bound`. EXACT for argmin/under-bound tests — terms are
-    // non-negative, so a partial ≥ bound implies the total is too, and
-    // a completed sum is the full IEEE-identical value. Halves the
-    // assignment work at k=16 without moving a single centroid bit.
-    def d2(a: Array[Float], b: Array[Float],
-           bound: Double = Double.MaxValue): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim && s < bound) {
-        val t = a(i).toDouble - b(i); s += t * t; i += 1
-      }
-      s
-    }
     // k-means++: first center uniform, then proportional to d² to the
     // nearest chosen center
     val kk = math.min(k, points.length)
     val centers = Array.ofDim[Array[Float]](kk)
     centers(0) = points(rnd.nextInt(points.length)).clone()
-    val minD2 = points.map(p => d2(p, centers(0)))
+    val minD2 = points.map(d2(_, 0, centers(0)))
     var c = 1
     while (c < kk) {
       val total = minD2.sum
@@ -619,7 +651,7 @@ object Ann {
       centers(c) = points(pick).clone()
       var i = 0
       while (i < points.length) {
-        val d = d2(points(i), centers(c), minD2(i))
+        val d = d2(points(i), 0, centers(c), minD2(i))
         if (d < minD2(i)) minD2(i) = d
         i += 1
       }
@@ -633,12 +665,7 @@ object Ann {
       var i = 0
       while (i < points.length) {
         val p = points(i)
-        var best = 0; var bestD = Double.MaxValue; var ci = 0
-        while (ci < kk) {
-          val d = d2(p, centers(ci), bestD)
-          if (d < bestD) { bestD = d; best = ci }
-          ci += 1
-        }
+        val best = nearestCell(p, 0, centers)
         counts(best) += 1
         val s = sums(best)
         var j = 0
@@ -661,34 +688,76 @@ object Ann {
     centers
   }
 
-  /** Final ranking shared by the PQ tiers — either rank the ADC
-    * candidates directly (`rerank` = 0), or exact-rerank refinement
-    * (the IVFADC+R shape): keep the top-`rerank` ADC shortlist per
-    * query, re-score it EXACTLY (squared L2 against the raw vectors)
-    * and re-rank. Recall then depends on shortlist MEMBERSHIP (did the
-    * true neighbor survive into the top-`rerank` by code distance —
-    * much weaker than needing codes to order the top-k correctly),
-    * not on code granularity. Cost at scale: the ≤ `rerank`·Q-row
-    * shortlist broadcasts into ONE extra column-pruned (id, vector)
-    * corpus scan — the raw vectors stay in storage, exactly the
-    * IVFADC+R storage discipline; nothing quadratic, no corpus
-    * shuffle. After a rerank, `approx_dist` holds the EXACT squared
-    * L2 of the surviving candidates (the column name is the stable
-    * schema contract across the ANN tiers; clamped at 0 against
-    * float cancellation on near-identical vectors). */
+  /** ADC lookup table of `v` (a query, or a query's residual in an
+    * IVF cell): `lut(j*ksub + c) = ||v_sub_j − cb(j)(c)||²`, m·ksub
+    * partial distances built once per partition and amortized over
+    * every row in it. Float differences and products, double sums:
+    * the table's sums ARE the `approx_dist` output, so this arithmetic
+    * is pinned by the recorded results. */
+  private def adcLut(v: Array[Float], cb: Array[Array[Array[Float]]],
+                     ksub: Int): Array[Double] = {
+    val m = cb.length; val sub = cb(0)(0).length
+    val lut = new Array[Double](m * ksub)
+    var j = 0
+    while (j < m) {
+      val cbj = cb(j)
+      var c = 0
+      while (c < cbj.length) {
+        var d = 0.0; var i = 0
+        val e = cbj(c)
+        while (i < sub) { val t = v(j * sub + i) - e(i); d += t * t; i += 1 }
+        lut(j * ksub + c) = d
+        c += 1
+      }
+      j += 1
+    }
+    lut
+  }
+
+  /** Asymmetric distance of one code row: the sum of its m LUT entries. */
+  private def adcDist(lut: Array[Double], codes: Array[Byte], ksub: Int): Double = {
+    var d = 0.0; var j = 0
+    while (j < codes.length) { d += lut(j * ksub + (codes(j) & 0xFF)); j += 1 }
+    d
+  }
+
+  /** PQ sub-codes of `v` (a vector, or its IVF residual): per subspace
+    * j, the nearest of the `cb(j)` sub-centroids ([[nearestCell]]). */
+  private def subCodes(v: Array[Float], cb: Array[Array[Array[Float]]]): Array[Byte] = {
+    val sub = cb(0)(0).length
+    Array.tabulate(cb.length)(j => nearestCell(v, j * sub, cb(j)).toByte)
+  }
+
+  /** `v − c`, in float: the quantity IVF-PQ encodes and probes. */
+  private def residual(v: Array[Float], c: Array[Float]): Array[Float] =
+    Array.tabulate(v.length)(i => v(i) - c(i))
+
+  /** Final ranking shared by the PQ tiers, over a [[topKScan]] of
+    * negated ADC distances (IEEE negation is exact, so `approx_dist`
+    * is the ADC sum bit for bit and (score desc, id asc) is
+    * (dist asc, id asc)). Either rank the ADC candidates directly
+    * (`rerank` = 0), or exact-rerank refinement (the IVFADC+R shape):
+    * the scan kept the top-`rerank` ADC shortlist per query; re-score
+    * it EXACTLY (squared L2 against the raw vectors) and re-rank.
+    * Recall then depends on shortlist MEMBERSHIP (did the true
+    * neighbor survive into the top-`rerank` by code distance — much
+    * weaker than needing codes to order the top-k correctly), not on
+    * code granularity. Cost at scale: the ≤ `rerank`·Q-row shortlist
+    * broadcasts into ONE extra column-pruned (id, vector) corpus scan
+    * — the raw vectors stay in storage, exactly the IVFADC+R storage
+    * discipline; nothing quadratic, no corpus shuffle. After a rerank,
+    * `approx_dist` holds the EXACT squared L2 of the surviving
+    * candidates (the column name is the stable schema contract across
+    * the ANN tiers; clamped at 0 against float cancellation on
+    * near-identical vectors). */
   private def rankPqCandidates(corpus: DataFrame, queries: DataFrame,
-      candDf: DataFrame, k: Int, rerank: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("approx_dist").asc, col("neighbor_id").asc)
+      scanned: DataFrame, k: Int, rerank: Int,
+      idCol: String, vecCol: String): DataFrame =
     if (rerank <= 0) {
-      candDf.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "approx_dist")
+      scanned.select(col("query_id"), col("rank"), col("neighbor_id"),
+        (-col("score")).as("approx_dist"))
     } else {
-      val short = candDf.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
+      val short = scanned.select("query_id", "neighbor_id")
       val qv = queries.select(col(idCol).cast("long").as("query_id"),
         col(vecCol).cast("array<float>").as("__qv"))
       val exact = corpus
@@ -700,11 +769,12 @@ object Ann {
           GraftFunctions.graft_dot(col("__nv"), col("__nv"))
             - lit(2.0) * GraftFunctions.graft_dot(col("__nv"), col("__qv"))
             + GraftFunctions.graft_dot(col("__qv"), col("__qv"))))
+      val w = Window.partitionBy("query_id")
+        .orderBy(col("approx_dist").asc, col("neighbor_id").asc)
       exact.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "approx_dist")
     }
-  }
 
   /** Product-quantization top-k by asymmetric distance (ADC).
     *
@@ -716,7 +786,7 @@ object Ann {
     * encoding is one scan; search builds per-query lookup tables ONCE
     * per partition (the ADC trick: m·ksub partial distances per query,
     * amortized over every row in the partition) and streams codes
-    * through bounded per-query heaps exactly like [[bruteForceTopK]].
+    * through the bounded per-query heaps of [[topKScan]].
     *
     * Output: (query_id, rank, neighbor_id, approx_dist) — approximate
     * squared L2, ascending. Identical vectors share codes, so an exact
@@ -754,90 +824,86 @@ object Ann {
       lloydKMeans(subVecs, ksub, iters = 15, seed + j)
     }
     val bcCb = spark.sparkContext.broadcast(codebooks)
+    val encode = udf((v: Seq[Float]) => subCodes(v.toArray, bcCb.value))
+    val encoded = corpus.filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"),
+        encode(col(vecCol).cast("array<float>")).as("codes"))
+    val scanned = topKScan(encoded, queries, shortK, idCol, vecCol) { qs =>
+      val cb = bcCb.value
+      val luts = qs.map(q => adcLut(q.vec, cb, ksub))
+      val all = qs.indices.toArray
+      new RowScorer {
+        private var codes: Array[Byte] = _
+        def load(r: Row): Array[Int] = {
+          codes = r.getAs[Array[Byte]](1)
+          all
+        }
+        def score(qi: Int): Double = -adcDist(luts(qi), codes, ksub)
+      }
+    }
+    rankPqCandidates(corpus, queries, scanned, k, rerank, idCol, vecCol)
+  }
 
+  /** Trained IVF-PQ model: coarse centroids + per-subspace RESIDUAL
+    * codebooks. Deterministic for (corpus, params, seed) — both the
+    * inline [[ivfPqTopK]] and the persisted-index pair
+    * [[buildIvfPqIndex]]/[[ivfPqTopKIndexed]] go through this one
+    * trainer and one encoder, so indexed ≡ fresh by construction. */
+  private[graft] final case class IvfPqModel(
+      centers: Array[Array[Float]],
+      codebooks: Array[Array[Array[Float]]]) {
+    val dim: Int = centers(0).length
+  }
+
+  private def trainIvfPqModel(corpus: DataFrame, nCells: Int, m: Int,
+      ksub: Int, seed: Long, trainFraction: Double, maxTrainRows: Int,
+      vecCol: String): IvfPqModel = {
+    val train = trainSample(corpus, vecCol, trainFraction, maxTrainRows, seed)
+    require(train.nonEmpty, "ivfpq: empty training sample")
+    require(ksub >= 2 && ksub <= 256,
+      s"ivfpq: ksub=$ksub — byte codes cap sub-centroids at 256 (wrap would " +
+        "silently score against the wrong LUT entries)")
+    val dim = train(0).length
+    require(dim % m == 0, s"ivfpq: dim $dim not divisible by m=$m")
+    val sub = dim / m
+    val centers = lloydKMeans(train, nCells, iters = 15, seed)
+    // sub-codebooks over training RESIDUALS (the quantities encoded)
+    val residuals = train.map(v => residual(v, centers(nearestCell(v, 0, centers))))
+    val codebooks: Array[Array[Array[Float]]] = Array.tabulate(m) { j =>
+      val subVecs = residuals.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
+      lloydKMeans(subVecs, ksub, iters = 15, seed + j)
+    }
+    IvfPqModel(centers, codebooks)
+  }
+
+  /** The model's two broadcast handles — created ONCE per operator
+    * call and passed to every stage that needs them (encode + search
+    * in the inline path), not re-broadcast per stage: broadcasts live
+    * until context shutdown, so duplicates pin doubled driver/
+    * BlockManager bookkeeping for the whole session. */
+  private def broadcastModel(spark: SparkSession, model: IvfPqModel):
+      (org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
+       org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]) =
+    (spark.sparkContext.broadcast(model.centers),
+      spark.sparkContext.broadcast(model.codebooks))
+
+  /** One scan: cell assignment + residual PQ encoding together →
+    * (id, cell, codes). Null vectors drop. */
+  private def ivfPqEncode(corpus: DataFrame,
+      bc: (org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
+           org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]),
+      idCol: String, vecCol: String): DataFrame = {
+    val (bcCenters, bcCb) = bc
     val encode = udf { (v: Seq[Float]) =>
-      val cb = bcCb.value
-      val codes = new Array[Byte](m)
-      var j = 0
-      while (j < m) {
-        val cbj = cb(j)
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < cbj.length) {
-          var d = 0.0; var i = 0
-          val cv = cbj(c)
-          while (i < sub && d < bestD) { val t = v(j * sub + i) - cv(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        codes(j) = best.toByte
-        j += 1
-      }
-      codes
+      val cs = bcCenters.value
+      val vv = v.toArray
+      val cell = nearestCell(vv, 0, cs)
+      (cell, subCodes(residual(vv, cs(cell)), bcCb.value))
     }
-
-    val qRows: Array[(Long, Array[Float])] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val bcQ = spark.sparkContext.broadcast(qRows)
-
-    val encoded = corpus.select(col(idCol).cast("long").as("id"),
-      encode(col(vecCol).cast("array<float>")).as("codes"))
-    val candidates = encoded.rdd.mapPartitions { it =>
-      val qs = bcQ.value
-      val cb = bcCb.value
-      // ADC lookup tables: lut(q)(j*ksub + c) = ||q_sub_j - cb(j)(c)||²
-      val luts = qs.map { case (_, qv) =>
-        val lut = new Array[Double](m * ksub)
-        var j = 0
-        while (j < m) {
-          val cbj = cb(j)
-          var c = 0
-          while (c < cbj.length) {
-            var d = 0.0; var i = 0
-            val cv = cbj(c)
-            while (i < sub) { val t = qv(j * sub + i) - cv(i); d += t * t; i += 1 }
-            lut(j * ksub + c) = d
-            c += 1
-          }
-          j += 1
-        }
-        lut
-      }
-      // worst-first heaps: head = (largest dist, largest id) to evict —
-      // natural (d, id) max-ordering, so distance ties evict the
-      // largest id, keeping bottom-k by (dist asc, id asc)
-      val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by[(Double, Long), (Double, Long)](identity)))
-      it.foreach { r =>
-        val id = r.getLong(0)
-        val codes = r.getAs[Array[Byte]](1)
-        var qi = 0
-        while (qi < qs.length) {
-          if (qs(qi)._1 != id) {
-            val lut = luts(qi)
-            var d = 0.0; var j = 0
-            while (j < m) { d += lut(j * ksub + (codes(j) & 0xFF)); j += 1 }
-            val h = heaps(qi)
-            if (h.size < shortK) h.enqueue((d, id))
-            else {
-              val (wd, wid) = h.head
-              if (d < wd || (d == wd && id < wid)) { h.dequeue(); h.enqueue((d, id)) }
-            }
-          }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (d, id) => Row(qs(qi)._1, id, d) }
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("query_id", LongType, nullable = false),
-      StructField("neighbor_id", LongType, nullable = false),
-      StructField("approx_dist", DoubleType, nullable = false)))
-    rankPqCandidates(corpus, queries,
-      spark.createDataFrame(candidates, schema), k, rerank, idCol, vecCol)
+    corpus.filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"),
+        encode(col(vecCol).cast("array<float>")).as("cc"))
+      .select(col("id"), col("cc._1").as("cell"), col("cc._2").as("codes"))
   }
 
   /** IVF-PQ top-k: the combined billion-scale tier — IVF's candidate
@@ -858,118 +924,12 @@ object Ann {
     *
     * Output: (query_id, rank, neighbor_id, approx_dist) — approximate
     * squared L2 ascending. An exact duplicate of the query lands in
-    * the query's nearest cell with the query's own residual codes, so
-    * it attains the minimal ADC distance and ranks first — recall on
-    * identical twins is ≥ the IVF-alone tier at equal probe budget
-    * (pinned by AnnSpec).
+    * the query's nearest cell with the query's own residual codes
+    * (encode and probe pick cells with the same [[nearestCell]] /
+    * [[probeCells]] kernel), so it attains the minimal ADC distance
+    * and ranks first — recall on identical twins is ≥ the IVF-alone
+    * tier at equal probe budget (pinned by AnnSpec).
     */
-  /** Trained IVF-PQ model: coarse centroids + per-subspace RESIDUAL
-    * codebooks. Deterministic for (corpus, params, seed) — both the
-    * inline [[ivfPqTopK]] and the persisted-index pair
-    * [[buildIvfPqIndex]]/[[ivfPqTopKIndexed]] go through this one
-    * trainer and one encoder, so indexed ≡ fresh by construction. */
-  private[graft] final case class IvfPqModel(
-      centers: Array[Array[Float]],
-      codebooks: Array[Array[Array[Float]]],
-      m: Int, ksub: Int) {
-    val dim: Int = centers(0).length
-    val sub: Int = dim / m
-  }
-
-  private def trainIvfPqModel(corpus: DataFrame, nCells: Int, m: Int,
-      ksub: Int, seed: Long, trainFraction: Double, maxTrainRows: Int,
-      vecCol: String): IvfPqModel = {
-    val train = trainSample(corpus, vecCol, trainFraction, maxTrainRows, seed)
-    require(train.nonEmpty, "ivfpq: empty training sample")
-    require(ksub >= 2 && ksub <= 256,
-      s"ivfpq: ksub=$ksub — byte codes cap sub-centroids at 256 (wrap would " +
-        "silently score against the wrong LUT entries)")
-    val dim = train(0).length
-    require(dim % m == 0, s"ivfpq: dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val centers = lloydKMeans(train, nCells, iters = 15, seed)
-    def nearestCell(v: Array[Float]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < centers.length) {
-        var d = 0.0; var i = 0
-        val cv = centers(c)
-        while (i < dim && d < bestD) { val t = v(i).toDouble - cv(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
-    def residual(v: Array[Float], cell: Int): Array[Float] = {
-      val cv = centers(cell)
-      val r = new Array[Float](dim)
-      var i = 0
-      while (i < dim) { r(i) = v(i) - cv(i); i += 1 }
-      r
-    }
-    // sub-codebooks over training RESIDUALS (the quantities encoded)
-    val residuals = train.map(v => residual(v, nearestCell(v)))
-    val codebooks: Array[Array[Array[Float]]] = Array.tabulate(m) { j =>
-      val subVecs = residuals.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      lloydKMeans(subVecs, ksub, iters = 15, seed + j)
-    }
-    IvfPqModel(centers, codebooks, m, ksub)
-  }
-
-  /** The model's two broadcast handles — created ONCE per operator
-    * call and passed to every stage that needs them (encode + search
-    * in the inline path), not re-broadcast per stage: broadcasts live
-    * until context shutdown, so duplicates pin doubled driver/
-    * BlockManager bookkeeping for the whole session. */
-  private def broadcastModel(spark: SparkSession, model: IvfPqModel):
-      (org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-       org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]) =
-    (spark.sparkContext.broadcast(model.centers),
-      spark.sparkContext.broadcast(model.codebooks))
-
-  /** One scan: cell assignment + residual PQ encoding together →
-    * (id, cell, codes). */
-  private def ivfPqEncode(corpus: DataFrame, model: IvfPqModel,
-      bc: (org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-           org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]),
-      idCol: String, vecCol: String): DataFrame = {
-    val m = model.m; val sub = model.sub
-    val (bcCenters, bcCb) = bc
-    val encode = udf { (v: Seq[Float]) =>
-      val cs = bcCenters.value; val cb = bcCb.value
-      val vv = v.toArray
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cs.length) {
-        var d = 0.0; var i = 0
-        val cv = cs(c)
-        while (i < vv.length && d < bestD) { val t = vv(i) - cv(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      val cv = cs(best)
-      val codes = new Array[Byte](m)
-      var j = 0
-      while (j < m) {
-        val cbj = cb(j)
-        var bc = 0; var bcD = Double.MaxValue; var ci = 0
-        while (ci < cbj.length) {
-          var d = 0.0; var i = 0
-          val e = cbj(ci)
-          while (i < sub) {
-            val t = (vv(j * sub + i) - cv(j * sub + i)) - e(i); d += t * t; i += 1
-          }
-          if (d < bcD) { bcD = d; bc = ci }
-          ci += 1
-        }
-        codes(j) = bc.toByte
-        j += 1
-      }
-      (best, codes)
-    }
-    corpus.select(col(idCol).cast("long").as("id"),
-      encode(col(vecCol).cast("array<float>")).as("cc"))
-      .select(col("id"), col("cc._1").as("cell"), col("cc._2").as("codes"))
-  }
-
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nCells: Int = 16, nProbe: Int = 4,
                 m: Int = 8, ksub: Int = 16, rerank: Int = 0, seed: Long = 42L,
@@ -981,110 +941,51 @@ object Ann {
     val model = trainIvfPqModel(corpus, nCells, m, ksub, seed,
       trainFraction, maxTrainRows, vecCol)
     val bc = broadcastModel(corpus.sparkSession, model)
-    val encoded = ivfPqEncode(corpus, model, bc, idCol, vecCol)
-    ivfPqSearchStage(encoded, corpus, queries, model, bc, k, nProbe, nCells,
+    val encoded = ivfPqEncode(corpus, bc, idCol, vecCol)
+    ivfPqSearchStage(encoded, corpus, queries, bc, ksub, k, nProbe,
       rerank, idCol, vecCol)
   }
 
   /** ADC scan + rank over a pre-encoded (id, cell, codes) frame —
-    * shared by the inline and persisted-index paths. Rows whose cell
-    * no query probes contribute nothing (slot −1), which is why the
-    * indexed path may prune them from the scan entirely. */
+    * shared by the inline and persisted-index paths. A row is scored
+    * only against the queries probing its cell, which is why the
+    * indexed path may prune unprobed cells from the scan entirely. */
   private def ivfPqSearchStage(encoded: DataFrame, corpus: DataFrame,
-      queries: DataFrame, model: IvfPqModel,
+      queries: DataFrame,
       bc: (org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
            org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]),
-      k: Int, nProbe: Int,
-      nCells: Int, rerank: Int, idCol: String, vecCol: String): DataFrame = {
-    val spark = corpus.sparkSession
+      ksub: Int, k: Int, nProbe: Int, rerank: Int,
+      idCol: String, vecCol: String): DataFrame = {
     val shortK = if (rerank > 0) rerank else k
-    val m = model.m; val ksub = model.ksub
-    val sub = model.sub; val dim = model.dim
     val (bcCenters, bcCb) = bc
-    val qRows: Array[(Long, Array[Float])] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val bcQ = spark.sparkContext.broadcast(qRows)
-    val probeCount = math.min(nProbe, nCells)
-
-    val candidates = encoded.rdd.mapPartitions { it =>
-      val qs = bcQ.value
+    val scanned = topKScan(encoded, queries, shortK, idCol, vecCol) { qs =>
       val cs = bcCenters.value
       val cb = bcCb.value
-      // per query: probed cells (nearest probeCount centroids) and one
-      // ADC LUT per probed cell against the query's residual there
-      val probes: Array[Array[Int]] = qs.map { case (_, qv) =>
-        cs.indices.map { c =>
-          var d = 0.0; var i = 0
-          val cv = cs(c)
-          while (i < dim) { val t = qv(i).toDouble - cv(i); d += t * t; i += 1 }
-          (d, c)
-        }.sortBy(_._1).take(probeCount).map(_._2).toArray
-      }
-      // slotOf(qi)(cell) = LUT slot, or -1 when the query skips the cell
-      val slotOf: Array[Array[Int]] = probes.map { ps =>
-        val a = Array.fill(cs.length)(-1)
-        var s = 0
-        while (s < ps.length) { a(ps(s)) = s; s += 1 }
-        a
-      }
-      val luts: Array[Array[Array[Double]]] = qs.indices.map { qi =>
-        val qv = qs(qi)._2
-        probes(qi).map { cell =>
-          val cv = cs(cell)
-          val lut = new Array[Double](m * ksub)
-          var j = 0
-          while (j < m) {
-            val cbj = cb(j)
-            var ci = 0
-            while (ci < cbj.length) {
-              var d = 0.0; var i = 0
-              val e = cbj(ci)
-              while (i < sub) {
-                val t = (qv(j * sub + i) - cv(j * sub + i)) - e(i); d += t * t; i += 1
-              }
-              lut(j * ksub + ci) = d
-              ci += 1
-            }
-            j += 1
-          }
-          lut
+      // lutOf(qi)(cell): query qi's ADC LUT against its residual in a
+      // cell it probes; null for the cells it skips
+      val lutOf: Array[Array[Array[Double]]] = qs.map { q =>
+        val l = new Array[Array[Double]](cs.length)
+        probeCells(q.vec, cs, nProbe).foreach { c =>
+          l(c) = adcLut(residual(q.vec, cs(c)), cb, ksub)
         }
-      }.toArray
-      val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by[(Double, Long), (Double, Long)](identity)))
-      it.foreach { r =>
-        val id = r.getLong(0)
-        val cell = r.getInt(1)
-        val codes = r.getAs[Array[Byte]](2)
-        var qi = 0
-        while (qi < qs.length) {
-          val slot = slotOf(qi)(cell)
-          if (slot >= 0 && qs(qi)._1 != id) {
-            val lut = luts(qi)(slot)
-            var d = 0.0; var j = 0
-            while (j < m) { d += lut(j * ksub + (codes(j) & 0xFF)); j += 1 }
-            val h = heaps(qi)
-            if (h.size < shortK) h.enqueue((d, id))
-            else {
-              val (wd, wid) = h.head
-              if (d < wd || (d == wd && id < wid)) { h.dequeue(); h.enqueue((d, id)) }
-            }
-          }
-          qi += 1
-        }
+        l
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (d, id) => Row(qs(qi)._1, id, d) }
+      // probers(cell): the queries probing that cell, ascending
+      val probers: Array[Array[Int]] = Array.tabulate(cs.length) { c =>
+        qs.indices.filter(lutOf(_)(c) != null).toArray
+      }
+      new RowScorer {
+        private var cell = 0
+        private var codes: Array[Byte] = _
+        def load(r: Row): Array[Int] = {
+          cell = r.getInt(1)
+          codes = r.getAs[Array[Byte]](2)
+          probers(cell)
+        }
+        def score(qi: Int): Double = -adcDist(lutOf(qi)(cell), codes, ksub)
       }
     }
-    val schema = StructType(Seq(
-      StructField("query_id", LongType, nullable = false),
-      StructField("neighbor_id", LongType, nullable = false),
-      StructField("approx_dist", DoubleType, nullable = false)))
-    rankPqCandidates(corpus, queries,
-      spark.createDataFrame(candidates, schema), k, rerank, idCol, vecCol)
+    rankPqCandidates(corpus, queries, scanned, k, rerank, idCol, vecCol)
   }
 
   /** Build and PERSIST an IVF-PQ index: train once, encode once,
@@ -1129,7 +1030,7 @@ object Ann {
     import spark.implicits._
     cbRows.toSeq.toDF("kind", "idx1", "idx2", "vec", "params")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    ivfPqEncode(corpus, model, broadcastModel(spark, model), idCol, vecCol)
+    ivfPqEncode(corpus, broadcastModel(spark, model), idCol, vecCol)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
   }
 
@@ -1168,27 +1069,19 @@ object Ann {
       rows.filter(r => r.getInt(0) == 1 && r.getInt(1) == j)
         .sortBy(_.getInt(2)).map(_.getSeq[Float](3).toArray)
     }
-    val model = IvfPqModel(centers, codebooks, m, ksub)
     // union of every query's probe set, computed driver-side against
     // the loaded centroids — the codes scan reads ONLY these cells
-    val probeCount = math.min(nProbe, nCells)
-    val qVecs = queries.select(col(vecCol).cast("array<float>"))
+    val probedCells: Array[Int] = queries.select(col(vecCol).cast("array<float>"))
       .filter(col(vecCol).isNotNull)
-      .collect().map(_.getSeq[Float](0).toArray)
-    val probedCells: Array[Int] = qVecs.flatMap { qv =>
-      centers.indices.map { c =>
-        var d = 0.0; var i = 0
-        val cv = centers(c)
-        while (i < dim) { val t = qv(i).toDouble - cv(i); d += t * t; i += 1 }
-        (d, c)
-      }.sortBy(_._1).take(probeCount).map(_._2)
-    }.distinct.sorted
+      .collect()
+      .flatMap(r => probeCells(r.getSeq[Float](0).toArray, centers, nProbe))
+      .distinct.sorted
     val encoded = spark.read.parquet(s"$dir/codes")
       .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       .select("id", "cell", "codes")
-    ivfPqSearchStage(encoded, corpus, queries, model,
-      broadcastModel(spark, model), k, nProbe, nCells,
-      rerank, idCol, vecCol)
+    ivfPqSearchStage(encoded, corpus, queries,
+      broadcastModel(spark, IvfPqModel(centers, codebooks)), ksub,
+      k, nProbe, rerank, idCol, vecCol)
   }
 
   /** Approximate top-k: SRP-LSH bucket join (multi-table for recall)

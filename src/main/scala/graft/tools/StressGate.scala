@@ -267,7 +267,7 @@ object StressGate {
     // broadcast route at corpus scale (the guarded entry point switches
     // between them on banned-set size — both must agree everywhere,
     // including the all-banned → "" and null-text rows)
-    val pdB = Dedup.paragraphDedupBroadcast(d, "doc_id", "text")
+    val pdB = Dedup.paragraphDedupBroadcast(d, "text")
     val pdJ = Dedup.paragraphDedupJoin(d, "doc_id", "text")
     val pdDiff = pdB.except(pdJ).count() + pdJ.except(pdB).count()
     check("txt13_route_equality", pdDiff == 0, pdDiff, "0 (symmetric diff)")

@@ -423,6 +423,35 @@ class AnnSpec extends AnyFunSuite {
       polluted.select("query_id", "neighbor_id")).count() == 0)
   }
 
+  test("every tier drops null vectors on both sides (no NPE, rows unchanged)") {
+    import spark.implicits._
+    def nullVec(id: Long) = Seq((id, null.asInstanceOf[Seq[Float]]))
+      .toDF("vec_id", "embedding")
+      .select(col("vec_id").cast(emb.schema("vec_id").dataType),
+        col("embedding").cast(emb.schema("embedding").dataType))
+    val corpus = emb.select("vec_id", "embedding")
+    val qs = queries.select("vec_id", "embedding")
+    def indexed(c: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ann_null").toString
+      Ann.buildIvfPqIndex(c, dir, nCells = 8)
+      Ann.ivfPqTopKIndexed(spark, dir, q, c, k = 5, nCells = 8, nProbe = 3)
+    }
+    val tiers = Seq[(String, (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)](
+      "bruteForceTopK" -> ((c, q) => Ann.bruteForceTopK(c, q, k = 5)),
+      "pqTopK" -> ((c, q) => Ann.pqTopK(c, q, k = 5)),
+      "ivfTopK" -> ((c, q) => Ann.ivfTopK(c, q, k = 5, nCells = 8, nProbe = 3)),
+      "ivfPqTopK" -> ((c, q) => Ann.ivfPqTopK(c, q, k = 5, nCells = 8, nProbe = 3)),
+      "ivfPqTopKIndexed" -> indexed)
+    for ((name, tier) <- tiers) {
+      val clean = tier(corpus, qs)
+      val polluted = tier(corpus.unionByName(nullVec(900001L)),
+        qs.unionByName(nullVec(900002L)))
+      assert(clean.exceptAll(polluted).count() == 0 &&
+        polluted.exceptAll(clean).count() == 0, s"$name: rows changed")
+    }
+  }
+
   test("persisted IVF-PQ index reproduces the inline path row-for-row") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
     Ann.buildIvfPqIndex(emb, dir, nCells = 8, m = 8, ksub = 16)
@@ -472,7 +501,6 @@ class AnnSpec extends AnyFunSuite {
   // ---- margin-based mining (ann10) -------------------------------------
 
   test("marginMine equals a declarative window-rank replay of the definition") {
-    import spark.implicits._
     val k = 3
     val q = emb.filter(col("vec_id") < 10)
     // replay: micro-quantized cosq matrix → fwd/bwd top-k sums → the

@@ -269,7 +269,7 @@ class DedupSpec extends AnyFunSuite {
         (101L, Some("")),                          // empty text
         (102L, Option.empty[String])               // null text
       ).toDF("doc_id", "text"))
-    val viaBroadcast = Dedup.paragraphDedupBroadcast(docs, "doc_id", "text",
+    val viaBroadcast = Dedup.paragraphDedupBroadcast(docs, "text",
       sep = sep, maxOccurrences = 3L)
     val viaJoin = Dedup.paragraphDedupJoin(docs, "doc_id", "text",
       sep = sep, maxOccurrences = 3L)
@@ -295,7 +295,7 @@ class DedupSpec extends AnyFunSuite {
     // match the broadcast route exactly
     val guarded = Dedup.paragraphDedup(docs, "doc_id", "text",
       sep = sep, maxOccurrences = 1L, maxBannedBroadcastBytes = 1L)
-    val reference = Dedup.paragraphDedupBroadcast(docs, "doc_id", "text",
+    val reference = Dedup.paragraphDedupBroadcast(docs, "text",
       sep = sep, maxOccurrences = 1L)
     val diff = guarded.except(reference).count() +
       reference.except(guarded).count()
@@ -511,7 +511,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("semanticDupPairs finds noised near-twins SRP bucketing could straddle") {
-    import spark.implicits._
     // copies with one dim nudged by 1e-3: cosine ≈ 0.999998 — still a
     // near-duplicate; a hyperplane through the nudge direction could
     // split an SRP bucket, but the k-means cell assignment cannot move

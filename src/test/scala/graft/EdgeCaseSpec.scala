@@ -236,7 +236,6 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("ivfPqTopKIndexed: empty query batch returns empty, reads no cells") {
-    import spark.implicits._
     val emb = SparkT.table("embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft_edge_annidx").toString
     graft.similarity.Ann.buildIvfPqIndex(emb, dir, nCells = 4, m = 8, ksub = 16)

@@ -13,7 +13,6 @@ class FuzzyJoinSpec extends AnyFunSuite {
 
   /** Distinct part names + planted one/two-edit variants + shorts. */
   private def names = {
-    import spark.implicits._
     val base = SparkT.table("part")
       .select(lower(col("p_name")).as("s")).distinct()
       .collect().map(_.getString(0)).toSeq

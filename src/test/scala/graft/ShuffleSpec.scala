@@ -132,7 +132,7 @@ class ShuffleSpec extends AnyFunSuite {
     assert(!p.contains("Window"), "no window sort allowed:\n" + p.take(800))
   }
 
-  import org.apache.spark.sql.functions.{col, lit, when}
+  import org.apache.spark.sql.functions.{col, lit}
 
   private def weighted(n: Int, heavyEvery: Int) = {
     import SparkT.spark.implicits._

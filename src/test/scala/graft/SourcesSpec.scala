@@ -357,9 +357,12 @@ class SourcesSpec extends AnyFunSuite {
 
   test("registerAll exposes every table to spark.sql") {
     Tables.registerAll(spark, SparkT.sfDir)
-    val n = spark.sql(
-      "SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-    ).collect()(0).getLong(0)
-    assert(n > 0)
+    // the session is shared by every suite: leave no view behind
+    try {
+      val n = spark.sql(
+        "SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+      ).collect()(0).getLong(0)
+      assert(n > 0)
+    } finally Tables.allTables.foreach(spark.catalog.dropTempView)
   }
 }

@@ -25,7 +25,6 @@ import graft.tools.StressGate
   */
 class StressSpec extends AnyFunSuite {
   lazy val spark = SparkT.spark
-  import spark.implicits._
 
   test("stress gate invariants hold at mini scale (all paths)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stress-spec").toString
