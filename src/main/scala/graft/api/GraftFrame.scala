@@ -228,10 +228,6 @@ final case class GraftFrame(df: DataFrame, groupCols: Seq[String] = Nil) {
   def arrangeByGroup(sortKeys: Column*): GraftFrame =
     arrangeImpl(byGroup = true, stable = false, sortKeys)
 
-  /** `.by_group = TRUE` + stability, for parity with eager dplyr. */
-  def arrangeByGroupStable(sortKeys: Column*): GraftFrame =
-    arrangeImpl(byGroup = true, stable = true, sortKeys)
-
   private def arrangeImpl(byGroup: Boolean, stable: Boolean,
                           sortKeys: Seq[Column]): GraftFrame = {
     import org.apache.spark.sql.catalyst.expressions.{
@@ -320,9 +316,6 @@ final case class GraftFrame(df: DataFrame, groupCols: Seq[String] = Nil) {
       GraftFrame(out)
     }
   }
-
-  /** dplyr `count()` convenience. */
-  def count_(name: String = "n"): GraftFrame = summarise(name -> count(lit(1)))
 
   /** dplyr `slice_max(order_by, n)` — top-n rows per current group by
     * `orderBy` descending, ties broken by `tieBreak` ascending for

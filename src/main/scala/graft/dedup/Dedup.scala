@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import graft.SmallSide
 import graft.functions.{hashfns, textfns, vecfns}
 
 /** Deduplication operators for document corpora.
@@ -480,8 +481,8 @@ object Dedup {
     // Hybrid cutover: a near-dup pair graph is typically MINUTE next to
     // its corpus (edges ≈ duplicates, ids only — 16 bytes each), and
     // below `driverThreshold` edges a driver union-find beats ~8
-    // distributed jobs of iteration by orders of magnitude. The count
-    // is free — `edges` is already materialized by the checkpoint. The
+    // distributed jobs of iteration by orders of magnitude. One bounded
+    // collect of the checkpointed edges sizes and ships the graph. The
     // distributed loop below remains the path for graphs that outgrow
     // the driver (set driverThreshold=0 to force it; specs pin both).
     // driver union-find casts ids to long — route only INTEGRAL id
@@ -491,8 +492,11 @@ object Dedup {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    if (idIsIntegral && edges.count() <= driverThreshold)
-      return driverClusters(edges)
+    val small =
+      if (idIsIntegral) SmallSide.atMost(
+        edges.select(col("src").cast("long"), col("dst").cast("long")), driverThreshold)
+      else None
+    if (small.isDefined) return driverClusters(edges.sparkSession, small.get)
     var labels = trunc(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var i = 0
@@ -543,12 +547,11 @@ object Dedup {
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
-  /** Driver-side union-find over a bounded edge list — exact same
-    * (id, min-id-of-component) contract as the distributed loop. */
-  private def driverClusters(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  /** Driver-side union-find over a bounded (src, dst) long edge list —
+    * exact same (id, min-id-of-component) contract as the distributed
+    * loop. */
+  private def driverClusters(spark: org.apache.spark.sql.SparkSession,
+                             edges: Array[Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -557,7 +560,8 @@ object Dedup {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    es.foreach { case (a, b) =>
+    edges.foreach { e =>
+      val (a, b) = (e.getLong(0), e.getLong(1))
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
       // union by MIN id so every root is its component's minimum —
@@ -1026,12 +1030,13 @@ object Dedup {
     * ever flags them.
     *
     * Route selection — the banned set grows with the corpus, so its
-    * size is measured, not assumed: a pre-flight job counts the banned
-    * fingerprints (only (16-byte md5, count) digests shuffle; document
-    * text never moves). Under `maxBannedBroadcastBytes` the broadcast
-    * route runs ([[paragraphDedupBroadcast]] — scan-side binary-search
-    * probe, no join touches the corpus); above it the shuffle-join
-    * route runs ([[paragraphDedupJoin]] — positions join on digests,
+    * size is measured, not assumed: one bounded collect ships at most
+    * `maxBannedBroadcastBytes / 48` + 1 banned fingerprints (only
+    * (16-byte md5, count) digests shuffle; document text never moves).
+    * When they all fit, the broadcast route runs
+    * ([[paragraphDedupBroadcast]] — scan-side binary-search probe, no
+    * join touches the corpus); past that, the shuffle-join route runs
+    * ([[paragraphDedupJoin]] — positions join on digests,
     * text moves through exactly one join). Both routes are
     * row-identical by construction; the stress gate and DedupSpec pin
     * that equality.
@@ -1044,39 +1049,37 @@ object Dedup {
                      sep: String = "\n\n",
                      maxOccurrences: Long = 1,
                      maxBannedBroadcastBytes: Long = MaxBannedBroadcastBytes): DataFrame = {
-    // EAGER-JOB SEMANTICS: this entry point runs one counting job at
-    // call time (the route decision needs the banned-set size). The
+    // EAGER-JOB SEMANTICS: this entry point runs one bounded collect
+    // at call time (the route decision needs the banned-set size). The
     // digest DataFrame is persisted (MEMORY_AND_DISK, (16-byte md5)
-    // rows only — never text) so the pre-flight count and the chosen
-    // route share ONE corpus fingerprint scan+shuffle instead of two;
-    // the cache is evictable and is dropped by the route plumbing as
-    // soon as the route no longer needs the distributed form.
+    // rows only — never text) so that collect and the join route share
+    // ONE corpus fingerprint scan+shuffle; the broadcast route drops
+    // the cache at once.
     val banned = bannedFingerprints(docs, textCol, sep, maxOccurrences)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bannedCount = banned.count()
-    if (bannedCount * BannedFingerprintBytes <= maxBannedBroadcastBytes) {
-      // under budget ⇒ the whole digest set fits the driver by the same
-      // bound the broadcast relies on: collect it NOW, free the cache,
-      // and feed the broadcast route a pre-materialized one-row local
-      // set — zero recomputation, no cache left behind
-      val sorted = banned.collect().map(_.getString(0)).sortWith(_ < _)
-      banned.unpersist(blocking = false)
-      broadcastRouteFrom(docs, textCol, sep,
-        docs.sparkSession.createDataFrame(
-          java.util.List.of(Row(sorted.toSeq)),
-          StructType(Seq(StructField("__banned",
-            ArrayType(StringType, containsNull = false))))))
-    } else {
-      log.info(s"paragraphDedup: $bannedCount banned fingerprints " +
-        s"(~${bannedCount * BannedFingerprintBytes >> 20} MB) exceed the " +
-        s"${maxBannedBroadcastBytes >> 20} MB broadcast budget — " +
-        "switching to the shuffle-join route")
-      // over budget ⇒ the join route reads the persisted digests (one
-      // scan total when the result is materialized while the cache is
-      // warm). The cache stays until the session evicts it or the
-      // caller clears it — digests only, disk-backed, bounded by the
-      // banned-set size the route shuffles anyway.
-      joinRouteFrom(docs, idCol, textCol, sep, banned)
+    val maxBanned = Math.floorDiv(maxBannedBroadcastBytes, BannedFingerprintBytes)
+    SmallSide.atMost(banned, maxBanned) match {
+      case Some(rows) =>
+        // under budget ⇒ the whole digest set is on the driver by the
+        // same bound the broadcast relies on: free the cache, and feed
+        // the broadcast route a pre-materialized one-row local set —
+        // zero recomputation, no cache left behind
+        val sorted = rows.map(_.getString(0)).sortWith(_ < _)
+        banned.unpersist(blocking = false)
+        broadcastRouteFrom(docs, textCol, sep,
+          docs.sparkSession.createDataFrame(
+            java.util.List.of(Row(sorted.toSeq)),
+            StructType(Seq(StructField("__banned",
+              ArrayType(StringType, containsNull = false))))))
+      case None =>
+        log.info(s"paragraphDedup: more than $maxBanned banned fingerprints " +
+          "exceed the broadcast budget — switching to the shuffle-join route")
+        // over budget ⇒ the join route reads the persisted digests (one
+        // scan total when the result is materialized while the cache is
+        // warm). The cache stays until the session evicts it or the
+        // caller clears it — digests only, disk-backed, bounded by the
+        // banned-set size the route shuffles anyway.
+        joinRouteFrom(docs, idCol, textCol, sep, banned)
     }
   }
 

@@ -40,13 +40,6 @@ object Kernels {
     dot
   }
 
-  /** L2 norm of a float vector. */
-  def normF(a: ArrayData): Double = {
-    var s = 0.0; var i = 0; val n = a.numElements()
-    while (i < n) { val x = a.getFloat(i).toDouble; s += x * x; i += 1 }
-    math.sqrt(s)
-  }
-
   /** Java/RE2 regex `\s`: [ \t\n\x0B\f\r] — the EXACT whitespace
     * set the oracle-replayed `regexp_replace(text, '\s+', ' ')`
     * formulations split on. Character.isWhitespace and String.trim

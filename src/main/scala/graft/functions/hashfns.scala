@@ -21,15 +21,6 @@ object hashfns {
   def wordShingles(text: Column, n: Int): Column =
     GraftFunctions.graft_word_shingles_all(text, n)
 
-  /** Character n-gram shingles (for short/CJK text where word
-    * tokenization is unreliable). */
-  def charShingles(text: Column, n: Int): Column = {
-    val s = textfns.normalizeText(text)
-    val k = length(s) - (n - 1)
-    when(k <= 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), k), i => substring(s, i, lit(n))))
-  }
-
   /** Distinct word n-gram shingle strings via the one-pass codegen
     * kernel — semantically `array_distinct(wordShingles(text, n))`
     * (set-equal; element order differs, which set consumers ignore). */

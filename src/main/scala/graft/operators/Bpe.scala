@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.SmallSide
 
 /** Distributed byte-pair-encoding: the real subword tokenizer of a
   * pretraining pipeline (txt1's token COUNTS estimate cost; training
@@ -74,9 +75,9 @@ object Bpe {
     *
     * Hybrid cutover (the duplicateClusters discipline): the word-freq
     * aggregate is the only corpus-scale step; when the resulting
-    * VOCABULARY is at most `driverThreshold` rows it collects (ids +
-    * counts, a few MB) and the merge loop runs locally — numMerges
-    * iterations of pure in-memory counting, milliseconds, versus
+    * VOCABULARY is at most `driverThreshold` rows, one bounded collect
+    * ships it (ids + counts, a few MB) and the merge loop runs
+    * locally — numMerges iterations of in-memory counting, versus
     * ~2 distributed jobs per merge whose scheduling overhead dwarfs
     * the arithmetic. Past the threshold the distributed loop runs
     * with per-round lineage truncation. Both paths are
@@ -103,17 +104,14 @@ object Bpe {
       else df.localCheckpoint(true)
 
     // ONE corpus pass: the aggregate materializes via the lineage
-    // truncation BEFORE the size probe, so neither the count nor the
-    // chosen path re-scans the corpus (the docstring's "only
-    // corpus-scale pass" was previously executed twice — once for
-    // count(), once recomputed for collect()/symbolize)
+    // truncation, so neither the bounded collect (the size probe)
+    // nor the distributed path re-scans the corpus
     val freqDf = trunc(normWords(docs, textCol)
       .groupBy("word").agg(count(lit(1)).as("freq")))
-    if (freqDf.count() <= driverThreshold) {
-      val freqs = freqDf.collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      return localTrain(freqs, numMerges)
-    }
+    val small = SmallSide.atMost(freqDf, driverThreshold)
+    if (small.isDefined)
+      return localTrain(
+        small.get.map(r => r.getString(0) -> r.getLong(1)).toMap, numMerges)
 
     val symbolize = udf { (w: String) => symbolizeWord(w) }
     var vocab = trunc(freqDf

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.SmallSide
 import graft.dedup.Dedup
 import graft.functions.hashfns
 
@@ -229,11 +230,13 @@ object Decontam {
     *
     * Scale shape: the benchmark side is SMALL by definition (eval
     * sets) — it collects and broadcasts under the same small-side
-    * contract as the exact ANN query side; the corpus streams through
-    * ONE scan with zero shuffles (the flag is scan-side, the output
-    * already filtered). Null ids/vectors on either side are excluded
-    * (the trainSample discipline); an empty benchmark returns the
-    * empty frame, not a crash. Mixed dimensions fail fast. */
+    * contract as the exact ANN query side (past 65,536 rows the call
+    * fails, naming the n-gram screens that join instead); the corpus
+    * streams through ONE scan with zero shuffles (the flag is
+    * scan-side, the output already filtered). Null ids/vectors on
+    * either side are excluded (the trainSample discipline); an empty
+    * benchmark returns the empty frame, not a crash. Mixed dimensions
+    * fail fast. */
   def semantic(corpus: DataFrame, bench: DataFrame, threshold: Double,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
@@ -245,10 +248,12 @@ object Decontam {
       StructField(idCol, LongType, nullable = false),
       StructField("bench_id", LongType, nullable = false),
       StructField("score", DoubleType, nullable = false)))
-    val benchRows: Array[(Long, Array[Long], Double)] = bench
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .collect()
+    val benchRows: Array[(Long, Array[Long], Double)] = SmallSide.orFail(bench
+        .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>")),
+      "Decontam.semantic", "benchmark", "split the benchmark, or screen " +
+        "n-grams with Decontam.contaminated or contaminatedBloom, which " +
+        "join the benchmark without a driver collect")
       .map { r =>
         val q = quantize1000(r.getSeq[Float](1).toArray)
         (r.getLong(0), q, longDot(q, q).toDouble)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.SmallSide
 import graft.expressions.GraftFunctions
 import graft.functions.vecfns
 
@@ -87,11 +88,24 @@ object Ann {
     def score(qi: Int): Double
   }
 
+  /** The non-null query vectors (with `queryKey`) of [[topKScan]]:
+    * the small side of `caller`, which fails past SmallSide.MaxRows. */
+  private def queryRows(caller: String, queries: DataFrame,
+      idCol: String, vecCol: String,
+      queryKey: Column = lit(null).cast("string")): Array[Query] =
+    // cast to array<float> like every tier's corpus side: an uncast
+    // array<double> input would ClassCastException in getSeq[Float]
+    SmallSide.orFail(queries
+        .filter(col(vecCol).isNotNull)
+        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
+          queryKey),
+      caller, "query side", "split the query batch, or use lshTopK or " +
+        "ivfTopK, which join the queries without a driver collect")
+      .map(r => Query(r.getLong(0), r.getSeq[Float](1).toArray, r.getString(2)))
+
   /** THE top-k scan of the exact, filtered, PQ and IVF-PQ tiers.
     *
-    * The non-null query vectors (with `queryKey`) are collected to the
-    * driver — `queries` must be the small side, the same contract as a
-    * broadcast join — and shipped once per executor via a broadcast
+    * The [[queryRows]] are shipped once per executor via a broadcast
     * variable. `rows` streams partition-by-partition through per-query
     * bounded heaps that keep the top `k` by (score desc, id asc); a row
     * never scores against a query with its own id (every tier's
@@ -99,19 +113,9 @@ object Ann {
     * surviving candidates, never the N×Q score matrix.
     *
     * Output: (query_id, neighbor_id, score, rank), rank ≤ k. */
-  private def topKScan(rows: DataFrame, queries: DataFrame, k: Int,
-      idCol: String, vecCol: String,
-      queryKey: Column = lit(null).cast("string"))(
+  private def topKScan(rows: DataFrame, qRows: Array[Query], k: Int)(
       scorerFor: Array[Query] => RowScorer): DataFrame = {
     val spark = rows.sparkSession
-    // cast to array<float> like every tier's corpus side: an uncast
-    // array<double> input would ClassCastException in getSeq[Float]
-    val qRows: Array[Query] = queries
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        queryKey)
-      .collect()
-      .map(r => Query(r.getLong(0), r.getSeq[Float](1).toArray, r.getString(2)))
     val bc = spark.sparkContext.broadcast(qRows)
 
     val candidates = rows.rdd.mapPartitions { it =>
@@ -158,11 +162,12 @@ object Ann {
 
   /** Exact top-k neighbors per query by cosine.
     *
-    * `queries` is collected to the driver (it must be the small side —
-    * the same contract as a broadcast join) and shipped once per
-    * executor via a broadcast variable; the corpus is streamed
-    * partition-by-partition through per-query bounded heaps
-    * ([[topKScan]]). Output: (query_id, neighbor_id, score, rank).
+    * `queries` is collected to the driver (the small side: past
+    * 65,536 rows the call fails, naming [[lshTopK]] and [[ivfTopK]],
+    * which join instead) and shipped once per executor via a broadcast
+    * variable; the corpus is streamed partition-by-partition through
+    * per-query bounded heaps ([[topKScan]]). Output: (query_id,
+    * neighbor_id, score, rank).
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
@@ -219,8 +224,9 @@ object Ann {
     val rows = nonNull(corpus).select(
       Seq(col(idCol).cast("long"), col(vecCol).cast("array<float>")) ++
         (if (keyed) Seq(mkey) else Nil): _*)
-    topKScan(rows, nonNull(queries), k, idCol, vecCol,
-      if (keyed) mkey else lit(null).cast("string")) { qs =>
+    val qRows = queryRows(caller, nonNull(queries), idCol, vecCol,
+      if (keyed) mkey else lit(null).cast("string"))
+    topKScan(rows, qRows, k) { qs =>
       val all = qs.indices.toArray
       val byKey: Map[String, Array[Int]] =
         if (keyed) all.groupBy(qs(_).key) else Map.empty
@@ -272,9 +278,9 @@ object Ann {
     * self-match rule — classify-the-training-set stays honest).
     *
     * Scale shape = [[bruteForceTopK]]'s: queries broadcast under the
-    * ANN small-side contract, one corpus scan with per-partition
-    * bounded heaps; the vote is a ≤ Q·k-row aggregate plus a
-    * per-query window over ≤ distinct-label rows.
+    * ANN small-side contract (at most 65,536 rows), one corpus scan
+    * with per-partition bounded heaps; the vote is a ≤ Q·k-row
+    * aggregate plus a per-query window over ≤ distinct-label rows.
     *
     * Output: (query_id, label, votes, best_rank) — one row per query
     * with ≥ 1 labeled neighbor. */
@@ -284,8 +290,8 @@ object Ann {
     require(k > 0, s"knnClassify: k must be positive, got $k")
     require(corpus.columns.contains(labelCol),
       s"knnClassify: no label column '$labelCol' in the corpus frame")
-    val top = bruteForceTopK(corpus, queries, k, idCol, vecCol,
-      quantized = true)
+    val top = exactTopK("knnClassify", corpus, queries, k, Nil, idCol,
+      vecCol, quantized = true)
     val labels = corpus
       .filter(col(labelCol).isNotNull)
       .select(col(idCol).cast("long").as("neighbor_id"),
@@ -354,13 +360,13 @@ object Ann {
     * query. Rows whose ids collide across the two sides never match
     * themselves (the [[bruteForceTopK]] self-exclusion contract).
     *
-    * Scale shape: `queries` is the SMALL side (the broadcast-join
-    * contract of [[bruteForceTopK]]) — collected once and shipped per
-    * executor; the corpus streams through ONE scan that computes the
-    * Q micro-quantized cosines per row and feeds (a) per-query
-    * forward bounded heaps and (b) that same row's backward top-k
-    * statistic over the query set — the backward pass costs nothing
-    * extra because the Q cosines are already in hand. Only
+    * Scale shape: `queries` is the SMALL side (the contract of
+    * [[bruteForceTopK]]: past 65,536 rows the call fails) — collected
+    * once and shipped per executor; the corpus streams through ONE
+    * scan that computes the Q micro-quantized cosines per row and
+    * feeds (a) per-query forward bounded heaps and (b) that same
+    * row's backward top-k statistic over the query set — the backward
+    * pass costs nothing extra because the Q cosines are in hand. Only
     * parts × Q × k candidate tuples ever leave the scan; no N×Q
     * matrix, no corpus shuffle. For corpus×corpus mining at 100 TB,
     * run per query-shard — each shard is one scan — or feed ANN
@@ -379,10 +385,11 @@ object Ann {
                  vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"marginMine: k must be >= 1, got $k")
     val spark = corpus.sparkSession
-    val qRows: Array[(Long, Array[Long])] = queries
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .collect()
+    val qRows: Array[(Long, Array[Long])] = SmallSide.orFail(queries
+        .filter(col(vecCol).isNotNull)
+        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>")),
+      "marginMine", "query side",
+      "split the query batch into shards; each shard is one corpus scan")
       .map(r => (r.getLong(0), quantize1000(r.getSeq[Float](1).toArray)))
     val bc = spark.sparkContext.broadcast(qRows)
 
@@ -828,7 +835,8 @@ object Ann {
     val encoded = corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"),
         encode(col(vecCol).cast("array<float>")).as("codes"))
-    val scanned = topKScan(encoded, queries, shortK, idCol, vecCol) { qs =>
+    val qRows = queryRows("pqTopK", queries, idCol, vecCol)
+    val scanned = topKScan(encoded, qRows, shortK) { qs =>
       val cb = bcCb.value
       val luts = qs.map(q => adcLut(q.vec, cb, ksub))
       val all = qs.indices.toArray
@@ -942,7 +950,8 @@ object Ann {
       trainFraction, maxTrainRows, vecCol)
     val bc = broadcastModel(corpus.sparkSession, model)
     val encoded = ivfPqEncode(corpus, bc, idCol, vecCol)
-    ivfPqSearchStage(encoded, corpus, queries, bc, ksub, k, nProbe,
+    ivfPqSearchStage(encoded, corpus, queries,
+      queryRows("ivfPqTopK", queries, idCol, vecCol), bc, ksub, k, nProbe,
       rerank, idCol, vecCol)
   }
 
@@ -951,14 +960,14 @@ object Ann {
     * only against the queries probing its cell, which is why the
     * indexed path may prune unprobed cells from the scan entirely. */
   private def ivfPqSearchStage(encoded: DataFrame, corpus: DataFrame,
-      queries: DataFrame,
+      queries: DataFrame, qRows: Array[Query],
       bc: (org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
            org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]),
       ksub: Int, k: Int, nProbe: Int, rerank: Int,
       idCol: String, vecCol: String): DataFrame = {
     val shortK = if (rerank > 0) rerank else k
     val (bcCenters, bcCb) = bc
-    val scanned = topKScan(encoded, queries, shortK, idCol, vecCol) { qs =>
+    val scanned = topKScan(encoded, qRows, shortK) { qs =>
       val cs = bcCenters.value
       val cb = bcCb.value
       // lutOf(qi)(cell): query qi's ADC LUT against its residual in a
@@ -1070,16 +1079,16 @@ object Ann {
         .sortBy(_.getInt(2)).map(_.getSeq[Float](3).toArray)
     }
     // union of every query's probe set, computed driver-side against
-    // the loaded centroids — the codes scan reads ONLY these cells
-    val probedCells: Array[Int] = queries.select(col(vecCol).cast("array<float>"))
-      .filter(col(vecCol).isNotNull)
-      .collect()
-      .flatMap(r => probeCells(r.getSeq[Float](0).toArray, centers, nProbe))
+    // the loaded centroids from the scan's own query rows (one
+    // collect) — the codes scan reads ONLY these cells
+    val qRows = queryRows("ivfPqTopKIndexed", queries, idCol, vecCol)
+    val probedCells: Array[Int] = qRows
+      .flatMap(q => probeCells(q.vec, centers, nProbe))
       .distinct.sorted
     val encoded = spark.read.parquet(s"$dir/codes")
       .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       .select("id", "cell", "codes")
-    ivfPqSearchStage(encoded, corpus, queries,
+    ivfPqSearchStage(encoded, corpus, queries, qRows,
       broadcastModel(spark, IvfPqModel(centers, codebooks)), ksub,
       k, nProbe, rerank, idCol, vecCol)
   }

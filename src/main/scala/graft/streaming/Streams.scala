@@ -663,14 +663,13 @@ object Streams {
     * aggregate (category list re-windowed via `window_time`), both
     * append-mode with watermark-bounded O(windows × categories)
     * state — then the whole JSD is ONE STATELESS projection: the
-    * baseline's top-K categories ship as a literal array (category
-    * distributions are broadcast-small by definition — the
-    * Decontam/ANN small-side contract), per-category window counts
-    * come from higher-order functions over the collected list, and
-    * the arithmetic is exactly `categoricalDrift`'s (integer counts,
-    * pb·ln(pb/m) with zero guards, 6 dp) so the DuckDB oracle
-    * replays every term bit-for-bit under the append-mode
-    * finalization cutoff.
+    * baseline's top-K categories and total ship as a literal array
+    * (one action of K + 1 rows, whatever the cardinality),
+    * per-category window counts come from higher-order functions over
+    * the collected list, and the arithmetic is exactly
+    * `categoricalDrift`'s (integer counts, pb·ln(pb/m) with zero
+    * guards, 6 dp) so the DuckDB oracle replays every term
+    * bit-for-bit under the append-mode finalization cutoff.
     *
     * Output per SEALED window: one row per kept baseline category
     * (plus `__other__` when either side has folded mass):
@@ -685,15 +684,19 @@ object Streams {
                                  topK: Int = 20,
                                  watermark: String = "2 hours"): DataFrame = {
     require(topK >= 1, s"categoricalDriftStreamOnce: topK must be >= 1, got $topK")
-    // baseline distribution, collected once (small-side contract)
-    val baseCounts = baseline.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol).cast("string").as("c")).agg(count(lit(1)).as("nb"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    require(baseCounts.nonEmpty,
+    // the baseline's total (the rollup row, first by grouping id) and
+    // top K categories by (nb desc, c asc): one action, topK + 1 rows
+    val base = baseline.filter(col(catCol).isNotNull)
+      .rollup(col(catCol).cast("string").as("c"))
+      .agg(count(lit(1)).as("nb"), grouping_id().as("g"))
+      .orderBy(col("g").desc, col("nb").desc, col("c").asc)
+      .limit(topK + 1)
+      .collect()
+    require(base.length > 1,
       s"categoricalDriftStreamOnce: baseline has no non-null '$catCol' values")
-    val kept = baseCounts.sortBy { case (c, nb) => (-nb, c) }.take(topK)
-    val nbOther = baseCounts.map(_._2).sum - kept.map(_._2).sum
-    val tb = baseCounts.map(_._2).sum
+    val tb = base(0).getLong(1)
+    val kept = base.tail.map(r => (r.getString(0), r.getLong(1)))
+    val nbOther = tb - kept.map(_._2).sum
 
     backfill(spark, sourcePath, "append", check = requirePlan(_,
         "categoricalDriftStreamOnce", "StateStoreSave", 2)) { raw =>

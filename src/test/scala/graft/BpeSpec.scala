@@ -70,6 +70,22 @@ class BpeSpec extends AnyFunSuite {
     assert(dist == want, s"\ndist: $dist\nwant: $want")
   }
 
+  test("driver cutover edge: a threshold at the vocabulary size and one below agree") {
+    val words = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+      Seq.fill(6)("newest") ++ Seq.fill(3)("widest") ++ Seq.fill(4)("lowest")
+    val vocab = words.distinct.size.toLong
+    val want = refTrain(words.groupBy(identity).view.mapValues(_.size.toLong).toMap,
+      numMerges = 12)
+    // vocab rows fit a threshold of vocab (driver route); one more row
+    // than a threshold of vocab − 1 takes the distributed route
+    val atSize = Bpe.train(corpusDf(words), "text", numMerges = 12,
+      driverThreshold = vocab)
+    val belowSize = Bpe.train(corpusDf(words), "text", numMerges = 12,
+      driverThreshold = vocab - 1)
+    assert(atSize == want, s"\nat size: $atSize\nwant:    $want")
+    assert(belowSize == want, s"\nbelow size: $belowSize\nwant:       $want")
+  }
+
   test("distributed trainer equals the reference on the fixture corpus head") {
     val docs = SparkT.table("documents").limit(50)
     val freqs = docs

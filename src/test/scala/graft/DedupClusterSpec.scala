@@ -28,6 +28,24 @@ class DedupClusterSpec extends AnyFunSuite {
     assert(distributed == want)
   }
 
+  test("duplicateClusters cutover edge: a threshold at the edge count and one below agree") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (20L, 22L))
+      .toDF("id_a", "id_b")
+    // the cutover sizes the symmetric edge list: both directions of each pair
+    val edges = 2L * pairs.count()
+    def labels(threshold: Long) = {
+      val df = Dedup.duplicateClusters(pairs, driverThreshold = threshold)
+      val joined = df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+      (joined, df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
+    val (atJoined, atSize) = labels(edges)
+    val (belowJoined, belowSize) = labels(edges - 1)
+    assert(!atJoined, "a threshold equal to the edge count takes the driver union-find")
+    assert(belowJoined, "a threshold one below the edge count takes the distributed loop")
+    assert(atSize == belowSize)
+  }
+
   test("dedupNear keeps exactly one representative per cluster plus loners") {
     val docs = Seq(
       (1L, "x"), (2L, "x"), (3L, "x"),   // cluster {1,2,3}

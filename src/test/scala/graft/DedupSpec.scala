@@ -304,6 +304,30 @@ class DedupSpec extends AnyFunSuite {
       (0 until 40).map(i => s"keep $i"))
   }
 
+  test("paragraphDedup route edge: a budget at the banned-set size and one byte below agree") {
+    import spark.implicits._
+    val sep = "\n\n"
+    val docs = (0 until 40).map { i =>
+      (i.toLong, Seq("Boiler", s"keep $i").mkString(sep))
+    }.toDF("doc_id", "text")
+    // one banned fingerprint ("Boiler"): a budget of exactly its 48
+    // bytes keeps the broadcast route, one byte less takes the join
+    def run(budget: Long) = {
+      val df = Dedup.paragraphDedup(docs, "doc_id", "text", sep = sep,
+        maxOccurrences = 1L, maxBannedBroadcastBytes = budget)
+      // the join route probes banned paragraph positions (`__bpos`)
+      val joined = df.queryExecution.analyzed.exists(
+        _.output.exists(_.name == "__bpos"))
+      (joined, df.orderBy("doc_id").collect().map(_.getString(1)).toSeq)
+    }
+    val (atJoined, atSize) = run(48L)
+    val (belowJoined, belowSize) = run(47L)
+    assert(!atJoined, "a budget equal to the banned-set size takes the broadcast route")
+    assert(belowJoined, "a budget one byte below it takes the join route")
+    assert(atSize == belowSize)
+    assert(atSize == (0 until 40).map(i => s"keep $i"))
+  }
+
   test("declared sub-threshold LSH recall gate (dd11): floor vs exact pairs") {
     // the measured number the dd11 query puts in every correctness
     // dump; theory at k=128/b=32 (r=4): P(candidate) = 1-(1-s^4)^32

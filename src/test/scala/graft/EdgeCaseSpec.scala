@@ -267,4 +267,41 @@ class EdgeCaseSpec extends AnyFunSuite {
       assert(r.isNullAt(5) && r.isNullAt(6))
     }
   }
+
+  /** A small side one row past [[SmallSide.MaxRows]] (every row the
+    * same 2-d vector), the two-row corpus it runs against, and the
+    * failure it must raise: naming the caller, the limit and the
+    * distributed alternative — not a driver heap full of rows. */
+  private def oneOverLimit: DataFrame =
+    spark.range(SmallSide.MaxRows + 1L).select(col("id").as("vec_id"),
+      typedLit(Array(1.0f, 0.0f)).as("embedding"))
+
+  private def twoRowCorpus: DataFrame = {
+    import spark.implicits._
+    Seq((-1L, Array(1.0f, 0.0f)), (-2L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private def assertRefused(call: => Any, caller: String,
+                            alternative: String): Unit = {
+    val msg = intercept[IllegalArgumentException](call).getMessage
+    Seq(caller, s"more than ${SmallSide.MaxRows} rows", alternative)
+      .foreach(w => assert(msg.contains(w), s"'$w' missing from: $msg"))
+  }
+
+  test("bruteForceTopK refuses a query side one row past the driver limit") {
+    assertRefused(graft.similarity.Ann.bruteForceTopK(twoRowCorpus,
+      oneOverLimit, k = 1), "bruteForceTopK", "lshTopK or ivfTopK")
+  }
+
+  test("marginMine refuses a query side one row past the driver limit") {
+    assertRefused(graft.similarity.Ann.marginMine(twoRowCorpus,
+      oneOverLimit, k = 1), "marginMine", "split the query batch")
+  }
+
+  test("Decontam.semantic refuses a benchmark one row past the driver limit") {
+    assertRefused(graft.operators.Decontam.semantic(twoRowCorpus,
+      oneOverLimit, threshold = 0.5), "Decontam.semantic",
+      "Decontam.contaminated or contaminatedBloom")
+  }
 }
