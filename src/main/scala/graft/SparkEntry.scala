@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.api.{GraftFrame, GraftSession}
 import graft.api.GraftFrame.{asc, desc}
 import graft.dedup.Dedup
-import graft.functions.{hashfns, textfns}
+import graft.expressions.GraftFunctions
+import graft.functions.textfns
 import graft.multimodal.Multimodal
 import graft.operators.{Bpe, Decontam, Freq, Layout, Search, Shuffle}
 import graft.similarity.Ann
@@ -2222,7 +2223,7 @@ object SparkEntry {
           col("doc_id"),
           greatest(size(split(textfns.normalizeText(col("text")), " ")) - 2,
             lit(0)).as("n_grams"),
-          size(hashfns.distinctWordShingles(col("text"), 3)).as("n_distinct"),
+          size(GraftFunctions.graft_word_shingles(col("text"), 3)).as("n_distinct"),
           textfns.repetitionRatio(col("text"), 3).as("repetition"))
         .orderBy(col("doc_id").asc),
       Some(raw"""WITH words AS (
@@ -2266,7 +2267,7 @@ object SparkEntry {
       // ~1e-12 below the grid).
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val bi = docs.select(col("doc_id"),
-        explode(hashfns.wordShingles(col("text"), 2)).as("bigram"))
+        explode(GraftFunctions.graft_word_shingles_all(col("text"), 2)).as("bigram"))
       val bigramCounts = bi.groupBy("bigram").agg(count(lit(1)).as("cb"))
         .withColumn("w1", substring_index(col("bigram"), " ", 1))
       val prefixCounts = bigramCounts.groupBy("w1").agg(sum("cb").as("cw"))
@@ -4854,7 +4855,7 @@ object SparkEntry {
         .join(broadcast(short), Seq("neighbor_id"))
         .join(broadcast(qv), Seq("query_id"))
         .withColumn("score",
-          graft.expressions.GraftFunctions.graft_cosine(col("__nv"), col("__qv")))
+          GraftFunctions.graft_cosine(col("__nv"), col("__qv")))
         .withColumn("rank", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("query_id")
             .orderBy(col("score").desc, col("neighbor_id").asc)))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import graft.SmallSide
-import graft.functions.{hashfns, textfns, vecfns}
+import graft.expressions.GraftFunctions
+import graft.functions.{hashfns, textfns}
 
 /** Deduplication operators for document corpora.
   *
@@ -166,8 +167,8 @@ object Dedup {
   def contentSignature(text: Column, shingleN: Int,
                        charLevel: Boolean = false): Column = {
     val sh =
-      if (charLevel) hashfns.charShingleHashes(text, shingleN)
-      else hashfns.shingleHashes(text, shingleN)
+      if (charLevel) GraftFunctions.graft_char_shingle_hashes(text, shingleN)
+      else GraftFunctions.graft_shingle_hashes(text, shingleN)
     // sub-shingle fallback: a doc under shingleN words has an EMPTY
     // shingle set, and "equal empty sets" would give every short doc
     // the same signature — streaming dedup would then silently
@@ -193,11 +194,11 @@ object Dedup {
   private def shinglesOf(text: Column, shingleN: Int,
                          charLevel: Boolean): (Column, Column) =
     if (charLevel) {
-      val h = hashfns.charShingleHashes(text, shingleN)
+      val h = GraftFunctions.graft_char_shingle_hashes(text, shingleN)
       (h, h)
     } else
-      (hashfns.shingleHashes(text, shingleN),
-        hashfns.distinctWordShingles(text, shingleN))
+      (GraftFunctions.graft_shingle_hashes(text, shingleN),
+        GraftFunctions.graft_word_shingles(text, shingleN))
 
   /** MinHash + LSH near-duplicate pairs.
     *
@@ -258,14 +259,14 @@ object Dedup {
     // kernel output is CSE'd with the minhash input, no extra text
     // pass), 16 bytes/doc of extra shuffle.
     val sigCols = col(idCol).as("id") +:
-      graft.expressions.GraftFunctions
+      GraftFunctions
         .graft_minhash(shingleHashes, k, seed).as("sig") +:
       (if (spanning) setFingerprints(shingleHashes) else Nil)
     val sigPlan = df.select(sigCols: _*)
     val docs = if (materializeSigs) sigPlan.localCheckpoint(true) else sigPlan
     val explodedCols = (col("id") +:
       (if (spanning) Seq(col("fp1"), col("fp2")) else Nil)) :+
-      explode(hashfns.lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk")
+      explode(GraftFunctions.graft_lsh_bands(col("sig"), bands, rowsPerBand)).as("bk")
     val exploded = docs.select(explodedCols: _*)
     val candidates =
       if (spanning) spanningPairs(exploded) else boundedPairs(exploded, bucketCap)
@@ -279,7 +280,7 @@ object Dedup {
       .join(docs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(docs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("est",
-        graft.expressions.GraftFunctions.graft_minhash_agreement(col("sig_a"), col("sig_b")))
+        GraftFunctions.graft_minhash_agreement(col("sig_a"), col("sig_b")))
       .filter(col("est") >= math.max(0.0, threshold - 0.15))
       .select("id_a", "id_b")
 
@@ -324,7 +325,7 @@ object Dedup {
       .join(docs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(docs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("hamming",
-        graft.expressions.GraftFunctions.graft_hamming64(col("sig_a"), col("sig_b")))
+        GraftFunctions.graft_hamming64(col("sig_a"), col("sig_b")))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
@@ -364,7 +365,7 @@ object Dedup {
     require(maxShingleDf >= 0L,
       s"containmentPairs: maxShingleDf must be >= 0, got $maxShingleDf")
     val toks = df.select(col(idCol).as("id"),
-      explode(hashfns.distinctWordShingles(col(textCol), shingleN)).as("sh"))
+      explode(GraftFunctions.graft_word_shingles(col(textCol), shingleN)).as("sh"))
     val sizes = toks.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val joinable =
       if (maxShingleDf > 0L) {
@@ -410,14 +411,14 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 5, threshold: Double = 0.5): DataFrame = {
     val toks = df.select(col(idCol).as("id"),
-        explode(hashfns.distinctWordShingles(col(textCol), shingleN)).as("sh"))
+        explode(GraftFunctions.graft_word_shingles(col(textCol), shingleN)).as("sh"))
       .select(col("id"), xxhash64(col("sh")).as("__h1"),
         xxhash64(lit(FpSalt), col("sh")).as("__h2"))
     // one tiny row per doc reaches the exchange (sum of scan-side
     // array sizes ≡ the old per-shingle-row count, including under
     // duplicate-id inputs)
     val sizes = df.select(col(idCol).as("id"),
-        coalesce(size(hashfns.distinctWordShingles(col(textCol), shingleN)),
+        coalesce(size(GraftFunctions.graft_word_shingles(col(textCol), shingleN)),
           lit(0)).as("__n"))
       .groupBy("id").agg(sum(col("__n")).as("n_sh"))
     // merge hint: left to estimates the planner BROADCASTS one side of
@@ -667,7 +668,7 @@ object Dedup {
     val (shingleHashes, shingleSet) = shinglesOf(col(textCol), shingleN, charLevel)
     val cols = Seq(
       col(idCol).as("ref_id"),
-      graft.expressions.GraftFunctions.graft_minhash(
+      GraftFunctions.graft_minhash(
         shingleHashes, k, seed).as("sig")) ++
       setFingerprints(shingleHashes) ++
       Seq(shingleSet.as("sh"),
@@ -712,7 +713,7 @@ object Dedup {
         .otherwise(col("ref_id")))
     val sigC = {
       val cols = col(idCol).as("corpus_id") +:
-        graft.expressions.GraftFunctions.graft_minhash(
+        GraftFunctions.graft_minhash(
           shingleHashes, k, seed).as("sig_corpus_id") +:
         (if (spanning) setFingerprints(shingleHashes) else Nil)
       val plan = corpus.select(cols: _*)
@@ -730,7 +731,7 @@ object Dedup {
     def bandsOf(sig: DataFrame, as: String) = {
       val cols = (col(as) +:
         (if (spanning) Seq(col("fp1"), col("fp2")) else Nil)) :+
-        explode(hashfns.lshBandKeys(col(s"sig_$as"), bands, rowsPerBand)).as("bk")
+        explode(GraftFunctions.graft_lsh_bands(col(s"sig_$as"), bands, rowsPerBand)).as("bk")
       sig.select(cols: _*)
     }
     val candidates = if (spanning) {
@@ -756,7 +757,7 @@ object Dedup {
     }
     val estimated = candidates
       .join(sigC, "corpus_id").join(sigR, "ref_id")
-      .withColumn("est", graft.expressions.GraftFunctions
+      .withColumn("est", GraftFunctions
         .graft_minhash_agreement(col("sig_corpus_id"), col("sig_ref_id")))
       .filter(col("est") >= math.max(0.0, threshold - 0.15))
       .select("corpus_id", "ref_id")
@@ -821,7 +822,7 @@ object Dedup {
                         bucketCap: Int = 2000): DataFrame = {
     val buckets = (0 until tables).map { t =>
       struct(lit(t).as("t"),
-        vecfns.srpBucket(col(vecCol), dim, nBits, seed + t * 7919L).as("h"))
+        GraftFunctions.graft_srp_bucket(col(vecCol), nBits, seed + t * 7919L).as("h"))
     }
     val exploded = df.select(col(idCol).as("id"),
       explode(array(buckets: _*)).as("bk"))
@@ -830,7 +831,7 @@ object Dedup {
     candidates
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cosine", vecfns.cosine(col("v_a"), col("v_b")))
+      .withColumn("cosine", GraftFunctions.graft_cosine(col("v_a"), col("v_b")))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
@@ -874,12 +875,11 @@ object Dedup {
     */
   def semanticDupPairs(df: DataFrame, idCol: String, vecCol: String,
                        nCells: Int = 16, threshold: Double = 0.95,
-                       windowSize: Int = 6, seed: Long = 42L,
-                       maxTrainRows: Int = 16384): DataFrame = {
+                       windowSize: Int = 6, seed: Long = 42L): DataFrame = {
     require(nCells >= 1, s"semanticDupPairs: nCells must be positive, got $nCells")
     require(windowSize >= 1, s"semanticDupPairs: windowSize must be positive, got $windowSize")
     val spark = df.sparkSession
-    val train = graft.similarity.Ann.trainSample(df, vecCol, 1.0, maxTrainRows, seed)
+    val train = graft.similarity.Ann.trainSample(df, vecCol, seed)
     // empty or all-null-vector input: nothing to train on and nothing
     // to pair — return the empty pair frame like the other dedup
     // operators, instead of surfacing lloydKMeans' misleading
@@ -916,7 +916,7 @@ object Dedup {
       .withColumn("__p",
         explode(array((1 to windowSize).map(i => col(s"__p$i")): _*)))
       .filter(col("__p.id_r").isNotNull)
-      .withColumn("cosine", vecfns.cosine(col("v"), col("__p.v_r")))
+      .withColumn("cosine", GraftFunctions.graft_cosine(col("v"), col("__p.v_r")))
       .filter(col("cosine") >= threshold)
       .select(least(col("id"), col("__p.id_r")).as("id_a"),
         greatest(col("id"), col("__p.id_r")).as("id_b"),
@@ -950,13 +950,12 @@ object Dedup {
   def embeddingOutliers(df: DataFrame, idCol: String, vecCol: String,
                         nCells: Int = 16, zThreshold: Double = 3.0,
                         seed: Long = 42L,
-                        maxTrainRows: Int = 16384,
                         trainOn: DataFrame = null): DataFrame = {
     require(nCells >= 1, s"embeddingOutliers: nCells must be positive, got $nCells")
     require(zThreshold > 0, s"embeddingOutliers: zThreshold must be positive, got $zThreshold")
     val spark = df.sparkSession
     val trainDf = Option(trainOn).getOrElse(df)
-    val train = graft.similarity.Ann.trainSample(trainDf, vecCol, 1.0, maxTrainRows, seed)
+    val train = graft.similarity.Ann.trainSample(trainDf, vecCol, seed)
     if (train.isEmpty) {
       // self-training on a frame with no usable vectors: nothing to
       // score either — the empty result, like the other dedup ops.
@@ -1135,7 +1134,7 @@ object Dedup {
         // paragraphs banned' — two states the contract distinguishes
         when(col(textCol).isNull, lit(null).cast("string"))
           .otherwise(concat_ws(sep, filter(split(col(textCol), sepRe),
-            p => !graft.expressions.GraftFunctions
+            p => !GraftFunctions
               .graft_sorted_contains_str(col("__banned"), fpOf(p))))))
       .drop("__banned")
   }
@@ -1178,7 +1177,7 @@ object Dedup {
       .withColumn(textCol,
         when(col(textCol).isNull, lit(null).cast("string"))
           .otherwise(concat_ws(sep, filter(split(col(textCol), sepRe),
-            (_, i) => !graft.expressions.GraftFunctions
+            (_, i) => !GraftFunctions
               .graft_sorted_contains(coalesce(col("__bpos"), noBanned), i)))))
       .drop("__bpos")
   }
@@ -1266,7 +1265,7 @@ object Dedup {
     docs
       .filter(col(textCol).isNotNull)
       .select(col(idCol),
-        explode(graft.expressions.GraftFunctions
+        explode(GraftFunctions
           .graft_window_digests(col(textCol), w)).as("__wd"))
       .select(col(idCol), col("__wd.s").as("__s"),
         col("__wd.h1").as("__h1"), col("__wd.h2").as("__h2"))

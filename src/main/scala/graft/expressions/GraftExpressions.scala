@@ -1,12 +1,13 @@
 package graft.expressions
 
+import java.lang.invoke.{MethodHandle, MethodHandles, MethodType}
+
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for graft's hot loops.
   *
@@ -14,517 +15,275 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics allow; drop to a codegen'd `Expression` only where the
   * built-in composition (`zip_with` + `aggregate` higher-order
   * functions, which are interpreted per-element closures) would dominate
-  * the profile. These four are exactly those cases: ANN scoring
-  * (cosine), near-dup verification (hamming), and signature computation
-  * (minhash/simhash) run once per row × per candidate over the whole
-  * corpus.
+  * the profile: ANN scoring (cosine), near-dup verification (hamming),
+  * signature computation (minhash/simhash) and the one-pass text
+  * kernels run once per row × per candidate over the whole corpus.
   *
-  * All participate in whole-stage codegen via `nullSafeCodeGen` emitting
-  * calls to the static kernels in [[Kernels]].
+  * Each kernel is declared ONCE, as a [[Native]]: its SQL name, its
+  * column input types, its result type, its constant parameters and
+  * the [[Kernels]] method it calls. Everything else derives from that
+  * declaration: the expression ([[NativeUnary]] / [[NativeBinary]],
+  * which emit a static `graft.expressions.Kernels.<method>(…)` call
+  * inside whole-stage codegen and, when interpreted, call the same
+  * method through a handle bound once per expression), the input
+  * casts, the analysis-time type check, the `GraftFunctions` Column
+  * builder and the SQL name. A new kernel is one declaration plus one
+  * `Kernels` method.
   */
 
-/** cosine(array<float>, array<float>) → double. */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_cosine"
+/** A constant parameter of a [[Native]] kernel, baked into the
+  * generated call as a literal (`k`, `seed`, `n`, ...). `min` bounds an
+  * integer parameter at construction. */
+final case class Param(name: String, dataType: DataType,
+                       default: Option[Any] = None, min: Option[Long] = None)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+/** One native scalar kernel. `inputs` are the column inputs (one or
+  * two), each cast to its declared type; `params` follow them as
+  * constants. `planName` overrides the name plans show, for a SQL name
+  * that is a typed flavor of another kernel. */
+final case class Native(name: String, inputs: Seq[DataType], dataType: DataType,
+                        method: String, params: Seq[Param] = Nil,
+                        planName: Option[String] = None) {
+  require(inputs.size == 1 || inputs.size == 2, s"$name: one or two column inputs")
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.Kernels.cosineF($a, $b);")
+  def prettyName: String = planName.getOrElse(name)
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
+  // resolved at declaration, so a declaration whose method or types do
+  // not match `Kernels` fails when graft loads, not when a row arrives
+  @transient private lazy val target = {
+    val m = Kernels.getClass.getMethod(method,
+      (inputs ++ params.map(_.dataType)).map(CodeGenerator.javaClass): _*)
+    require(m.getReturnType == CodeGenerator.javaClass(dataType),
+      s"$name: Kernels.$method returns ${m.getReturnType}, declared $dataType")
+    MethodHandles.publicLookup().unreflect(m).bindTo(Kernels)
+  }
+  target
 
-/** dot(array<float>, array<float>) → double. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.Kernels.dotF($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-/** hamming64(bigint, bigint) → int — popcount of XOR. */
-case class HammingDistance64(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_hamming64"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = java.lang.Long.bitCount($a ^ $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-/** minhash_sig(array<bigint> element-hashes) → array<bigint> of k mins. */
-case class MinHashSignature(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_minhash"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.minHashSignature(a.asInstanceOf[ArrayData], k, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.minHashSignature($a, $k, ${seed}L);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** simhash64(array<bigint> element-hashes) → bigint. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_simhash64"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.simHash64(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.simHash64($a);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** shingle_hashes(string) → array<bigint>: distinct word-n-gram hashes. */
-case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_shingle_hashes"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.shingleHashes(a.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.shingleHashes($a, $n);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** char_shingle_hashes(string) → array<bigint>: code-point n-grams. */
-case class CharShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_char_shingle_hashes"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.charShingleHashes(a.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.charShingleHashes($a, $n);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** word_shingles(string) → array<string>: word-n-gram strings —
-  * distinct set by default, every occurrence with `all = true`. */
-case class WordShingleStrings(child: Expression, n: Int, all: Boolean = false)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String =
-    if (all) "graft_word_shingles_all" else "graft_word_shingles"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.wordShingleStrings(a.asInstanceOf[UTF8String], n, all)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.wordShingleStrings($a, $n, $all);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** text_stats(string) → struct: one-pass corpus text statistics
-  * (stopword hits per language, token/punct/char counts) — see
-  * [[Kernels.textStats]] for the exact regex-twin semantics. */
-case class TextStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextStats.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_text_stats"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.textStats(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.textStats($a);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object TextStats {
-  val schema: StructType = StructType(Seq(
-    StructField("s_en", IntegerType, nullable = false),
-    StructField("s_de", IntegerType, nullable = false),
-    StructField("s_fr", IntegerType, nullable = false),
-    StructField("s_es", IntegerType, nullable = false),
-    StructField("s_zh", IntegerType, nullable = false),
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_punct", IntegerType, nullable = false),
-    StructField("n_chars", IntegerType, nullable = false)))
-}
-
-/** gopher_stats(string) → struct: one-pass Gopher hard-rule statistics
-  * (word/char/symbol/alpha-word counts, line bullet/ellipsis counts,
-  * distinct required stopwords) — see [[Kernels.gopherStats]] for the
-  * exact regex-twin semantics. */
-case class GopherStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = GopherStats.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_gopher_stats"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.gopherStats(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.gopherStats($a);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object GopherStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_wchars", IntegerType, nullable = false),
-    StructField("n_sym", IntegerType, nullable = false),
-    StructField("n_alpha", IntegerType, nullable = false),
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_bullet", IntegerType, nullable = false),
-    StructField("n_ellipsis", IntegerType, nullable = false),
-    StructField("n_stop", IntegerType, nullable = false)))
-}
-
-/** lsh_bands(array<bigint> signature) → array<bigint> of band keys. */
-case class LshBandKeys(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_lsh_bands"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.lshBandKeys(a.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.lshBandKeys($a, $bands, $rowsPerBand);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** minhash_agreement(array<bigint>, array<bigint>) → double ∈ [0,1]. */
-case class MinHashAgreement(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_minhash_agreement"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.minHashAgreement(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.Kernels.minHashAgreement($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-/** srp_bucket(array<float>) → bigint — packed LSH sign bits. */
-case class SrpBucket(child: Expression, nBits: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_srp_bucket"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.srpBucket(a.asInstanceOf[ArrayData], nBits, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.srpBucket($a, $nBits, ${seed}L);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** srp_probes(array<float>) → array<bigint> — query-directed
-  * multiprobe LSH codes: base bucket + lowest-|margin| bit flips.
-  * See [[Kernels.srpProbes]]. */
-case class SrpProbes(child: Expression, nBits: Int, seed: Long, probes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_srp_probes"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.srpProbes(a.asInstanceOf[ArrayData], nBits, seed, probes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.srpProbes($a, $nBits, ${seed}L, $probes);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** fingerprint64(string) → bigint — polynomial rolling hash. */
-case class PolyFingerprint(child: Expression, base: Long = 257L)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_fingerprint64"
-
-  override def nullSafeEval(a: Any): Any =
-    Kernels.polyFingerprint(a.asInstanceOf[UTF8String], base)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.polyFingerprint($a, ${base}L);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** sorted_rank(array<double> sorted ASC, double) → bigint: the number
-  * of array elements strictly below the probe (lower bound) — the
-  * equi-depth bucket rank for z-order clustering. The composed
-  * alternative (a chained `when(v > q, 1)` sum over 2^bits − 1 cut
-  * literals) evaluates every comparison for every row — 255 branches
-  * per column per written row at the default bits=8; this is one
-  * O(log cuts) binary-search call inside codegen. Sortedness is the
-  * caller's contract (approxQuantile output is non-decreasing); equal
-  * consecutive cuts collapse to one boundary, exactly like the
-  * strict-< count they replace. */
-case class SortedRank(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_sorted_rank"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<double>, double), " +
-            s"got (${l.simpleString}, ${r.simpleString})")
+  /** The kernel over `args`, the one place inputs are cast and
+    * constants bound — both the SQL name and the Column builder build
+    * through here. The first `inputs.size` args are the column inputs,
+    * each cast to its declared type; the rest are constant parameters,
+    * and missing trailing ones take their defaults. */
+  def expr(args: Seq[Expression]): Expression = {
+    val (cols, consts) = args.splitAt(inputs.size)
+    require(cols.size == inputs.size && consts.size <= params.size,
+      s"$name takes ${inputs.size} column input(s) and at most ${params.size} " +
+        s"constant(s), got ${args.size} argument(s)")
+    val values = params.zipWithIndex.map { case (p, i) =>
+      val v = consts.lift(i) match {
+        case Some(e) =>
+          val c = if (e.foldable) Cast(e, p.dataType).eval() else null
+          require(c != null, s"$name: ${p.name} must be a non-null constant, got ${e.sql}")
+          c
+        case None => p.default.getOrElse(
+          throw new IllegalArgumentException(s"$name: missing parameter ${p.name}"))
+      }
+      p.min.foreach(m => require(v.asInstanceOf[Number].longValue >= m,
+        s"$name: ${p.name} must be >= $m, got $v"))
+      v
     }
+    node(cols.zip(inputs).map { case (e, t) => Cast(e, t) }, values)
+  }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sortedRankD(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
+  /** Column builder: `Column` arguments are the inputs, any other
+    * value a constant parameter. */
+  def apply(args: Any*): Column = Bridge.column(expr(args.map {
+    case c: Column => Bridge.expression(c)
+    case v => Literal(v)
+  }))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.Kernels.sortedRankD($a, $b);")
+  /** The kernel's expression over `children` exactly as given — no
+    * casts; a mistyped child fails analysis. */
+  def node(children: Seq[Expression], values: Seq[Any]): Expression = children match {
+    case Seq(c) => NativeUnary(this, c, values)
+    case Seq(l, r) => NativeBinary(this, l, r, values)
+  }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-/** sorted_contains(array<T> sorted ASC, T) → boolean for T ∈
-  * {bigint, string} — binary-search membership probe for broadcast
-  * banned/allow sets. `array_contains` scans linearly: at B set
-  * elements × P probes that is O(P·B) work (the stress gate measured
-  * paragraphDedup growing 25× for 10× data exactly because its banned
-  * set grows WITH the corpus); this probe is O(P·log B). The string
-  * flavor exists so md5-fingerprint sets keep their 128-bit collision
-  * bound rather than degrading to a 64-bit rehash. The caller owns the
-  * sortedness contract (build the set with `sort_array`; Spark's
-  * string sort and `UTF8String.compareTo` are both binary-lexicographic
-  * so they agree) and the no-null-elements contract. */
-case class SortedContains(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_sorted_contains"
-
-  // analysis-time type gate: the kernels read raw ArrayData slots
-  // (getLong / UTF8String), so a mistyped raw-expression use (e.g.
-  // array<int>) would otherwise pass analysis and corrupt or
-  // ClassCastException at execution. The Column/SQL wrappers cast, but
-  // the expression must hold its own contract.
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), LongType) |
-           (ArrayType(StringType, _), StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<bigint>, bigint) or (array<string>, string), " +
-            s"got (${l.simpleString}, ${r.simpleString})")
+  private[expressions] def check(got: Seq[DataType]): TypeCheckResult = {
+    def accepts(want: DataType, have: DataType): Boolean = (want, have) match {
+      case (ArrayType(w, _), ArrayType(h, _)) => accepts(w, h)
+      case _ => want == have
     }
+    if (inputs.zip(got).forall { case (w, h) => accepts(w, h) })
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name expects (${inputs.map(_.simpleString).mkString(", ")}), " +
+        s"got (${got.map(_.simpleString).mkString(", ")})")
+  }
 
-  private def stringProbe: Boolean = right.dataType == StringType
+  /** The kernel with the constants `values` bound, typed
+    * `(Object, ...) Object` over the column inputs alone: what the
+    * interpreted `eval` calls per row, with no per-row array. */
+  private[expressions] def invoker(values: Seq[Any]): MethodHandle =
+    MethodHandles.insertArguments(target, inputs.size, values.map(_.asInstanceOf[AnyRef]): _*)
+      .asType(MethodType.genericMethodType(inputs.size))
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (stringProbe)
-      Kernels.sortedContainsUtf8(a.asInstanceOf[ArrayData], b.asInstanceOf[UTF8String])
-    else
-      Kernels.sortedContains(a.asInstanceOf[ArrayData], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      if (stringProbe)
-        s"${ev.value} = graft.expressions.Kernels.sortedContainsUtf8($a, $b);"
-      else
-        s"${ev.value} = graft.expressions.Kernels.sortedContains($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-/** sorted_intersect(array<bigint>, array<bigint>) → array<bigint>:
-  * two-pointer intersection of ASC-sorted distinct long arrays (the
-  * q64 adjacency-intersection kernel). `array_intersect` allocates a
-  * boxed hash set per ROW; this is O(|a|+|b|) on primitive slots.
-  * Caller owns the sorted+distinct contract on both inputs; output is
-  * ASC-sorted, set-equal to array_intersect's. */
-case class SortedIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_sorted_intersect"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<bigint>, array<bigint>), " +
-            s"got (${l.simpleString}, ${r.simpleString})")
+  private[expressions] def callCode(ev: ExprCode, args: Seq[String], values: Seq[Any]): String = {
+    val consts = values.map {
+      case l: Long => s"${l}L"
+      case v => v.toString
     }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sortedIntersectL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.Kernels.sortedIntersectL($a, $b);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
+    s"${ev.value} = graft.expressions.Kernels.$method(${(args ++ consts).mkString(", ")});"
+  }
 }
 
-/** window_digests(string, w) → array<struct<s,h1,h2>>: every sliding
-  * w-word window of the normalized text as a (start, dual-64-bit
-  * digest) row — see [[Kernels.windowDigestPairs]] for the fused
-  * semantics and the collision standard. */
-case class WindowDigests(child: Expression, w: Int) extends UnaryExpression {
-  require(w >= 1, s"graft_window_digests: w must be >= 1, got $w")
-  override def dataType: DataType = WindowDigests.schema
+/** The declarations: one per kernel. */
+object Native {
+  private val declared = Seq.newBuilder[Native]
+  private def declare(k: Native): Native = { declared += k; k }
+  private val floatArr = ArrayType(FloatType)
+  private val longArr = ArrayType(LongType)
+  private val longs = ArrayType(LongType, containsNull = false)
+  private def int(name: String) = Param(name, IntegerType)
+  private def long(name: String) = Param(name, LongType)
+  private def ints(fields: String*) =
+    StructType(fields.map(StructField(_, IntegerType, nullable = false)))
+
+  val FingerprintBase = 257L
+
+  /** cosine(array<float>, array<float>) → double (0.0 on length mismatch or zero norm). */
+  val cosine = declare(Native("graft_cosine", Seq(floatArr, floatArr), DoubleType, "cosineF"))
+  /** dot(array<float>, array<float>) → double. */
+  val dot = declare(Native("graft_dot", Seq(floatArr, floatArr), DoubleType, "dotF"))
+  /** hamming64(bigint, bigint) → int: popcount of XOR. */
+  val hamming64 = declare(Native("graft_hamming64", Seq(LongType, LongType), IntegerType,
+    "hamming64"))
+  /** minhash(array<bigint> element hashes) → k-permutation signature. */
+  val minhash = declare(Native("graft_minhash", Seq(longArr), longs, "minHashSignature",
+    Seq(int("k"), long("seed"))))
+  /** simhash64(array<bigint> element hashes) → bigint. */
+  val simhash64 = declare(Native("graft_simhash64", Seq(longArr), LongType, "simHash64"))
+  /** shingle_hashes(string) → distinct word-n-gram hashes. */
+  val shingleHashes = declare(Native("graft_shingle_hashes", Seq(StringType), longs,
+    "shingleHashes", Seq(int("n"))))
+  /** char_shingle_hashes(string) → distinct code-point n-gram hashes. */
+  val charShingleHashes = declare(Native("graft_char_shingle_hashes", Seq(StringType), longs,
+    "charShingleHashes", Seq(int("n"))))
+  /** word_shingles(string) → distinct word-n-gram strings. */
+  val wordShingles = declare(Native("graft_word_shingles", Seq(StringType),
+    ArrayType(StringType, false), "wordShingleStrings", Seq(int("n"))))
+  /** word_shingles_all(string) → every word-n-gram occurrence, in order. */
+  val wordShinglesAll = declare(Native("graft_word_shingles_all", Seq(StringType),
+    ArrayType(StringType, false), "wordShinglesAll", Seq(int("n"))))
+  /** text_stats(string) → one-pass stopword/token/punct/char counts. */
+  val textStats = declare(Native("graft_text_stats", Seq(StringType),
+    ints("s_en", "s_de", "s_fr", "s_es", "s_zh", "n_words", "n_punct", "n_chars"), "textStats"))
+  /** gopher_stats(string) → one-pass Gopher hard-rule statistics. */
+  val gopherStats = declare(Native("graft_gopher_stats", Seq(StringType),
+    ints("n_words", "n_wchars", "n_sym", "n_alpha", "n_lines", "n_bullet", "n_ellipsis",
+      "n_stop"), "gopherStats"))
+  /** lsh_bands(array<bigint> signature) → one key per band. */
+  val lshBands = declare(Native("graft_lsh_bands", Seq(longArr), longs, "lshBandKeys",
+    Seq(int("bands"), int("rowsPerBand"))))
+  /** minhash_agreement(array<bigint>, array<bigint>) → double ∈ [0,1]. */
+  val minhashAgreement = declare(Native("graft_minhash_agreement", Seq(longArr, longArr),
+    DoubleType, "minHashAgreement"))
+  /** srp_bucket(array<float>) → bigint of packed LSH sign bits. */
+  val srpBucket = declare(Native("graft_srp_bucket", Seq(floatArr), LongType, "srpBucket",
+    Seq(int("nBits"), long("seed"))))
+  /** srp_probes(array<float>) → base bucket + lowest-|margin| bit flips. */
+  val srpProbes = declare(Native("graft_srp_probes", Seq(floatArr), longs, "srpProbes",
+    Seq(int("nBits"), long("seed"), int("probes"))))
+  /** fingerprint64(string) → bigint polynomial rolling hash. */
+  val fingerprint64 = declare(Native("graft_fingerprint64", Seq(StringType), LongType,
+    "polyFingerprint", Seq(Param("base", LongType, Some(FingerprintBase)))))
+  /** sorted_rank(array<double> sorted ASC, double) → bigint: the number
+    * of elements strictly below the probe — the equi-depth bucket rank
+    * for z-order clustering, one O(log cuts) call instead of a 2^bits−1
+    * term comparison fold. Sortedness is the caller's contract. */
+  val sortedRank = declare(Native("graft_sorted_rank", Seq(ArrayType(DoubleType), DoubleType),
+    LongType, "sortedRankD"))
+  /** sorted_contains(array<bigint> sorted ASC, bigint) → boolean:
+    * O(log B) membership for broadcast banned/allow sets, where
+    * `array_contains` scans linearly. The caller owns the sortedness
+    * and no-null-elements contract. */
+  val sortedContains = declare(Native("graft_sorted_contains", Seq(longArr, LongType),
+    BooleanType, "sortedContains"))
+  /** The string flavor, so md5-fingerprint sets keep their 128-bit
+    * collision bound (`sort_array` and `UTF8String.compareTo` are both
+    * binary-lexicographic). */
+  val sortedContainsStr = declare(Native("graft_sorted_contains_str",
+    Seq(ArrayType(StringType), StringType), BooleanType, "sortedContainsUtf8",
+    planName = Some("graft_sorted_contains")))
+  /** sorted_intersect(array<bigint>, array<bigint>) → two-pointer
+    * intersection of ASC-sorted distinct arrays, set-equal to
+    * `array_intersect` without its per-row boxed hash set. */
+  val sortedIntersect = declare(Native("graft_sorted_intersect", Seq(longArr, longArr), longs,
+    "sortedIntersectL"))
+  /** window_digests(string) → array<struct<s,h1,h2>>: every sliding
+    * w-word window as (start, dual 64-bit digest). */
+  val windowDigests = declare(Native("graft_window_digests", Seq(StringType),
+    ArrayType(StructType(Seq("s", "h1", "h2").map(StructField(_, LongType, nullable = false))),
+      containsNull = false),
+    "windowDigestPairs", Seq(Param("w", IntegerType, min = Some(1L)))))
+
+  /** Every declaration above, in declaration order. */
+  val all: Seq[Native] = declared.result()
+}
+
+/** What the unary and binary forms share: everything but the arity. */
+sealed trait NativeCall extends Expression {
+  def kernel: Native
+  def params: Seq[Any]
+  override def dataType: DataType = kernel.dataType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_window_digests"
+  override def prettyName: String = kernel.prettyName
+  override def checkInputDataTypes(): TypeCheckResult = kernel.check(children.map(_.dataType))
+  // plans print the inputs, then the constants: graft_minhash(h#1, 128, 1)
+  override protected def stringArgs: Iterator[Any] = children.iterator ++ params.iterator
+}
 
-  override def nullSafeEval(a: Any): Any =
-    Kernels.windowDigestPairs(a.asInstanceOf[UTF8String], w)
-
+/** A native kernel over one column input. */
+case class NativeUnary(kernel: Native, child: Expression, params: Seq[Any])
+    extends UnaryExpression with NativeCall {
+  @transient private lazy val run = kernel.invoker(params)
+  override def nullSafeEval(a: Any): Any = run.invokeExact(a.asInstanceOf[AnyRef]): AnyRef
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.expressions.Kernels.windowDigestPairs($a, $w);")
-
+    nullSafeCodeGen(ctx, ev, a => kernel.callCode(ev, Seq(a), params))
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-object WindowDigests {
-  val schema: DataType = ArrayType(StructType(Seq(
-    StructField("s", LongType, nullable = false),
-    StructField("h1", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false))), containsNull = false)
+/** A native kernel over two column inputs. */
+case class NativeBinary(kernel: Native, left: Expression, right: Expression, params: Seq[Any])
+    extends BinaryExpression with NativeCall {
+  @transient private lazy val run = kernel.invoker(params)
+  override def nullSafeEval(a: Any, b: Any): Any =
+    run.invokeExact(a.asInstanceOf[AnyRef], b.asInstanceOf[AnyRef]): AnyRef
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => kernel.callCode(ev, Seq(a, b), params))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+    copy(left = l, right = r)
 }
 
 /** Column-level API + SQL registration for the native expressions. */
 object GraftFunctions {
+  import Native._
 
-  // Column builders cast array inputs to the kernel element type: the
-  // expressions skip analysis-time type checks (AbstractDataType is
-  // private[sql]), and an array<double> read via getFloat would return
-  // garbage silently rather than fail.
-  private def asFloatArr(c: Column) = c.cast("array<float>")
-
-  def graft_cosine(a: Column, b: Column): Column =
-    Bridge.column(CosineSimilarity(Bridge.expression(asFloatArr(a)), Bridge.expression(asFloatArr(b))))
-  def graft_dot(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(asFloatArr(a)), Bridge.expression(asFloatArr(b))))
-  def graft_hamming64(a: Column, b: Column): Column = Bridge.column(HammingDistance64(Bridge.expression(a), Bridge.expression(b)))
-  def graft_minhash(hashes: Column, k: Int, seed: Long): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(hashes.cast("array<bigint>")), k, seed))
+  def graft_cosine(a: Column, b: Column): Column = cosine(a, b)
+  def graft_dot(a: Column, b: Column): Column = dot(a, b)
+  def graft_hamming64(a: Column, b: Column): Column = hamming64(a, b)
+  def graft_minhash(hashes: Column, k: Int, seed: Long): Column = minhash(hashes, k, seed)
   def graft_lsh_bands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    Bridge.column(LshBandKeys(Bridge.expression(sig.cast("array<bigint>")), bands, rowsPerBand))
-  def graft_simhash64(hashes: Column): Column = Bridge.column(SimHash64(Bridge.expression(hashes)))
-  def graft_srp_bucket(vec: Column, nBits: Int, seed: Long): Column =
-    Bridge.column(SrpBucket(Bridge.expression(asFloatArr(vec)), nBits, seed))
-  def graft_minhash_agreement(a: Column, b: Column): Column =
-    Bridge.column(MinHashAgreement(Bridge.expression(a), Bridge.expression(b)))
-  def graft_shingle_hashes(text: Column, n: Int): Column =
-    Bridge.column(ShingleHashes(Bridge.expression(text), n))
-  def graft_word_shingles(text: Column, n: Int): Column =
-    Bridge.column(WordShingleStrings(Bridge.expression(text), n))
-  def graft_word_shingles_all(text: Column, n: Int): Column =
-    Bridge.column(WordShingleStrings(Bridge.expression(text), n, all = true))
-  def graft_text_stats(text: Column): Column =
-    Bridge.column(TextStats(Bridge.expression(text)))
-  def graft_gopher_stats(text: Column): Column =
-    Bridge.column(GopherStats(Bridge.expression(text)))
-  def graft_char_shingle_hashes(text: Column, n: Int): Column =
-    Bridge.column(CharShingleHashes(Bridge.expression(text), n))
-  def graft_fingerprint64(text: Column, base: Long = 257L): Column =
-    Bridge.column(PolyFingerprint(Bridge.expression(text), base))
-
+    lshBands(sig, bands, rowsPerBand)
+  def graft_simhash64(hashes: Column): Column = simhash64(hashes)
+  def graft_srp_bucket(vec: Column, nBits: Int, seed: Long): Column = srpBucket(vec, nBits, seed)
+  def graft_minhash_agreement(a: Column, b: Column): Column = minhashAgreement(a, b)
+  def graft_shingle_hashes(text: Column, n: Int): Column = shingleHashes(text, n)
+  def graft_word_shingles(text: Column, n: Int): Column = wordShingles(text, n)
+  def graft_word_shingles_all(text: Column, n: Int): Column = wordShinglesAll(text, n)
+  def graft_text_stats(text: Column): Column = textStats(text)
+  def graft_gopher_stats(text: Column): Column = gopherStats(text)
+  def graft_char_shingle_hashes(text: Column, n: Int): Column = charShingleHashes(text, n)
+  def graft_fingerprint64(text: Column, base: Long = FingerprintBase): Column =
+    fingerprint64(text, base)
   def graft_srp_probes(vec: Column, nBits: Int, seed: Long, probes: Int): Column =
-    Bridge.column(SrpProbes(Bridge.expression(asFloatArr(vec)), nBits, seed, probes))
-
-  def graft_sorted_contains(sortedArr: Column, v: Column): Column =
-    Bridge.column(SortedContains(
-      Bridge.expression(sortedArr.cast("array<bigint>")),
-      Bridge.expression(v.cast("bigint"))))
-
+    srpProbes(vec, nBits, seed, probes)
+  def graft_sorted_contains(sortedArr: Column, v: Column): Column = sortedContains(sortedArr, v)
   def graft_sorted_contains_str(sortedArr: Column, v: Column): Column =
-    Bridge.column(SortedContains(
-      Bridge.expression(sortedArr.cast("array<string>")),
-      Bridge.expression(v.cast("string"))))
-
-  def graft_sorted_rank(sortedArr: Column, v: Column): Column =
-    Bridge.column(SortedRank(
-      Bridge.expression(sortedArr.cast("array<double>")),
-      Bridge.expression(v.cast("double"))))
-
-  def graft_sorted_intersect(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersect(
-      Bridge.expression(a.cast("array<bigint>")),
-      Bridge.expression(b.cast("array<bigint>"))))
-
-  def graft_window_digests(text: Column, w: Int): Column =
-    Bridge.column(WindowDigests(Bridge.expression(text.cast("string")), w))
+    sortedContainsStr(sortedArr, v)
+  def graft_sorted_rank(sortedArr: Column, v: Column): Column = sortedRank(sortedArr, v)
+  def graft_sorted_intersect(a: Column, b: Column): Column = sortedIntersect(a, b)
+  def graft_window_digests(text: Column, w: Int): Column = windowDigests(text, w)
 
   /** One-pass exact Gram/moment aggregate over quantized vectors —
     * see [[GramMatrix]]. The input is NOT auto-cast: a raw
@@ -543,39 +302,13 @@ object GraftFunctions {
       keys.map(c => Bridge.expression(c.cast("double"))), k)
       .toAggregateExpression())
 
-  /** Register SQL names so `spark.sql("SELECT graft_cosine(a,b) ...")`
-    * works — parity with the reference's goal of "write ordinary
-    * queries, engine executes them natively".
-    *
-    * Each argument is wrapped in a `Cast` to the kernel's element type,
-    * mirroring the Column builders above: the kernels read raw
-    * `ArrayData` slots (getFloat/getLong), so an uncast array<double>
-    * would decode as garbage silently instead of failing analysis.
-    */
+  /** Register every declared kernel's SQL name, so
+    * `spark.sql("SELECT graft_cosine(a, b) ...")` works — parity with
+    * the reference's goal of "write ordinary queries, engine executes
+    * them natively". Constant parameters follow the column inputs:
+    * `graft_minhash(h, 128, 42)`. */
   def register(spark: SparkSession): Unit = {
     val registry = Bridge.sessionState(spark).functionRegistry
-    val floatArr = ArrayType(FloatType)
-    val longArr = ArrayType(LongType)
-    def c(e: Expression, t: DataType): Expression = Cast(e, t)
-    registry.createOrReplaceTempFunction("graft_cosine",
-      es => CosineSimilarity(c(es.head, floatArr), c(es(1), floatArr)), "built-in")
-    registry.createOrReplaceTempFunction("graft_dot",
-      es => DotProduct(c(es.head, floatArr), c(es(1), floatArr)), "built-in")
-    registry.createOrReplaceTempFunction("graft_hamming64",
-      es => HammingDistance64(c(es.head, LongType), c(es(1), LongType)), "built-in")
-    registry.createOrReplaceTempFunction("graft_simhash64",
-      es => SimHash64(c(es.head, longArr)), "built-in")
-    registry.createOrReplaceTempFunction("graft_fingerprint64",
-      es => PolyFingerprint(c(es.head, StringType)), "built-in")
-    registry.createOrReplaceTempFunction("graft_text_stats",
-      es => TextStats(c(es.head, StringType)), "built-in")
-    registry.createOrReplaceTempFunction("graft_gopher_stats",
-      es => GopherStats(c(es.head, StringType)), "built-in")
-    registry.createOrReplaceTempFunction("graft_sorted_contains",
-      es => SortedContains(c(es.head, longArr), c(es(1), LongType)), "built-in")
-    registry.createOrReplaceTempFunction("graft_sorted_contains_str",
-      es => SortedContains(c(es.head, ArrayType(StringType)), c(es(1), StringType)), "built-in")
-    registry.createOrReplaceTempFunction("graft_sorted_rank",
-      es => SortedRank(c(es.head, ArrayType(DoubleType)), c(es(1), DoubleType)), "built-in")
+    Native.all.foreach(k => registry.createOrReplaceTempFunction(k.name, k.expr, "built-in"))
   }
 }

@@ -40,6 +40,9 @@ object Kernels {
     dot
   }
 
+  /** Hamming distance of two 64-bit hashes: popcount of their XOR. */
+  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
+
   /** Java/RE2 regex `\s`: [ \t\n\x0B\f\r] — the EXACT whitespace
     * set the oracle-replayed `regexp_replace(text, '\s+', ' ')`
     * formulations split on. Character.isWhitespace and String.trim
@@ -264,6 +267,10 @@ object Kernels {
     * consumers (explode→group, intersect) are order-insensitive. */
   def wordShingleStrings(s: UTF8String, n: Int): ArrayData =
     wordShingleStrings(s, n, keepDuplicates = false)
+
+  /** Every word n-gram shingle occurrence, in order. */
+  def wordShinglesAll(s: UTF8String, n: Int): ArrayData =
+    wordShingleStrings(s, n, keepDuplicates = true)
 
   /** As above; `keepDuplicates = true` emits EVERY shingle occurrence
     * in order — the multiset consumers (bigram language models,
@@ -704,7 +711,7 @@ object Kernels {
   }
 
   /** Binary search over a SORTED-ascending array<bigint> — the O(log B)
-    * membership probe behind [[graft.expressions.SortedContains]].
+    * membership probe behind [[graft.expressions.Native.sortedContains]].
     * Empty arrays return false. */
   def sortedContains(arr: ArrayData, v: Long): Boolean = {
     var lo = 0

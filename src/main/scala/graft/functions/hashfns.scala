@@ -14,49 +14,13 @@ import graft.expressions.GraftFunctions
   */
 object hashfns {
 
-  /** Word n-gram shingles of the normalized text, EVERY occurrence in
-    * order (multiset semantics — LM counting, repetition measures).
-    * One-pass codegen kernel; empty array when the document has fewer
-    * than `n` words. */
-  def wordShingles(text: Column, n: Int): Column =
-    GraftFunctions.graft_word_shingles_all(text, n)
-
-  /** Distinct word n-gram shingle strings via the one-pass codegen
-    * kernel — semantically `array_distinct(wordShingles(text, n))`
-    * (set-equal; element order differs, which set consumers ignore). */
-  def distinctWordShingles(text: Column, n: Int): Column =
-    GraftFunctions.graft_word_shingles(text, n)
-
-  /** Distinct code-point n-gram hashes — the signature input for
-    * scripts without word boundaries (CJK/Thai), one-pass kernel. */
-  def charShingleHashes(text: Column, n: Int): Column =
-    GraftFunctions.graft_char_shingle_hashes(text, n)
-
-  /** Distinct 64-bit hashes of the shingle set — the input every
-    * signature (minhash/simhash) consumes. Single codegen kernel
-    * (normalize→split→window-hash→dedup in one pass); the composed
-    * transform/array_distinct/xxhash64 chain evaluates interpreted
-    * lambdas per shingle and is ~100× slower. */
-  def shingleHashes(text: Column, n: Int): Column =
-    GraftFunctions.graft_shingle_hashes(text, n)
-
   /** k-element MinHash signature (custom codegen expression). */
   def minHashSig(text: Column, n: Int, k: Int, seed: Long): Column =
-    GraftFunctions.graft_minhash(shingleHashes(text, n), k, seed)
-
-  /** LSH band keys: the signature split into `bands` bands of
-    * `rowsPerBand` values, each band hashed to one 64-bit key. Two docs
-    * collide on a band key iff their signatures agree on that whole
-    * band — the classic (b, r) S-curve knob. Native one-pass kernel:
-    * the composed slice/cast-to-string/concat/xxhash64 chain it
-    * replaces allocated per-band slices and decimal strings per row
-    * and was the single hottest step of the whole LSH pipeline. */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    GraftFunctions.graft_lsh_bands(sig, bands, rowsPerBand)
+    GraftFunctions.graft_minhash(GraftFunctions.graft_shingle_hashes(text, n), k, seed)
 
   /** 64-bit SimHash of the shingle set. */
   def simHashSig(text: Column, n: Int): Column =
-    GraftFunctions.graft_simhash64(shingleHashes(text, n))
+    GraftFunctions.graft_simhash64(GraftFunctions.graft_shingle_hashes(text, n))
 
   /** Pigeonhole block keys for hamming-distance search: split the
     * 64-bit simhash into `blocks` bit-blocks; two hashes within

@@ -152,7 +152,7 @@ object textfns {
     * both scan-side. */
   def repetitionRatio(text: Column, n: Int): Column = {
     val total = size(split(normalizeText(text), " ")) - (n - 1)
-    val dist = size(graft.functions.hashfns.distinctWordShingles(text, n))
+    val dist = size(graft.expressions.GraftFunctions.graft_word_shingles(text, n))
     // dist === 0 with total > 0 is the blank-document artifact: split
     // of an empty normalized string yields [""] (one phantom token),
     // so n=1 would score a zero-n-gram document as maximally

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.expressions.GraftFunctions
 
 /** Vector column functions over `array<float>` embedding columns.
   *
@@ -12,9 +11,6 @@ import graft.expressions.GraftFunctions
   * interpreted per element — measurably slower at corpus scale).
   */
 object vecfns {
-
-  def cosine(a: Column, b: Column): Column = GraftFunctions.graft_cosine(a, b)
-  def dot(a: Column, b: Column): Column = GraftFunctions.graft_dot(a, b)
 
   def norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x.cast("double") * x.cast("double")))
@@ -26,27 +22,4 @@ object vecfns {
     val na = norm(a); val nb = norm(b)
     when(na === 0 || nb === 0, lit(0.0)).otherwise(d / (na * nb))
   }
-
-  /** Random-hyperplane (SRP) LSH bucket key: `nBits` sign bits of dot
-    * products with seeded pseudo-random hyperplanes, packed into one
-    * long. Cosine-similar vectors collide with probability
-    * 1 - theta/pi per bit. Hyperplane coefficients derive from
-    * (seed, bit, dim) hashes — no broadcast state, reproducible on
-    * every executor. Codegen'd single-kernel expression: a composed
-    * per-element Column tree at dim=64 × nBits=12 is ~800 nodes, which
-    * overflows janino and drops the whole stage to interpreted eval.
-    * (`dim` retained for API stability; the kernel reads the array
-    * length.) */
-  def srpBucket(vec: Column, dim: Int, nBits: Int, seed: Long): Column =
-    GraftFunctions.graft_srp_bucket(vec, nBits, seed)
-
-  /** Query-directed multiprobe codes for [[srpBucket]]'s bucket space:
-    * array of `probes` distinct codes — the base bucket first, then
-    * flips of the lowest-|margin| bits (the hyperplanes the query sits
-    * closest to, i.e. the bits a true near neighbor most likely
-    * disagrees on). Probing is QUERY-side only: the corpus keeps one
-    * bucket per table, so multiprobe buys recall without growing the
-    * corpus-side index — the multiprobe-LSH tradeoff. */
-  def srpProbes(vec: Column, dim: Int, nBits: Int, seed: Long, probes: Int): Column =
-    GraftFunctions.graft_srp_probes(vec, nBits, seed, probes)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SmallSide
 import graft.dedup.Dedup
-import graft.functions.hashfns
+import graft.expressions.GraftFunctions
 
 /** Train/test contamination check: how much of each corpus document is
   * covered by a benchmark (evaluation-set) corpus.
@@ -36,11 +36,11 @@ object Decontam {
                   idCol: String, textCol: String,
                   shingleN: Int = 5): DataFrame = {
     val probe = bench
-      .select(explode(hashfns.distinctWordShingles(col(textCol), shingleN)).as("sh"))
+      .select(explode(GraftFunctions.graft_word_shingles(col(textCol), shingleN)).as("sh"))
       .distinct()
       .withColumn("__hit", lit(1))
     val docSh = corpus
-      .select(col(idCol), hashfns.distinctWordShingles(col(textCol), shingleN).as("shs"))
+      .select(col(idCol), GraftFunctions.graft_word_shingles(col(textCol), shingleN).as("shs"))
       // coalesce: under ANSI (Spark 4 default) size(null) is null, not
       // -1 — a null-text doc must report containment 0.0 per the
       // contract, not a null that poisons downstream comparisons
@@ -111,7 +111,7 @@ object Decontam {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
     val probe = bench
-      .select(explode(hashfns.distinctWordShingles(col(textCol), shingleN)).as("sh"))
+      .select(explode(GraftFunctions.graft_word_shingles(col(textCol), shingleN)).as("sh"))
       .distinct()
     // optimal bit count for the target fpp: -n ln(p) / (ln 2)^2,
     // capped at 2^26 bits (8 MB) — the engine's own runtime-filter cap
@@ -131,11 +131,12 @@ object Decontam {
     // the shingle kernel runs twice (totals + explode) — same
     // documented recompute-vs-materialize tradeoff as minHashLshPairs
     val totals = corpus.select(col(idCol),
-      coalesce(size(hashfns.distinctWordShingles(col(textCol), shingleN)),
+      coalesce(size(GraftFunctions.graft_word_shingles(col(textCol), shingleN)),
         lit(0)).as("n_sh"))
       .groupBy(idCol).agg(max(col("n_sh")).as("n_sh"))
     val survivors = corpus
-      .select(col(idCol), explode(hashfns.distinctWordShingles(col(textCol), shingleN)).as("sh"))
+      .select(col(idCol),
+        explode(GraftFunctions.graft_word_shingles(col(textCol), shingleN)).as("sh"))
       .filter(mightContain(col("sh")))
     val hits = survivors.join(probe, Seq("sh"))
       .groupBy(idCol).agg(count(lit(1)).as("n_hits"))
@@ -240,7 +241,7 @@ object Decontam {
   def semantic(corpus: DataFrame, bench: DataFrame, threshold: Double,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
-    import graft.similarity.Ann.{longDot, quantize1000}
+    import graft.similarity.Ann.{longDot, quantize1000, quantizedScore}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = corpus.sparkSession
@@ -275,13 +276,7 @@ object Decontam {
           var i = 0
           while (i < qs.length) {
             val (bid, bq, nb) = qs(i)
-            require(bq.length == qv.length,
-              s"semantic: corpus vector dim ${qv.length} != benchmark " +
-                s"vector dim ${bq.length} — mixed-dimension data is a " +
-                "pipeline bug; failing fast beats a silent prefix dot product")
-            val d = longDot(qv, bq).toDouble
-            val s = if (na == 0 || nb == 0) 0.0
-                    else math.signum(d) * d * d / (na * nb)
+            val s = quantizedScore("semantic", "benchmark", qv, na, bq, nb)
             if (s > best || (s == best && bid < bestId)) { best = s; bestId = bid }
             i += 1
           }

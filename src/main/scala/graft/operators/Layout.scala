@@ -85,7 +85,7 @@ object Layout {
     * keeping them clustered rather than scattered.
     *
     * The rank is ONE binary-search call per column per row
-    * ([[graft.expressions.SortedRank]], O(bits) comparisons) — the
+    * ([[graft.expressions.Native.sortedRank]], O(bits) comparisons) — the
     * composed `when(v > q, 1)` fold it replaced evaluated all
     * 2^bits − 1 cut comparisons per row (255 × k branches inside
     * codegen at the default bits = 8) for bit-identical output.

@@ -491,34 +491,6 @@ object Profiler {
       .orderBy(gs :+ col("category").asc: _*)
   }
 
-  /** Per-group simple linear regression y ≈ intercept + slope·x via
-    * EXACT sufficient statistics — the corpus-scale calibration fit
-    * (tokens ~ chars for budget models, bytes ~ rows, price ~
-    * quantity) in ONE aggregate pass: no solver, no iteration, no
-    * per-group collect.
-    *
-    * Exactness: x and y quantize to integers at 1/scaleX, 1/scaleY
-    * (`floor(v·scale+½)` — the library-wide discipline) and the five
-    * sufficient statistics accumulate as decimal(38,0) — integer
-    * sums, order-free exact where float sums are not. slope =
-    * cov·scaleX / (varx·scaleY) and the r² factors are each ONE
-    * IEEE-double step over exact integers, so DuckDB replays every
-    * output bit (route the oracle casts through BIGINT; statistics
-    * stay far under 10³⁸ — n·Σxy at 10¹² rows × 10⁸-scale products
-    * is ~10³², and both engines' integer→double casts are
-    * round-to-nearest).
-    *
-    * Degenerate groups by contract: constant x (varx = 0) → null
-    * slope/intercept/r²; constant y (vary = 0) → slope 0 exactly
-    * (cov is 0), r² null. Null x/y rows are excluded; null group
-    * keys are a group. Output: groupCols ++ (n, slope, intercept,
-    * r2), one row per group.
-    *
-    * Scale shape: one hash aggregate with map-side partial combine —
-    * the only pass over the data; a handful of decimal columns per
-    * group reach the final projection. Skewed group sizes are
-    * irrelevant (partial aggregation), and 10⁶ groups are as cheap
-    * as 3. */
   /** Per-group ROBUST outlier gate: median/MAD instead of mean/σ —
     * the metric-anomaly screen that heavy tails cannot hijack (one
     * pathological batch inflates a z-score's σ enough to hide
@@ -884,6 +856,34 @@ object Profiler {
           .otherwise((rowVq.cast("double") - meanQ) / sdQ).as("z")): _*)
   }
 
+  /** Per-group simple linear regression y ≈ intercept + slope·x via
+    * EXACT sufficient statistics — the corpus-scale calibration fit
+    * (tokens ~ chars for budget models, bytes ~ rows, price ~
+    * quantity) in ONE aggregate pass: no solver, no iteration, no
+    * per-group collect.
+    *
+    * Exactness: x and y quantize to integers at 1/scaleX, 1/scaleY
+    * (`floor(v·scale+½)` — the library-wide discipline) and the five
+    * sufficient statistics accumulate as decimal(38,0) — integer
+    * sums, order-free exact where float sums are not. slope =
+    * cov·scaleX / (varx·scaleY) and the r² factors are each ONE
+    * IEEE-double step over exact integers, so DuckDB replays every
+    * output bit (route the oracle casts through BIGINT; statistics
+    * stay far under 10³⁸ — n·Σxy at 10¹² rows × 10⁸-scale products
+    * is ~10³², and both engines' integer→double casts are
+    * round-to-nearest).
+    *
+    * Degenerate groups by contract: constant x (varx = 0) → null
+    * slope/intercept/r²; constant y (vary = 0) → slope 0 exactly
+    * (cov is 0), r² null. Null x/y rows are excluded; null group
+    * keys are a group. Output: groupCols ++ (n, slope, intercept,
+    * r2), one row per group.
+    *
+    * Scale shape: one hash aggregate with map-side partial combine —
+    * the only pass over the data; a handful of decimal columns per
+    * group reach the final projection. Skewed group sizes are
+    * irrelevant (partial aggregation), and 10⁶ groups are as cheap
+    * as 3. */
   def linearFitBy(df: DataFrame, xCol: String, yCol: String,
                   groupCols: Seq[String], scaleX: Long = 1L,
                   scaleY: Long = 1L): DataFrame = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
-import graft.expressions.HammingDistance64
+import graft.expressions.{Native, NativeBinary}
 
 /** Catalyst optimizer rule: algebraic identities of graft's native
   * expressions. Catalyst can't know `graft_hamming64(x, x) = 0` — the
@@ -27,7 +27,7 @@ import graft.expressions.HammingDistance64
 object SimplifyGraftExpressions extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case HammingDistance64(a, b) if a.deterministic && a.semanticEquals(b) =>
+      case NativeBinary(Native.hamming64, a, b, _) if a.deterministic && a.semanticEquals(b) =>
         if (a.nullable) If(IsNull(a), Literal(null, IntegerType), Literal(0, IntegerType))
         else Literal(0, IntegerType)
     }

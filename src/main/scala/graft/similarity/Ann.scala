@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SmallSide
 import graft.expressions.GraftFunctions
-import graft.functions.vecfns
 
 /** Approximate-nearest-neighbor search over embedding columns.
   *
@@ -43,6 +42,22 @@ import graft.functions.vecfns
   */
 object Ann {
 
+  /** The quantized score of one corpus vector `qv` against one
+    * `other`-side vector `q` (their self-dots `na`, `nb`): EXACTLY the
+    * SQL twin's arithmetic and operation order — integer dots cast to
+    * double, then sign(d)·d²/(na·nb). Shared by the exact tiers and
+    * `Decontam.semantic`; a dimension mismatch fails naming `caller`. */
+  private[graft] def quantizedScore(caller: String, other: String, qv: Array[Long],
+                                    na: Double, q: Array[Long], nb: Double): Double = {
+    require(qv.length == q.length,
+      s"$caller: corpus vector dim ${qv.length} != $other vector dim " +
+        s"${q.length} — mixed-dimension data is a pipeline bug; " +
+        "failing fast beats a silent prefix dot product")
+    val d = longDot(qv, q).toDouble
+    if (na == 0 || nb == 0) 0.0
+    else math.signum(d) * d * d / (na * nb)
+  }
+
   /** One candidate's score — THE shared kernel of the exact heap
     * tiers (bruteForceTopK + filteredTopK): the bit-identical-to-SQL
     * quantized arithmetic and the float cosine live in exactly one
@@ -50,17 +65,8 @@ object Ann {
   private def scorePair(caller: String, vec: Array[Float], qv: Array[Long],
                         na: Double, q: Array[Float], qQuantI: Array[Long],
                         qNbI: Double, quantized: Boolean): Double =
-    if (quantized) {
-      // EXACTLY the SQL twin's arithmetic (and operation order):
-      // integer dots cast to double, then sign(d)*d*d/(na*nb)
-      require(qv.length == qQuantI.length,
-        s"$caller: corpus vector dim ${qv.length} != query vector dim " +
-          s"${qQuantI.length} — mixed-dimension data is a pipeline bug; " +
-          "failing fast beats a silent prefix dot product")
-      val d = longDot(qv, qQuantI).toDouble
-      if (na == 0 || qNbI == 0) 0.0
-      else math.signum(d) * d * d / (na * qNbI)
-    } else {
+    if (quantized) quantizedScore(caller, "query", qv, na, qQuantI, qNbI)
+    else {
       require(vec.length == q.length,
         s"$caller: corpus vector dim ${vec.length} != query vector dim " +
           s"${q.length} — mixed-dimension data is a pipeline bug; failing " +
@@ -521,7 +527,6 @@ object Ann {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L,
-              trainFraction: Double = 1.0, maxTrainRows: Int = 16384,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
 
@@ -531,7 +536,7 @@ object Ann {
     // iterations) for spark.ml KMeans whose per-job overhead dwarfs
     // the arithmetic at any scale — centroids converge on a sample
     // regardless of corpus size.
-    val train = trainSample(corpus, vecCol, trainFraction, maxTrainRows, seed)
+    val train = trainSample(corpus, vecCol, seed)
     val centers = lloydKMeans(train, nCells, iters = 15, seed)
     val bc = spark.sparkContext.broadcast(centers)
 
@@ -546,7 +551,7 @@ object Ann {
       .withColumn("cell", explode(probesOf(col("qv"))))
     val cand = cells.join(broadcast(probed), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", vecfns.cosine(col("cv"), col("qv")))
+      .withColumn("score", GraftFunctions.graft_cosine(col("cv"), col("qv")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("neighbor_id").asc)
     cand.withColumn("rank", row_number().over(w))
@@ -554,42 +559,42 @@ object Ann {
       .select("query_id", "rank", "neighbor_id", "score")
   }
 
+  /** Rows in every driver-side training sample ([[trainSample]]): a
+    * 16–256-centroid Lloyd's over this many vectors converges at any
+    * corpus size. */
+  private val MaxTrainRows = 16384
+
   /** Bounded driver-side training sample for codebook/centroid
-    * estimation.
+    * estimation: at most [[MaxTrainRows]] vectors, drawn uniformly.
     *
-    * With the default `trainFraction = 1.0` the sample is made uniform
-    * AUTOMATICALLY when the corpus exceeds `maxTrainRows`: a bare
-    * `limit` would take the first rows in file order, and on a corpus
-    * sorted or clustered by content that trains biased codebooks
-    * (unbalanced IVF cells, poor PQ quantization). The size probe is
-    * one count() over the id-only projection — parquet-metadata cheap
-    * — and the sample oversamples 4× before the limit so the draw
-    * reaches `maxTrainRows` with near-certainty. Callers that know
-    * their corpus size can still pass an explicit `trainFraction` and
-    * skip the probe. */
+    * A bare `limit` would take the first rows in file order, and on a
+    * corpus sorted or clustered by content that trains biased
+    * codebooks (unbalanced IVF cells, poor PQ quantization). So the
+    * corpus is counted first — one count() over the id-only
+    * projection, parquet-metadata cheap — and, past the cap, sampled
+    * at 4× the cap over its size, so the draw reaches the cap with
+    * near-certainty. The count stays because it sizes that fraction:
+    * without it the only uniform draw is `orderBy(rand).limit` over
+    * the whole corpus, which funnels partitions × the cap vectors
+    * into one task. */
   private[graft] def trainSample(corpus: DataFrame, vecCol: String,
-                          trainFraction: Double, maxTrainRows: Int,
-                          seed: Long): Array[Array[Float]] = {
+                                 seed: Long): Array[Array[Float]] = {
+    val n = corpus.count()
     val base =
-      if (trainFraction < 1.0)
-        corpus.sample(withReplacement = false, trainFraction, seed)
-      else {
-        val n = corpus.count()
-        if (n <= maxTrainRows) corpus
-        else corpus.sample(withReplacement = false,
-          math.min(1.0, maxTrainRows * 4.0 / n), seed)
-      }
+      if (n <= MaxTrainRows) corpus
+      else corpus.sample(withReplacement = false,
+        math.min(1.0, MaxTrainRows * 4.0 / n), seed)
     // shuffle BEFORE the limit: CollectLimit drains partitions in
     // order, so `sample.limit(max)` would keep only the sampled rows
     // from the FIRST partitions — reintroducing the head-of-table bias
     // the uniform sample exists to remove. The rand sort touches only
-    // the ~4×maxTrainRows sampled rows, not the corpus.
+    // the ~4×MaxTrainRows sampled rows, not the corpus.
     // null vectors are unscoreable rows, not training signal — without
     // this filter a single null landing in the sample NPEs the
     // driver-side toArray below before any caller-side null handling
     base.select(col(vecCol).cast("array<float>"))
       .filter(col(vecCol).isNotNull)
-      .orderBy(rand(seed + 1)).limit(maxTrainRows)
+      .orderBy(rand(seed + 1)).limit(MaxTrainRows)
       .collect().map(_.getSeq[Float](0).toArray)
   }
 
@@ -809,14 +814,13 @@ object Ann {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              m: Int = 8, ksub: Int = 16, rerank: Int = 0, seed: Long = 42L,
-             trainFraction: Double = 1.0, maxTrainRows: Int = 16384,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     require(rerank == 0 || rerank >= k,
       s"pq: rerank=$rerank must be 0 (off) or >= k=$k — a shortlist smaller " +
         "than k cannot produce k reranked results")
     val shortK = if (rerank > 0) rerank else k
-    val train = trainSample(corpus, vecCol, trainFraction, maxTrainRows, seed)
+    val train = trainSample(corpus, vecCol, seed)
     require(train.nonEmpty, "pq: empty training sample")
     require(ksub >= 2 && ksub <= 256,
       s"pq: ksub=$ksub — codes are stored as one byte per subspace, so at " +
@@ -864,9 +868,8 @@ object Ann {
   }
 
   private def trainIvfPqModel(corpus: DataFrame, nCells: Int, m: Int,
-      ksub: Int, seed: Long, trainFraction: Double, maxTrainRows: Int,
-      vecCol: String): IvfPqModel = {
-    val train = trainSample(corpus, vecCol, trainFraction, maxTrainRows, seed)
+      ksub: Int, seed: Long, vecCol: String): IvfPqModel = {
+    val train = trainSample(corpus, vecCol, seed)
     require(train.nonEmpty, "ivfpq: empty training sample")
     require(ksub >= 2 && ksub <= 256,
       s"ivfpq: ksub=$ksub — byte codes cap sub-centroids at 256 (wrap would " +
@@ -941,13 +944,11 @@ object Ann {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nCells: Int = 16, nProbe: Int = 4,
                 m: Int = 8, ksub: Int = 16, rerank: Int = 0, seed: Long = 42L,
-                trainFraction: Double = 1.0, maxTrainRows: Int = 16384,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(rerank == 0 || rerank >= k,
       s"ivfpq: rerank=$rerank must be 0 (off) or >= k=$k — a shortlist " +
         "smaller than k cannot produce k reranked results")
-    val model = trainIvfPqModel(corpus, nCells, m, ksub, seed,
-      trainFraction, maxTrainRows, vecCol)
+    val model = trainIvfPqModel(corpus, nCells, m, ksub, seed, vecCol)
     val bc = broadcastModel(corpus.sparkSession, model)
     val encoded = ivfPqEncode(corpus, bc, idCol, vecCol)
     ivfPqSearchStage(encoded, corpus, queries,
@@ -1021,13 +1022,11 @@ object Ann {
     * inline result row-for-row at equal parameters — spec-pinned. */
   def buildIvfPqIndex(corpus: DataFrame, dir: String,
                       nCells: Int = 16, m: Int = 8, ksub: Int = 16,
-                      seed: Long = 42L, trainFraction: Double = 1.0,
-                      maxTrainRows: Int = 16384,
+                      seed: Long = 42L,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
-    val model = trainIvfPqModel(corpus, nCells, m, ksub, seed,
-      trainFraction, maxTrainRows, vecCol)
+    val model = trainIvfPqModel(corpus, nCells, m, ksub, seed, vecCol)
     val params = s"$nCells/$m/$ksub/$seed/${model.dim}"
     val cbRows =
       model.centers.zipWithIndex.map { case (v, c) =>
@@ -1113,7 +1112,7 @@ object Ann {
     def bucketed(df: DataFrame, idAs: String, vecAs: String) = {
       val buckets = (0 until tables).map { t =>
         struct(lit(t).as("t"),
-          vecfns.srpBucket(col(vecCol), dim, nBits, seed + t * 7919L).as("h"))
+          GraftFunctions.graft_srp_bucket(col(vecCol), nBits, seed + t * 7919L).as("h"))
       }
       df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
         explode(array(buckets: _*)).as("bk"))
@@ -1124,7 +1123,7 @@ object Ann {
       else {
         val perTable = (0 until tables).map { t =>
           transform(
-            vecfns.srpProbes(col(vecCol), dim, nBits, seed + t * 7919L, probes),
+            GraftFunctions.graft_srp_probes(col(vecCol), nBits, seed + t * 7919L, probes),
             h => struct(lit(t).as("t"), h.as("h")))
         }
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
@@ -1134,7 +1133,7 @@ object Ann {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id", "cv", "qv")
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("score", vecfns.cosine(col("cv"), col("qv")))
+      .withColumn("score", GraftFunctions.graft_cosine(col("cv"), col("qv")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("neighbor_id").asc)
     cand.withColumn("rank", row_number().over(w))

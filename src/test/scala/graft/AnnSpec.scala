@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.vecfns
+import graft.expressions.GraftFunctions
 import graft.similarity.Ann
 
 class AnnSpec extends AnyFunSuite {
@@ -20,7 +20,7 @@ class AnnSpec extends AnyFunSuite {
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id").asc)
     c.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", vecfns.cosine(col("cv"), col("qv")))
+      .withColumn("score", GraftFunctions.graft_cosine(col("cv"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank")
@@ -195,10 +195,11 @@ class AnnSpec extends AnyFunSuite {
   test("srpProbes: base code first, distinct single-bit flips, srpBucket-compatible") {
     val nBits = 8
     val rows = emb.limit(50).select(
-        vecfns.srpBucket(col("embedding"), 64, nBits, seed = 42L).as("base"),
-        vecfns.srpProbes(col("embedding"), 64, nBits, seed = 42L, probes = 1).as("p1"),
-        vecfns.srpProbes(col("embedding"), 64, nBits, seed = 42L, probes = 5).as("p5"),
-        vecfns.srpProbes(col("embedding"), 64, nBits, seed = 42L, probes = 99).as("pAll"))
+        GraftFunctions.graft_srp_bucket(col("embedding"), nBits, seed = 42L).as("base"),
+        GraftFunctions.graft_srp_probes(col("embedding"), nBits, seed = 42L, probes = 1).as("p1"),
+        GraftFunctions.graft_srp_probes(col("embedding"), nBits, seed = 42L, probes = 5).as("p5"),
+        GraftFunctions.graft_srp_probes(col("embedding"), nBits, seed = 42L, probes = 99)
+          .as("pAll"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -148,7 +148,7 @@ class DedupSpec extends AnyFunSuite {
     // dropped ids = every %10 original and its +10000 copy (modulo
     // docs too short to shingle, which can never match)
     val shingleable = docs
-      .filter(size(graft.functions.hashfns.distinctWordShingles(col("text"), 7)) > 0)
+      .filter(size(graft.expressions.GraftFunctions.graft_word_shingles(col("text"), 7)) > 0)
       .filter(col("doc_id") % 10 === 0).collect().map(_.getLong(0)).toSet
     assert(gone == shingleable ++ shingleable.map(_ + 10000L),
       s"unexpected drop set diff: ${(gone diff (shingleable ++ shingleable.map(_ + 10000L))).take(5)}")

@@ -23,7 +23,7 @@ class DriverCollectSpec extends AnyFunSuite {
     ("operators/Bpe.scala", ".limit(1).collect()",
       "the merge loop's argmax: one row"),
     ("similarity/Ann.scala", ".collect().map(_.getSeq[Float](0).toArray)",
-      "trainSample: limit(maxTrainRows) rows"),
+      "trainSample: limit(MaxTrainRows) rows"),
     ("similarity/Ann.scala", "cbDf.select(",
       "ivfPqTopKIndexed's codebook read: nCells + m * ksub rows"),
     ("similarity/Pca.scala", ".collect()(0)",

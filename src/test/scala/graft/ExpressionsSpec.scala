@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.GraftFunctions._
 import graft.functions.{hashfns, vecfns}
@@ -155,7 +157,7 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("shingles: correct n-grams, empty below n words") {
     val d = Seq(Tuple1("a b c d"), Tuple1("a b")).toDF("t")
-    val r = d.select(hashfns.wordShingles(col("t"), 3).as("s"))
+    val r = d.select(graft_word_shingles_all(col("t"), 3).as("s"))
       .collect().map(_.getSeq[String](0))
     assert(r(0) == Seq("a b c", "b c d"))
     assert(r(1).isEmpty)
@@ -187,7 +189,7 @@ class ExpressionsSpec extends AnyFunSuite {
       (2L, Seq(1L, 2L, 3L, 4L, 9L, 9L, 9L, 9L)),
       (3L, Seq(0L, 0L, 0L, 0L, 1L, 2L, 3L, 4L))
     ).toDF("id", "sig")
-    val keys = d.select(col("id"), hashfns.lshBandKeys(col("sig"), 2, 4).as("bk"))
+    val keys = d.select(col("id"), graft_lsh_bands(col("sig"), 2, 4).as("bk"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(keys(1L)(0) == keys(2L)(0), "equal band-0 slices must share a key")
     assert(keys(1L)(1) != keys(2L)(1), "differing band-1 slices must not")
@@ -321,18 +323,48 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("graft_sorted_contains: raw-expression misuse fails at ANALYSIS, not execution") {
-    // the Column/SQL wrappers cast their inputs; a raw SortedContains
+    // the Column/SQL wrappers cast their inputs; a raw sorted_contains
     // over array<int> used to pass analysis and read garbage via
     // getLong at execution — checkInputDataTypes closes that hole
     import org.apache.spark.sql.graftbridge.Bridge
     val d = Seq((Seq(1, 5, 9), 5)).toDF("arr", "v") // array<int>, int
-    val raw = Bridge.column(graft.expressions.SortedContains(
-      Bridge.expression(col("arr")), Bridge.expression(col("v"))))
+    val raw = Bridge.column(graft.expressions.Native.sortedContains.node(
+      Seq(Bridge.expression(col("arr")), Bridge.expression(col("v"))), Nil))
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       d.select(raw).collect()
     }
     assert(e.getMessage.contains("graft_sorted_contains"),
       s"analysis error should name the function: ${e.getMessage}")
+  }
+
+  test("builders cast inputs narrower than the declared type, codegen and interpreted") {
+    // array<int> hashes into graft_simhash64 / graft_minhash_agreement
+    // and int columns into graft_hamming64: the kernels read bigint
+    // slots, so an uncast input read the wrong bytes under codegen and
+    // threw ClassCastException when evaluated interpreted. Each must
+    // return the rows of the same call over inputs cast to bigint.
+    val rows = Seq(
+      Row(1, Seq(7, -3, 12), Seq(7, 5, 12), 5, -6),
+      Row(2, Seq(0, 1 << 30, -9), Seq(-1, 1 << 30, -9), Int.MinValue, 3),
+      Row(3, Seq.empty[Int], Seq(4), -1, -1))
+    // through an RDD, so the projection is planned and not folded on
+    // the driver
+    val narrow = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType.fromDDL("id INT, a ARRAY<INT>, b ARRAY<INT>, x INT, y INT"))
+    val wide = narrow.select(col("id"), col("a").cast("array<bigint>").as("a"),
+      col("b").cast("array<bigint>").as("b"), col("x").cast("bigint").as("x"),
+      col("y").cast("bigint").as("y"))
+    def run(d: DataFrame) = d.select(col("id"),
+        graft_simhash64(col("a")).as("s"),
+        graft_minhash_agreement(col("a"), col("b")).as("m"),
+        graft_hamming64(col("x"), col("y")).as("h"))
+      .orderBy("id").collect().toSeq
+    val expected = run(wide)
+    assert(expected.map(_.getDouble(2)) == Seq(2.0 / 3, 2.0 / 3, 0.0))
+    assert(expected.map(_.getInt(3)) == Seq(
+      java.lang.Long.bitCount(5L ^ -6L), java.lang.Long.bitCount(Int.MinValue.toLong ^ 3L), 0))
+    assert(run(narrow) == expected, "codegen")
+    assert(SparkT.interpreted(run(narrow)) == expected, "interpreted")
   }
 
   test("graft_sorted_contains registered in SQL (both flavors)") {
@@ -373,10 +405,10 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("wordShingles keeps duplicate occurrences; distinctWordShingles dedups") {
     val d = Seq(Tuple1("a b a b a")).toDF("t")
-    val all = d.select(hashfns.wordShingles(col("t"), 2).as("s"))
+    val all = d.select(graft_word_shingles_all(col("t"), 2).as("s"))
       .collect()(0).getSeq[String](0)
     assert(all == Seq("a b", "b a", "a b", "b a")) // multiset, in order
-    val dist = d.select(hashfns.distinctWordShingles(col("t"), 2).as("s"))
+    val dist = d.select(graft_word_shingles(col("t"), 2).as("s"))
       .collect()(0).getSeq[String](0).toSet
     assert(dist == Set("a b", "b a"))
   }

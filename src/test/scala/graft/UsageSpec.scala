@@ -619,4 +619,20 @@ class UsageSpec extends AnyFunSuite {
     assert(mined.columns.toSeq == Seq("query_id", "match_id", "cos", "margin"))
     assert(mined.count() <= 8) // at most one row per query
   }
+
+  test("usage §9d: native kernels from SQL") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    docs.createOrReplaceTempView("docs")
+    try {
+      val sigs = spark.sql("""SELECT doc_id,
+    graft_minhash(graft_shingle_hashes(text, 5), 128, 42) AS sig
+  FROM docs""")
+      val viaBuilder = docs.select(col("doc_id"),
+        graft.expressions.GraftFunctions.graft_minhash(
+          graft.expressions.GraftFunctions.graft_shingle_hashes(col("text"), 5), 128, 42L)
+          .as("sig"))
+      assert(sigs.count() == docs.count())
+      assert(sigs.exceptAll(viaBuilder).isEmpty && viaBuilder.exceptAll(sigs).isEmpty)
+    } finally spark.catalog.dropTempView("docs")
+  }
 }
