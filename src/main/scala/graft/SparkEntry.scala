@@ -2004,7 +2004,7 @@ object SparkEntry {
       val twins = emb.filter(col("vec_id") < 100)
         .select((col("vec_id") + DupOffset).as("vec_id"), col("embedding"))
       Dedup.embeddingDupPairs(emb.unionByName(twins), "vec_id", "embedding",
-          dim = 64, threshold = 0.99, nBits = 10, tables = 2)
+          threshold = 0.99, nBits = 10, tables = 2)
         .orderBy(col("id_a").asc, col("id_b").asc)
     },
       None),
@@ -2035,7 +2035,7 @@ object SparkEntry {
     // for table diversity; candidates stay bucket-bounded)
     Declared("ann2_lsh_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Ann.lshTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10, dim = 64,
+      Ann.lshTopK(emb, emb.filter(col("vec_id") < AnnQueries), k = 10,
           nBits = 7, tables = 8, probes = 8)
         .orderBy(col("query_id").asc, col("rank").asc)
     },
@@ -2145,7 +2145,7 @@ object SparkEntry {
             round(avg(col("recall")), 4).as("recall_at_10"))
           .select(lit(name).as("method"), col("n_queries"), col("recall_at_10"))
       recallOf("ann2_lsh",
-          Ann.lshTopK(emb, qs, k = k, dim = 64, nBits = 7, tables = 8,
+          Ann.lshTopK(emb, qs, k = k, nBits = 7, tables = 8,
             probes = 8))
         .unionByName(recallOf("ann3_ivf",
           Ann.ivfTopK(emb, qs, k = k, nCells = 16, nProbe = 6)))
@@ -2534,7 +2534,7 @@ object SparkEntry {
       // quadratic, the one shape that melts at corpus scale.
       val media = Multimodal.asMediaTable(docsWithExactDups(s, dir))
       val emb = Multimodal.embedStub(media)
-      Dedup.embeddingDupPairs(emb, "vec_id", "embedding", dim = 64,
+      Dedup.embeddingDupPairs(emb, "vec_id", "embedding",
           threshold = 0.999, nBits = 16, tables = 2, bucketCap = 2000)
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a").asc, col("id_b").asc)

@@ -816,7 +816,7 @@ object Dedup {
     * buckets restrict the candidate space; the codegen'd cosine kernel
     * verifies. Multiple independent bucket tables (`tables`) trade
     * compute for recall, as in classic LSH. */
-  def embeddingDupPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
+  def embeddingDupPairs(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double = 0.95, nBits: Int = 12,
                         tables: Int = 2, seed: Long = 42L,
                         bucketCap: Int = 2000): DataFrame = {

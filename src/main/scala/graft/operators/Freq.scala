@@ -55,6 +55,12 @@ object Freq {
     * their EXACT counts: (itemCol, n). Correctness needs
     * `capacity ≥ 1/minFraction`; the default 4/minFraction keeps the
     * sketch's N/capacity error at a 4× margin below the threshold.
+    * The threshold is DECIMAL arithmetic (double would round e.g.
+    * 0.07 × 100 to 7.000000000000001 and ceil it to 8, excluding an
+    * item exactly at the boundary; `BigDecimal.valueOf` matches how
+    * SQL engines, and the DuckDB oracle, parse the fraction), and a
+    * null item is never a heavy hitter. [[groupedHeavyHitters]] is the
+    * same body per group; this contract is theirs.
     *
     * @param estimatedItemBytes expected size of ONE item value (UTF-8
     *        bytes for strings). Sizes the candidate-broadcast guard:
@@ -66,58 +72,9 @@ object Freq {
     */
   def heavyHitters(df: DataFrame, itemCol: String, minFraction: Double,
                    capacity: Int = 0,
-                   estimatedItemBytes: Int = 64): DataFrame = {
-    require(minFraction > 0.0 && minFraction <= 1.0,
-      s"heavyHitters: minFraction must be in (0,1], got $minFraction")
-    require(estimatedItemBytes > 0,
-      s"heavyHitters: estimatedItemBytes must be positive, got $estimatedItemBytes")
-    // Long math before narrowing: a tiny minFraction would saturate
-    // .toInt at Int.MaxValue and sail past every guard
-    val want = math.ceil(4.0 / minFraction).toLong
-    require(want <= FreqSketch.MaxCapacity || capacity > 0,
-      s"heavyHitters: minFraction $minFraction needs $want counters " +
-        s"(max ${FreqSketch.MaxCapacity}) — pass an explicit capacity to override")
-    val cap =
-      if (capacity > 0) capacity
-      else math.max(16L, want).toInt
-    require(cap.toLong >= math.ceil(1.0 / minFraction).toLong,
-      s"heavyHitters: capacity $cap cannot guarantee recall at minFraction $minFraction")
-    // the candidate broadcast is 2·cap rows of item + row overhead;
-    // refuse a plan that would ship tens of MBs to every executor
-    // before any job runs (the counter ceiling alone allows 2^24
-    // counters — GBs of broadcast for long items)
-    val estBroadcast = 2L * cap * (estimatedItemBytes + RowOverheadBytes)
-    require(estBroadcast <= MaxCandidateBroadcastBytes,
-      s"heavyHitters: estimated candidate broadcast ${estBroadcast >> 20} MB " +
-        s"(2 x $cap candidates x ($estimatedItemBytes + $RowOverheadBytes) bytes) exceeds " +
-        s"${MaxCandidateBroadcastBytes >> 20} MB — lower capacity/raise minFraction, " +
-        "or correct estimatedItemBytes if items are smaller")
-    val sketch = FreqSketch(Bridge.expression(col(itemCol)), cap)
-      .toAggregateExpression()
-    // ONE summary aggregate (sketch + total in the same scan), consumed
-    // by ONE downstream projection: attaching __n_total to every
-    // exploded candidate row lets the whole operator run in two scans
-    // of `df` (summary + verify join). Splitting the two outputs into
-    // separate consumers would embed the sketch scan twice — the
-    // differing parent projections defeat ReuseExchange.
-    val summary = df.agg(Bridge.column(sketch).as("__cands"),
-      count(lit(1)).as("__n_total"))
-    val cands = summary.select(explode(col("__cands")).as(itemCol),
-      col("__n_total"))
-    // candidates are distinct (sketch map keys), so the broadcast inner
-    // join is the semi-join plus the carried total
-    df.join(broadcast(cands), Seq(itemCol), "inner")
-      .groupBy(col(itemCol))
-      .agg(count(lit(1)).as("n"), max(col("__n_total")).as("__nt"))
-      // DECIMAL threshold arithmetic: double would round e.g.
-      // 0.07 × 100 to 7.000000000000001 and ceil it to 8, excluding an
-      // item exactly at the documented boundary; BigDecimal.valueOf
-      // uses the literal's decimal representation, matching how SQL
-      // engines (and the DuckDB oracle) parse the fraction
-      .filter(col("n") >=
-        ceil(col("__nt") * lit(java.math.BigDecimal.valueOf(minFraction))))
-      .select(col(itemCol), col("n"))
-  }
+                   estimatedItemBytes: Int = 64): DataFrame =
+    hitters("heavyHitters", df, Nil, itemCol, minFraction, capacity, 1L,
+      estimatedItemBytes, 0)
 
   /** Per-GROUP heavy hitters: items occurring at least
     * `ceil(minFraction · groupN)` times WITHIN their group, with exact
@@ -125,18 +82,11 @@ object Freq {
     * curation primitive (a source's boilerplate shingles, a
     * language's hot URLs): each group gets its own N and its own
     * threshold, so a globally-rare item that dominates one small
-    * source still surfaces.
-    *
-    * Same sketch-then-verify shape as [[heavyHitters]], with the
-    * sketch keyed per group: ONE grouped aggregate builds a
-    * Misra–Gries sketch AND the group total per group (partial
-    * map-side merge — the long tail never shuffles; only sketch
-    * summaries, one per (task, group), reach the exchange);
-    * candidates (≤ 2·capacity per group, each a guaranteed superset
-    * at the group's threshold) broadcast back with their group total
-    * attached; a broadcast join keeps candidate rows only, the exact
-    * per-(group, item) count shuffles ≤ 2·capacity·G keys, and the
-    * exact threshold means sketch error never reaches the output.
+    * source still surfaces. Same sketch-then-verify body and contract
+    * as [[heavyHitters]], with the sketch and the total keyed per
+    * group: only sketch summaries, one per (task, group), reach the
+    * exchange, and the exact per-(group, item) count shuffles
+    * ≤ 2·capacity·G keys. Null group keys are a group.
     *
     * The candidate broadcast now scales with the GROUP COUNT:
     * 2·capacity·`estimatedGroups`·(item + group + overhead bytes)
@@ -162,46 +112,59 @@ object Freq {
                           estimatedGroupBytes: Int = 32): DataFrame = {
     require(groupCols.nonEmpty,
       "groupedHeavyHitters: groupCols must be non-empty — use heavyHitters for the ungrouped form")
-    require(minFraction > 0.0 && minFraction <= 1.0,
-      s"groupedHeavyHitters: minFraction must be in (0,1], got $minFraction")
-    require(estimatedGroups > 0 && estimatedItemBytes > 0 && estimatedGroupBytes > 0,
+    require(estimatedGroups > 0 && estimatedGroupBytes > 0,
       "groupedHeavyHitters: size estimates must be positive")
+    hitters("groupedHeavyHitters", df, groupCols, itemCol, minFraction, capacity,
+      estimatedGroups, estimatedItemBytes, estimatedGroupBytes)
+  }
+
+  private def hitters(caller: String, df: DataFrame, groupCols: Seq[String],
+                      itemCol: String, minFraction: Double, capacity: Int,
+                      groups: Long, itemBytes: Int, groupBytes: Int): DataFrame = {
+    require(minFraction > 0.0 && minFraction <= 1.0,
+      s"$caller: minFraction must be in (0,1], got $minFraction")
+    require(itemBytes > 0, s"$caller: estimatedItemBytes must be positive, got $itemBytes")
+    // Long math before narrowing: a tiny minFraction would saturate
+    // .toInt at Int.MaxValue and sail past every guard
     val want = math.ceil(4.0 / minFraction).toLong
     require(want <= FreqSketch.MaxCapacity || capacity > 0,
-      s"groupedHeavyHitters: minFraction $minFraction needs $want counters " +
+      s"$caller: minFraction $minFraction needs $want counters " +
         s"(max ${FreqSketch.MaxCapacity}) — pass an explicit capacity to override")
     val cap =
       if (capacity > 0) capacity
       else math.max(16L, want).toInt
     require(cap.toLong >= math.ceil(1.0 / minFraction).toLong,
-      s"groupedHeavyHitters: capacity $cap cannot guarantee recall at minFraction $minFraction")
-    // overflow-safe budget check: estimatedGroups is caller-supplied
-    // Long, so the product 2·cap·groups·bytes can wrap past 2^63 and
-    // a wrapped (negative or small) estimate would sail through the
-    // guard — compare against the DIVIDED budget instead of
-    // multiplying up
-    val perGroupBytes =
-      2L * cap * (estimatedItemBytes + estimatedGroupBytes + RowOverheadBytes)
-    require(estimatedGroups <= MaxCandidateBroadcastBytes / perGroupBytes,
-      s"groupedHeavyHitters: estimated candidate broadcast " +
-        s"(2 x $cap x $estimatedGroups groups x " +
-        s"($estimatedItemBytes + $estimatedGroupBytes + $RowOverheadBytes) bytes) exceeds " +
-        s"${MaxCandidateBroadcastBytes >> 20} MB — lower capacity/estimatedGroups, " +
-        "raise minFraction, or correct the size estimates")
-    val gcols = groupCols.map(col)
+      s"$caller: capacity $cap cannot guarantee recall at minFraction $minFraction")
+    // refuse a plan that would ship tens of MBs to every executor
+    // before any job runs (the counter ceiling alone allows 2^24
+    // counters — GBs of broadcast for long items). Overflow-safe:
+    // `groups` is caller-supplied, so compare against the DIVIDED
+    // budget instead of multiplying up past 2^63
+    val perGroupBytes = 2L * cap * (itemBytes + groupBytes + RowOverheadBytes)
+    require(groups <= MaxCandidateBroadcastBytes / perGroupBytes,
+      s"$caller: estimated candidate broadcast (2 x $cap candidates x $groups group(s) x " +
+        s"($itemBytes + $groupBytes + $RowOverheadBytes) bytes) exceeds " +
+        s"${MaxCandidateBroadcastBytes >> 20} MB — lower capacity or raise minFraction, " +
+        "or correct the size estimates (estimatedItemBytes, estimatedGroups)")
     val sketch = FreqSketch(Bridge.expression(col(itemCol)), cap)
       .toAggregateExpression()
-    val summary = df.groupBy(gcols: _*)
+    // ONE summary aggregate (sketch + total in the same scan), consumed
+    // by ONE downstream projection: attaching the total to every
+    // exploded candidate row lets the whole operator run in two scans
+    // of `df` (summary + verify join). Splitting the two outputs into
+    // separate consumers would embed the sketch scan twice — the
+    // differing parent projections defeat ReuseExchange.
+    val summary = df.groupBy(groupCols.map(col): _*)
       .agg(Bridge.column(sketch).as("__cands"), count(lit(1)).as("__n_grp"))
-    // group keys match NULL-SAFELY (a null group is a group, exactly
-    // as groupBy binned it); the item matches with SQL equality — a
-    // null item is never a heavy hitter, same as [[heavyHitters]]
     val cands = summary.select(
       groupCols.zipWithIndex.map { case (c, i) => col(c).as(s"__g$i") } :+
         explode(col("__cands")).as("__citem") :+ col("__n_grp"): _*)
-    val cond = groupCols.zipWithIndex
-      .map { case (c, i) => df(c) <=> col(s"__g$i") }
-      .reduce(_ && _) && (df(itemCol) === col("__citem"))
+    // candidates are distinct per group (sketch map keys), so the
+    // broadcast inner join is the semi-join plus the carried total;
+    // group keys match NULL-SAFELY (a null group is a group, exactly
+    // as groupBy binned it), the item with SQL equality
+    val cond = (groupCols.zipWithIndex.map { case (c, i) => df(c) <=> col(s"__g$i") }
+      :+ (df(itemCol) === col("__citem"))).reduce(_ && _)
     df.join(broadcast(cands), cond, "inner")
       .groupBy(groupCols.map(df(_)) :+ df(itemCol): _*)
       .agg(count(lit(1)).as("n"), max(col("__n_grp")).as("__ng"))

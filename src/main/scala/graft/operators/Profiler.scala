@@ -4,31 +4,51 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Column-level data profiling — the data-quality gate a pipeline
-  * runs before pointing a training job at a new table: null rates,
-  * cardinalities and value ranges per column, in ONE pass over the
-  * data, as a small tidy frame (one row per column) instead of a
-  * one-row-of-many-columns summary nobody can filter.
+/** Data-quality operators: column profiles, the drift family
+  * (PSI, KS, JSD, W₁ between two snapshots), changepoints, robust
+  * outlier gates and per-group rescaling.
   *
-  * Scale shape: a single global aggregate — partial per task,
-  * map-side combined, one row reaches the driver side of the plan.
-  * The only scale-sensitive choice is DISTINCT counting:
-  *  - `approxDistinct = true` (the 100 TB default): HLL++
-  *    `approx_count_distinct` folds into the same single scan-side
-  *    aggregate — no expansion, no extra shuffle;
-  *  - `approxDistinct = false` (exact): Spark plans multi-column
-  *    `count(DISTINCT …)` via Expand — the input is replicated once
-  *    per profiled column before the shuffle. Exact and
-  *    oracle-replayable, the right choice for validation scales;
-  *    at corpus scale prefer the approximate form.
-  *
-  * Output, one row per profiled column, ordered as given:
-  * (col_name, n_rows, n_nonnull, n_null, n_distinct, min_value,
-  * max_value) — min/max cast to strings so heterogeneous column
-  * types share one schema (the tidy-profile convention).
+  * The drift family shares its stages, each defined once here:
+  *  - [[snapshotDigest]]: the two-snapshot digest — `base` and `cur`
+  *    tag-unioned into (groups…, value, n_base, n_cur), each side's
+  *    columns checked first;
+  *  - [[withCommonTotals]]: the per-group totals of two count columns,
+  *    attached to every row of the groups with rows on both sides
+  *    (null-safe; with no groups, the one global total);
+  *  - [[rangeRunningSums]]: range-partitioned global running sums, so
+  *    one ordered distribution never collapses into a single task;
+  *  - [[jsdColumns]]: one category's Jensen–Shannon term (also the
+  *    streaming drift gate's arithmetic);
+  *  - [[quantize]]: the library-wide `floor(v·scale + ½)` → BIGINT
+  *    rule behind every exact integer statistic (also [[Roll]]'s).
+  * Each grouped/ungrouped pair (`ksDrift`/`ksDriftBy`,
+  * `categoricalDrift`/`categoricalDriftBy`) is one body over zero or
+  * more group columns, the dplyr `group_by()` contract.
   */
 object Profiler {
 
+  /** Column-level data profiling — the data-quality gate a pipeline
+    * runs before pointing a training job at a new table: null rates,
+    * cardinalities and value ranges per column, in ONE pass over the
+    * data, as a small tidy frame (one row per column) instead of a
+    * one-row-of-many-columns summary nobody can filter.
+    *
+    * Scale shape: a single global aggregate — partial per task,
+    * map-side combined, one row reaches the driver side of the plan.
+    * The only scale-sensitive choice is DISTINCT counting:
+    *  - `approxDistinct = true` (the 100 TB default): HLL++
+    *    `approx_count_distinct` folds into the same single scan-side
+    *    aggregate — no expansion, no extra shuffle;
+    *  - `approxDistinct = false` (exact): Spark plans multi-column
+    *    `count(DISTINCT …)` via Expand — the input is replicated once
+    *    per profiled column before the shuffle. Exact and
+    *    oracle-replayable, the right choice for validation scales;
+    *    at corpus scale prefer the approximate form.
+    *
+    * Output, one row per profiled column, ordered as given:
+    * (col_name, n_rows, n_nonnull, n_null, n_distinct, min_value,
+    * max_value) — min/max cast to strings so heterogeneous column
+    * types share one schema (the tidy-profile convention). */
   def columnStats(df: DataFrame, cols: Seq[String],
                   approxDistinct: Boolean = false): DataFrame = {
     require(cols.nonEmpty, "columnStats: cols must be non-empty")
@@ -161,73 +181,88 @@ object Profiler {
     * integer counts, so the whole computation is bit-replayable by
     * the oracle (one integer division and one subtraction per
     * distinct value; only the final 6dp round touches float
-    * formatting).
-    *
-    * Scale shape — a distributed exact CDF, never a single-task sort:
-    *  1. tag-union the two sides and `groupBy(value)` into distinct
-    *     (value, n_base, n_cur) digests — the only pass that touches
-    *     every row, hash-aggregated with map-side combine (a
-    *     near-unique column at corpus scale still counts in parallel
-    *     because the exchange key is the value itself);
-    *  2. range-partition the digests by value and prefix-sum WITHIN
-    *     each (globally ordered) partition — a per-partition window,
-    *     parallel across partitions;
-    *  3. per-partition count totals (one row per partition, shared
-    *     with step 2's exchange via ReuseExchange — the fillDown
-    *     discipline, GraftFrame.fillDown) become exclusive prefix
-    *     offsets through a tiny partition-count-sized window,
-    *     broadcast back, and close the global cumulative counts.
-    * The KS gap only needs evaluating at distinct values (the CDF
-    * gap is constant between them and both CDFs step AT a value —
-    * evaluating |F_b − F_c| at every digest after both cumulative
-    * sums include that value's own counts covers every sup
+    * formatting). The KS gap only needs evaluating at distinct values
+    * (the CDF gap is constant between them and both CDFs step AT a
+    * value — evaluating |F_b − F_c| at every digest after both
+    * cumulative sums include that value's own counts covers every sup
     * candidate).
     *
-    * Nulls are excluded on both sides; an empty (all-null) side makes
-    * KS undefined and raises an IllegalArgumentException naming the
-    * side (a drift gate fed an empty snapshot is a pipeline bug, not
-    * a zero-drift corpus). Output: one row —
-    * (ks, n_base, n_cur), ks in [0, 1] rounded 6dp. Identical
-    * snapshots give exactly 0; disjoint value ranges give exactly 1. */
-  def ksDrift(base: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
+    * This contract is shared with [[ksDriftBy]], the same body over
+    * group columns: nulls are excluded on both sides; a snapshot
+    * without the named columns refuses with an
+    * IllegalArgumentException naming the snapshot and the columns;
+    * ks is in [0, 1] rounded 6dp, next to the exact (n_base, n_cur);
+    * identical snapshots give exactly 0, disjoint value ranges
+    * exactly 1.
+    *
+    * Scale shape — a distributed exact CDF, never a single-task sort:
+    * the [[snapshotDigest]] of distinct (value, n_base, n_cur) rows
+    * (the only pass that touches every row — a near-unique column at
+    * corpus scale still counts in parallel because the exchange key
+    * is the value itself), then [[rangeRunningSums]] for both
+    * cumulative counts.
+    *
+    * An empty (all-null) side makes KS undefined and raises an
+    * IllegalArgumentException naming the side (a drift gate fed an
+    * empty snapshot is a pipeline bug, not a zero-drift corpus).
+    * Output: one row — (ks, n_base, n_cur). */
+  def ksDrift(base: DataFrame, cur: DataFrame, valueCol: String): DataFrame =
+    ks("ksDrift", base, cur, valueCol, Nil)
+
+  /** Per-GROUP [[ksDrift]]: one exact two-sample KS statistic per
+    * group key — WHICH source's length/score distribution moved, not
+    * just whether the global one did (the numeric companion of
+    * [[categoricalDriftBy]]). Same statistic and contract as
+    * [[ksDrift]], per group.
+    *
+    * The PLAN differs, deliberately: [[ksDrift]]'s range-partitioned
+    * running sums exist because ONE distribution's running sums must
+    * never collapse into a single task; here the group IS the
+    * parallelism unit, so the running sums are one window partitioned
+    * by group over the AGGREGATED (group, value) digest table —
+    * bounded by per-group distinct values, the q20 histogram
+    * discipline, spillable and shard-parallel. Groups with non-null
+    * values on only one side are EXCLUDED ([[withCommonTotals]]: KS
+    * against an absent sample is undefined); null group keys are a
+    * group.
+    *
+    * Output: groupCols ++ (ks, n_base, n_cur), one row per common
+    * group, ordered by group. */
+  def ksDriftBy(base: DataFrame, cur: DataFrame, valueCol: String,
+                groupCols: Seq[String]): DataFrame = {
+    require(groupCols.nonEmpty,
+      "ksDriftBy: groupCols must be non-empty (use ksDrift)")
+    ks("ksDriftBy", base, cur, valueCol, groupCols)
+  }
+
+  private def ks(caller: String, base: DataFrame, cur: DataFrame,
+                 valueCol: String, groupCols: Seq[String]): DataFrame = {
     val v = col(valueCol).cast("double")
-    def side(df: DataFrame, b: Int, name: String) = {
-      val f = df.filter(v.isNotNull)
-      require(!f.isEmpty,
-        s"ksDrift: $name snapshot has no non-null '$valueCol' values — KS is undefined")
-      f.select(v.as("__v"), lit(b.toLong).as("__b"), lit(1L - b).as("__c"))
-    }
-    val digests = side(base, 1, "base").unionAll(side(cur, 0, "cur"))
-      .groupBy(col("__v"))
-      .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
-    val ranged = digests.repartitionByRange(col("__v").asc)
-      .sortWithinPartitions(col("__v").asc)
-      .withColumn("__pid", spark_partition_id())
-    val wRun = Window.partitionBy("__pid").orderBy(col("__v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val run = ranged
-      .withColumn("__rb", sum(col("__cb")).over(wRun))
-      .withColumn("__rc", sum(col("__cc")).over(wRun))
-    // per-partition totals: one row per range partition, computed from
-    // the pre-window branch so the shuffle is shared (ReuseExchange),
-    // then a partition-count-sized window turns them into exclusive
-    // prefix offsets — broadcast back to close the global running sums
-    val wOff = Window.orderBy(col("__pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pidTotals = ranged.groupBy("__pid")
-      .agg(sum(col("__cb")).as("__tb"), sum(col("__cc")).as("__tc"))
-    val offsets = pidTotals.select(col("__pid"),
-      coalesce(sum(col("__tb")).over(wOff), lit(0L)).as("__ob"),
-      coalesce(sum(col("__tc")).over(wOff), lit(0L)).as("__oc"))
-    val totals = pidTotals
-      .agg(sum(col("__tb")).as("__nb"), sum(col("__tc")).as("__nc"))
-    run.join(broadcast(offsets), Seq("__pid"))
-      .crossJoin(broadcast(totals))
-      .select(abs((col("__rb") + col("__ob")) / col("__nb")
-          - (col("__rc") + col("__oc")) / col("__nc")).as("__gap"),
-        col("__nb"), col("__nc"))
+    val gs = groupCols.map(col)
+    val digests = snapshotDigest(caller, base, cur, groupCols, valueCol,
+      v.isNotNull, v, "__v")
+    val gaps =
+      if (groupCols.isEmpty) {
+        val (run, pidTotals) = rangeRunningSums(digests, "__v", Seq("b", "c"))
+        run.crossJoin(broadcast(pidTotals
+            .agg(sum(col("__tb")).as("__nb"), sum(col("__tc")).as("__nc"))))
+          .select(abs((col("__rb") + col("__ob")) / col("__nb")
+              - (col("__rc") + col("__oc")) / col("__nc")).as("__gap"),
+            col("__nb"), col("__nc"))
+      } else {
+        val wRun = Window.partitionBy(gs: _*).orderBy(col("__v").asc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val run = digests
+          .withColumn("__rb", sum(col("__cb")).over(wRun))
+          .withColumn("__rc", sum(col("__cc")).over(wRun))
+        withCommonTotals(run, groupCols, ("__cb", "__cc"), ("__nb", "__nc"))
+          .select(gs :+ abs(col("__rb") / col("__nb") - col("__rc") / col("__nc"))
+            .as("__gap") :+ col("__nb") :+ col("__nc"): _*)
+      }
+    gaps.groupBy(gs: _*)
       .agg(round(max(col("__gap")), 6).as("ks"),
         first(col("__nb")).as("n_base"), first(col("__nc")).as("n_cur"))
+      .orderBy(gs: _*)
   }
 
   /** CUSUM changepoint detection (Page 1954, one-sided upper chart)
@@ -285,64 +320,6 @@ object Profiler {
         (s > lit(thrQ)).as("alarm")): _*)
   }
 
-  /** Per-GROUP [[ksDrift]]: one exact two-sample KS statistic per
-    * group key — WHICH source's length/score distribution moved, not
-    * just whether the global one did (the numeric companion of
-    * [[categoricalDriftBy]]).
-    *
-    * Same exact arithmetic as [[ksDrift]] per group: D =
-    * sup|F_base − F_cur| over cumulative integer counts divided by
-    * integer totals — every term replayable bit-for-bit. The PLAN
-    * differs, deliberately: [[ksDrift]]'s range-partitioned
-    * prefix-sum machinery exists because ONE distribution's running
-    * sums must never collapse into a single task; here the group IS
-    * the parallelism unit, so the running sums are one window
-    * partitioned by group over the AGGREGATED (group, value) digest
-    * table — bounded by per-group distinct values, the q20 histogram
-    * discipline, spillable and shard-parallel. Groups with non-null
-    * values on only one side are EXCLUDED (KS against an absent
-    * sample is undefined — the [[categoricalDriftBy]] contract);
-    * null group keys are a group (null-safe totals join).
-    *
-    * Output: groupCols ++ (ks, n_base, n_cur), one row per common
-    * group, ordered by group. */
-  def ksDriftBy(base: DataFrame, cur: DataFrame, valueCol: String,
-                groupCols: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty,
-      "ksDriftBy: groupCols must be non-empty (use ksDrift)")
-    val v = col(valueCol).cast("double")
-    val gs = groupCols.map(col)
-    def side(df: DataFrame, b: Int, name: String) = {
-      val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
-      require(missing.isEmpty,
-        s"ksDriftBy: $name snapshot is missing column(s): ${missing.mkString(", ")}")
-      df.filter(v.isNotNull)
-        .select(gs :+ v.as("__v") :+ lit(b.toLong).as("__b")
-          :+ lit(1L - b).as("__c"): _*)
-    }
-    val digests = side(base, 1, "base").unionAll(side(cur, 0, "cur"))
-      .groupBy(gs :+ col("__v"): _*)
-      .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
-    val totals = digests.groupBy(gs: _*)
-      .agg(sum(col("__cb")).as("__nb"), sum(col("__cc")).as("__nc"))
-      .filter(col("__nb") > 0L && col("__nc") > 0L)
-      .select(groupCols.map(c => col(c).as(s"__gg_$c"))
-        :+ col("__nb") :+ col("__nc"): _*)
-    val totCond = groupCols.map(c => col(c) <=> col(s"__gg_$c")).reduce(_ && _)
-    val wRun = Window.partitionBy(gs: _*).orderBy(col("__v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val run = digests
-      .withColumn("__rb", sum(col("__cb")).over(wRun))
-      .withColumn("__rc", sum(col("__cc")).over(wRun))
-    run.join(totals, totCond)
-      .select(gs :+ abs(col("__rb") / col("__nb") - col("__rc") / col("__nc"))
-        .as("__gap") :+ col("__nb") :+ col("__nc"): _*)
-      .groupBy(gs: _*)
-      .agg(round(max(col("__gap")), 6).as("ks"),
-        first(col("__nb")).as("n_base"), first(col("__nc")).as("n_cur"))
-      .orderBy(gs: _*)
-  }
-
   /** Categorical frequency drift between two snapshots of a discrete
     * column — the Jensen–Shannon decomposition over the top-`topK`
     * categories plus an `__other__` bucket, the companion to
@@ -350,146 +327,216 @@ object Profiler {
     * source domain, license tag — the distributions an LLM data
     * pipeline actually tracks between crawls).
     *
-    * Output: one tidy row per kept category plus `__other__`
-    * (category, n_base, n_cur, p_base, p_cur, jsd_term), ordered by
-    * category; `sum(jsd_term)` is the Jensen–Shannon divergence
-    * (natural log: 0 = identical mixes, ln 2 ≈ 0.693 = disjoint).
-    * jsd_term = ½(p_b·ln(p_b/m) + p_c·ln(p_c/m)) with m = (p_b+p_c)/2
-    * and 0·ln 0 = 0 — no epsilon floor needed (a kept category has
-    * mass on at least one side, so m > 0). p/term are rounded 6dp for
-    * output; counts are exact.
+    * This contract is shared with [[categoricalDriftBy]], the same
+    * body over group columns:
+    *  - top-K categories by BASE-side count (categories defined on the
+    *    base snapshot, the [[psiDrift]] bin convention — a category
+    *    newborn in `cur` shows up as `__other__` mass), count ties
+    *    broken by category ascending;
+    *  - jsd_term = ½(p_b·ln(p_b/m) + p_c·ln(p_c/m)) with
+    *    m = (p_b+p_c)/2 and 0·ln 0 = 0 ([[jsdColumns]]) — no epsilon
+    *    floor needed (a kept category has mass on at least one side,
+    *    so m > 0); `sum(jsd_term)` is the Jensen–Shannon divergence
+    *    (natural log: 0 = identical mixes, ln 2 ≈ 0.693 = disjoint);
+    *    p/term are rounded 6dp, counts are exact;
+    *  - nulls are excluded on both sides ([[columnStats]] reports
+    *    them); a real category literally named `__other__` would merge
+    *    with the fold bucket; a snapshot without the named columns
+    *    refuses with an IllegalArgumentException naming the snapshot
+    *    and the columns.
     *
-    * Scale shape: tag-union → one hash-aggregated `groupBy(category)`
-    * pass (the only full-data scan); top-K selection is by BASE-side
-    * count (categories defined on the base snapshot, the [[psiDrift]]
-    * bin convention — a category newborn in `cur` shows up as
-    * `__other__` mass), a bounded
+    * Scale shape: the [[snapshotDigest]] by category (the only
+    * full-data scan); top-K is a bounded
     * `orderBy(base count desc, category asc).limit(K)` over the already
     * aggregated digests (TakeOrdered: per-partition partial top-K,
     * K·partitions rows to the driver side of the plan — never a
-    * global sort), deterministic under count ties via the category
-    * tie-break; the kept set broadcasts back and the `__other__`
+    * global sort); the kept set broadcasts back and the `__other__`
     * fold re-aggregates to ≤ K+1 rows with map-side combine, so an
-    * unbounded-cardinality column (URLs, domains) stays safe.
-    * Nulls are excluded on both sides ([[columnStats]] reports them);
-    * a real category literally named `__other__` would merge with the
-    * fold bucket. Empty sides refuse with a named error, as in
-    * [[ksDrift]]. */
+    * unbounded-cardinality column (URLs, domains) stays safe. Empty
+    * sides refuse with a named error, as in [[ksDrift]].
+    *
+    * Output: one tidy row per kept category plus `__other__`
+    * (category, n_base, n_cur, p_base, p_cur, jsd_term), ordered by
+    * category. */
   def categoricalDrift(base: DataFrame, cur: DataFrame, catCol: String,
-                       topK: Int = 20): DataFrame = {
-    require(topK >= 1, s"categoricalDrift: topK must be >= 1, got $topK")
-    val cc = col(catCol).cast("string")
-    def side(df: DataFrame, b: Int, name: String) = {
-      val f = df.filter(cc.isNotNull)
-      require(!f.isEmpty,
-        s"categoricalDrift: $name snapshot has no non-null '$catCol' values")
-      f.select(cc.as("__cat"), lit(b.toLong).as("__b"), lit(1L - b).as("__c"))
-    }
-    val digests = side(base, 1, "base").unionAll(side(cur, 0, "cur"))
-      .groupBy(col("__cat"))
-      .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
-    val top = digests.orderBy(col("__cb").desc, col("__cat").asc).limit(topK)
-      .select(col("__cat"), lit(true).as("__keep"))
-    val mapped = digests.join(broadcast(top), Seq("__cat"), "left")
-      .select(when(col("__keep"), col("__cat")).otherwise(lit("__other__"))
-          .as("category"),
-        col("__cb"), col("__cc"))
-      .groupBy("category")
-      .agg(sum(col("__cb")).as("__nb"), sum(col("__cc")).as("__nc"))
-    val totals = mapped.agg(sum(col("__nb")).as("__tb"), sum(col("__nc")).as("__tc"))
-    val pb = col("__nb") / col("__tb")
-    val pc = col("__nc") / col("__tc")
-    val m = (pb + pc) / 2
-    val term = (when(col("__nb") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
-      + when(col("__nc") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
-    mapped.crossJoin(broadcast(totals))
-      .select(col("category"),
-        col("__nb").as("n_base"), col("__nc").as("n_cur"),
-        round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
-        round(term, 6).as("jsd_term"))
-      .orderBy(col("category").asc)
-  }
+                       topK: Int = 20): DataFrame =
+    categorical("categoricalDrift", base, cur, catCol, Nil, topK)
 
   /** Per-GROUP [[categoricalDrift]]: one JSD decomposition per group
     * key — "which SOURCE's language mix moved", not just whether the
     * global mix did (a 5-point shift confined to one domain vanishes
     * into a corpus-wide average; segment-level drift is the gate that
-    * catches it).
-    *
-    * Same arithmetic as [[categoricalDrift]] per group (top-K
-    * categories by the group's BASE counts, `__other__` fold, exact
-    * integer ratios, 0·ln 0 = 0), so Σ jsd_term within a group is
-    * that group's JSD. Differences forced by the grouping:
+    * catches it). Same arithmetic and contract as [[categoricalDrift]]
+    * per group (top-K by the group's BASE counts), so Σ jsd_term
+    * within a group is that group's JSD. Differences forced by the
+    * grouping:
     *  - top-K runs as a per-group window rank over the AGGREGATED
     *    (group, category) digests (the ungrouped TakeOrdered cannot
     *    express per-group limits); digest cardinality = distinct
     *    pairs, so the window never sees raw rows;
     *  - the kept set joins back by (group, category) — Spark
     *    broadcasts it when small, and it is ≤ groups·(K+1) rows;
-    *  - groups present in only ONE snapshot are EXCLUDED (JSD against
-    *    an absent distribution is undefined; a newborn/vanished group
-    *    is a schema-level event — catch it with [[profile]] counts,
-    *    not a drift score). Null group keys are a group (the
-    *    groupedHeavyHitters contract); null categories are excluded
-    *    per side, as in [[categoricalDrift]].
+    *  - groups present in only ONE snapshot are EXCLUDED
+    *    ([[withCommonTotals]]: JSD against an absent distribution is
+    *    undefined; a newborn/vanished group is a schema-level event —
+    *    catch it with [[columnStats]] counts, not a drift score). Null
+    *    group keys are a group (the groupedHeavyHitters contract).
     *
     * Output: groupCols ++ (category, n_base, n_cur, p_base, p_cur,
     * jsd_term), ≤ K+1 category rows per group. */
   def categoricalDriftBy(base: DataFrame, cur: DataFrame, catCol: String,
                          groupCols: Seq[String],
                          topK: Int = 20): DataFrame = {
-    require(topK >= 1, s"categoricalDriftBy: topK must be >= 1, got $topK")
     require(groupCols.nonEmpty,
       "categoricalDriftBy: groupCols must be non-empty (use categoricalDrift)")
+    categorical("categoricalDriftBy", base, cur, catCol, groupCols, topK)
+  }
+
+  private def categorical(caller: String, base: DataFrame, cur: DataFrame,
+                          catCol: String, groupCols: Seq[String],
+                          topK: Int): DataFrame = {
+    require(topK >= 1, s"$caller: topK must be >= 1, got $topK")
     val cc = col(catCol).cast("string")
     val gs = groupCols.map(col)
-    def side(df: DataFrame, b: Int, name: String) = {
-      val missing = (groupCols :+ catCol).filterNot(df.columns.contains)
-      require(missing.isEmpty,
-        s"categoricalDriftBy: $name snapshot is missing column(s): ${missing.mkString(", ")}")
-      df.filter(cc.isNotNull)
-        .select(gs :+ cc.as("__cat") :+ lit(b.toLong).as("__b")
-          :+ lit(1L - b).as("__c"): _*)
-    }
-    val digests = side(base, 1, "base").unionAll(side(cur, 0, "cur"))
-      .groupBy(gs :+ col("__cat"): _*)
-      .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(gs: _*).orderBy(col("__cb").desc, col("__cat").asc)
-    // null-safe group joins throughout: a null group key is a group
-    // (the groupedHeavyHitters contract) — a plain equi-join would
-    // silently fold its kept categories and then DROP the group at
-    // the totals join
-    val top = digests.withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= topK)
-      .select(groupCols.map(c => col(c).as(s"__tg_$c"))
-        :+ col("__cat").as("__tcat") :+ lit(true).as("__keep"): _*)
-    val keepCond = groupCols.map(c => col(c) <=> col(s"__tg_$c"))
-      .reduce(_ && _) && col("__cat") === col("__tcat")
-    val mapped = digests.join(top, keepCond, "left")
+    val digests = snapshotDigest(caller, base, cur, groupCols, catCol,
+      cc.isNotNull, cc, "__cat")
+    val order = Seq(col("__cb").desc, col("__cat").asc)
+    // null-safe group joins: a null group key is a group — a plain
+    // equi-join would silently fold its kept categories
+    val kept =
+      if (groupCols.isEmpty)
+        digests.join(broadcast(digests.orderBy(order: _*).limit(topK)
+          .select(col("__cat"), lit(true).as("__keep"))), Seq("__cat"), "left")
+      else {
+        val top = digests
+          .withColumn("__rk", row_number().over(Window.partitionBy(gs: _*).orderBy(order: _*)))
+          .filter(col("__rk") <= topK)
+          .select(groupCols.map(c => col(c).as(s"__tg_$c"))
+            :+ col("__cat").as("__tcat") :+ lit(true).as("__keep"): _*)
+        digests.join(top, groupCols.map(c => col(c) <=> col(s"__tg_$c"))
+          .reduce(_ && _) && col("__cat") === col("__tcat"), "left")
+      }
+    val mapped = kept
       .select(gs :+
         when(col("__keep"), col("__cat")).otherwise(lit("__other__"))
           .as("category") :+ col("__cb") :+ col("__cc"): _*)
       .groupBy(gs :+ col("category"): _*)
       .agg(sum(col("__cb")).as("__nb"), sum(col("__cc")).as("__nc"))
-    val totals = mapped.groupBy(gs: _*)
-      .agg(sum(col("__nb")).as("__tb"), sum(col("__nc")).as("__tc"))
-      .filter(col("__tb") > 0L && col("__tc") > 0L)
-      .select(groupCols.map(c => col(c).as(s"__gg_$c"))
-        :+ col("__tb") :+ col("__tc"): _*)
-    val totCond = groupCols.map(c => col(c) <=> col(s"__gg_$c")).reduce(_ && _)
-    val pb = col("__nb") / col("__tb")
-    val pc = col("__nc") / col("__tc")
-    val m = (pb + pc) / 2
-    val term = (when(col("__nb") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
-      + when(col("__nc") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
-    mapped.join(totals, totCond)
+    withCommonTotals(mapped, groupCols, ("__nb", "__nc"), ("__tb", "__tc"))
       .select(gs ++ Seq(col("category"),
-        col("__nb").as("n_base"), col("__nc").as("n_cur"),
-        round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
-        round(term, 6).as("jsd_term")): _*)
+        col("__nb").as("n_base"), col("__nc").as("n_cur")) ++
+        jsdColumns(col("__nb"), col("__nc"), col("__tb"), col("__tc")): _*)
       .orderBy(gs :+ col("category").asc: _*)
   }
+
+  /** The two-snapshot digest every drift statistic starts from: the
+    * rows of each side where `present` holds, tagged by side and
+    * tag-unioned, aggregated by (groups…, `value` as `as`) into
+    * per-value counts — `__cb` from base, `__cc` from cur. It is the
+    * only stage that touches every row, a hash aggregate with
+    * map-side combine whose exchange key includes the value, so a
+    * skewed group still counts in parallel. Each side must hold the
+    * group columns and `valueCol` (an IllegalArgumentException names
+    * the snapshot and the missing columns); with no groups each side
+    * must also have a row left, since an ungrouped statistic of an
+    * empty sample is undefined (grouped statistics drop such groups
+    * instead, [[withCommonTotals]]). */
+  private[graft] def snapshotDigest(caller: String, base: DataFrame, cur: DataFrame,
+                                    groupCols: Seq[String], valueCol: String,
+                                    present: Column, value: Column,
+                                    as: String): DataFrame = {
+    val gs = groupCols.map(col)
+    def side(df: DataFrame, b: Int, name: String) = {
+      val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
+      require(missing.isEmpty,
+        s"$caller: $name snapshot is missing column(s): ${missing.mkString(", ")}")
+      val f = df.filter(present)
+      require(groupCols.nonEmpty || !f.isEmpty,
+        s"$caller: $name snapshot has no non-null '$valueCol' values")
+      f.select(gs :+ value.as(as) :+ lit(b.toLong).as("__b")
+        :+ lit(1L - b).as("__c"): _*)
+    }
+    side(base, 1, "base").unionAll(side(cur, 0, "cur"))
+      .groupBy(gs :+ col(as): _*)
+      .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
+  }
+
+  /** `df` with the per-group sums of its two count columns `counts`
+    * attached as `totals`, keeping only the groups whose totals are
+    * both positive: a statistic against an absent sample is undefined,
+    * so a group seen in one snapshot only drops out. Null group keys
+    * are a group (null-safe join). With no groups the one global total
+    * rides a broadcast cross join and nothing is dropped (ungrouped
+    * statistics refuse an empty side up front, [[snapshotDigest]]). */
+  private[graft] def withCommonTotals(df: DataFrame, groupCols: Seq[String],
+                                      counts: (String, String),
+                                      totals: (String, String)): DataFrame = {
+    val aggs = Seq(sum(col(counts._1)).as(totals._1), sum(col(counts._2)).as(totals._2))
+    if (groupCols.isEmpty) df.crossJoin(broadcast(df.agg(aggs.head, aggs.tail: _*)))
+    else {
+      val t = df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+        .filter(col(totals._1) > 0L && col(totals._2) > 0L)
+        .select(groupCols.map(c => col(c).as(s"__gg_$c"))
+          :+ col(totals._1) :+ col(totals._2): _*)
+      df.join(t, groupCols.map(c => col(c) <=> col(s"__gg_$c")).reduce(_ && _))
+    }
+  }
+
+  /** One category's Jensen–Shannon term from exact integer counts
+    * (`nb` of `tb` base rows, `nc` of `tc` current rows):
+    * (p_base, p_cur, jsd_term), each rounded 6dp, with
+    * jsd_term = ½(p_b·ln(p_b/m) + p_c·ln(p_c/m)), m = (p_b+p_c)/2 and
+    * 0·ln 0 = 0. Every step is one IEEE operation over exact
+    * integers, so DuckDB replays each term bit-for-bit. */
+  private[graft] def jsdColumns(nb: Column, nc: Column, tb: Column,
+                                tc: Column): Seq[Column] = {
+    val pb = nb / tb
+    val pc = nc / tc
+    val m = (pb + pc) / 2
+    val term = (when(nb === 0L, lit(0.0)).otherwise(pb * log(pb / m))
+      + when(nc === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
+    Seq(round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
+      round(term, 6).as("jsd_term"))
+  }
+
+  /** Global running sums of the count columns `__c<s>`, one per
+    * suffix s, over `df` ordered by `orderCol` — never in a single
+    * task. The rows are range-partitioned by the order key and
+    * prefix-summed WITHIN each (globally ordered) partition into
+    * `__r<s>`, a per-partition window, parallel across partitions.
+    * The per-partition totals `__t<s>` (one row per partition, from
+    * the pre-window branch so the shuffle is shared via ReuseExchange
+    * — the GraftFrame.fillDown discipline) become exclusive prefix
+    * offsets `__o<s>` through a partition-count-sized window,
+    * broadcast back: the global inclusive running sum is
+    * `__r<s> + __o<s>`. Returns those rows and the per-partition
+    * totals. */
+  private[graft] def rangeRunningSums(df: DataFrame, orderCol: String,
+                                      suffixes: Seq[String]): (DataFrame, DataFrame) = {
+    val ranged = df.repartitionByRange(col(orderCol).asc)
+      .sortWithinPartitions(col(orderCol).asc)
+      .withColumn("__pid", spark_partition_id())
+    val wRun = Window.partitionBy("__pid").orderBy(col(orderCol).asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val run = suffixes.foldLeft(ranged) { (d, s) =>
+      d.withColumn(s"__r$s", sum(col(s"__c$s")).over(wRun))
+    }
+    val sums = suffixes.map(s => sum(col(s"__c$s")).as(s"__t$s"))
+    val pidTotals = ranged.groupBy("__pid").agg(sums.head, sums.tail: _*)
+    val wOff = Window.orderBy(col("__pid").asc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = pidTotals.select(col("__pid") +: suffixes.map(s =>
+      coalesce(sum(col(s"__t$s")).over(wOff), lit(0L)).as(s"__o$s")): _*)
+    (run.join(broadcast(offsets), Seq("__pid")), pidTotals)
+  }
+
+  /** The library-wide quantization rule: `floor(v·scale + ½)` as a
+    * BIGINT — floor, not round (round-half differs across engines at
+    * negative halves) — so every sum over it is an exact, order-free
+    * integer that DuckDB replays bit-for-bit. Resolution 1/`scale` is
+    * each caller's documented contract. */
+  private[graft] def quantize(v: Column, scale: Long): Column =
+    floor(v.cast("double") * lit(scale.toDouble) + lit(0.5)).cast("long")
 
   /** Per-group ROBUST outlier gate: median/MAD instead of mean/σ —
     * the metric-anomaly screen that heavy tails cannot hijack (one
@@ -522,9 +569,8 @@ object Profiler {
     val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"madOutliers: input is missing column(s): ${missing.mkString(", ")}")
-    val vq = floor(col(valueCol).cast("double") * lit(scale.toDouble) + lit(0.5))
-      .cast("long").cast("double")
-    val in = df.filter(col(valueCol).isNotNull).withColumn("__vq", vq)
+    val in = df.filter(col(valueCol).isNotNull)
+      .withColumn("__vq", quantize(col(valueCol), scale).cast("double"))
     val med = Quantile.exactGrouped(in, groupCols, "__vq",
         Seq(("__medq", 0.5)))
       .select(groupCols.map(c => col(c).as(s"__mg_$c")) :+ col("__medq"): _*)
@@ -582,29 +628,16 @@ object Profiler {
     require(missing.isEmpty,
       s"winsorizeBy: input is missing column(s): ${missing.mkString(", ")}")
     val gs = groupCols.map(col)
-    val vq = floor(col(valueCol).cast("double") * lit(scale.toDouble) + lit(0.5))
-      .cast("long")
-    val digests = df.filter(col(valueCol).isNotNull)
-      .select(gs :+ vq.as("__vq"): _*)
-      .groupBy(gs :+ col("__vq"): _*)
-      .agg(count(lit(1)).as("__c"))
-    val w = Window.partitionBy(gs: _*).orderBy(col("__vq").asc)
-    val ranked = digests
-      .withColumn("__hi_rank", sum(col("__c")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__n", sum(col("__c")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    val ranked = Quantile.rankDigests(df.filter(col(valueCol).isNotNull), gs,
+      quantize(col(valueCol), scale), "__vq")
     val k = floor(lit(alpha) * col("__n").cast("double")).cast("long")
-    def covers(r: Column) =
-      col("__hi_rank") - col("__c") <= r && r < col("__hi_rank")
     val bounds = ranked.groupBy(gs: _*)
-      .agg(max(when(covers(k), col("__vq"))).as("__loq"),
-        max(when(covers(col("__n") - 1L - k), col("__vq"))).as("__hiq"))
+      .agg(max(when(Quantile.rankCovers(k), col("__vq"))).as("__loq"),
+        max(when(Quantile.rankCovers(col("__n") - 1L - k), col("__vq"))).as("__hiq"))
       .select(groupCols.map(c => col(c).as(s"__wg_$c"))
         :+ col("__loq") :+ col("__hiq"): _*)
     val cond = groupCols.map(c => df(c) <=> bounds(s"__wg_$c")).reduce(_ && _)
-    val rowVq = floor(df(valueCol).cast("double") * lit(scale.toDouble)
-      + lit(0.5)).cast("long")
+    val rowVq = quantize(df(valueCol), scale)
     df.join(bounds, cond, "left")
       .select(df.columns.map(df(_)) ++ Seq(
         (col("__loq").cast("double") / lit(scale.toDouble)).as("lo"),
@@ -647,25 +680,8 @@ object Profiler {
       "w1DriftBy: groupCols must be non-empty")
     require(scale >= 1, s"w1DriftBy: scale must be >= 1, got $scale")
     val gs = groupCols.map(col)
-    def side(df: DataFrame, b: Int, name: String) = {
-      val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
-      require(missing.isEmpty,
-        s"w1DriftBy: $name snapshot is missing column(s): ${missing.mkString(", ")}")
-      val vq = floor(col(valueCol).cast("double") * lit(scale.toDouble)
-        + lit(0.5)).cast("long")
-      df.filter(col(valueCol).isNotNull)
-        .select(gs :+ vq.as("__vq") :+ lit(b.toLong).as("__b")
-          :+ lit(1L - b).as("__c"): _*)
-    }
-    val digests = side(base, 1, "base").unionAll(side(cur, 0, "cur"))
-      .groupBy(gs :+ col("__vq"): _*)
-      .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
-    val totals = digests.groupBy(gs: _*)
-      .agg(sum(col("__cb")).as("__nb"), sum(col("__cc")).as("__nc"))
-      .filter(col("__nb") > 0L && col("__nc") > 0L)
-      .select(groupCols.map(c => col(c).as(s"__gg_$c"))
-        :+ col("__nb") :+ col("__nc"): _*)
-    val totCond = groupCols.map(c => col(c) <=> col(s"__gg_$c")).reduce(_ && _)
+    val digests = snapshotDigest("w1DriftBy", base, cur, groupCols, valueCol,
+      col(valueCol).isNotNull, quantize(col(valueCol), scale), "__vq")
     val wOrd = Window.partitionBy(gs: _*).orderBy(col("__vq").asc)
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dec = "decimal(38,0)"
@@ -676,7 +692,7 @@ object Profiler {
         .cast(dec))
     val term = abs(col("__rb").cast(dec) * col("__nc").cast(dec)
       - col("__rc").cast(dec) * col("__nb").cast(dec)) * col("__dv")
-    run.join(totals, totCond)
+    withCommonTotals(run, groupCols, ("__cb", "__cc"), ("__nb", "__nc"))
       .groupBy(gs: _*)
       .agg(coalesce(sum(when(col("__dv").isNotNull, term)), lit(0).cast(dec))
           .as("__num"),
@@ -713,8 +729,8 @@ object Profiler {
     *     at j — a broadcast join on the index.
     *
     * Scale shape: one `groupBy(value)` digest pass (map-side
-    * combined), the cur11 range-partitioned prefix sums for global
-    * ranks (never a single-task sort over digests), one per-GROUP
+    * combined), [[rangeRunningSums]] for global ranks (never a
+    * single-task sort over digests), one per-GROUP
     * window over raw rows (groups are the parallelism unit — the
     * grouped-mutate contract), one broadcast join of the nGrid-row
     * reference. The operator materializes N at build time (one count
@@ -739,32 +755,18 @@ object Profiler {
     require(missing.isEmpty,
       s"quantileNormalizeBy: input is missing column(s): ${missing.mkString(", ")}")
     val gs = groupCols.map(col)
-    val vq = floor(col(valueCol).cast("double") * lit(scale.toDouble) + lit(0.5))
-      .cast("long")
+    val vq = quantize(col(valueCol), scale)
     val base = df.filter(col(valueCol).isNotNull)
     val n = base.count()
     require(n >= 2, s"quantileNormalizeBy: need >= 2 non-null values, got $n")
     val g = (nGrid - 1).toLong
 
-    // global digests with exclusive running ranks — the ksDrift
-    // range-partitioned prefix-sum machinery (never one sort task)
+    // global digests with running ranks (never one sort task); a
+    // digest covers global 0-based ranks [hi − c, hi)
     val digests = base.select(vq.as("__vq"))
       .groupBy("__vq").agg(count(lit(1)).as("__c"))
-    val ranged = digests.repartitionByRange(col("__vq").asc)
-      .sortWithinPartitions(col("__vq").asc)
-      .withColumn("__pid", spark_partition_id())
-    val wRun = Window.partitionBy("__pid").orderBy(col("__vq").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val run = ranged.withColumn("__r", sum(col("__c")).over(wRun))
-    val wOff = Window.orderBy(col("__pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranged.groupBy("__pid").agg(sum(col("__c")).as("__t"))
-      .select(col("__pid"), coalesce(sum(col("__t")).over(wOff), lit(0L))
-        .as("__off"))
-    // digest covers global 0-based ranks [hi − c, hi)
-    val withRanks = run.join(broadcast(offsets), Seq("__pid"))
-      .select(col("__vq"), (col("__r") + col("__off")).as("__hi"),
-        col("__c"))
+    val withRanks = rangeRunningSums(digests, "__vq", Seq(""))._1
+      .select(col("__vq"), (col("__r") + col("__o")).as("__hi"), col("__c"))
     // grid indices this digest's rank range covers: t_j ∈ [lo, hi)
     // ⟺ j ∈ [⌈lo·g/(N−1)⌉, ⌈hi·g/(N−1)⌉ − 1], clamped to [0, g];
     // sequence() DESCENDS on an inverted range (the Bpe/dd12 lesson),
@@ -830,8 +832,7 @@ object Profiler {
       s"standardizeBy: input is missing column(s): ${missing.mkString(", ")}")
     val dec = "decimal(38,0)"
     val gs = groupCols.map(col)
-    val vq = floor(col(valueCol).cast("double") * lit(scale.toDouble) + lit(0.5))
-      .cast("long").cast(dec)
+    val vq = quantize(col(valueCol), scale).cast(dec)
     val stats = df.filter(col(valueCol).isNotNull)
       .select(gs :+ vq.as("__xq"): _*)
       .groupBy(gs: _*)
@@ -842,8 +843,7 @@ object Profiler {
           (col("__n") * col("__sxx") - col("__sx") * col("__sx"))
             .as("__varnum")): _*)
     val cond = groupCols.map(c => df(c) <=> stats(s"__sg_$c")).reduce(_ && _)
-    val rowVq = floor(df(valueCol).cast("double") * lit(scale.toDouble)
-      + lit(0.5)).cast("long")
+    val rowVq = quantize(df(valueCol), scale)
     val meanQ = col("__sx").cast("double") / col("__n").cast("double")
     val sdQ = sqrt(col("__varnum").cast("double")
       / (col("__n") * col("__n")).cast("double"))
@@ -895,10 +895,8 @@ object Profiler {
       s"linearFitBy: input is missing column(s): ${missing.mkString(", ")}")
     val dec = "decimal(38,0)"
     val gs = groupCols.map(col)
-    val xi = floor(col(xCol).cast("double") * lit(scaleX.toDouble) + lit(0.5))
-      .cast("long").cast(dec)
-    val yi = floor(col(yCol).cast("double") * lit(scaleY.toDouble) + lit(0.5))
-      .cast("long").cast(dec)
+    val xi = quantize(col(xCol), scaleX).cast(dec)
+    val yi = quantize(col(yCol), scaleY).cast(dec)
     val agg = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(gs ++ Seq(xi.as("__x"), yi.as("__y")): _*)
       .groupBy(gs: _*)

@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   *  3. The k-th / (k+1)-th order statistics each percentile needs are
   *     the digests whose rank range contains floor/ceil(p·(n−1)) —
   *     picked by a plain conditional aggregate; the final projection
-  *     interpolates.
+  *     interpolates. Steps 1–2 ([[rankDigests]]) and step 3's test
+  *     ([[rankCovers]]) are shared with `Profiler.winsorizeBy`.
   *
   * Two exchanges: one hash exchange on (group, value) for the
   * parallel count, one on the group keys carrying ONLY the distinct
@@ -63,24 +64,12 @@ object Quantile {
     }
     val gcols = groupCols.map(col)
     val v = col(valueCol).cast("double")
-    val counts = df.filter(v.isNotNull)
-      .select(gcols :+ v.as("__v"): _*)
-      .groupBy(gcols :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"))
-    val w = Window.partitionBy(gcols: _*).orderBy(col("__v").asc)
-    val ranked = counts
-      // digest covers 0-based ranks [__hi_rank − __c, __hi_rank)
-      .withColumn("__hi_rank", sum(col("__c")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__n", sum(col("__c")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    val ranked = rankDigests(df.filter(v.isNotNull), gcols, v, "__v")
     val aggs = ps.flatMap { case (name, p) =>
       val pos = lit(p) * (col("__n") - 1L).cast("double") // 0-based position
-      val loRank = col("__hi_rank") - col("__c")
-      def covers(k: Column) = loRank <= k && k < col("__hi_rank")
       Seq(
-        max(when(covers(floor(pos)), col("__v"))).as(s"__lo_$name"),
-        max(when(covers(ceil(pos)), col("__v"))).as(s"__hi_$name"),
+        max(when(rankCovers(floor(pos)), col("__v"))).as(s"__lo_$name"),
+        max(when(rankCovers(ceil(pos)), col("__v"))).as(s"__hi_$name"),
         // pos is constant within a group; max() just carries it through
         max(pos).as(s"__pos_$name"))
     }
@@ -94,4 +83,20 @@ object Quantile {
     ranked.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
       .select(gcols ++ outs: _*)
   }
+
+  /** Steps 1–2 over `df`'s (already filtered) rows: (groups…, `value`
+    * as `as`) digests with `__c`, `__hi_rank` and group size `__n`. */
+  private[graft] def rankDigests(df: DataFrame, gs: Seq[Column], value: Column,
+                                 as: String): DataFrame = {
+    val w = Window.partitionBy(gs: _*).orderBy(col(as).asc)
+      .rowsBetween(Window.unboundedPreceding, _: Long)
+    df.select(gs :+ value.as(as): _*).groupBy(gs :+ col(as): _*)
+      .agg(count(lit(1)).as("__c"))
+      .withColumn("__hi_rank", sum(col("__c")).over(w(Window.currentRow)))
+      .withColumn("__n", sum(col("__c")).over(w(Window.unboundedFollowing)))
+  }
+
+  /** Whether a [[rankDigests]] row covers 0-based rank `k` (step 3). */
+  private[graft] def rankCovers(k: Column): Column =
+    col("__hi_rank") - col("__c") <= k && k < col("__hi_rank")
 }

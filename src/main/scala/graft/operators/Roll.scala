@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Rolling (sliding-window) statistics over a time series — the
@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * window verbs (reference R/verbs-mutate.R) stop at rank/lag.
   *
   * Exactness contract (the CUSUM/q58 micro-quantization discipline):
-  * values are quantized to integers at `1/scale` (`floor(v·scale+½)`,
-  * floor NOT round — round-half differs across engines at negative
-  * halves), the rolling sum runs over exact BIGINTs (integer sums are
-  * order-free where float sums are not), and the user-facing
+  * values are quantized to integers at `1/scale` by
+  * [[Profiler.quantize]] (`floor(v·scale+½)`), the rolling sum runs
+  * over exact BIGINTs (integer sums are order-free where float sums
+  * are not), and the user-facing
   * sum/mean are produced by ONE double division each — so every
   * output bit replays in DuckDB. Callers pick `scale` to cover their
   * value precision (100 for 2-decimal amounts); values needing more
@@ -47,27 +47,8 @@ object Roll {
                 valueCol: String, windowSeconds: Long,
                 scale: Long = 100L): DataFrame = {
     require(windowSeconds >= 1, s"timeStats: windowSeconds must be >= 1, got $windowSeconds")
-    require(scale >= 1, s"timeStats: scale must be >= 1, got $scale")
-    val missing = (keyCols ++ Seq(tsCol, valueCol)).filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"timeStats: input is missing column(s): ${missing.mkString(", ")}")
-    val gs = keyCols.map(col)
-    val ts = col(tsCol).cast("long")
-    val v = col(valueCol).cast("double")
-    val in = df.filter(ts.isNotNull && v.isNotNull)
-      .select(gs ++ Seq(ts.as("__t"), v.as("__v"),
-        floor(v * lit(scale.toDouble) + lit(0.5)).cast("long").as("__vc")): _*)
-    val w = Window.partitionBy(gs: _*).orderBy(col("__t").asc)
-      .rangeBetween(-(windowSeconds - 1), Window.currentRow)
-    val n = count(lit(1)).over(w)
-    val sc = sum(col("__vc")).over(w)
-    in.select(gs ++ Seq(
-      col("__t").as(tsCol), col("__v").as(valueCol),
-      n.as("roll_n"),
-      (sc.cast("double") / lit(scale.toDouble)).as("roll_sum"),
-      (sc.cast("double") / (n * lit(scale)).cast("double")).as("roll_mean"),
-      min(col("__v")).over(w).as("roll_min"),
-      max(col("__v")).over(w).as("roll_max")): _*)
+    rolling("timeStats", df, keyCols, tsCol, valueCol, scale)(
+      _.orderBy(col("__t").asc).rangeBetween(-(windowSeconds - 1), Window.currentRow))
   }
 
   /** Trailing ROW-count stats: aggregates over the previous
@@ -80,19 +61,28 @@ object Roll {
                valueCol: String, nRows: Int,
                scale: Long = 100L): DataFrame = {
     require(nRows >= 1, s"rowStats: nRows must be >= 1, got $nRows")
-    require(scale >= 1, s"rowStats: scale must be >= 1, got $scale")
+    rolling("rowStats", df, keyCols, tsCol, valueCol, scale)(
+      _.orderBy(col("__t").asc, col("__vc").asc)
+        .rowsBetween(-(nRows - 1).toLong, Window.currentRow))
+  }
+
+  /** The one body of [[timeStats]] and [[rowStats]]: `frame` orders and
+    * bounds the per-key window (`__t` is the integral ts, `__vc` the
+    * quantized value). */
+  private def rolling(caller: String, df: DataFrame, keyCols: Seq[String],
+                      tsCol: String, valueCol: String, scale: Long)
+                     (frame: WindowSpec => WindowSpec): DataFrame = {
+    require(scale >= 1, s"$caller: scale must be >= 1, got $scale")
     val missing = (keyCols ++ Seq(tsCol, valueCol)).filterNot(df.columns.contains)
     require(missing.isEmpty,
-      s"rowStats: input is missing column(s): ${missing.mkString(", ")}")
+      s"$caller: input is missing column(s): ${missing.mkString(", ")}")
     val gs = keyCols.map(col)
     val ts = col(tsCol).cast("long")
     val v = col(valueCol).cast("double")
     val in = df.filter(ts.isNotNull && v.isNotNull)
       .select(gs ++ Seq(ts.as("__t"), v.as("__v"),
-        floor(v * lit(scale.toDouble) + lit(0.5)).cast("long").as("__vc")): _*)
-    val w = Window.partitionBy(gs: _*)
-      .orderBy(col("__t").asc, col("__vc").asc)
-      .rowsBetween(-(nRows - 1).toLong, Window.currentRow)
+        Profiler.quantize(col(valueCol), scale).as("__vc")): _*)
+    val w = frame(Window.partitionBy(gs: _*))
     val n = count(lit(1)).over(w)
     val sc = sum(col("__vc")).over(w)
     in.select(gs ++ Seq(

@@ -1103,7 +1103,7 @@ object Ann {
     * without any extra corpus-side replication, the multiprobe
     * alternative to adding tables at 100 TB.
     */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nBits: Int = 8, tables: Int = 4, probes: Int = 1, seed: Long = 42L,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(probes >= 1 && probes <= nBits + 1,

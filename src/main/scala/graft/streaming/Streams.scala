@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.operators.Profiler
 import graft.sources.Tables
 import java.nio.file.Files
 
@@ -666,10 +667,13 @@ object Streams {
     * baseline's top-K categories and total ship as a literal array
     * (one action of K + 1 rows, whatever the cardinality),
     * per-category window counts come from higher-order functions over
-    * the collected list, and the arithmetic is exactly
-    * `categoricalDrift`'s (integer counts, pb·ln(pb/m) with zero
-    * guards, 6 dp) so the DuckDB oracle replays every term
-    * bit-for-bit under the append-mode finalization cutoff.
+    * the collected list, and each term is `categoricalDrift`'s own
+    * ([[Profiler.jsdColumns]]: integer counts, pb·ln(pb/m) with zero
+    * guards, 6 dp), so a sealed window's rows equal
+    * `categoricalDrift(baseline, that window's events, catCol, topK)`
+    * whenever the baseline has at least `topK` categories, and the
+    * DuckDB oracle replays every term bit-for-bit under the
+    * append-mode finalization cutoff.
     *
     * Output per SEALED window: one row per kept baseline category
     * (plus `__other__` when either side has folded mass):
@@ -731,21 +735,15 @@ object Streams {
               lit("__other__").as("category"), lit(nbOther).as("n_base"),
               (col("window_total") - col("__nck")).as("n_cur")))))
             .otherwise(col("terms")))
-      val pb = col("n_base") / lit(tb)
-      val pc = col("n_cur") / col("window_total")
-      val m = (pb + pc) / 2
-      val term = (when(col("n_base") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
-        + when(col("n_cur") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
       withTerms
         .select(col("window_start"), col("window_total"),
           explode(col("terms")).as("t"))
         .select(col("window_start"), col("t.category").as("category"),
           col("t.n_base").as("n_base"), col("t.n_cur").as("n_cur"),
           col("window_total"))
-        .select(col("window_start"), col("category"), col("n_base"),
-          col("n_cur"), col("window_total"),
-          round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
-          round(term, 6).as("jsd_term"))
+        .select(Seq(col("window_start"), col("category"), col("n_base"),
+          col("n_cur"), col("window_total")) ++ Profiler.jsdColumns(col("n_base"),
+          col("n_cur"), lit(tb), col("window_total")): _*)
     }
   }
 

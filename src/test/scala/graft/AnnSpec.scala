@@ -48,7 +48,7 @@ class AnnSpec extends AnyFunSuite {
   test("lshTopK finds planted identical twins as top-1") {
     val twins = queries.select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
     val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(twins)
-    val top1 = Ann.lshTopK(corpus, queries, k = 3, dim = 64, nBits = 8, tables = 4)
+    val top1 = Ann.lshTopK(corpus, queries, k = 3, nBits = 8, tables = 4)
       .filter(col("rank") === 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     (0L until 5L).foreach { q =>
@@ -183,7 +183,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("lshTopK output is well-formed: ≤k rows per query, scores descending") {
-    val out = Ann.lshTopK(emb, queries, k = 10, dim = 64).collect()
+    val out = Ann.lshTopK(emb, queries, k = 10).collect()
     val byQ = out.groupBy(_.getLong(0))
     byQ.values.foreach { rows =>
       assert(rows.length <= 10)
@@ -224,7 +224,7 @@ class AnnSpec extends AnyFunSuite {
     // twins surviving the probe expansion.
     val twins = queries.select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
     val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(twins)
-    val top1 = Ann.lshTopK(corpus, queries, k = 3, dim = 64, nBits = 8,
+    val top1 = Ann.lshTopK(corpus, queries, k = 3, nBits = 8,
         tables = 4, probes = 6)
       .filter(col("rank") === 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
@@ -233,7 +233,7 @@ class AnnSpec extends AnyFunSuite {
     }
     val brute = naiveTopK(10).select("query_id", "neighbor_id")
     def hits(probes: Int): Long =
-      Ann.lshTopK(emb, queries, k = 10, dim = 64, nBits = 8, tables = 4,
+      Ann.lshTopK(emb, queries, k = 10, nBits = 8, tables = 4,
           probes = probes)
         .select("query_id", "neighbor_id").intersect(brute).count()
     val h1 = hits(1); val h4 = hits(4); val h8 = hits(8)
@@ -243,10 +243,10 @@ class AnnSpec extends AnyFunSuite {
 
   test("lshTopK refuses out-of-range probe counts") {
     intercept[IllegalArgumentException] {
-      Ann.lshTopK(emb, queries, k = 3, dim = 64, nBits = 8, probes = 0)
+      Ann.lshTopK(emb, queries, k = 3, nBits = 8, probes = 0)
     }
     intercept[IllegalArgumentException] {
-      Ann.lshTopK(emb, queries, k = 3, dim = 64, nBits = 8, probes = 10)
+      Ann.lshTopK(emb, queries, k = 3, nBits = 8, probes = 10)
     }
   }
 

@@ -213,7 +213,7 @@ class DedupSpec extends AnyFunSuite {
       .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
     val corpus = emb.unionByName(planted)
     val pairs = Dedup.embeddingDupPairs(corpus, "vec_id", "embedding",
-      dim = 64, threshold = 0.999, nBits = 10, tables = 2)
+      threshold = 0.999, nBits = 10, tables = 2)
     // identical vectors share every SRP bucket → all 50 pairs found
     assert(pairs.filter(col("id_b") === col("id_a") + 10000L).count() == 50)
   }

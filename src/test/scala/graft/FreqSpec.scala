@@ -108,6 +108,13 @@ class FreqSpec extends AnyFunSuite {
     // (12/342 ≈ 3.5% of the small group, invisible globally at 2%)
     assert(got.exists { case (g, w, _) => g == "small" && w == "niche" })
     assert(!got.exists { case (g, w, _) => g == "big" && w == "niche" })
+    // over one constant group the grouped form is the ungrouped one
+    val one = df.withColumn("g", lit("all"))
+    val grouped = Freq.groupedHeavyHitters(one, Seq("g"), "w", minFraction = 0.02)
+      .collect().map(r => (r.getString(1), r.getLong(2))).toSet
+    val ungrouped = Freq.heavyHitters(one, "w", minFraction = 0.02)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(grouped.nonEmpty && grouped == ungrouped)
   }
 
   test("groupedHeavyHitters: a null group key is its own group") {

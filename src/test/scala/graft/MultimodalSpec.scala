@@ -108,7 +108,7 @@ class MultimodalSpec extends AnyFunSuite {
     val withTwins = Multimodal.asMediaTable(docs.unionByName(twins))
     val emb = Multimodal.embedStub(withTwins, dim = 64)
     val pairs = graft.dedup.Dedup.embeddingDupPairs(emb, "vec_id", "embedding",
-      dim = 64, threshold = 0.999, nBits = 8, tables = 2)
+      threshold = 0.999, nBits = 8, tables = 2)
     val found = pairs.filter(col("id_b") === col("id_a") + 10000L).count()
     assert(found >= 18, s"found only $found of 20 planted twins")
   }
@@ -169,7 +169,7 @@ class MultimodalSpec extends AnyFunSuite {
     val rows = (0 until n).toSeq.map(i => (i.toLong, Array.fill(8)(1.0f)))
     val df = rows.toDF("vec_id", "embedding")
     val pairs = graft.dedup.Dedup.embeddingDupPairs(df, "vec_id", "embedding",
-      dim = 8, threshold = 0.9, nBits = 4, tables = 2, bucketCap = 10)
+      threshold = 0.9, nBits = 4, tables = 2, bucketCap = 10)
     val cnt = pairs.count()
     assert(cnt == 45L, s"expected C(10,2)=45 capped pairs, got $cnt")
   }

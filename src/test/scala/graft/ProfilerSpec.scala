@@ -124,6 +124,11 @@ class ProfilerSpec extends AnyFunSuite {
       Profiler.ksDrift(base.filter(col("v") < 0), base, "v")
     }
     assert(e.getMessage.contains("base snapshot"))
+    // a missing column is named with its snapshot, as in ksDriftBy
+    val eCol = intercept[IllegalArgumentException] {
+      Profiler.ksDrift(base, base, "nope")
+    }
+    assert(eCol.getMessage.contains("base snapshot") && eCol.getMessage.contains("nope"))
   }
 
   test("categoricalDrift: zero/ln2 endpoints, other-fold conservation, tie-break, refusals") {
@@ -173,6 +178,10 @@ class ProfilerSpec extends AnyFunSuite {
       Profiler.categoricalDrift(base.filter(col("lang") === "nope"), base, "lang")
     }
     assert(e2.getMessage.contains("base snapshot"))
+    val eCol = intercept[IllegalArgumentException] {
+      Profiler.categoricalDrift(base, base, "nope")
+    }
+    assert(eCol.getMessage.contains("base snapshot") && eCol.getMessage.contains("nope"))
     intercept[IllegalArgumentException] {
       Profiler.categoricalDrift(base, base, "lang", topK = 0)
     }

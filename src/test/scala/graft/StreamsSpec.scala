@@ -454,6 +454,33 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming drift: each sealed window equals batch categoricalDrift over its events") {
+    // the gate's first 12 event hours as the stream (a handful of
+    // sealed windows keeps the per-window batch runs cheap); the
+    // baseline is the whole fixture, 5 event types >= topK
+    val events = spark.read.parquet(s"${SparkT.sfDir}/events.parquet")
+    val evMs = Streams.eventTsMs(events, "ts")
+    val t0 = events.select(min(evMs)).collect()(0).getLong(0)
+    val baseline = events.select("event_type")
+    withTempDir("graft_drift_src") { src =>
+      events.filter(evMs < t0 + 12 * 3600000L).write.mode("append").parquet(src)
+      for (topK <- Seq(2, 3)) {
+        val rows = Streams.categoricalDriftStreamOnce(spark, src, baseline,
+          "event_type", windowLen = "1 hour", topK = topK).collect()
+        assert(rows.nonEmpty, "no sealed windows")
+        rows.groupBy(_.getLong(0)).foreach { case (ws, rs) =>
+          val window = events.filter(evMs >= ws * 1000L && evMs < (ws + 3600L) * 1000L)
+          val batch = graft.operators.Profiler.categoricalDrift(baseline, window, "event_type", topK)
+            .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+              r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
+          val stream = rs.map(r => (r.getString(1), r.getLong(2), r.getLong(3),
+            r.getDouble(5), r.getDouble(6), r.getDouble(7))).toSeq.sortBy(_._1)
+          assert(stream == batch, s"topK=$topK window $ws")
+        }
+      }
+    }
+  }
+
   test("gateCheckpointDir: tmpfs only for single-JVM masters with capacity") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_shm_test").toFile
     try {
