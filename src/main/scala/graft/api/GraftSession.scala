@@ -18,7 +18,7 @@ object GraftSession {
     * local runs don't pay 200-partition overhead; on a real cluster the
     * same builder is used with AQE coalescing partitions at runtime.
     *
-    * Three settings make each generated class compile once per JVM.
+    * Two settings make each generated class compile once per JVM.
     * Spark caches compiled whole-stage-codegen classes under the key
     * (class loader, source):
     *  - `spark.sql.artifact.isolation.enabled=false`. With isolation on
@@ -31,17 +31,12 @@ object GraftSession {
     *    The default of 100 is smaller than the working set of a session
     *    that runs the pipeline operators (about 120 classes), so LRU
     *    evicted and recompiled them on every pass.
-    *  - `spark.sql.codegen.useIdInClassName=false`. By default the
-    *    class name carries the codegen stage id, and AQE numbers its
-    *    stages in the order they become ready, which varies from run
-    *    to run; the same plan then yields new source and recompiles
-    *    (dd4_ngram_jaccard recompiled 4–8 classes on a warm pass).
     *
-    * The first two are fixed early: isolation when the session is
-    * created, the cache size when the JVM compiles its first class. So
-    * [[init]] cannot apply them to an externally built session, and
-    * neither does this builder when `getOrCreate` returns a session
-    * that already exists.
+    * Both are fixed early: isolation when the session is created, the
+    * cache size when the JVM compiles its first class. So [[init]]
+    * cannot apply them to an externally built session, and neither
+    * does this builder when `getOrCreate` returns a session that
+    * already exists.
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
@@ -57,7 +52,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -88,7 +82,7 @@ object GraftSession {
 
   /** Register graft SQL functions + optimizer rules on an externally
     * built session (extensions can't be injected post-creation, but
-    * `experimental.extraOptimizations` can). The codegen-cache
+    * `experimental.extraOptimizations` can). The two codegen-cache
     * settings of [[local]] are not applied here: set them on the
     * builder before the session is created if the session should
     * compile each class once. */

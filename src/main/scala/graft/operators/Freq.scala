@@ -142,7 +142,8 @@ object Freq {
     // budget instead of multiplying up past 2^63
     val perGroupBytes = 2L * cap * (itemBytes + groupBytes + RowOverheadBytes)
     require(groups <= MaxCandidateBroadcastBytes / perGroupBytes,
-      s"$caller: estimated candidate broadcast (2 x $cap candidates x $groups group(s) x " +
+      s"$caller: estimated candidate broadcast ${(BigInt(perGroupBytes) * groups) >> 20} MB " +
+        s"(2 x $cap candidates x $groups group(s) x " +
         s"($itemBytes + $groupBytes + $RowOverheadBytes) bytes) exceeds " +
         s"${MaxCandidateBroadcastBytes >> 20} MB — lower capacity or raise minFraction, " +
         "or correct the size estimates (estimatedItemBytes, estimatedGroups)")

@@ -239,8 +239,7 @@ object Profiler {
                  valueCol: String, groupCols: Seq[String]): DataFrame = {
     val v = col(valueCol).cast("double")
     val gs = groupCols.map(col)
-    val digests = snapshotDigest(caller, base, cur, groupCols, valueCol,
-      v.isNotNull, v, "__v")
+    val digests = snapshotDigest(caller, base, cur, groupCols, valueCol, v, "__v")
     val gaps =
       if (groupCols.isEmpty) {
         val (run, pidTotals) = rangeRunningSums(digests, "__v", Seq("b", "c"))
@@ -398,8 +397,7 @@ object Profiler {
     require(topK >= 1, s"$caller: topK must be >= 1, got $topK")
     val cc = col(catCol).cast("string")
     val gs = groupCols.map(col)
-    val digests = snapshotDigest(caller, base, cur, groupCols, catCol,
-      cc.isNotNull, cc, "__cat")
+    val digests = snapshotDigest(caller, base, cur, groupCols, catCol, cc, "__cat")
     val order = Seq(col("__cb").desc, col("__cat").asc)
     // null-safe group joins: a null group key is a group — a plain
     // equi-join would silently fold its kept categories
@@ -430,7 +428,7 @@ object Profiler {
   }
 
   /** The two-snapshot digest every drift statistic starts from: the
-    * rows of each side where `present` holds, tagged by side and
+    * rows of each side where `value` is not null, tagged by side and
     * tag-unioned, aggregated by (groups…, `value` as `as`) into
     * per-value counts — `__cb` from base, `__cc` from cur. It is the
     * only stage that touches every row, a hash aggregate with
@@ -443,14 +441,13 @@ object Profiler {
     * instead, [[withCommonTotals]]). */
   private[graft] def snapshotDigest(caller: String, base: DataFrame, cur: DataFrame,
                                     groupCols: Seq[String], valueCol: String,
-                                    present: Column, value: Column,
-                                    as: String): DataFrame = {
+                                    value: Column, as: String): DataFrame = {
     val gs = groupCols.map(col)
     def side(df: DataFrame, b: Int, name: String) = {
       val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
       require(missing.isEmpty,
         s"$caller: $name snapshot is missing column(s): ${missing.mkString(", ")}")
-      val f = df.filter(present)
+      val f = df.filter(value.isNotNull)
       require(groupCols.nonEmpty || !f.isEmpty,
         s"$caller: $name snapshot has no non-null '$valueCol' values")
       f.select(gs :+ value.as(as) :+ lit(b.toLong).as("__b")
@@ -681,7 +678,7 @@ object Profiler {
     require(scale >= 1, s"w1DriftBy: scale must be >= 1, got $scale")
     val gs = groupCols.map(col)
     val digests = snapshotDigest("w1DriftBy", base, cur, groupCols, valueCol,
-      col(valueCol).isNotNull, quantize(col(valueCol), scale), "__vq")
+      quantize(col(valueCol), scale), "__vq")
     val wOrd = Window.partitionBy(gs: _*).orderBy(col("__vq").asc)
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dec = "decimal(38,0)"
