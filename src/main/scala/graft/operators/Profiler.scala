@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SmallSide
 
 /** Data-quality operators: column profiles, the drift family
   * (PSI, KS, JSD, W₁ between two snapshots), changepoints, robust
@@ -438,22 +439,32 @@ object Profiler {
     * the snapshot and the missing columns); with no groups each side
     * must also have a row left, since an ungrouped statistic of an
     * empty sample is undefined (grouped statistics drop such groups
-    * instead, [[withCommonTotals]]). */
+    * instead, [[withCommonTotals]]). That refusal costs one job for
+    * both sides: each side, coalesced to one partition, stops at its
+    * first row with no exchange, and the two run as one task. */
   private[graft] def snapshotDigest(caller: String, base: DataFrame, cur: DataFrame,
                                     groupCols: Seq[String], valueCol: String,
                                     value: Column, as: String): DataFrame = {
     val gs = groupCols.map(col)
-    def side(df: DataFrame, b: Int, name: String) = {
+    val sides = Seq(("base", base, 1L), ("cur", cur, 0L)).map { case (name, df, b) =>
       val missing = (groupCols :+ valueCol).filterNot(df.columns.contains)
       require(missing.isEmpty,
         s"$caller: $name snapshot is missing column(s): ${missing.mkString(", ")}")
-      val f = df.filter(value.isNotNull)
-      require(groupCols.nonEmpty || !f.isEmpty,
-        s"$caller: $name snapshot has no non-null '$valueCol' values")
-      f.select(gs :+ value.as(as) :+ lit(b.toLong).as("__b")
-        :+ lit(1L - b).as("__c"): _*)
+      (name, df.filter(value.isNotNull), b)
     }
-    side(base, 1, "base").unionAll(side(cur, 0, "cur"))
+    if (groupCols.isEmpty) {
+      val firsts = sides.map { case (name, f, _) =>
+        f.select(lit(name).as("__side")).coalesce(1).limit(1)
+      }
+      val seen = SmallSide.atMost(firsts.reduce(_ unionAll _).coalesce(1), sides.size)
+        .fold(Set.empty[String])(_.map(_.getString(0)).toSet)
+      sides.foreach { case (name, _, _) =>
+        require(seen(name), s"$caller: $name snapshot has no non-null '$valueCol' values")
+      }
+    }
+    sides.map { case (_, f, b) =>
+      f.select(gs :+ value.as(as) :+ lit(b).as("__b") :+ lit(1L - b).as("__c"): _*)
+    }.reduce(_ unionAll _)
       .groupBy(gs :+ col(as): _*)
       .agg(sum(col("__b")).as("__cb"), sum(col("__c")).as("__cc"))
   }

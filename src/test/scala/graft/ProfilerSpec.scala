@@ -187,6 +187,22 @@ class ProfilerSpec extends AnyFunSuite {
     }
   }
 
+  test("ungrouped drift checks both snapshots for rows with one build job") {
+    // seven and five partitions, no exchange: each side's check stops at
+    // its first row, and both sides run in one job
+    val base = spark.range(0, 1000, 1, 7).select((col("id") % 97).cast("double").as("v"))
+    val cur = spark.range(0, 800, 1, 5).select((col("id") % 89).cast("double").as("v"))
+    assert(SparkT.jobsLaunchedBy(Profiler.ksDrift(base, cur, "v")) == 1)
+    val lang = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(concat(lit("cat"), (col("v") % 5).cast("int").cast("string")).as("lang"))
+    assert(SparkT.jobsLaunchedBy(Profiler.categoricalDrift(lang(base), lang(cur), "lang")) == 1)
+    // the cur side is refused by name too
+    val e = intercept[IllegalArgumentException] {
+      Profiler.ksDrift(base, cur.filter(col("v") < 0), "v")
+    }
+    assert(e.getMessage.contains("cur snapshot has no non-null 'v' values"))
+  }
+
   test("cusum: hand case, recurrence equivalence, group isolation, refusals") {
     // target 12, slack 1 → dev = v-13: [1,1,-3,7]; P=[1,2,-1,6];
     // min(0,minP)=[0,0,-1,-1]; S=[1,2,0,7]; threshold 5 → last alarms

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,33 +8,6 @@ import graft.sources.Tables
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkT.spark
-
-  /** Spark jobs `f` launches on this thread. `f` runs under a job group
-    * of its own; a sentinel job in a second group, run after it, flushes
-    * the asynchronous (per-queue ordered) listener bus. */
-  private def jobsLaunchedBy(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = "graft-sources-" + java.util.UUID.randomUUID()
-    val jobs = new AtomicInteger()
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == tag => jobs.incrementAndGet()
-          case Some(g) if g == tag + "-sentinel" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "measured")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(tag + "-sentinel", "listener-bus flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def withConf[T](key: String, value: String)(f: => T): T = {
     val prev = spark.conf.getOption(key)
@@ -49,10 +19,10 @@ class SourcesSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_schema_memo").toString
     Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
-    assert(jobsLaunchedBy(Tables.load(spark, dir, "t")) >= 1,
+    assert(SparkT.jobsLaunchedBy(Tables.load(spark, dir, "t")) >= 1,
       "the first load must infer the schema (else the 0 below is vacuous)")
     var second: org.apache.spark.sql.DataFrame = null
-    assert(jobsLaunchedBy { second = Tables.load(spark, dir, "t") } == 0)
+    assert(SparkT.jobsLaunchedBy { second = Tables.load(spark, dir, "t") } == 0)
     // every read still gets fresh attribute ids: a self-join resolves
     val first = Tables.load(spark, dir, "t")
     val ids = (first.queryExecution.analyzed.output ++ second.queryExecution.analyzed.output)

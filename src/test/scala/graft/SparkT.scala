@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.api.GraftSession
 
@@ -22,5 +25,32 @@ object SparkT {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Spark jobs `f` launches on this thread. `f` runs under a job group
+    * of its own; a sentinel job in a second group, run after it, flushes
+    * the asynchronous (per-queue ordered) listener bus. */
+  def jobsLaunchedBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft-test-" + java.util.UUID.randomUUID()
+    val jobs = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == tag => jobs.incrementAndGet()
+          case Some(g) if g == tag + "-sentinel" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(tag + "-sentinel", "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -561,13 +561,17 @@ class StreamsSpec extends AnyFunSuite {
     assert(tmpEntries() -- warm == Set.empty)
   }
 
+  private val shm = new java.io.File("/dev/shm")
+
+  /** The backfill checkpoints now on tmpfs. */
+  private def ckpts(): Set[String] =
+    Option(shm.list()).toSet.flatten.filter(_.startsWith("graft_ckpt_"))
+
   test("backfill: a failing check restores the conf and leaves nothing behind") {
     val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.checkpointFileManagerClass")
     def conf() = keys.map(k => k -> spark.conf.getOption(k))
-    val shm = new java.io.File("/dev/shm")
-    def ckpts(): Set[String] =
-      Option(shm.list()).toSet.flatten.filter(_.startsWith("graft_ckpt_"))
     def views(): Set[String] = spark.catalog.listTables().collect().toSet
       .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
     val (confBefore, viewsBefore) = (conf(), views())
@@ -585,6 +589,35 @@ class StreamsSpec extends AnyFunSuite {
     assert(views() -- viewsBefore == Set.empty)
     assert(ckpts() -- ckptsBefore == Set.empty)
     assert(tmpEntries() -- tmpBefore == Set.empty)
+  }
+
+  test("backfill: a tmpfs checkpoint is written through LocalCheckpointFiles") {
+    import scala.jdk.CollectionConverters._
+    val probe = Streams.gateCheckpointDir(spark.sparkContext.master, shm)
+    probe.foreach(Streams.rmTree)
+    assume(probe.nonEmpty, "this host gives a backfill no tmpfs checkpoint")
+    val before = ckpts()
+    var manager = Option.empty[String]
+    var files = Seq.empty[String]
+    Streams.backfill(spark, s"${SparkT.sfDir}/events.parquet", "complete", check = _ => {
+      manager = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
+      val mine = (ckpts() -- before).toSeq
+      assert(mine.size == 1, mine)
+      val root = shm.toPath.resolve(mine.head)
+      val walk = Files.walk(root)
+      try files = walk.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(root.relativize(_).toString).toSeq
+      finally walk.close()
+    })(Streams.tumblingAgg(_, "1 hour"))
+    assert(manager.contains(classOf[graft.streaming.LocalCheckpointFiles].getName))
+    // the offset log and the state deltas were written, with Spark's
+    // checkpoint checksums beside them (`1.delta.crc`), and Hadoop's
+    // checksummed local file system, which leaves a hidden `.<name>.crc`
+    // beside each file it writes, wrote none of them
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    assert(files.exists(_.startsWith("offsets/")) && files.exists(_.startsWith("state/")), files)
+    assert(files.exists(f => f.startsWith("state/") && f.endsWith(".delta.crc")), files)
+    assert(!files.exists(f => name(f).startsWith(".") && f.endsWith(".crc")), files)
   }
 
   test("Bench.streamingNames is exactly the eleven streaming gates ev5-ev15") {
