@@ -9,7 +9,7 @@ object Bench {
     * total. They are reported in the same file under their own group
     * so the BATCH total stays a clean round-over-round signal. */
   private[graft] val streamingNames: Set[String] =
-    SparkEntry.declared.filter(_.streaming).map(_.name).toSet
+    graft.queries.GateQueries.declared.map(_.name).toSet
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -76,7 +76,7 @@ object Bench {
     val repTimes = scala.collection.mutable.Map.empty[String, Array[Option[Double]]]
     val compiles = scala.collection.mutable.Map.empty[String, List[Long]]
     val compileCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    for (rep <- 1 to reps; SparkEntry.Declared(name, build, _, _) <- named) {
+    for (rep <- 1 to reps; SparkEntry.Declared(name, build, _) <- named) {
       val warmup = rep == 1 && reps > 1
       val c0 = compileCount.getCount
       val t0 = System.nanoTime()

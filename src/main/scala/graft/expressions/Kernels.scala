@@ -675,22 +675,28 @@ object Kernels {
     * method-size limit and fell back to interpretation.
     */
   def srpBucket(vec: ArrayData, nBits: Int, seed: Long): Long = {
-    val n = vec.numElements()
     var out = 0L
     var b = 0
     while (b < nBits) {
-      val base = seed + b.toLong * 131071L
-      var dot = 0.0
-      var i = 0
-      while (i < n) {
-        val h = java.lang.Long.reverseBytes((base + i.toLong * 524287L) * 0x9e3779b97f4a7c15L)
-        dot += vec.getFloat(i).toDouble * (h.toDouble / Long.MaxValue.toDouble)
-        i += 1
-      }
-      if (dot >= 0.0) out |= (1L << b)
+      if (srpDot(vec, seed, b) >= 0.0) out |= (1L << b)
       b += 1
     }
     out
+  }
+
+  /** The dot product of `vec` with hyperplane `b` of `seed`, the one
+    * hyperplane loop of [[srpBucket]] and [[srpProbes]]. */
+  private def srpDot(vec: ArrayData, seed: Long, b: Int): Double = {
+    val n = vec.numElements()
+    val base = seed + b.toLong * 131071L
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      val h = java.lang.Long.reverseBytes((base + i.toLong * 524287L) * 0x9e3779b97f4a7c15L)
+      dot += vec.getFloat(i).toDouble * (h.toDouble / Long.MaxValue.toDouble)
+      i += 1
+    }
+    dot
   }
 
   /** Polynomial rolling-hash fingerprint of a UTF-8 string:
@@ -731,25 +737,16 @@ object Kernels {
     * to disagree for a true near neighbor are those whose projection
     * is closest to the hyperplane). Returns `min(probes, nBits+1)`
     * DISTINCT codes; element 0 is always the base bucket, so
-    * probes = 1 reproduces [[srpBucket]] exactly. Hyperplane
-    * derivation is bit-identical to [[srpBucket]] — multiprobe query
-    * codes join the same corpus buckets. */
+    * probes = 1 reproduces [[srpBucket]] exactly. Both take their
+    * hyperplanes from [[srpDot]], so multiprobe query codes join the
+    * same corpus buckets. */
   def srpProbes(vec: ArrayData, nBits: Int, seed: Long, probes: Int): ArrayData = {
-    val n = vec.numElements()
     val dots = new Array[Double](nBits)
     var base0 = 0L
     var b = 0
     while (b < nBits) {
-      val base = seed + b.toLong * 131071L
-      var dot = 0.0
-      var i = 0
-      while (i < n) {
-        val h = java.lang.Long.reverseBytes((base + i.toLong * 524287L) * 0x9e3779b97f4a7c15L)
-        dot += vec.getFloat(i).toDouble * (h.toDouble / Long.MaxValue.toDouble)
-        i += 1
-      }
-      dots(b) = dot
-      if (dot >= 0.0) base0 |= (1L << b)
+      dots(b) = srpDot(vec, seed, b)
+      if (dots(b) >= 0.0) base0 |= (1L << b)
       b += 1
     }
     val order = Array.range(0, nBits).sortBy(i => math.abs(dots(i)))

@@ -291,18 +291,33 @@ object Multimodal {
     * produced it ("imageio" = real decode, "stub" = byte-grid arm).
     * Output `(id, sig, codec)` plugs straight into
     * [[graft.dedup.Dedup.hamming64Pairs]]. */
-  def perceptualFeatures(media: DataFrame): DataFrame = {
+  def perceptualFeatures(media: DataFrame): DataFrame =
+    signatures(media, "imageio")(ImageDecoder.readImage(_).map(dHash64))
+
+  /** `(id, sig, codec)` per media row: `decode`'s 64-bit signature of
+    * the payload with `codec`, or, for a payload `decode` cannot read,
+    * the byte-grid stub ([[dHash64Stub]]) with codec "stub" — the body
+    * of the image, audio and video tiers. */
+  private def signatures(media: DataFrame, codec: String)(
+      decode: Array[Byte] => Option[Long]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.as[MediaRow].mapPartitions { rows =>
       rows.map { r =>
-        ImageDecoder.readImage(r.payload) match {
-          case Some(img) => (r.doc_id, dHash64(img), "imageio")
+        decode(r.payload) match {
+          case Some(sig) => (r.doc_id, sig, codec)
           case None => (r.doc_id, dHash64Stub(r.payload), "stub")
         }
       }
     }.toDF("id", "sig", "codec")
   }
+
+  /** Pairs within `maxHamming` bits of the `(id, sig)` rows of
+    * `signatures`, materialized first (see [[perceptualDupPairs]]). */
+  private def hammingDupPairs(signatures: DataFrame, maxHamming: Int,
+                              bucketCap: Int): DataFrame =
+    graft.dedup.Dedup.hamming64Pairs(
+      signatures.select("id", "sig").localCheckpoint(), maxHamming, bucketCap)
 
   /** Media near-duplicate pairs by perceptual hash: decode → dHash →
     * pigeonhole Hamming buckets → popcount verify. Finds
@@ -321,9 +336,7 @@ object Multimodal {
     * decodes once. The audio and video tiers do the same. */
   def perceptualDupPairs(media: DataFrame, maxHamming: Int = 8,
                          bucketCap: Int = 1000): DataFrame =
-    graft.dedup.Dedup.hamming64Pairs(
-      perceptualFeatures(media).select("id", "sig").localCheckpoint(),
-      maxHamming, bucketCap)
+    hammingDupPairs(perceptualFeatures(media), maxHamming, bucketCap)
 
   /** Deterministic synthetic image corpus for exercising the REAL
     * decode path at query time (the parquet fixtures carry text, not
@@ -539,27 +552,15 @@ object Multimodal {
   }
 
   /** (id, sig, codec) — audio twin of [[perceptualFeatures]]. */
-  def audioPerceptualFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        AudioDecoder.readPcm(r.payload) match {
-          case Some((_, _, _, samples)) => (r.doc_id, envelopeHash64(samples), "javasound")
-          case None => (r.doc_id, dHash64Stub(r.payload), "stub")
-        }
-      }
-    }.toDF("id", "sig", "codec")
-  }
+  def audioPerceptualFeatures(media: DataFrame): DataFrame =
+    signatures(media, "javasound")(AudioDecoder.readPcm(_).map(pcm => envelopeHash64(pcm._4)))
 
   /** Audio near-duplicate pairs by envelope hash — decode → 64-bit
     * signature → pigeonhole Hamming buckets → popcount verify. Only
     * (id, sig) shuffles; payloads stay in the scan stage. */
   def audioDupPairs(media: DataFrame, maxHamming: Int = 4,
                     bucketCap: Int = 1000): DataFrame =
-    graft.dedup.Dedup.hamming64Pairs(
-      audioPerceptualFeatures(media).select("id", "sig").localCheckpoint(),
-      maxHamming, bucketCap)
+    hammingDupPairs(audioPerceptualFeatures(media), maxHamming, bucketCap)
 
   /** Deterministic synthetic WAV corpus (the audio
     * [[syntheticImageTable]]): per doc_id, one second of a seeded
@@ -756,32 +757,26 @@ object Multimodal {
     require(nScenes >= 1 && nScenes <= 8,
       s"videoSignatures: nScenes must be in [1,8] (8 bits per scene " +
         s"in a 64-bit signature), got $nScenes")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        GvidDecoder.parse(r.payload) match {
-          case Some((w, h, n)) =>
-            var sig = 0L
-            var s = 0
-            while (s < nScenes) {
-              val f = ((2 * s + 1) * n) / (2 * nScenes) // ⌊(s+½)n/S⌋
-              val dh = dHash64(GvidDecoder.frame(r.payload, w, h, f))
-              // XOR-fold the 64-bit frame dHash to one byte: every
-              // gradient row contributes (a single comparison row of
-              // a smooth frame can be constant — all-0x00/0xFF bytes
-              // would let distinct videos collide), and a flipped
-              // dHash bit still flips exactly one signature bit
-              var fold = 0L; var b = 0
-              while (b < 8) { fold ^= (dh >>> (8 * b)) & 0xffL; b += 1 }
-              sig |= fold << (8 * s)
-              s += 1
-            }
-            (r.doc_id, sig, "gvid")
-          case None => (r.doc_id, dHash64Stub(r.payload), "stub")
+    signatures(media, "gvid") { payload =>
+      GvidDecoder.parse(payload).map { case (w, h, n) =>
+        var sig = 0L
+        var s = 0
+        while (s < nScenes) {
+          val f = ((2 * s + 1) * n) / (2 * nScenes) // ⌊(s+½)n/S⌋
+          val dh = dHash64(GvidDecoder.frame(payload, w, h, f))
+          // XOR-fold the 64-bit frame dHash to one byte: every
+          // gradient row contributes (a single comparison row of
+          // a smooth frame can be constant — all-0x00/0xFF bytes
+          // would let distinct videos collide), and a flipped
+          // dHash bit still flips exactly one signature bit
+          var fold = 0L; var b = 0
+          while (b < 8) { fold ^= (dh >>> (8 * b)) & 0xffL; b += 1 }
+          sig |= fold << (8 * s)
+          s += 1
         }
+        sig
       }
-    }.toDF("id", "sig", "codec")
+    }
   }
 
   /** Video near-duplicate pairs: temporal signature → pigeonhole
@@ -792,9 +787,7 @@ object Multimodal {
     * noise within `maxHamming`. */
   def videoDupPairs(media: DataFrame, maxHamming: Int = 4,
                     bucketCap: Int = 1000): DataFrame =
-    graft.dedup.Dedup.hamming64Pairs(
-      videoSignatures(media).select("id", "sig").localCheckpoint(),
-      maxHamming, bucketCap)
+    hammingDupPairs(videoSignatures(media), maxHamming, bucketCap)
 
   /** Deterministic synthetic GVID corpus: `framesPerScene` identical
     * frames per scene × 8 scenes; each scene is a seeded bilinear

@@ -316,7 +316,7 @@ class SourcesSpec extends AnyFunSuite {
     // q49 reconstructs (doc_id, text) from the tab-joined lines — the
     // token stats only match the parquet oracle if text survives
     // byte-for-byte, but pin the reconstruction directly too
-    val path = SparkEntry.ensureTextWritten(spark, SparkT.sfDir)
+    val path = graft.queries.AnalyticsQueries.ensureTextWritten(spark, SparkT.sfDir)
     val tabAt = instr(col("value"), "\t")
     val back = Tables.text(spark, path).select(
       substring_index(col("value"), "\t", 1).cast("long").as("doc_id"),

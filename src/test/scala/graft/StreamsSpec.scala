@@ -574,6 +574,12 @@ class StreamsSpec extends AnyFunSuite {
     def conf() = keys.map(k => k -> spark.conf.getOption(k))
     def views(): Set[String] = spark.catalog.listTables().collect().toSet
       .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
+    // the first RocksDB use in a JVM extracts the native libraries of
+    // RocksDB, lz4 and snappy into java.io.tmpdir: one backfill that
+    // succeeds loads them, so the diff below sees only what the
+    // failing one leaves
+    Streams.backfill(spark, s"${SparkT.sfDir}/events.parquet", "complete",
+      stateStore = Some(Streams.RocksDbStateStore))(Streams.tumblingAgg(_, "1 hour"))
     val (confBefore, viewsBefore) = (conf(), views())
     val (ckptsBefore, tmpBefore) = (ckpts(), tmpEntries())
     // two deliveries: the events file is wrapped in a temp dir of links
@@ -618,12 +624,5 @@ class StreamsSpec extends AnyFunSuite {
     assert(files.exists(_.startsWith("offsets/")) && files.exists(_.startsWith("state/")), files)
     assert(files.exists(f => f.startsWith("state/") && f.endsWith(".delta.crc")), files)
     assert(!files.exists(f => name(f).startsWith(".") && f.endsWith(".crc")), files)
-  }
-
-  test("Bench.streamingNames is exactly the eleven streaming gates ev5-ev15") {
-    val gatePrefixes = (5 to 15).map(i => s"ev${i}_")
-    val gates = SparkEntry.queries.keySet.filter(n => gatePrefixes.exists(n.startsWith))
-    assert(gates.size == 11, gates)
-    assert(Bench.streamingNames == gates)
   }
 }
