@@ -57,8 +57,9 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     // getOrCreate may have returned a PRE-EXISTING session built
     // without graft's extensions — withExtensions only applies at
-    // creation time, so the native strategies (as-of join) and the
-    // optimizer rule would silently be missing. init() is idempotent
+    // creation time, so the native strategies (as-of join), the
+    // optimizer rule and the query-stage rule would silently be
+    // missing; init() restores all but the last. init() is idempotent
     // (contains-guards on both experimental lists), so run it
     // UNCONDITIONALLY: a presence probe on the planner strategies
     // alone would skip sessions that got ensureStrategies() from a
@@ -80,12 +81,17 @@ object GraftSession {
   private[graft] def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
     .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** Register graft SQL functions + optimizer rules on an externally
-    * built session (extensions can't be injected post-creation, but
-    * `experimental.extraOptimizations` can). The two codegen-cache
-    * settings of [[local]] are not applied here: set them on the
-    * builder before the session is created if the session should
-    * compile each class once. */
+  /** Register graft SQL functions, the optimizer rule and the planner
+    * strategies on an externally built session (extensions can't be
+    * injected post-creation, but `experimental.extraOptimizations` and
+    * `extraStrategies` can). Query-stage rules cannot be added to an
+    * existing session at all (its `AdaptiveRulesHolder` is immutable),
+    * so an adopted session gets `graft.plans.SmallSortInOneTask` only through
+    * `spark.sql.extensions=graft.plans.GraftExtensions` on its builder;
+    * without it, a small global sort keeps its range-bound sampling
+    * job. The two codegen-cache settings of [[local]] are not applied
+    * here either: set them on the builder before the session is
+    * created if the session should compile each class once. */
   def init(spark: SparkSession): SparkSession = {
     graft.expressions.GraftFunctions.register(spark)
     val exp = org.apache.spark.sql.graftbridge.Bridge.experimental(spark)

@@ -3,7 +3,11 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 import graft.expressions.{Native, NativeBinary}
 
@@ -33,6 +37,46 @@ object SimplifyGraftExpressions extends Rule[LogicalPlan] {
     }
 }
 
+/** Query-stage preparation rule: a global sort whose input AQE would
+  * coalesce into one partition anyway sorts in one task. Spark plans a
+  * global sort as `Sort` over `Exchange rangepartitioning`, and that
+  * exchange first runs a sampling job over its whole input to compute
+  * the range bounds, so the input (scan, kernels, broadcast joins) is
+  * computed twice. Under `Exchange SinglePartition` the map side stays
+  * parallel, the sampling job and the second computation go, and the
+  * rows and their order are the same.
+  *
+  * The rule applies when AQE coalescing is on and Spark's size
+  * estimate of the sort's input is at most the size under which
+  * coalescing yields one partition: `coalescePartitions.minPartitionSize`
+  * under `parallelismFirst`, else `advisoryPartitionSizeInBytes`. The
+  * estimate is the logical sort's statistics, which hold AQE's runtime
+  * statistics once earlier stages finish, so a sort over a shuffled
+  * aggregate switches when AQE re-plans. A large or unknown estimate,
+  * a `repartitionByRange` exchange and a non-global sort keep range
+  * partitioning. An estimate that is too low (a `Generate`'s fan-out,
+  * for one) sends a large input to one task: slower, never wrong.
+  */
+object SmallSortInOneTask extends Rule[SparkPlan] {
+  override def apply(plan: SparkPlan): SparkPlan =
+    if (!plan.conf.coalesceShufflePartitionsEnabled) plan
+    else {
+      val limit = oneTaskLimit(plan.conf)
+      plan.transformUp {
+        case s @ SortExec(_, true, e @ ShuffleExchangeExec(_: RangePartitioning, _, ENSURE_REQUIREMENTS, _), _)
+            if s.logicalLink.exists(_.stats.sizeInBytes <= limit) =>
+          s.withNewChildren(Seq(e.copy(outputPartitioning = SinglePartition)))
+      }
+    }
+
+  /** The total shuffle size up to which AQE's coalescing yields one
+    * partition. */
+  private def oneTaskLimit(conf: SQLConf): Long =
+    if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+}
+
 /** Session extension entry point:
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
@@ -41,6 +85,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SimplifyGraftExpressions)
     e.injectPlannerStrategy(_ => AsofJoinStrategy)
+    e.injectQueryStagePrepRule(_ => SmallSortInOneTask)
   }
 }
 

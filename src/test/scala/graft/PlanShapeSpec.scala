@@ -190,4 +190,54 @@ class PlanShapeSpec extends AnyFunSuite {
     // for the keep-filter (the only aggregations are count shapes)
     assert(p.contains("BroadcastHashJoin"), p.take(1500))
   }
+
+  // A small global sort: `orders` at sf0.001 is a 36 KB file, under
+  // coalescing's 1 MB minPartitionSize, so AQE would merge its range
+  // shuffle into one partition anyway.
+  private def arranged: DataFrame = GraftFrame(SparkT.table("orders"))
+    .select("o_orderkey", "o_totalprice")
+    .arrange(desc("o_totalprice"), col("o_orderkey")).df
+
+  private val coalescingOff = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+
+  test("a small global sort sorts in one task: SinglePartition, not rangepartitioning") {
+    val q = arranged
+    q.collect()
+    val p = plan(q)
+    assert(p.contains("Exchange SinglePartition"), p.take(1500))
+    assert(!p.contains("rangepartitioning"), p.take(1500))
+  }
+
+  test("a small global sort runs one job fewer: no range-bound sampling job") {
+    // frames are built outside the count: reading the parquet schema
+    // is a job of its own
+    val small = arranged
+    val inOneTask = SparkT.jobsLaunchedBy(small.collect())
+    val ranged = SparkT.withConf(coalescingOff) {
+      val q = arranged
+      val jobs = SparkT.jobsLaunchedBy(q.collect())
+      assert(plan(q).contains("rangepartitioning"), plan(q).take(1500))
+      jobs
+    }
+    assert(inOneTask == ranged - 1, s"one task: $inOneTask jobs, range partitioned: $ranged")
+  }
+
+  test("a small global sort returns the same rows in the same order with the rule bypassed or AQE off") {
+    val inOneTask = arranged.collect().toSeq
+    val ranged = SparkT.withConf(coalescingOff)(arranged.collect().toSeq)
+    val noAqe = SparkT.withConf("spark.sql.adaptive.enabled" -> "false")(arranged.collect().toSeq)
+    assert(inOneTask.size == 1500)
+    assert(inOneTask == ranged)
+    assert(inOneTask == noAqe)
+  }
+
+  test("a sort over the size limit and a repartitionByRange keep range partitioning") {
+    // 2M longs estimate 16 MB, over the 1 MB limit; only planned
+    val large = spark.range(0, 2000000).toDF().orderBy(desc("id"))
+    assert(plan(large).contains("rangepartitioning"), plan(large).take(1500))
+    val byRange = SparkT.table("orders").select("o_orderkey")
+      .repartitionByRange(4, col("o_orderkey"))
+    byRange.collect()
+    assert(plan(byRange).contains("rangepartitioning"), plan(byRange).take(1500))
+  }
 }

@@ -48,12 +48,17 @@ class ShuffleSpec extends AnyFunSuite {
   }
 
   test("plan: one range exchange, no hash exchange, no single-partition window") {
-    val q = Shuffle.epochShuffle(docs, "doc_id", 3)
-    q.collect()
-    val p = q.queryExecution.executedPlan.toString
-    assert(p.contains("rangepartitioning"), p.take(800))
-    assert(!p.contains("Exchange hashpartitioning"), p.take(800))
-    assert(!p.contains("Window"), "no global window allowed:\n" + p.take(800))
+    // the documents fixture is small enough to sort in one task
+    // (SmallSortInOneTask); 2M ids estimate 16 MB, over that limit
+    val large = Shuffle.epochShuffle(spark.range(0, 2000000).toDF("doc_id"), "doc_id", 3)
+    val small = Shuffle.epochShuffle(docs, "doc_id", 3)
+    small.collect()
+    val Seq(pl, ps) = Seq(large, small).map(_.queryExecution.executedPlan.toString)
+    assert(pl.contains("rangepartitioning"), pl.take(800))
+    for (p <- Seq(pl, ps)) {
+      assert(!p.contains("Exchange hashpartitioning"), p.take(800))
+      assert(!p.contains("Window"), "no global window allowed:\n" + p.take(800))
+    }
   }
 
   test("epochShuffle rejects negative epochs") {

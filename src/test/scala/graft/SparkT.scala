@@ -13,19 +13,22 @@ object SparkT {
   def table(name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** `body` with whole-stage codegen off and every expression
-    * evaluated interpreted; both settings are restored after. */
-  def interpreted[T](body: => T): T = {
-    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val before = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** `body` with the session confs `kvs` set; each is restored after. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally before.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** `body` with whole-stage codegen off and every expression
+    * evaluated interpreted; both settings are restored after. */
+  def interpreted[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 
   /** Spark jobs `f` launches on this thread. `f` runs under a job group
     * of its own; a sentinel job in a second group, run after it, flushes
